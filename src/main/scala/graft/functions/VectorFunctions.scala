@@ -75,6 +75,72 @@ object VectorFunctions {
     while (i < v.length) { acc(i) += v(i); i += 1 }
   }
 
+  /** Blocked Lloyd fold of one packed chunk — [[argminCentroid]] then
+    * [[addInto]] for every row, four centroids per pass over the row.
+    *
+    * `rows` is row-major n×dim floats; `cents` is the k×dim codebook as
+    * one flat `double[]` (each float coordinate widened exactly, so
+    * `row(i).toDouble - cents(..)` is the very difference [[sqdist]]
+    * squares). Each of the four centroids in a block keeps its own
+    * left-to-right double accumulator, so every distance is bit-equal
+    * to [[sqdist]]'s; the picks then run the same strict-`<` running
+    * min seeded from centroid 0 in index order — identical winners,
+    * NaN and ±Inf included. The row is added into the winner's cells
+    * of the flat k×dim `sums` exactly as [[addInto]] adds it. */
+  def lloydFoldChunk(
+      rows: Array[Float],
+      dim: Int,
+      cents: Array[Double],
+      sums: Array[Double],
+      cnts: Array[Long]): Unit = {
+    val k = cnts.length
+    val k4 = k - k % 4
+    val n = rows.length / dim
+    var r = 0
+    while (r < n) {
+      val o = r * dim
+      var best = 0
+      var bestD = 0.0
+      var c = 0
+      while (c < k4) {
+        val b0 = c * dim; val b1 = b0 + dim; val b2 = b1 + dim; val b3 = b2 + dim
+        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+        var i = 0
+        while (i < dim) {
+          val x = rows(o + i).toDouble
+          val d0 = x - cents(b0 + i); s0 += d0 * d0
+          val d1 = x - cents(b1 + i); s1 += d1 * d1
+          val d2 = x - cents(b2 + i); s2 += d2 * d2
+          val d3 = x - cents(b3 + i); s3 += d3 * d3
+          i += 1
+        }
+        if (c == 0) bestD = s0
+        else if (s0 < bestD) { bestD = s0; best = c }
+        if (s1 < bestD) { bestD = s1; best = c + 1 }
+        if (s2 < bestD) { bestD = s2; best = c + 2 }
+        if (s3 < bestD) { bestD = s3; best = c + 3 }
+        c += 4
+      }
+      while (c < k) {
+        val b = c * dim
+        var s = 0.0
+        var i = 0
+        while (i < dim) {
+          val d = rows(o + i).toDouble - cents(b + i); s += d * d
+          i += 1
+        }
+        if (c == 0) bestD = s
+        else if (s < bestD) { bestD = s; best = c }
+        c += 1
+      }
+      val b = best * dim
+      var i = 0
+      while (i < dim) { sums(b + i) += rows(o + i); i += 1 }
+      cnts(best) += 1
+      r += 1
+    }
+  }
+
   /** Mean with the reference's 5-dp round-half-up on each coordinate
     * (`PointWritable.calcAverage`, PointWritable.java:106-112:
     * `Math.round(v*100000)/100000.0f`). */

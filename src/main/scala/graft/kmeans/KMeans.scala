@@ -1,5 +1,7 @@
 package graft.kmeans
 
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -59,35 +61,45 @@ final case class KMeansModel(
   *
   *   - per-iteration MapReduce job  →  one cached distributed dataset +
   *     one narrow partial-aggregation pass per iteration;
-  *   - centroids through Hadoop `Configuration` →  `sparkContext.broadcast`;
+  *   - Hadoop's input splits  →  P balanced slices of packed row-major
+  *     float chunks, P = max(input partitions, default parallelism), so
+  *     every core folds a share of the rows however the caller's input
+  *     is partitioned;
+  *   - centroids through Hadoop `Configuration` →  `sparkContext.broadcast`
+  *     of one flat k×dim `double[]`;
   *   - reducer-output file round-trip (Main.java:175-203)  →  `collect()`
-  *     of per-partition partials, final merge on the driver;
+  *     of per-slice partials, final merge on the driver;
   *   - input re-read per job (Main.java:318 in-loop)  →  `persist()` once.
   *
   * The iteration body is the combiner/reducer split made explicit
-  * (KCombiner.java:9-18 / KReducer.java:12-26): each partition folds its
-  * rows into k×(dim+1) partial (sum, count) cells — A2 — and the driver
-  * merges the k-sized partials and takes the rounded mean — A3. It runs
-  * as `mapPartitions` + `collect` rather than a per-iteration
-  * `groupBy().agg()` because an iterative loop re-plans a k×dim
-  * aggregate every pass (measured ~1.2 s/iteration of analysis/codegen/
-  * scheduling overhead at bench scale — the dominant cost for small
-  * inputs), whereas this loop reuses one cached RDD and ships only
-  * k×(dim+1)×numPartitions doubles to the driver per iteration; there is
-  * NO shuffle at all. The declarative `groupBy` form of the same
-  * aggregation remains the engine's single-step operator (q07) where
-  * Catalyst's partial/final HashAggregate split is asserted by PlanSpec.
+  * (KCombiner.java:9-18 / KReducer.java:12-26): each slice folds its
+  * chunks into k×(dim+1) partial (sum, count) cells with the blocked
+  * [[graft.functions.VectorFunctions.lloydFoldChunk]] kernel — A2 — and
+  * the driver merges the k-sized partials and takes the rounded mean —
+  * A3. It runs as `mapPartitions` + `collect` rather than a
+  * per-iteration `groupBy().agg()` because an iterative loop re-plans a
+  * k×dim aggregate every pass (measured ~1.2 s/iteration of analysis/
+  * codegen/scheduling overhead at bench scale — the dominant cost for
+  * small inputs), whereas this loop reuses one cached RDD and ships only
+  * k×(dim+1)×P doubles to the driver per iteration. There is one
+  * rebalancing shuffle at cache time, none per round: rows are packed
+  * into chunks inside their source partition, and chunk (source s,
+  * index c) moves to slice (s + c) mod P. The declarative `groupBy` form
+  * of the same aggregation remains the engine's single-step operator
+  * (q07) where Catalyst's partial/final HashAggregate split is asserted
+  * by PlanSpec.
   *
-  * Determinism: partitions accumulate in row order (double fold — the
-  * reference combiner's semantics per partition), then each partition's
-  * cells are lifted to exact `BigDecimal`s for the merge. Exact addition
-  * is associative, so the merged sum is independent of merge ORDER and
-  * merge SHAPE — the driver's sequential fold and the gated
-  * `treeReduce` below are bit-identical by construction (the PageRank
-  * DECIMAL device, applied to the k×(dim+1) partial cells), and the
-  * result is bit-stable across runs (a parallel `sum()` over raw
-  * doubles is not). Each merged cell is converted to double exactly
-  * once before the 5-dp float mean.
+  * Determinism: each slice folds in chunk-key order — the rebalancing
+  * shuffle sorts each slice by (s, c), so the order never depends on
+  * shuffle fetch order — as a double fold (the reference combiner's
+  * semantics per partition); then each slice's cells are lifted to exact
+  * `BigDecimal`s for the merge. Exact addition is associative, so the
+  * merged sum is independent of merge ORDER and merge SHAPE — the
+  * driver's sequential fold and the gated `treeReduce` below are
+  * bit-identical by construction (the PageRank DECIMAL device, applied
+  * to the k×(dim+1) partial cells), and the result is bit-stable across
+  * runs (a parallel `sum()` over raw doubles is not). Each merged cell
+  * is converted to double exactly once before the 5-dp float mean.
   *
   * Parity-preserving semantics: f32 coordinates, mean computed in float
   * then rounded to 5 dp half-up at the final aggregate only
@@ -98,16 +110,16 @@ final case class KMeansModel(
   * keeps its previous centroid instead of NPE-ing the driver.
   *
   * At scale: assignment+partial-agg is one narrow pass over cached
-  * partitions; a 1000-executor run returns k×(dim+1) cells per
-  * partition to the driver (tens of MB at 10k partitions). When
-  * k×dim×P outgrows the driver envelope the loop swaps the `collect`
-  * for a 2-level `treeReduce` — executors pre-merge partials so the
-  * driver receives ONE k×(dim+1) table per round instead of P of
-  * them. Gate: `spark.graft.kmeans.treeReducePartitions` (default
-  * 1024 partitions — below it the extra treeReduce stage costs more
-  * than it saves; at 10k+ partitions it bounds driver ingress). The
-  * per-partition fold is unchanged and the exact-cell merge makes the
-  * two paths bit-identical (KMeansSpec pins it).
+  * slices; a 1000-executor run returns k×(dim+1) cells per slice to the
+  * driver (tens of MB at 10k slices). When k×dim×P outgrows the driver
+  * envelope the loop swaps the `collect` for a 2-level `treeReduce` —
+  * executors pre-merge partials so the driver receives ONE k×(dim+1)
+  * table per round instead of P of them. Gate:
+  * `spark.graft.kmeans.treeReducePartitions` (default 1024 slices —
+  * below it the extra treeReduce stage costs more than it saves; at 10k+
+  * slices it bounds driver ingress). The per-slice fold is unchanged and
+  * the exact-cell merge makes the two paths bit-identical (KMeansSpec
+  * pins it).
   */
 object KMeans {
 
@@ -118,6 +130,14 @@ object KMeans {
     spark.conf.getOption("spark.graft.kmeans.treeReducePartitions")
       .map(_.toInt).getOrElse(1024)
 
+  /** Rows of `featuresCol` as primitive float arrays, in the caller's
+    * partitioning — what the seeded init samples from. Read off the
+    * internal rows: no external `Row`, no boxed floats. */
+  private def rowsOf(df: DataFrame, featuresCol: String): RDD[Array[Float]] =
+    df.select(col(featuresCol).cast("array<float>"))
+      .queryExecution.toRdd
+      .map(_.getArray(0).toFloatArray())
+
   /** Seeded distinct uniform sample as initial centroids — the analog of
     * the reference's positional line sample (Main.java:129-164) with the
     * determinism it lacks. */
@@ -126,80 +146,92 @@ object KMeans {
       featuresCol: String,
       k: Int,
       seed: Long): Array[Array[Float]] = {
-    val rows = df
-      .select(col(featuresCol).cast("array<float>"))
-      .rdd
-      .map(_.getSeq[Float](0).toArray)
+    val rows = rowsOf(df, featuresCol)
       .takeSample(withReplacement = false, num = k, seed = seed)
     require(rows.length == k, s"dataset has fewer than k=$k rows")
     rows
   }
 
+  /** Rows per packed chunk: 16k floats (64 KB), ~1k rows at dim 16. */
+  private[kmeans] def chunkRows(dim: Int): Int = math.max(1, 16384 / dim)
+
+  /** Packs `rows` into row-major n×dim float chunks of [[chunkRows]]
+    * rows; a row of any other length fails loudly here. */
+  private def packChunks(
+      rows: Iterator[Array[Float]], dim: Int): Iterator[Array[Float]] =
+    rows.grouped(chunkRows(dim)).map { g =>
+      val out = new Array[Float](g.length * dim)
+      var o = 0
+      g.foreach { v =>
+        require(v.length == dim, s"dim mismatch: ${v.length} vs $dim")
+        System.arraycopy(v, 0, out, o, dim)
+        o += dim
+      }
+      out
+    }
+
   def fit(df: DataFrame, params: KMeansParams): KMeansModel = {
     val spark = df.sparkSession
     val k = params.k
-    // Parse rows to primitive float arrays ONCE and cache them: every
-    // iteration is then a single narrow job over deserialized vectors.
-    val data = df
-      .select(col(params.featuresCol).cast("array<float>").as("features"))
-      .rdd
-      .map(_.getSeq[Float](0).toArray)
+    var centroids = params.initCentroids
+      .map { init =>
+        require(init.length == k, "init centroid count != k")
+        init.map(_.clone())
+      }
+      .getOrElse(initCentroids(df, params.featuresCol, k, params.seed))
+    val dim = centroids(0).length
+    require(centroids.forall(_.length == dim),
+      "init centroids differ in dimension")
+
+    // Parse and pack the rows ONCE into P balanced slices of chunks,
+    // chunk (source partition s, chunk index c) landing in slice
+    // (s + c) mod P; every round is then one narrow job over them.
+    val rows = rowsOf(df, params.featuresCol)
+    val numSlices =
+      math.max(rows.getNumPartitions, spark.sparkContext.defaultParallelism)
+    val slices = rows
+      .mapPartitionsWithIndex { (s, it) =>
+        packChunks(it, dim).zipWithIndex.map { case (ch, c) => ((s, c), ch) }
+      }
+      .repartitionAndSortWithinPartitions(new SlicePartitioner(numSlices))
+      .values
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var centroids = params.initCentroids
-        .map { init =>
-          require(init.length == k, "init centroid count != k")
-          init.map(_.clone())
-        }
-        .getOrElse {
-          val rows =
-            data.takeSample(withReplacement = false, num = k, seed = params.seed)
-          require(rows.length == k, s"dataset has fewer than k=$k rows")
-          rows
-        }
-      val dim = centroids(0).length
-
       val treeGate = treeReducePartitions(spark)
+      val cells = k * dim
 
-      // Exact merge of two k×(dim+1) partial tables: BigDecimal
-      // addition is exact and associative, so ANY merge order/shape —
-      // the driver's sequential fold, treeReduce's executor-side
-      // pre-merges — yields the same cells. Mutates and returns `a`
-      // (inputs are task-fresh on every path).
+      // Exact merge of two partial tables (k×dim sums + k counts):
+      // BigDecimal addition is exact and associative, so ANY merge
+      // order/shape — the driver's sequential fold, treeReduce's
+      // executor-side pre-merges — yields the same cells. Mutates and
+      // returns `a` (inputs are task-fresh on every path).
       def merge(
-          a: (Array[Array[java.math.BigDecimal]], Array[Long]),
-          b: (Array[Array[java.math.BigDecimal]], Array[Long]))
-          : (Array[Array[java.math.BigDecimal]], Array[Long]) = {
+          a: (Array[java.math.BigDecimal], Array[Long]),
+          b: (Array[java.math.BigDecimal], Array[Long]))
+          : (Array[java.math.BigDecimal], Array[Long]) = {
+        var i = 0
+        while (i < cells) { a._1(i) = a._1(i).add(b._1(i)); i += 1 }
         var c = 0
-        while (c < k) {
-          var i = 0
-          while (i < dim) { a._1(c)(i) = a._1(c)(i).add(b._1(c)(i)); i += 1 }
-          a._2(c) += b._2(c)
-          c += 1
-        }
+        while (c < k) { a._2(c) += b._2(c); c += 1 }
         a
       }
 
       var loop = 1
       var converged = false
       while (loop < params.maxLoop && !converged) {
-        val bc = spark.sparkContext.broadcast(centroids)
-        // A2 — the combiner: per-partition fold into k (sum, count)
-        // cells, primitive doubles in row order (KCombiner.java:9-18
-        // semantics), each cell lifted to an EXACT BigDecimal at
-        // partition exit (`new BigDecimal(double)` represents every
-        // finite double exactly) so the A3 merge is order-independent.
-        val partialsRdd = data.mapPartitions { it =>
+        val bc = spark.sparkContext.broadcast(centroids.flatMap(_.map(_.toDouble)))
+        // A2 — the combiner: each slice folds its chunks into k (sum,
+        // count) cells, primitive doubles in chunk-key order
+        // (KCombiner.java:9-18 semantics), each cell lifted to an EXACT
+        // BigDecimal at slice exit (`new BigDecimal(double)` represents
+        // every finite double exactly) so the A3 merge is
+        // order-independent.
+        val partialsRdd = slices.mapPartitions { it =>
           val cents = bc.value
-          val sums = Array.ofDim[Double](cents.length, dim)
-          val cnts = new Array[Long](cents.length)
-          it.foreach { p =>
-            val c = argminCentroid(p, cents)
-            addInto(sums(c), p)
-            cnts(c) += 1
-          }
-          Iterator.single(
-            (sums.map(_.map(new java.math.BigDecimal(_))), cnts))
+          val sums = new Array[Double](cells)
+          val cnts = new Array[Long](k)
+          it.foreach(lloydFoldChunk(_, dim, cents, sums, cnts))
+          Iterator.single((sums.map(new java.math.BigDecimal(_)), cnts))
         }
 
         // A3 — the reducer: exact merge, then one double conversion per
@@ -209,10 +241,10 @@ object KMeans {
         // ONE table, not P) — bit-identical to the collect fold by the
         // exactness argument above, pinned by KMeansSpec.
         val (exactSums, cnts) =
-          if (data.getNumPartitions > treeGate)
+          if (numSlices > treeGate)
             partialsRdd.treeReduce(merge _, depth = 2)
           else {
-            val zero = (Array.fill(k, dim)(java.math.BigDecimal.ZERO),
+            val zero = (Array.fill(cells)(java.math.BigDecimal.ZERO),
               new Array[Long](k))
             partialsRdd.collect().foldLeft(zero)(merge)
           }
@@ -221,9 +253,7 @@ object KMeans {
         var c = 0
         while (c < k) {
           if (cnts(c) > 0) {
-            val s = new Array[Double](dim)
-            var i = 0
-            while (i < dim) { s(i) = exactSums(c)(i).doubleValue(); i += 1 }
+            val s = Array.tabulate(dim)(i => exactSums(c * dim + i).doubleValue())
             next(c) = meanRounded5(s, cnts(c))
           }
           c += 1
@@ -237,6 +267,17 @@ object KMeans {
         loop += 1
       }
       KMeansModel(centroids, loop - 1, converged)
-    } finally data.unpersist()
+    } finally slices.unpersist()
+  }
+}
+
+/** Routes packed chunk (source partition s, chunk index c) to slice
+  * (s + c) mod P: one source's chunks deal round-robin over every
+  * slice, starting at a different slice per source. */
+private final class SlicePartitioner(slices: Int) extends Partitioner {
+  override def numPartitions: Int = slices
+  override def getPartition(key: Any): Int = {
+    val (s, c) = key.asInstanceOf[(Int, Int)]
+    (s + c) % slices
   }
 }

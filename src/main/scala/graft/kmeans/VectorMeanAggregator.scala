@@ -19,8 +19,10 @@ final case class VecBuf(sums: Array[Double], n: Long)
   *   - `finish`  = `calcAverage`: float mean, 5-dp round-half-up per
   *                 coordinate (PointWritable.java:106-112)
   *
-  * The declarative `groupBy().agg(sum(element_at(...)))` form used by
-  * [[KMeans.fit]] is the codegen-friendly twin; tests assert both agree.
+  * The declarative `groupBy().agg(sum(element_at(...)))` form (the
+  * engine's single-step operator, q07) is the codegen-friendly twin;
+  * tests assert both agree. [[KMeans.fit]] uses neither: it folds packed
+  * chunks with `VectorFunctions.lloydFoldChunk`.
   */
 final class VectorMeanAggregator(dim: Int)
     extends Aggregator[Array[Float], VecBuf, Array[Float]] {

@@ -49,6 +49,51 @@ class VectorFunctionsScalaSpec extends AnyFunSuite {
     addInto(acc, Array(0.5f, 0.5f))
     assert(acc.toSeq === Seq(1.5, 2.5))
   }
+
+  test("lloydFoldChunk picks argminCentroid's index row by row and sums " +
+    "bit-equal to addInto (ties, NaN, ±Inf; k in 1,3,4,5,17; dim 1, 16)") {
+    val rnd = new scala.util.Random(5)
+    val specials = Array(Float.NaN, Float.PositiveInfinity,
+      Float.NegativeInfinity)
+    // small integer grid: exact distance ties are common; 1 in 10
+    // coordinates is NaN or ±Inf (Inf − Inf makes NaN distances too)
+    def coord(): Float = rnd.nextInt(10) match {
+      case 0 => specials(rnd.nextInt(3))
+      case 1 | 2 | 3 => rnd.nextFloat() * 4f - 1f
+      case _ => rnd.nextInt(3).toFloat
+    }
+    def bits(a: Array[Double]) = a.map(java.lang.Double.doubleToLongBits).toSeq
+    for (dim <- Seq(1, 16); k <- Seq(1, 3, 4, 5, 17)) {
+      val cents = Array.fill(k)(Array.fill(dim)(coord()))
+      if (k > 1) cents(k - 1) = cents(0).clone() // exact tie with 0
+      val flat = cents.flatMap(_.map(_.toDouble))
+      val rows = Seq.fill(400)(Array.fill(dim)(coord())) ++
+        cents.map(_.clone()) // rows sitting exactly on a centroid
+      // per row: a one-row chunk lands in exactly argminCentroid's cell
+      rows.foreach { p =>
+        val cnts = new Array[Long](k)
+        lloydFoldChunk(p, dim, flat, new Array[Double](k * dim), cnts)
+        assert(cnts.indexOf(1L) === argminCentroid(p, cents),
+          s"k=$k dim=$dim row=${p.toSeq}")
+        assert(cnts.sum === 1L)
+      }
+      // per slice: several chunks in row order ≡ addInto over the rows
+      val want = Array.fill(k)(new Array[Double](dim))
+      val wantN = new Array[Long](k)
+      rows.foreach { p =>
+        val c = argminCentroid(p, cents)
+        addInto(want(c), p)
+        wantN(c) += 1
+      }
+      val sums = new Array[Double](k * dim)
+      val cnts = new Array[Long](k)
+      rows.grouped(7).foreach { g =>
+        lloydFoldChunk(g.flatten.toArray, dim, flat, sums, cnts)
+      }
+      assert(bits(sums) === bits(want.flatten), s"k=$k dim=$dim")
+      assert(cnts.toSeq === wantN.toSeq, s"k=$k dim=$dim")
+    }
+  }
 }
 
 class VectorFunctionsColumnSpec extends SparkSpec {

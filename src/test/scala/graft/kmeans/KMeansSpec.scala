@@ -152,6 +152,102 @@ class KMeansSpec extends SparkSpec {
       case ((t, c), i) => assert(t.toSeq === c.toSeq, s"centroid $i")
     }
   }
+
+  test("a coalesce(1) input is folded by every slice, chunk-balanced, " +
+    "and two fits of it are bit-identical") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    assert(sc.defaultParallelism >= 2)
+    val dim = 64
+    val chunk = KMeans.chunkRows(dim)
+    val rnd = new scala.util.Random(21)
+    // 10 full chunks and one partial chunk, all in ONE partition
+    val pts = Seq.fill(chunk * 10 + 17)(Array.fill(dim)(rnd.nextFloat()))
+    val df = toDF(pts).coalesce(1)
+    assert(df.rdd.getNumPartitions === 1)
+    val params = KMeansParams(k = 5, threshold = -1.0, maxLoop = 4,
+      seed = 3L)
+
+    val group = "kmeans-balance-spec"
+    val roundStages = new ConcurrentLinkedQueue[Int]()
+    val taskChunks = new ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id"))
+          js.stageInfos.filter(_.name.startsWith("collect at"))
+            .foreach(si => roundStages.add(si.stageId))
+      // a round reads its chunks from the rebalancing shuffle (the
+      // first round, which fills the cache) or from the cache
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null)
+          taskChunks.add(te.stageId ->
+            (te.taskMetrics.inputMetrics.recordsRead +
+              te.taskMetrics.shuffleReadMetrics.recordsRead))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "kmeans balance spec")
+    val first =
+      try {
+        val m = KMeans.fit(df, params)
+        org.apache.spark.graftshim.drainListenerBus(sc)
+        m
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    val second = KMeans.fit(df, params)
+
+    val stages = roundStages.asScala.toSeq.sorted
+    assert(stages.size === params.maxLoop - 1, "one job per round")
+    val perStage = taskChunks.asScala.toSeq.groupBy(_._1)
+    stages.foreach { st =>
+      val counts = perStage(st).map(_._2)
+      assert(counts.sum === 11L, s"stage $st")
+      assert(counts.count(_ > 0) >= 2, s"stage $st: ${counts.sorted}")
+      val mean = counts.sum.toDouble / counts.size
+      assert(counts.max <= mean + 1, s"stage $st: ${counts.sorted}")
+    }
+
+    assert(second.iterations === first.iterations)
+    first.centroids.zip(second.centroids).zipWithIndex.foreach {
+      case ((a, b), i) =>
+        assert(a.map(java.lang.Float.floatToRawIntBits).toSeq ===
+          b.map(java.lang.Float.floatToRawIntBits).toSeq, s"centroid $i")
+    }
+  }
+
+  test("a row whose length is not dim fails loudly when rows are packed") {
+    val pts = Seq(Array(0f, 0f), Array(1f, 1f), Array(2f))
+    val init = Some(Array(Array(0f, 0f), Array(1f, 1f)))
+    val e = intercept[Exception](KMeans.fit(toDF(pts),
+      KMeansParams(k = 2, maxLoop = 3, initCentroids = init)))
+    val iae = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null)
+      .collectFirst { case t: IllegalArgumentException => t }
+    assert(iae.isDefined, s"no IllegalArgumentException under $e")
+    assert(iae.get.getMessage.contains("dim mismatch: 1 vs 2"))
+    assert(iae.get.getStackTrace.exists(_.getMethodName.contains("packChunks")))
+    // init centroids of unequal length fail before any job runs
+    intercept[IllegalArgumentException](KMeans.fit(toDF(pts.take(2)),
+      KMeansParams(k = 2, maxLoop = 3,
+        initCentroids = Some(Array(Array(0f, 0f), Array(1f))))))
+  }
+
+  test("a seeded fit without initCentroids samples the caller's rows: " +
+    "maxLoop = 1 returns KMeans.initCentroids exactly") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(8)
+    val pts = Seq.fill(500)(Tuple1(Array.fill(3)(rnd.nextFloat())))
+    val df = spark.sparkContext.parallelize(pts, 3).toDF("features")
+    for (seed <- Seq(1L, 42L)) {
+      val model = KMeans.fit(df, KMeansParams(k = 4, maxLoop = 1, seed = seed))
+      val want = KMeans.initCentroids(df, "features", 4, seed)
+      assert(model.centroids.map(_.toSeq).toSeq === want.map(_.toSeq).toSeq)
+    }
+  }
 }
 
 class DbiSpec extends SparkSpec {
