@@ -41,8 +41,6 @@ object Profile {
     // set GRAFT_TRIANGLE_ALGO=csr against the default wedge form)
     sys.env.get("GRAFT_TRIANGLE_ALGO").foreach(a =>
       spark.conf.set("spark.graft.graph.triangleAlgo", a))
-    sys.env.get("GRAFT_ARGMIN_IMPL").foreach(a =>
-      spark.conf.set("spark.graft.kmeans.argminImpl", a))
     // A/B hook: GRAFT_AQE_COALESCE=1 sets the guide-§9 aggressive
     // AQE coalescing posture (size-targeted, not parallelism-first)
     if (sys.env.contains("GRAFT_AQE_COALESCE")) {

@@ -20,7 +20,7 @@ import graft.streaming.EventWindows
   *     across engines and partition orders), then cast back to double;
   *   - means are (exact double) / (exact long) — one IEEE division;
   *   - every query ends in an ORDER BY on a unique key;
-  *   - argmin ties break to the lowest index via identical CASE chains.
+  *   - argmin ties break to the lowest index on both sides.
   */
 object SparkEntry {
 
@@ -458,8 +458,10 @@ object SparkEntry {
       "p -> (CAST(p[1] AS DOUBLE)-CAST(p[2] AS DOUBLE))" +
       "*(CAST(p[1] AS DOUBLE)-CAST(p[2] AS DOUBLE))))"
 
-  /** CTE projecting per-row d0..d3 and the argmin cluster (lowest-index
-    * ties — the same CASE shape as `VectorFunctions.assignCol`). */
+  /** CTE projecting per-row d0..d3 and the argmin cluster: a CASE
+    * chain whose earliest-wins `<=` picks the lowest index on ties —
+    * the same winners as `VectorFunctions.assignCol`'s strict-`<`
+    * running min over the same double distances. */
   private def hpAssignSql(cols: String): String = {
     val k = hpCents.length
     val dDefs = hpCents.zipWithIndex
@@ -2592,7 +2594,7 @@ object SparkEntry {
         .orderBy("media_id", "strip")),
 
     // SemDeDup-style cluster-then-dedup: coarse-assign embeddings to
-    // the fixed hyperplane centroids (the q31 CASE chain), then drop
+    // the fixed hyperplane centroids (the q31 argmin), then drop
     // rows with a lower-id same-cluster neighbor above cosine 0.45 —
     // Σ cluster² candidate pairs instead of n², the semantic-dedup
     // scale shape (at corpus scale the coarse fit is the engine's own
@@ -3722,8 +3724,9 @@ object SparkEntry {
          |FROM assigned a JOIN probed USING (cluster), q
          |ORDER BY score DESC, a.vec_id LIMIT 10""".stripMargin,
 
-    // generated from hpCents — argmin CASE chain identical in shape and
-    // arithmetic to VectorFunctions.assignCol (see hpAssignSql)
+    // generated from hpCents — an argmin CASE chain with the same
+    // distances and lowest-index ties as VectorFunctions.assignCol's
+    // native loop (see hpAssignSql)
     "q31_kmeans_label" ->
       s"""WITH ${hpAssignSql("vec_id")}
          |SELECT cluster, count(*) AS n FROM a_

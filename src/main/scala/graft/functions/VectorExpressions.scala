@@ -124,18 +124,17 @@ case class VecSqDist(left: Expression, right: Expression) extends VecBinaryFold 
 /** Earliest-wins argmin of squared distance against a LITERAL float
   * codebook: `argmin_c Σᵢ (vᵢ − codebook(c)(i))²`, strict `<` running
   * min (ties → lowest index — KMapper.java:39 semantics, identical to
-  * the [[graft.functions.VectorFunctions.assignCol]] CASE chain and
   * the `argminCentroid` Scala kernel: same per-centroid left-to-right
-  * double fold, null elements contribute 0, dim mismatch throws).
+  * double fold, null elements contribute 0, dim mismatch throws). The
+  * one argmin behind [[graft.functions.VectorFunctions.assignCol]].
   *
   * Why an expression and not a chain of [[VecSqDist]] comparisons:
-  * the chain inlines each distance's generated code O(k²) times into
+  * a chain inlines each distance's generated code O(k²) times into
   * ONE whole-stage method (expressions over codegen locals cannot be
   * split into sub-methods), which overran janino's 64 KB limit when
-  * the PQ encoder put m+1 chains in one projection — the build
-  * silently fell back to interpreted eval. Here the codebook rides
-  * along as a single `references[]` object and the generated code is
-  * a fixed ~20-line double loop regardless of k·dim. */
+  * the PQ encoder put m+1 chains in one projection. Here the codebook
+  * rides along as a single `references[]` object and the generated
+  * code is a fixed ~20-line double loop regardless of k·dim. */
 case class VecArgminSqDist(
     child: Expression,
     codebook: Seq[Seq[Float]])

@@ -183,117 +183,14 @@ object VectorFunctions {
   /** Float-array literal column (`array<float>`). */
   def vecLit(v: Array[Float]): Column = array(v.map(x => lit(x)): _*)
 
-  /** Native-loop argmin over a literal codebook ([[VecArgminSqDist]]):
-    * a fixed ~20-line generated loop regardless of k·dim (the codebook
-    * rides as one `references[]` object), bit-identical picks to the
-    * [[assignCol]] CASE chain. Use when several argmins must share one
-    * projection (the PQ encoder) — inline chains there overran
-    * janino's 64 KB method limit and fell back to interpreted eval. */
-  def argminSqDistCol(
-      features: Column, centroids: Array[Array[Float]]): Column =
-    toCol(VecArgminSqDist(expr(features),
-      centroids.map(_.toSeq).toSeq))
-
-  /** J1 argmin-over-centroids as a codegen'd CASE chain over [[VecSqDist]]
-    * distances, ties to the LOWEST index (strict `<` running min,
-    * KMapper.java:39). Bit-identical to [[argminCentroid]]: VecSqDist
-    * folds the same (aᵢ−bᵢ)² terms left-to-right in double.
-    *
-    * Small k (≤ 16) is ONE CASE chain — O(k²) comparisons, but
-    * whole-stage codegen CSE evaluates each distance once. Large k is
-    * CHUNKED: centroids split into groups of ≤ 16, each group resolves
-    * its (min-distance, argmin) with the same chain, and the groups
-    * combine recursively with the identical earliest-wins `<=` device —
-    * so k = 64 costs 4 chunk chains + one 4-way combine instead of a
-    * 2016-comparison chain that overruns janino's method-size limit
-    * (and, before this, fell back to a non-codegen ScalaUDF).
-    * Earliest-wins at every level ≡ the flat running min: within a
-    * chunk ties go to the lowest index, and across chunks `<=` against
-    * every LATER chunk's min picks the earliest chunk achieving the
-    * global min. */
-  def assignCol(features: Column, centroids: Array[Array[Float]]): Column = {
-    // A/B knob (the triangleAlgo discipline): 'native' (default —
-    // the [[VecArgminSqDist]] loop expression: round-13 sf0.1 mins
-    // q06 0.53→0.42, q31 0.27→0.23, q32 0.26→0.22, q07 0.94→0.87,
-    // q30 flat, and no 64 KB source cliff) or 'chain' (the chunked
-    // literal CASE chain, kept for parity specs and rollback).
-    // ABOVE the codegen-cells budget both impls ship the broadcast
-    // kernel instead: an embedded codebook rides in every STAGE's
-    // task binary, so an iterative fit over a huge codebook re-ships
-    // it per round where the broadcast ships once per executor.
-    val impl = org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.graft.kmeans.argminImpl").getOrElse("native")
-    // fail fast on a typo'd impl BEFORE the cells gate — otherwise an
-    // A/B run over a beyond-budget codebook would silently measure the
-    // broadcast kernel under both labels
-    if (impl != "native" && impl != "chain")
-      throw new IllegalArgumentException(
-        "spark.graft.kmeans.argminImpl must be 'chain' or 'native', " +
-          s"got '$impl'")
-    val cells = centroids.length.toLong *
-      (if (centroids.isEmpty) 0L else centroids(0).length.toLong)
-    impl match {
-      case _ if cells > maxCodegenCells =>
-        assignColBroadcast(features, centroids)
-      case "native" => argminSqDistCol(features, centroids)
-      case "chain" =>
-        val ds = centroids.toIndexedSeq.zipWithIndex.map { case (c, i) =>
-          (sqdistCol(features, vecLit(c)), lit(i): Column)
-        }
-        argminPairs(ds)
-    }
-  }
-
-  /** k·dim literal budget for the CASE-chain argmin. The chain inlines
-    * every centroid coordinate into the expression tree; at hundreds of
-    * high-dimensional centroids that tree is multi-megabyte and can
-    * overrun codegen limits (falling back to interpreted evaluation —
-    * correct but a perf cliff). Above this budget [[assignCol]] ships
-    * the codebook as ONE broadcast instead and runs the same
-    * strict-`<` running-min kernel per row ([[argminCentroid]] — the
-    * exact fold the chain compiles to, parity-pinned in
-    * VectorFunctionsSpec). Override with
-    * `spark.graft.kmeans.maxCodegenCells`. */
-  private def maxCodegenCells: Long =
-    org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.graft.kmeans.maxCodegenCells")
-      .map(_.toLong).getOrElse(8192L)
-
-  /** Broadcast-codebook argmin for beyond-codegen-budget k·dim: one
-    * broadcast of the float codebook, a map-side kernel per row, no
-    * shuffle — the 1000-executor posture for huge codebooks (the chain
-    * would ship the same bytes inside every serialized plan instead).
-    * Features cast to `array<float>` first: the K-Means contract is
-    * float space end-to-end (reference parity), so the cast is exact
-    * for every producer in this engine. */
-  private def assignColBroadcast(
-      features: Column, centroids: Array[Array[Float]]): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val bc = spark.sparkContext.broadcast(centroids)
-    val kernel = udf { (v: scala.collection.Seq[Float]) =>
-      argminCentroid(v.toArray, bc.value)
-    }
-    kernel(features.cast("array<float>"))
-  }
-
-  /** Earliest-wins argmin over (value, payload) pairs, chunked at 16. */
-  private def argminPairs(
-      pairs: IndexedSeq[(Column, Column)]): Column = {
-    val k = pairs.length
-    if (k == 1) pairs(0)._2
-    else if (k <= 16)
-      (0 until k - 1).foldRight(pairs(k - 1)._2) { (i, acc) =>
-        when((i + 1 until k).map(j => pairs(i)._1 <= pairs(j)._1)
-            .reduce(_ && _), pairs(i)._2)
-          .otherwise(acc)
-      }
-    else {
-      val folded = pairs.grouped(16).toIndexedSeq.map { ch =>
-        val minD =
-          if (ch.length == 1) ch(0)._1 else least(ch.map(_._1): _*)
-        (minD, argminPairs(ch))
-      }
-      argminPairs(folded)
-    }
-  }
+  /** J1 argmin-over-centroids: index of the nearest centroid, ties to
+    * the LOWEST index (strict `<` running min seeded from centroid 0,
+    * KMapper.java:34-43) — the native [[VecArgminSqDist]] loop, picks
+    * bit-identical to [[argminCentroid]] (same left-to-right double
+    * fold per centroid). The codebook rides in the plan as ONE
+    * `references[]` object, so the generated code is a fixed ~20-line
+    * loop at any k·dim: a narrow map, no shuffle, no UDF, and several
+    * argmins can share one projection (the PQ encoder). */
+  def assignCol(features: Column, centroids: Array[Array[Float]]): Column =
+    toCol(VecArgminSqDist(expr(features), centroids.map(_.toSeq).toSeq))
 }

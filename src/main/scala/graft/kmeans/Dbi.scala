@@ -16,9 +16,13 @@ import graft.functions.VectorFunctions._
   * scatter σᵢ = mean point→centroid distance (A5) — is one distributed
   * `groupBy` aggregation; only the O(k²) arithmetic runs on the driver.
   *
-  * Preserved edge semantics (SURVEY §3.2): an empty cluster yields
-  * σ = NaN which propagates into the result (reference divides by a zero
-  * count, Main.java:93); duplicate centroids yield d = 0 → Infinity ratio.
+  * Edge semantics (SURVEY §3.2): an empty cluster yields σ = NaN (the
+  * reference divides by a zero count, Main.java:93), so every ratio it
+  * takes part in is NaN; the running max skips NaN (`NaN > mx` is
+  * false), which leaves that cluster's max at its `-Infinity` seed and
+  * makes the result exactly `-Infinity`. Duplicate centroids yield
+  * d = 0 → Infinity ratio (and NaN if that meets an empty cluster's
+  * `-Infinity` in the mean).
   */
 object Dbi {
 
@@ -29,24 +33,13 @@ object Dbi {
       centroids: Array[Array[Float]],
       featuresCol: String = "features",
       clusterCol: String = "cluster"): Double = {
-    val spark = labeled.sparkSession
     val k = centroids.length
-    // Distance to the row's own centroid. Small k: a codegen'd
-    // coalesce-of-whens over the `VecSqDist` kernel (stays inside
-    // whole-stage codegen); large k: broadcast + UDF, same math.
-    val dCol =
-      if (k <= 16)
-        coalesce(centroids.zipWithIndex.map { case (c, i) =>
-          when(col(clusterCol).cast("int") === i,
-            euclideanCol(col(featuresCol), vecLit(c)))
-        }: _*)
-      else {
-        val bc = spark.sparkContext.broadcast(centroids)
-        val distU = udf { (f: Seq[Float], cid: Int) =>
-          euclidean(f.toArray, bc.value(cid))
-        }
-        distU(col(featuresCol), col(clusterCol).cast("int"))
-      }
+    // Distance to the row's own centroid: the codebook as one literal
+    // array<array<float>>, indexed by the label (1-based element_at),
+    // through the codegen'd `VecSqDist` kernel — one expression at any
+    // k, inside whole-stage codegen, no UDF.
+    val dCol = euclideanCol(col(featuresCol),
+      element_at(typedLit(centroids), col(clusterCol).cast("int") + 1))
     // A5: scatter per cluster in one pass (reference loops k times over
     // all points, Main.java:86-94). The distance sum goes through
     // DECIMAL — exact and associative, so the result is bit-stable under

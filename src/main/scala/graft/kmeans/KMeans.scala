@@ -36,11 +36,11 @@ final case class KMeansModel(
 
   /** Label every row with its nearest centroid — a pure narrow map, no
     * shuffle (reference does this driver-side over the whole dataset,
-    * Main.java:345-355; we stay distributed). Always the codegen'd
-    * `VecSqDist` CASE-chain argmin (inside whole-stage codegen): small
-    * k is one chain, large k the chunked-combine form — identical
-    * semantics at any k (same double fold, same lowest-index ties),
-    * no ScalaUDF fallback anywhere on the labeling pass. */
+    * Main.java:345-355; we stay distributed). The argmin is the native
+    * `VecArgminSqDist` loop ([[graft.functions.VectorFunctions.assignCol]]):
+    * the codebook sits in the plan as one reference object and the
+    * generated code is the same short loop at any k — inside
+    * whole-stage codegen, no shuffle, no UDF, lowest-index ties. */
   def transform(
       df: DataFrame,
       featuresCol: String = "features",

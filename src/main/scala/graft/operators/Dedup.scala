@@ -627,7 +627,7 @@ object Dedup {
 
   /** SemDeDup-style cluster-then-dedup (Abbas et al. 2023, arXiv
     * 2303.09540): assign every embedding to its nearest coarse
-    * centroid (the codegen'd argmin CASE chain), then mark as
+    * centroid (the native-loop argmin, `assignCol`), then mark as
     * duplicates the rows with a LOWER-id same-cluster neighbor above
     * the cosine threshold — the exact tier's keep-lowest-id rule at
     * semantic granularity. The cluster bound is the scale device:
@@ -635,7 +635,7 @@ object Dedup {
     * stay capped — at corpus scale the coarse fit comes from the
     * engine's own KMeans, the q40 IVF precedent); the within-cluster
     * join is an ordinary shuffled equi-join on the cluster id, never
-    * a BNLJ. Assignment is the q31 CASE chain and cosine the
+    * a BNLJ. Assignment is the q31 argmin and cosine the
     * VecDot/norm double tree, so the whole decision is SQL-replayable.
     *
     * Returns (cluster, id, keep 0/1) ordered by (cluster, id). */

@@ -3007,13 +3007,6 @@ object Graph {
         .groupBy("src", "dst").agg(count(lit(1)).as("w"))
   }
 
-  /** Unpersist the cached RDD behind an eager `localCheckpoint`ed
-    * frame (Dataset.unpersist only reaches CacheManager entries, not
-    * checkpoint blocks). Only safe once nothing will read the frame
-    * again — a local checkpoint has no lineage to recompute from.
-    * A non-LogicalRDD plan here means a refactor inserted an operator
-    * between the checkpoint and this call — warn loudly so the
-    * resulting per-round block leak is visible instead of silent. */
   /** Eager localCheckpoint that keeps the executed plan's hash
     * partitioning visible (graftshim device — see there): a plain
     * checkpoint reports UnknownPartitioning under AQE, so every
@@ -3024,6 +3017,13 @@ object Graph {
   private[operators] def checkpointPartitioned(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftshim.localCheckpointPartitioned(df)
 
+  /** Unpersist the cached RDD behind an eager `localCheckpoint`ed
+    * frame (Dataset.unpersist only reaches CacheManager entries, not
+    * checkpoint blocks). Only safe once nothing will read the frame
+    * again — a local checkpoint has no lineage to recompute from.
+    * A non-LogicalRDD plan here means a refactor inserted an operator
+    * between the checkpoint and this call — warn loudly so the
+    * resulting per-round block leak is visible instead of silent. */
   private def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

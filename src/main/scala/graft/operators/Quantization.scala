@@ -23,14 +23,14 @@ final case class PQCodebooks(
   * Scale posture: the per-subspace codebook fits reuse the
   * distributed Lloyd kernel ([[graft.kmeans.KMeans]] — per-partition
   * partials, driver merge of k·subDim floats); encoding is a pure
-  * narrow codegen'd map (an argmin CASE chain per subspace, no
-  * shuffle, no UDF for k ≤ 16); the ADC query is a narrow map over
+  * narrow codegen'd map (one native-loop argmin per subspace, no
+  * shuffle, no UDF); the ADC query is a narrow map over
   * the m-int code column — the raw vectors are never read — followed
   * by a per-partition top-k heap (`TakeOrderedAndProject`).
   *
   * Determinism: the fits inherit the 5-dp round-half-up centroid
   * device (bit-exact vs the recursive-CTE oracle, q30/q40); encode
-  * argmins break ties on the lowest code (CASE chain `<=`); the ADC
+  * argmins break ties on the lowest code (strict `<` running min); the ADC
   * distance is a fixed-association sum of m doubles whose LUT entries
   * are the same ascending-index f64 folds both engines run.
   */
@@ -64,18 +64,15 @@ object Quantization {
     PQCodebooks(m, subDim, books)
   }
 
-  /** The m-code array for one embedding column: one native-loop
-    * argmin expression per subspace ([[VecArgminSqDist]] — the
-    * codebook rides as a reference object, so m of these share one
-    * whole-stage method in ~20 generated lines each; the former
-    * inline CASE-chain form overran janino's 64 KB method limit here
-    * and silently fell back to interpreted eval). Narrow, codegen'd,
-    * no UDF, no shuffle; picks bit-identical to
-    * [[graft.functions.VectorFunctions.assignCol]]. */
+  /** The m-code array for one embedding column: one
+    * [[graft.functions.VectorFunctions.assignCol]] per subspace. Each is
+    * the native `VecArgminSqDist` loop with its codebook as one
+    * reference object, so all m share one whole-stage method in ~20
+    * generated lines each. Narrow, codegen'd, no UDF, no shuffle. */
   private def codesCol(emb: org.apache.spark.sql.Column,
       cb: PQCodebooks): org.apache.spark.sql.Column =
     array((0 until cb.m).map { j =>
-      argminSqDistCol(
+      assignCol(
         slice(emb, lit(j * cb.subDim + 1), lit(cb.subDim))
           .cast("array<float>"),
         cb.books(j))

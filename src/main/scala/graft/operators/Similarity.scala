@@ -221,7 +221,7 @@ object Similarity {
 
   /** Build the IVF index: fit the coarse quantizer with the engine's own
     * K-Means (SURVEY §3.1 closing the loop), assign every row to its
-    * cell via the codegen'd argmin CASE chain, and persist the result.
+    * cell via the native-loop argmin (`assignCol`), and persist the result.
     * Deterministic given `initCentroids` or the seeded sampler. */
   def buildIvfIndex(
       df: DataFrame,
@@ -281,8 +281,8 @@ object Similarity {
   /** Incremental maintenance: append a batch to a persisted IVF index
     * WITHOUT re-fitting the coarse quantizer — the q87 delta-probe
     * precedent applied to ANN. New rows are assigned to cells with the
-    * index's existing centroids (the same codegen'd argmin CASE chain
-    * the build used) and written as a NEW immutable segment; the next
+    * index's existing centroids (the same native-loop argmin the build
+    * used) and written as a NEW immutable segment; the next
     * version's manifest lists it alongside the existing ones. Existing
     * files are never rewritten, append cost is ∝ batch, and probes
     * (old version during the append, new after) always see a complete

@@ -404,113 +404,33 @@ class PlanSpec extends SparkSpec {
     "no ScalaUDF fallback, and labels match the compiled running min") {
     import graft.functions.VectorFunctions.argminCentroid
     import org.apache.spark.sql.functions.col
-    // over parquet (an inline fixture constant-folds the whole chain
-    // into a LocalTableScan — the q181/q183 device): 64 centroids
-    // sampled from the corpus itself, so exact ties (a point that IS a
-    // centroid) exercise the earliest-wins chunk combine
+    // over parquet (an inline fixture constant-folds the whole argmin
+    // into a LocalTableScan — the q181/q183 device): centroids sampled
+    // from the corpus itself, so exact ties (a point that IS a
+    // centroid) exercise the earliest-wins running min. k = 129 also
+    // runs (129 × dim 64 = 8256 codebook cells): the plan carries the
+    // codebook as one object, so a large k is the same native loop.
     val emb = sources.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<float>")
         .as("features"))
-    val cents = emb.orderBy("vec_id").limit(64)
-      .select("features").collect().map(_.getSeq[Float](0).toArray)
-    val labeled = graft.kmeans.KMeansModel(cents, 0, converged = true)
-      .transform(emb)
-    val p = labeled.queryExecution.executedPlan.toString
-    // "UDF(" is how executedPlan renders a ScalaUDF (the class-name
-    // sentinel alone never matches and would pin nothing)
-    assert(!p.contains("UDF("), p)
-    assert(!p.contains("ScalaUDF"), p)
-    assert(p.contains("vec_argmin_sqdist"), p)
-    val got = labeled.select("vec_id", "features", "cluster").collect()
-    assert(got.nonEmpty)
-    got.foreach { r =>
-      val v = r.getSeq[Float](1).toArray
-      assert(r.getInt(2) === argminCentroid(v, cents),
-        s"vec_id=${r.getLong(0)}")
-    }
-  }
-
-  test("KMeans.transform beyond the k·dim codegen budget switches to " +
-    "the broadcast kernel, bit-identical to the literal chain") {
-    import graft.functions.VectorFunctions.argminCentroid
-    import org.apache.spark.sql.functions.col
-    val emb = sources.Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<float>")
-        .as("features"))
-    // 129 centroids × dim 64 = 8256 cells > the 8192 default budget:
-    // inlining them would build a multi-MB expression tree (the codegen
-    // cliff ADVICE r11 flagged), so assignCol must pick the broadcast
-    // kernel here — and produce the exact labels the chain produces.
-    val cents = emb.orderBy("vec_id").limit(129)
-      .select("features").collect().map(_.getSeq[Float](0).toArray)
-    val model = graft.kmeans.KMeansModel(cents, 0, converged = true)
-    val viaKernel = model.transform(emb)
-    // executedPlan renders ScalaUDF as "UDF(...)"
-    assert(viaKernel.queryExecution.executedPlan.toString
-      .contains("UDF("), "expected the broadcast kernel above budget")
-    val got = viaKernel.select("vec_id", "features", "cluster")
-      .orderBy("vec_id").collect()
-    assert(got.nonEmpty)
-    got.foreach { r =>
-      val v = r.getSeq[Float](1).toArray
-      assert(r.getInt(2) === argminCentroid(v, cents),
-        s"vec_id=${r.getLong(0)}")
-    }
-    // raise the budget: same call compiles the CHAIN impl (forced —
-    // the default below-budget impl is now the native loop), and the
-    // two paths agree row-for-row (parity pin)
-    spark.conf.set("spark.graft.kmeans.maxCodegenCells", "100000")
-    spark.conf.set("spark.graft.kmeans.argminImpl", "chain")
-    try {
-      val viaChain = model.transform(emb)
-      val p = viaChain.queryExecution.executedPlan.toString
-      assert(!p.contains("UDF("), p)
-      assert(p.contains("vec_sqdist"), p)
-      val chain = viaChain.select("vec_id", "cluster").orderBy("vec_id")
-        .collect().map(r => (r.getLong(0), r.getInt(1)))
-      val kernel = got.map(r => (r.getLong(0), r.getInt(2)))
-      assert(chain.toSeq === kernel.toSeq)
-      // and the native impl at the same raised budget agrees too
-      spark.conf.set("spark.graft.kmeans.argminImpl", "native")
-      val viaNative = model.transform(emb)
-      assert(viaNative.queryExecution.executedPlan.toString
-        .contains("vec_argmin_sqdist"))
-      val native = viaNative.select("vec_id", "cluster").orderBy("vec_id")
-        .collect().map(r => (r.getLong(0), r.getInt(1)))
-      assert(native.toSeq === chain.toSeq)
-    } finally {
-      spark.conf.unset("spark.graft.kmeans.maxCodegenCells")
-      spark.conf.unset("spark.graft.kmeans.argminImpl")
-    }
-  }
-
-  test("KMeans.transform AT the k·dim codegen budget keeps the codegen'd " +
-    "native argmin under the DEFAULT conf (vs falling to the broadcast " +
-    "UDF kernel) — the gate is <=, not <") {
-    import graft.functions.VectorFunctions.argminCentroid
-    import org.apache.spark.sql.functions.col
-    val emb = sources.Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<float>")
-        .as("features"))
-    // 128 centroids × dim 64 = 8192 cells = exactly the default
-    // budget: the boundary must stay on the codegen side (a <
-    // regression would silently push every default-k workload onto
-    // the UDF kernel), with no conf override in play.
-    val cents = emb.orderBy("vec_id").limit(128)
-      .select("features").collect().map(_.getSeq[Float](0).toArray)
-    val model = graft.kmeans.KMeansModel(cents, 0, converged = true)
-    val viaChain = model.transform(emb)
-    val p = viaChain.queryExecution.executedPlan.toString
-    assert(!p.contains("UDF("), p)
-    assert(!p.contains("ScalaUDF"), p)
-    assert(p.contains("vec_argmin_sqdist"), p)
-    val got = viaChain.select("vec_id", "features", "cluster")
-      .orderBy("vec_id").limit(200).collect()
-    assert(got.nonEmpty)
-    got.foreach { r =>
-      val v = r.getSeq[Float](1).toArray
-      assert(r.getInt(2) === argminCentroid(v, cents),
-        s"vec_id=${r.getLong(0)}")
+    for (k <- Seq(64, 129)) {
+      val cents = emb.orderBy("vec_id").limit(k)
+        .select("features").collect().map(_.getSeq[Float](0).toArray)
+      val labeled = graft.kmeans.KMeansModel(cents, 0, converged = true)
+        .transform(emb)
+      val p = labeled.queryExecution.executedPlan.toString
+      // "UDF(" is how executedPlan renders a ScalaUDF (the class-name
+      // sentinel alone never matches and would pin nothing)
+      assert(!p.contains("UDF("), s"k=$k\n$p")
+      assert(!p.contains("ScalaUDF"), s"k=$k\n$p")
+      assert(p.contains("vec_argmin_sqdist"), s"k=$k\n$p")
+      val got = labeled.select("vec_id", "features", "cluster").collect()
+      assert(got.nonEmpty)
+      got.foreach { r =>
+        val v = r.getSeq[Float](1).toArray
+        assert(r.getInt(2) === argminCentroid(v, cents),
+          s"k=$k vec_id=${r.getLong(0)}")
+      }
     }
   }
 

@@ -115,7 +115,7 @@ class VectorFunctionsColumnSpec extends SparkSpec {
     }
   }
 
-  test("argminSqDistCol NaN/null edges match argminCentroid: all-NaN " +
+  test("assignCol NaN/null edges match argminCentroid: all-NaN " +
     "row yields 0 (a valid index, never -1); null array yields null") {
     import spark.implicits._
     val cents = Array(Array(0f, 0f), Array(1f, 1f))
@@ -129,7 +129,7 @@ class VectorFunctionsColumnSpec extends SparkSpec {
       spark.conf.set("spark.sql.codegen.factoryMode", codegen)
       try {
         val got = df.select(col("id"),
-            argminSqDistCol(col("v"), cents).as("c"))
+            assignCol(col("v"), cents).as("c"))
           .orderBy("id").collect()
         assert(got(0).getInt(1) === 0, codegen)
         assert(got(0).getInt(1) ===

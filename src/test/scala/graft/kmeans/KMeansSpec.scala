@@ -269,10 +269,52 @@ class DbiSpec extends SparkSpec {
     import spark.implicits._
     // empty cluster 1: sigma(1) = 0/0 = NaN; the reference's running-max
     // `if (r > max)` skips NaN comparisons, leaving max = -Infinity, so
-    // the final DBI is non-finite (not a clean NaN) — we mirror exactly.
+    // the final DBI is exactly -Infinity (not NaN) — we mirror exactly.
     val labeled = Seq((Array(0f), 0)).toDF("features", "cluster")
     val cents = Array(Array(0f), Array(5f))
     val dbi = Dbi.compute(labeled, cents)
-    assert(dbi.isNaN || dbi.isInfinite)
+    assert(dbi === Double.NegativeInfinity)
+  }
+
+  test("DBI ≡ a plain-Scala replay at k = 3, 16, 17, 40, with an " +
+    "exactly equidistant point") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(61L)
+    val dim = 4
+    // quarter-step coordinates: distances repeat exactly, and the
+    // midpoint of two centroids is representable, so it is a true tie
+    def vec(): Array[Float] =
+      Array.fill(dim)((rnd.nextInt(9) * 0.25 - 1.0).toFloat)
+    for (k <- Seq(3, 16, 17, 40)) {
+      val cents = Iterator.continually(vec().toSeq).distinct.take(k)
+        .map(_.toArray).toArray
+      val tie = cents(0).zip(cents(1)).map { case (a, b) => (a + b) / 2 }
+      assert(sqdist(tie, cents(0)) === sqdist(tie, cents(1)))
+      // every centroid is also a point, so no cluster is empty
+      val pts = cents.toSeq ++ Seq(tie) ++ Seq.fill(300)(vec())
+      val labeled = KMeansModel(cents, 0, converged = true)
+        .transform(pts.map(Tuple1(_)).toDF("features").repartition(3))
+      val rows = labeled.collect()
+        .map(r => (r.getSeq[Float](0).toArray, r.getInt(1)))
+      rows.foreach { case (p, c) => assert(c === argminCentroid(p, cents)) }
+
+      val sum = Array.fill(k)(BigDecimal(0))
+      val cnt = new Array[Long](k)
+      rows.foreach { case (p, c) =>
+        sum(c) += BigDecimal(euclidean(p, cents(c)))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP)
+        cnt(c) += 1
+      }
+      val sigma = Array.tabulate(k)(i => sum(i).toDouble / cnt(i))
+      val want = (0 until k).map { i =>
+        (0 until k).filter(_ != i)
+          .map(j => (sigma(i) + sigma(j)) / euclidean(cents(i), cents(j)))
+          .foldLeft(Double.NegativeInfinity)((mx, r) => if (r > mx) r else mx)
+      }.foldLeft(0.0)(_ + _) / k
+
+      val got = Dbi.compute(labeled, cents)
+      assert(!got.isNaN && !got.isInfinite, s"k=$k")
+      assert(got === want, s"k=$k")
+    }
   }
 }

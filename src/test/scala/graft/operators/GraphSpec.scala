@@ -1286,6 +1286,47 @@ class GraphSpec extends SparkSpec {
     } finally gt.unpersist()
   }
 
+  test("adamicAdar: broadcast and shuffle_hash neighbour joins are " +
+    "bit-identical") {
+    import spark.implicits._
+    val gt = Graph.buildGraphTable(
+      randomSym(40, 150, seed = 31L).toDF("src", "dst").repartition(3),
+      "src", "dst", assumeDistinct = true)
+    val key = "spark.graft.graph.aaBroadcastMaxNbRows"
+    def run() = gt.adamicAdar(maxDegree = 10).collect().toSeq
+    try {
+      val viaBroadcast = run() // default gate: the tiny nb table broadcasts
+      spark.conf.set(key, "0") // every nb table exceeds the gate
+      val viaShuffle = run()
+      assert(viaBroadcast.nonEmpty)
+      assert(viaShuffle === viaBroadcast)
+    } finally {
+      spark.conf.unset(key)
+      gt.unpersist()
+    }
+  }
+
+  test("graph treeReducePartitions: treeReduce merge ≡ collect fold " +
+    "in the driver rank loops") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(43)
+    val g = (0L until 200L).flatMap { s =>
+      if (s % 13 == 0) Seq.empty
+      else (0 until (1 + rnd.nextInt(4))).map(_ => s -> rnd.nextInt(200).toLong)
+    }.distinct.toDF("src", "dst").repartition(5)
+    val key = "spark.graft.graph.treeReducePartitions"
+    def run() = (
+      Graph.pageRank(g, "src", "dst", iters = 6, danglingCorrection = true)
+        .collect().toSeq,
+      Graph.hits(g, "src", "dst", iters = 6).collect().toSeq)
+    try {
+      val viaCollect = run() // 5 edge partitions <= the 1024 default
+      spark.conf.set(key, "0") // every partition count exceeds 0
+      val viaTree = run()
+      assert(viaTree === viaCollect)
+    } finally spark.conf.unset(key)
+  }
+
   test("adamicAdar packed-key gate: an id >= 2^31 that is only a " +
       "degree-1 NEIGHBOR (never an eligible center) disables packing " +
       "and the result still matches the set replica") {

@@ -8,19 +8,17 @@ import org.apache.spark.sql.functions._
   * replica (the Round8PropertySpec device). */
 class Round11PropertySpec extends SparkSpec {
 
-  test("chunked codegen argmin ≡ the compiled running min at every k " +
-    "across the chunking boundary, including exact-tie inputs") {
+  test("native-loop argmin (assignCol) ≡ the compiled running min at " +
+    "every k, including exact-tie inputs") {
     import graft.functions.VectorFunctions.{argminCentroid, assignCol}
     import spark.implicits._
     val rnd = new scala.util.Random(53L)
     val dim = 3
     // quantized coordinates make exact distance TIES common — the
-    // earliest-wins combine across chunk boundaries must match the
-    // flat running min on precisely those
+    // strict-`<` loop must pick the lowest index on precisely those
     def vec(): Array[Float] =
       Array.fill(dim)((rnd.nextInt(5) * 0.25).toFloat)
-    // points once per spark job set; k sweeps the one-chunk / exact-
-    // boundary / multi-chunk / recursive-combine regimes
+    // points once per spark job set; k sweeps 1 through 64
     val pts = (0 until 120).map(i => (i.toLong, vec()))
     val df = pts.toDF("id", "v")
     for (k <- Seq(1, 2, 15, 16, 17, 31, 33, 64)) {
