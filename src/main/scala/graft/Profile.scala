@@ -10,10 +10,6 @@ object Profile {
       case Some("entry") => entrySmoke()
       case Some("queries") => profileQueries(args.drop(1))
       case Some("plans") => dumpPlans(args.drop(1))
-      case Some("pagerank") => pagerankPhases(
-        args.lift(1).getOrElse("/root/testdata/sf0.1"))
-      case Some("pagerank-dist") => pagerankDistPhases(
-        args.lift(1).getOrElse("/root/testdata/sf0.1"))
       case Some("nb-phases") => nbPhases(
         args.lift(1).getOrElse("/root/testdata/sf0.1"))
       case Some("aa-phases") => aaPhases(
@@ -461,286 +457,6 @@ object Profile {
     time("shingles")(
       docs.select(graft.operators.Dedup.shingles(col("text"), 8).as("sh"))
         .agg(sum(size(col("sh")))).head())
-    spark.stop()
-  }
-
-  /** Phase attribution for the q98 PageRank loop at a given sf dir. */
-  def pagerankPhases(dir: String): Unit = {
-    import org.apache.spark.sql.types.DecimalType
-    import org.apache.spark.storage.StorageLevel
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[prof] $name: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    (1 to 2).foreach { rep =>
-      println(s"[prof] === rep $rep")
-      val o = sources.Tables(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = sources.Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val base = l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (col("l_suppkey") + 10000000L).as("p"))
-        .distinct()
-      val edges = base.select(col("c").as("src"), col("p").as("dst"))
-        .union(base.select(col("p").as("src"), col("c").as("dst")))
-      val e = t("build:persist+count") {
-        val e = edges.persist(StorageLevel.MEMORY_AND_DISK); e.count(); e
-      }
-      val od = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val ed = t("build:degree-join persist+count") {
-        val ed = e.join(broadcast(od), "src")
-          .persist(StorageLevel.MEMORY_AND_DISK); ed.count(); ed
-      }
-      val nodes = t("build:nodes persist+count") {
-        val nd = e.select(col("src").as("node")).distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK); nd.count(); nd
-      }
-      val n = nodes.count().toDouble
-      e.unpersist()
-      var ranks = nodes.select(col("node"), (lit(1.0) / lit(n)).as("rank"))
-      (1 to 10).foreach { i =>
-        t(f"iter$i%02d") {
-          val contribs = ed.join(broadcast(ranks), col("src") === col("node"))
-            .select(col("dst").as("cn"),
-              round(col("rank") / col("outdeg").cast("double"), 12)
-                .cast(DecimalType(38, 12)).as("c"))
-          val sums = contribs.groupBy("cn").agg(sum(col("c")).as("s"))
-          ranks = nodes.join(broadcast(sums), col("node") === col("cn"), "left")
-            .select(col("node"),
-              round(lit(0.15) / lit(n) +
-                lit(0.85) * coalesce(col("s"), lit(0)).cast("double"), 9)
-                .as("rank"))
-            .localCheckpoint(eager = true)
-        }
-      }
-      t("final orderBy+collect") {
-        ranks.orderBy(desc("rank"), col("node")).limit(20).collect()
-      }
-      ed.unpersist(); nodes.unpersist()
-    }
-    spark.stop()
-  }
-
-  /** Phase attribution for the q107 DISTRIBUTED-rank PageRank loop
-    * (the q102 feed): replicates Graph.pageRankDistributed's CURRENT
-    * round shape (sink flag folded into the rank table) and A/Bs the
-    * round-15 candidates — (B) long micro-unit contributions instead
-    * of the DECIMAL(38,12) aggregate, (C) B plus lazy per-round
-    * persist with a lineage-truncating checkpoint every 5 rounds
-    * (one job materializes 5 rounds instead of 1). All variants print
-    * the same top-20 so bit-identity is visible in the output. */
-  def pagerankDistPhases(dir: String): Unit = {
-    import org.apache.spark.sql.types.DecimalType
-    import org.apache.spark.storage.StorageLevel
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    val Dec12 = DecimalType(38, 12)
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[prof] $name: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    (1 to 2).foreach { rep =>
-      println(s"[prof] === rep $rep")
-      val o = sources.Tables(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = sources.Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val edges = l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 10000000L).as("dst"))
-        .distinct()
-      val od = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val ed = t("build:edges repartition(src)+degree-join persist") {
-        val ed = edges.join(broadcast(od), "src")
-          .select(col("src"), col("dst"), lit(1.0).as("w"),
-            col("outdeg").cast("double").as("wout"))
-          .repartition(col("src"))
-          .persist(StorageLevel.MEMORY_AND_DISK); ed.count(); ed
-      }
-      val srcNodes = edges.select(col("src").as("node")).distinct()
-      val nodesDf = t("build:nodes(sink) repartition(node) persist") {
-        val nd = srcNodes.withColumn("is_src", lit(true))
-          .union(edges.select(col("dst").as("node"), lit(false)))
-          .groupBy("node").agg(max(col("is_src")).as("is_src"))
-          .select(col("node"), (!col("is_src")).as("sink"))
-          .repartition(col("node"))
-          .persist(StorageLevel.MEMORY_AND_DISK); nd.count(); nd
-      }
-      val n = nodesDf.count().toDouble
-      val nRounds = 10
-
-      // ---- variant A: the CURRENT operator shape (Dec12 agg,
-      // per-round eager localCheckpoint)
-      def roundA(ranks: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame = {
-        val contrib = ed
-          .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
-          .select(col("dst").as("node"),
-            round(col("rank") * col("w") / col("wout"), 12)
-              .cast(Dec12).as("c"))
-          .groupBy("node").agg(sum(col("c")).as("s"))
-        val joined = nodesDf
-          .join(contrib.hint("shuffle_hash"), Seq("node"), "left")
-          .select(col("node"), col("sink"),
-            coalesce(col("s").cast("double"), lit(0.0)).as("sd"))
-        val dm = ranks.where(col("sink"))
-          .agg(coalesce(sum(round(col("rank"), 12).cast(Dec12)),
-            lit(java.math.BigDecimal.ZERO).cast(Dec12)).as("dms"))
-          .select((col("dms").cast("double") / lit(n)).as("dmn"))
-        joined.crossJoin(broadcast(dm))
-          .select(col("node"), col("sink"),
-            round(lit(0.15 / n) + lit(0.85) * (col("sd") + col("dmn")), 9)
-              .as("rank"))
-      }
-      // ---- variant B: long micro-units (12-dp term × 10¹² summed as
-      // machine longs; per-dst mass ≤ 1 so sums sit at ~1e12, far
-      // inside the long envelope; ·1E-12 decimal multiply recovers the
-      // identical DECIMAL(·,12) value, cast double unchanged)
-      val U = java.math.BigDecimal.valueOf(1000000000000L)
-      val Uinv = new java.math.BigDecimal("1E-12")
-      def roundB(ranks: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame = {
-        val contrib = ed
-          .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
-          .select(col("dst").as("node"),
-            (round(col("rank") * col("w") / col("wout"), 12)
-              .cast(DecimalType(14, 12)) * lit(U)).cast("long").as("c"))
-          .groupBy("node").agg(sum(col("c")).as("su"))
-        val joined = nodesDf
-          .join(contrib.hint("shuffle_hash"), Seq("node"), "left")
-          .select(col("node"), col("sink"),
-            coalesce((col("su").cast(DecimalType(26, 0)) * lit(Uinv))
-              .cast("double"), lit(0.0)).as("sd"))
-        val dm = ranks.where(col("sink"))
-          .agg(coalesce(sum((round(col("rank"), 12)
-            .cast(DecimalType(14, 12)) * lit(U)).cast("long")), lit(0L))
-            .as("dmu"))
-          .select(((col("dmu").cast(DecimalType(26, 0)) * lit(Uinv))
-            .cast("double") / lit(n)).as("dmn"))
-        joined.crossJoin(broadcast(dm))
-          .select(col("node"), col("sink"),
-            round(lit(0.15 / n) + lit(0.85) * (col("sd") + col("dmn")), 9)
-              .as("rank"))
-      }
-
-      def runEager(tag: String,
-          round: org.apache.spark.sql.DataFrame =>
-            org.apache.spark.sql.DataFrame): Unit = {
-        var ranks = nodesDf.withColumn("rank", lit(1.0 / n))
-          .localCheckpoint(eager = true)
-        t(s"$tag: 10 rounds eager-checkpoint") {
-          (1 to nRounds).foreach { _ =>
-            ranks = round(ranks).localCheckpoint(eager = true)
-          }
-        }
-        t(s"$tag: final top-20") {
-          println("[prof]   " + ranks
-            .orderBy(desc("rank"), col("node")).limit(5).collect().toSeq)
-        }
-      }
-      // round-15 scheme: partitioning-preserving eager checkpoint per
-      // round (graftshim) — O(1) logical lineage like a checkpoint
-      // (a persist chain doubles the logical plan per round: ranks is
-      // referenced twice per round body), but the declared
-      // hashpartitioning(node) survives, so no rank-side exchange
-      def runShim(tag: String,
-          round: org.apache.spark.sql.DataFrame =>
-            org.apache.spark.sql.DataFrame): Unit = {
-        var ranks = org.apache.spark.sql.graftshim
-          .localCheckpointPartitioned(
-            nodesDf.withColumn("rank", lit(1.0 / n)))
-        t(s"$tag: 10 rounds shim-checkpoint") {
-          (1 to nRounds).foreach { _ =>
-            ranks = org.apache.spark.sql.graftshim
-              .localCheckpointPartitioned(round(ranks))
-          }
-        }
-        t(s"$tag: final top-20") {
-          println("[prof]   " + ranks
-            .orderBy(desc("rank"), col("node")).limit(5).collect().toSeq)
-        }
-      }
-      def runChained(tag: String, k: Int,
-          round: org.apache.spark.sql.DataFrame =>
-            org.apache.spark.sql.DataFrame): Unit = {
-        var ranks = nodesDf.withColumn("rank", lit(1.0 / n))
-          .localCheckpoint(eager = true)
-        var pending = List.empty[org.apache.spark.sql.DataFrame]
-        t(s"$tag: 10 rounds persist-chained ck-every-$k") {
-          (1 to nRounds).foreach { it =>
-            val next0 = round(ranks)
-            if (it % k == 0 || it == nRounds) {
-              val next = next0.localCheckpoint(eager = true)
-              pending.foreach(_.unpersist(blocking = false))
-              pending = Nil
-              ranks = next
-            } else {
-              val next = next0.persist(StorageLevel.MEMORY_AND_DISK)
-              pending ::= next
-              ranks = next
-            }
-          }
-        }
-        t(s"$tag: final top-20") {
-          println("[prof]   " + ranks
-            .orderBy(desc("rank"), col("node")).limit(5).collect().toSeq)
-        }
-      }
-
-      def withConf[A](k: String, v: String)(f: => A): A = {
-        val old = spark.conf.get(k)
-        spark.conf.set(k, v)
-        try f finally spark.conf.set(k, old)
-      }
-      if (rep == 1) {
-        // evidence dumps: ONE round's physical plan over (a) a
-        // checkpointed rank table — the old per-round materialization,
-        // whose LogicalRDD reports UnknownPartitioning under AQE and
-        // re-exchanges the rank side — and (b) a persist-materialized
-        // one, the round-15 scheme, whose InMemoryRelation keeps
-        // hashpartitioning(node) visible
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get("plans/r15"))
-        def dump(name: String, r0: org.apache.spark.sql.DataFrame,
-            note: String): Unit = {
-          val plan = roundA(r0).queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode
-              .fromString("formatted"))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"plans/r15/$name"),
-            (note + "\n" + plan).getBytes("UTF-8"))
-          println(s"[prof] wrote plans/r15/$name")
-        }
-        val rCk = nodesDf.withColumn("rank", lit(1.0 / n))
-          .localCheckpoint(eager = true)
-        dump("q107_round_shape_checkpoint.txt", rCk,
-          "REPLICA of one pageRankDistributed round over a " +
-            "CHECKPOINTED rank table (the pre-round-15 shape)")
-        val rS = org.apache.spark.sql.graftshim.localCheckpointPartitioned(
-          nodesDf.withColumn("rank", lit(1.0 / n)))
-        dump("q107_round_shape_shimckpt.txt", rS,
-          "REPLICA of one pageRankDistributed round over a " +
-            "graftshim PARTITIONING-PRESERVING checkpoint of the rank " +
-            "table (the round-15 shape)")
-      }
-      // alternate order to kill JIT/first-run bias; E = A with AQE off
-      // inside the loop (rounds are latency-bound: 10-partition stages
-      // gain nothing from runtime re-optimization barriers)
-      runEager("A(dec12,ckpt)", roundA)
-      runShim("G(dec12,shim)", roundA)
-      runEager("A2(dec12,ckpt)", roundA)
-      runShim("G2(dec12,shim)", roundA)
-      withConf("spark.sql.adaptive.enabled", "false") {
-        runEager("E(dec12,noAQE)", roundA)
-      }
-      runEager("B(units,ckpt)", roundB)
-      ed.unpersist(); nodesDf.unpersist()
-    }
     spark.stop()
   }
 

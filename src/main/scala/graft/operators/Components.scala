@@ -94,9 +94,19 @@ object Components {
       // eager localCheckpoint: materializes AND truncates lineage (see
       // the scale note above — persist alone leaves the logical plan
       // growing ~4× per round). The partitioning-preserving graftshim
-      // variant keeps hashpartitioning(id) from the distinct visible,
-      // so the per-round label-offer join and union-agg never
-      // re-exchange the label table.
+      // variant only helps where the checkpointed plan reports ONE hash
+      // partitioning. The executed plans of a 3-round distributed run
+      // (AQE on, small graph) show:
+      //  - this initial table reports a PartitioningCollection (`lbl`
+      //    aliases `id`), so the shim falls back to a plain checkpoint
+      //    and round 1's offer join re-exchanges the label table;
+      //  - round 2's offer join reads round 1's `jumped` as
+      //    hashpartitioning(id) with no exchange, only because AQE
+      //    broadcast `parents` and streamed `merged` (grouped on id);
+      //    a shuffled jump join is keyed on lbl, which the projection
+      //    drops, so it falls back too;
+      //  - the union-agg re-exchanges the union, label rows included,
+      //    every round: the union reports no partitioning.
       var labels = Graph.checkpointPartitioned(
         und.select(col("_g_src").as("id"))
           .distinct()

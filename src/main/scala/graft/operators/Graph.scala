@@ -1,10 +1,15 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
+import java.math.{BigDecimal => JBD}
+import java.math.RoundingMode.HALF_UP
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType,
+  IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Prebuilt graph scaffolding: the distinct (optionally weighted) edge
@@ -27,8 +32,10 @@ import org.apache.spark.storage.StorageLevel
   *    `is_src = false` has in-edges but no out-edges (a sink).
   *
   * `cached` records whether the frames are persisted (built in-memory)
-  * or plain parquet reads (loaded artifact); algorithms that re-scan
-  * the edge list per round persist their own view when it is false.
+  * or plain parquet reads (loaded artifact). No iterative algorithm
+  * re-scans `edges` per round either way: the driver twins lift it
+  * once into their own cache, the distributed bodies persist their
+  * own repartitioned view.
   */
 final case class GraphTable(
     edges: DataFrame,
@@ -470,18 +477,12 @@ object Graph {
     * `spark.graft.graph.maxDriverRankNodes` (default 2M — see
     * [[maxDriverRankNodes]]):
     *
-    *  - driver-resident (the small-N fast path): each round broadcasts
-    *    the N-entry rank array into the edge partitions (the edges
-    *    never move) and folds contributions into a per-partition DENSE
-    *    array of exact 12-dp decimals — the map-side combiner taken to
-    *    its limit: ONE zero-shuffle task wave per round, merged exactly
-    *    (BigDecimal addition is associative, the K-Means A3 merge
-    *    discipline — collect-fold below
-    *    `spark.graft.graph.treeReducePartitions`, 2-level treeReduce
-    *    above it). No exchange ever carries edge rows; edges are lifted
-    *    ONCE to primitive columnar partitions keyed by dense node
-    *    index, so the per-round job deserializes no rows and hashes no
-    *    keys. The rank array lives on the driver between rounds:
+    *  - driver-resident (the small-N fast path, on the
+    *    [[DriverHarness]]): each round broadcasts the N-entry rank
+    *    array into the lifted edge partitions (the edges never move)
+    *    and folds contributions into per-partition DENSE arrays of
+    *    exact 12-dp decimals — ONE zero-shuffle task wave per round,
+    *    merged exactly. The rank array lives on the driver between rounds:
     *    broadcasting it already collects all N ranks driver-side every
     *    round, so driver residency adds no new constraint. Cap: N must
     *    fit the driver/executor broadcast envelope — which is exactly
@@ -521,10 +522,8 @@ object Graph {
     * uses the same 12-dp DECIMAL device before one double division by
     * N; the damped update `(1-d)/N + d·(s + dm/N)` is the same
     * fixed-association double arithmetic whether evaluated per-row by
-    * codegen or per-node on the driver (round = BigDecimal HALF_UP in
-    * both — `round(x, 12)` on a double then cast to DECIMAL(38,12) is
-    * lossless because distinct 12-dp decimals differ by ≥1e-12, far
-    * beyond a double's ulp at rank magnitudes). By induction every
+    * codegen or per-node on the driver (the [[DriverHarness]]
+    * argument: both sides round HALF_UP, losslessly). By induction every
     * iteration's rank column is bit-identical across the two loop
     * bodies and any engine that evaluates the same tree. With
     * `danglingCorrection = false` the `+ dm/N` term is absent
@@ -571,58 +570,111 @@ object Graph {
           "sinks their back-edges.")
     // ranks are defined over src nodes on the cheap path (sink-free ⇒
     // src set ⊇ dst set), over src ∪ dst with the correction
-    val n = if (danglingCorrection) gt.numNodes else gt.numSrcNodes
+    val nL = if (danglingCorrection) gt.numNodes else gt.numSrcNodes
     val distributed =
       distributedRanks.getOrElse(
-        n > maxDriverRankNodes(gt.edges.sparkSession))
-    if (distributed)
-      pageRankDistributed(gt, n, iters, damping, danglingCorrection,
-        epsilon)
-    else
-      pageRankDriver(gt, iters, damping, danglingCorrection, epsilon)
+        nL > maxDriverRankNodes(gt.edges.sparkSession))
+    val srcNodes = gt.nodes.where(col("is_src")).select("node")
+    if (distributed) {
+      // with the correction the SINK FLAG rides the node (and so the
+      // rank) table; the uniform share of the sink mass is dm/N
+      val n = nL.toDouble
+      rankLoopDistributed(gt,
+        if (danglingCorrection)
+          gt.nodes.select(col("node"), (!col("is_src")).as("sink"))
+        else srcNodes,
+        lit(1.0 / n), iters, epsilon)(
+        dms => dms / lit(n),
+        (sd, dmn) => lit((1.0 - damping) / n) + lit(damping) * (sd + dmn))
+    } else {
+      // non-dangling path: dst ⊆ src is the loud precondition above, so
+      // every edge endpoint resolves in the dense index
+      val h = new DriverHarness(
+        if (danglingCorrection) gt.nodes.select("node") else srcNodes,
+        gt.edges.select("src", "dst", "w", "wout"))
+      val n = h.nN.toDouble
+      // dm = 0.0 without the correction, and s + 0.0 == s (s >= +0.0)
+      rankLoopDriver(gt, h, danglingCorrection, Array.fill(h.nN)(1.0 / n),
+        iters, epsilon) { (_, s, dm) =>
+        (1.0 - damping) / n + damping * (s + dm / n)
+      }
+    }
   }
 
-  /** Shared machinery for the driver-resident rank loops
-    * ([[pageRankDriver]], [[personalizedPageRankDriver]]): lifts the
-    * edge list ONCE to primitive columnar partitions keyed by dense
-    * node index — each round re-reads THIS cache, so the per-round
-    * job deserializes no rows and hashes no keys — and folds one
-    * round's contributions round(rank·w/wout, 12) into a dense
-    * per-partition array of exact 12-dp decimals (the map-side
-    * combiner taken to its limit: a zero-shuffle task wave), merged
-    * exactly (BigDecimal addition is associative ⇒ any merge shape —
-    * the driver's sequential fold, treeReduce's executor-side
-    * pre-merges above `spark.graft.graph.treeReducePartitions` —
-    * yields the same cells).
+  /** One edge partition lifted to dense node indices: parallel
+    * primitive columns (`w` / `wout` are empty when the lifted frame
+    * has no such column). */
+  private final case class EdgeBlock(
+      src: Array[Int], dst: Array[Int], w: Array[Double],
+      wout: Array[Double])
+
+  /** The driver executor every driver twin runs on (PageRank, PPR,
+    * HITS, label propagation, k-core, BFS, shortest paths): round state
+    * lives in dense driver arrays indexed by node, and each round is
+    * ONE zero-shuffle task wave over edges lifted once.
     *
-    * Bit-identity with the DataFrame round this replaces (and so with
-    * the distributed bodies and the recursive-CTE oracles):
-    * `round(rank·w/wout, 12) CAST DECIMAL(38,12)` equals
-    * `BigDecimal.valueOf(rank·w/wout).setScale(12, HALF_UP)` — the
-    * double round-trip is lossless because distinct 12-dp decimals
-    * differ by ≥ 1e-12, orders of magnitude beyond a double's ulp at
-    * rank magnitudes, so the shortest-repr cast recovers exactly the
-    * rounded decimal. The per-dst sums are then the same exact
-    * addends in a different association — equal by associativity. */
-  private final class DriverRankHarness(
-      ed: DataFrame, val nodeArr: Array[Any]) {
-    import java.math.{BigDecimal => JBD}
-    import java.math.RoundingMode.HALF_UP
-    val spark: SparkSession = ed.sparkSession
+    *  - `nodes` (node first, then any per-node values the caller reads
+    *    back from [[nodeRows]]) is collected once; row i's node gets
+    *    dense index i, so a value-ordered `nodes` makes index order
+    *    value order.
+    *  - `edges` — (src, dst[, w[, wout]]) — is lifted ONCE to one
+    *    [[EdgeBlock]] per partition and persisted; every round re-reads
+    *    THIS cache, so no round deserializes a row or hashes a key.
+    *  - [[wave]] broadcasts the round state, folds each block into a
+    *    dense per-partition partial (the map-side combiner taken to its
+    *    limit), and merges the partials under one policy: a driver
+    *    collect-fold, or a 2-level treeReduce (executor-side
+    *    pre-merges) above `spark.graft.graph.treeReducePartitions` edge
+    *    partitions.
+    *
+    * Bit-identity with the distributed bodies (and so with the
+    * recursive-CTE oracles): every partial is exact and every merge
+    * associative and commutative, so neither partitioning nor merge
+    * shape can move a bit.
+    *  - Rank and HITS contributions are 12-dp decimals:
+    *    `round(x, 12) CAST DECIMAL(38,12)` equals
+    *    `BigDecimal.valueOf(x).setScale(12, HALF_UP)` — the double round
+    *    trip is lossless because distinct 12-dp decimals differ by
+    *    ≥ 1e-12, orders of magnitude beyond a double's ulp at rank
+    *    magnitudes, so the shortest-repr cast recovers exactly the
+    *    rounded decimal. The per-node sums are the same exact addends
+    *    in a different association — equal by associativity.
+    *  - Label offers and k-core degrees are exact long counts; BFS
+    *    reachability is a boolean or.
+    *  - Shortest-path candidates are ONE double add of exact values,
+    *    and min over exact doubles is order-free.
+    * The driver-side update after each merge is the same IEEE
+    * expression the distributed body evaluates per row. */
+  private final class DriverHarness(nodes: DataFrame, edges: DataFrame) {
+    val spark: SparkSession = edges.sparkSession
+    val nodeRows: Array[Row] = nodes.collect()
+    val nodeArr: Array[Any] = nodeRows.map(_.get(0))
+    val nodeType: DataType = nodes.schema.fields(0).dataType
     val nN: Int = nodeArr.length
     private val idx = new java.util.HashMap[Any, Integer](nN * 2)
     locally {
       var i = 0
       while (i < nN) { idx.put(nodeArr(i), i); i += 1 }
     }
-    def indexOf(v: Any): Int = idx.get(v).intValue()
+    /** Dense index of a node value; -1 when absent (foreign seeds). */
+    def indexOf(v: Any): Int = {
+      val r = idx.get(v)
+      if (r == null) -1 else r.intValue()
+    }
+
+    /** Dense indices of the distinct seeds (first column) present in
+      * the graph — foreign seeds are ignored, like the distributed
+      * bodies' semi-join. */
+    def seedIndices(seeds: DataFrame): Array[Int] =
+      seeds.select(col(seeds.columns.head).as("node")).distinct()
+        .collect().map(r => indexOf(r.get(0))).filter(_ >= 0)
 
     private val bcIdx = spark.sparkContext.broadcast(idx)
-    private val edgeParts = {
+    private val blocks = {
       val bc = bcIdx // local alias: the task closure must not drag
                      // the (non-serializable) harness in via `this`
-      ed.select(col("src"), col("dst"), col("w"), col("wout"))
-        .rdd.mapPartitions { rows =>
+      val arity = edges.columns.length
+      edges.rdd.mapPartitions { rows =>
         val m = bc.value
         val si = new scala.collection.mutable.ArrayBuilder.ofInt
         val di = new scala.collection.mutable.ArrayBuilder.ofInt
@@ -631,69 +683,50 @@ object Graph {
         rows.foreach { r =>
           si += m.get(r.get(0)).intValue()
           di += m.get(r.get(1)).intValue()
-          wv += r.getDouble(2)
-          wo += r.getDouble(3)
+          if (arity > 2) wv += r.getDouble(2)
+          if (arity > 3) wo += r.getDouble(3)
         }
-        Iterator.single((si.result(), di.result(), wv.result(),
+        Iterator.single(EdgeBlock(si.result(), di.result(), wv.result(),
           wo.result()))
       }.persist(StorageLevel.MEMORY_AND_DISK)
     }
-    edgeParts.count()
+    blocks.count() // materialize once; every wave reads the cache
 
     private val treeGate =
       spark.conf.getOption("spark.graft.graph.treeReducePartitions")
         .map(_.toInt).getOrElse(1024)
 
-    /** One round's per-dst contribution sums (null cell = no mass). */
-    def contribSums(rank: Array[Double]): Array[JBD] = {
-      // exact merge of two dense contribution tables; mutates and
-      // returns `a` (inputs are task-fresh on every path). A LOCAL
-      // function: an instance method would drag the non-serializable
-      // harness into the treeReduce closure via `this`.
-      def merge(a: Array[JBD], b: Array[JBD]): Array[JBD] = {
-        var j = 0
-        while (j < a.length) {
-          if (b(j) != null)
-            a(j) = if (a(j) == null) b(j) else a(j).add(b(j))
-          j += 1
-        }
-        a
-      }
-      val bcRank = spark.sparkContext.broadcast(rank)
-      val nCells = nN
-      val partials = edgeParts.mapPartitions { it0 =>
-        val rk = bcRank.value
-        val acc = new Array[JBD](nCells)
-        it0.foreach { case (si, di, wv, wo) =>
-          var i = 0
-          while (i < si.length) {
-            val c = JBD.valueOf(rk(si(i)) * wv(i) / wo(i))
-              .setScale(12, HALF_UP)
-            val d = di(i)
-            acc(d) = if (acc(d) == null) c else acc(d).add(c)
-            i += 1
-          }
-        }
-        Iterator.single(acc)
-      }
-      val sums =
-        if (edgeParts.getNumPartitions > treeGate)
-          partials.treeReduce(merge _, depth = 2)
-        else partials.collect().foldLeft(new Array[JBD](nN))(merge)
-      bcRank.unpersist(blocking = false)
-      sums
+    /** One round: broadcast `state`, fold each block into a partial,
+      * merge the partials exactly. `merge` combines any batch of
+      * partials — all of them in one driver call, or pairs inside
+      * treeReduce — into a fresh or reused partial, and must accept an
+      * empty batch (a frame can have no partitions). */
+    def wave[S: ClassTag, P: ClassTag](state: S)(
+        fold: (S, EdgeBlock) => P)(merge: Seq[P] => P): P = {
+      val bc = spark.sparkContext.broadcast(state)
+      val partials = blocks.map(b => fold(bc.value, b))
+      val merged =
+        if (blocks.getNumPartitions > treeGate)
+          partials.treeReduce((a, b) => merge(Seq(a, b)), depth = 2)
+        else merge(partials.collect().toSeq)
+      bc.unpersist(blocking = false)
+      merged
     }
 
-    /** Exact 12-dp sum of the ranks at `which`, as a double. */
-    def sinkMass(rank: Array[Double], which: Array[Int]): Double = {
-      var s = JBD.ZERO
-      which.foreach(d =>
-        s = s.add(JBD.valueOf(rank(d)).setScale(12, HALF_UP)))
-      s.doubleValue()
+    /** The result frame: `node` plus one (name, type, value-at-index)
+      * column each, over the dense indices `keep` accepts. */
+    def frame(keep: Int => Boolean,
+        cols: (String, DataType, Int => Any)*): DataFrame = {
+      val schema = StructType(
+        StructField("node", nodeType, nullable = false) +:
+          cols.map(c => StructField(c._1, c._2, nullable = false)))
+      val rows = (0 until nN).filter(keep)
+        .map(i => Row.fromSeq(nodeArr(i) +: cols.map(_._3(i))))
+      spark.createDataFrame(rows.asJava, schema)
     }
 
     def release(): Unit = {
-      edgeParts.unpersist(blocking = false)
+      blocks.unpersist(blocking = false)
       bcIdx.unpersist(blocking = false)
     }
   }
@@ -701,11 +734,11 @@ object Graph {
   /** Edge-count gate for the driver-resident LOOP twins
     * ([[labelPropagationDriver]], [[kCoreDriver]], [[bfsLevelsDriver]],
     * [[shortestPathsDriver]]): the lifted primitive edge partitions
-    * stay on the EXECUTORS either way (the [[DriverRankHarness]]
-    * device), but label propagation's per-round merge is bounded by
-    * distinct (node, label) pairs ≤ E rather than N, so the loop
-    * family takes a belt-and-braces edge gate the N-merge rank family
-    * does not need (8M edges ≈ 64 MB of primitive columns — the
+    * stay on the EXECUTORS either way (the [[DriverHarness]] device),
+    * but label propagation's per-round merge is bounded by distinct
+    * (node, label) pairs ≤ E rather than N, so the loop family takes a
+    * belt-and-braces edge gate the N-merge rank family does not need
+    * (8M edges ≈ 64 MB of primitive columns — the
     * [[csrMaxOrientedRows]] envelope argument). At 100 TB every call
     * crosses the gate and lands on the distributed bodies, which are
     * unchanged; the twins are strictly a small-graph latency device
@@ -724,11 +757,9 @@ object Graph {
 
   /** Minimal open-addressing long→long count accumulator (power-of-two
     * capacity, linear probing, −1 as the empty sentinel — packed keys
-    * are always ≥ 0). Serializable so executor partials can cross as
-    * instances too; [[DriverLoopHarness.labelCounts]] ships the denser
-    * (keys, counts) array pair instead. */
-  private[operators] final class LongCountMap(expected: Int)
-      extends Serializable {
+    * are always ≥ 0). Label propagation's partials cross the wire as
+    * its dense (keys, counts) copy, not as instances. */
+  private[operators] final class LongCountMap(expected: Int) {
     private var cap = math.max(16,
       java.lang.Integer.highestOneBit(math.max(1, expected)) * 4)
     private var keys = Array.fill(cap)(-1L)
@@ -765,14 +796,6 @@ object Graph {
       }
     }
 
-    def foreachEntry(f: (Long, Long) => Unit): Unit = {
-      var i = 0
-      while (i < keys.length) {
-        if (keys(i) != -1L) f(keys(i), vals(i))
-        i += 1
-      }
-    }
-
     /** Dense (keys, counts) copy — the executor→driver wire format. */
     def toArrays: (Array[Long], Array[Long]) = {
       val ks = new Array[Long](used)
@@ -784,173 +807,6 @@ object Graph {
         i += 1
       }
       (ks, vs)
-    }
-  }
-
-  /** [[DriverRankHarness]]'s integer sibling for the loop twins: lifts
-    * (src, dst[, w]) ONCE to dense-int-indexed primitive columnar
-    * partitions cached on the executors; each round is one
-    * zero-shuffle task wave over this cache against a broadcast of the
-    * N-sized round state, per-partition partials merged on the driver.
-    * Every consumer accumulates EXACT values (long counts, boolean
-    * reachability, min over exact double sums), so merge order cannot
-    * move a bit — unlike the rank harness, no decimal device is even
-    * needed for bit-identity with the distributed bodies. */
-  private final class DriverLoopHarness(
-      ed: DataFrame, val nodeArr: Array[Any], withW: Boolean) {
-    val spark: SparkSession = ed.sparkSession
-    val nN: Int = nodeArr.length
-    private val idx = new java.util.HashMap[Any, Integer](nN * 2)
-    locally {
-      var i = 0
-      while (i < nN) { idx.put(nodeArr(i), i); i += 1 }
-    }
-    /** Dense index of a node value; -1 when absent (foreign seeds). */
-    def indexOf(v: Any): Int = {
-      val r = idx.get(v)
-      if (r == null) -1 else r.intValue()
-    }
-
-    private val bcIdx = spark.sparkContext.broadcast(idx)
-    private val edgeParts = {
-      val bc = bcIdx // local alias: keep `this` out of the closure
-      val w = withW
-      ed.rdd.mapPartitions { rows =>
-        val m = bc.value
-        val si = new scala.collection.mutable.ArrayBuilder.ofInt
-        val di = new scala.collection.mutable.ArrayBuilder.ofInt
-        val wv = new scala.collection.mutable.ArrayBuilder.ofDouble
-        rows.foreach { r =>
-          si += m.get(r.get(0)).intValue()
-          di += m.get(r.get(1)).intValue()
-          if (w) wv += r.getDouble(2)
-        }
-        Iterator.single((si.result(), di.result(), wv.result()))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    edgeParts.count() // materialize once; every wave reads the cache
-
-    /** Per-(dst, src-label) offer counts for one label-propagation
-      * round, merged driver-side as (dstIdx << 32 | lblIdx) → count.
-      * Bounded by distinct (dst, label) pairs ≤ E — the reason for
-      * the [[maxDriverLoopEdges]] gate. Partials cross as primitive
-      * (keys, counts) arrays and merge into a [[LongCountMap]]: the
-      * boxed java.util.HashMap form measured ~1.8 s/line at sf0.1
-      * volumes (≈2M boxed entries serialized per round), the
-      * primitive form ~0.1 s. */
-    def labelCounts(lbl: Array[Int]): LongCountMap = {
-      val bc = spark.sparkContext.broadcast(lbl)
-      val partials = edgeParts.mapPartitions { it0 =>
-        val l = bc.value
-        val m = new LongCountMap(1 << 12)
-        it0.foreach { case (si, di, _) =>
-          var i = 0
-          while (i < si.length) {
-            m.add((di(i).toLong << 32) | (l(si(i)).toLong & 0xffffffffL),
-              1L)
-            i += 1
-          }
-        }
-        Iterator.single(m.toArrays)
-      }.collect()
-      val merged = new LongCountMap(
-        math.max(1 << 12, partials.iterator.map(_._1.length).sum))
-      partials.foreach { case (ks, vs) =>
-        var i = 0
-        while (i < ks.length) { merged.add(ks(i), vs(i)); i += 1 }
-      }
-      bc.unpersist(blocking = false)
-      merged
-    }
-
-    /** Per-src degree over edges whose BOTH endpoints are alive —
-      * one k-core peeling round (the edge list is symmetric, so the
-      * src-side count is the node's degree and the sum over nodes is
-      * the surviving directed edge count). */
-    def aliveDegrees(alive: Array[Boolean]): Array[Long] = {
-      val bc = spark.sparkContext.broadcast(alive)
-      val nCells = nN
-      val sums = edgeParts.mapPartitions { it0 =>
-        val a = bc.value
-        val acc = new Array[Long](nCells)
-        it0.foreach { case (si, di, _) =>
-          var i = 0
-          while (i < si.length) {
-            if (a(si(i)) && a(di(i))) acc(si(i)) += 1L
-            i += 1
-          }
-        }
-        Iterator.single(acc)
-      }.collect().foldLeft(new Array[Long](nN)) { (a, b) =>
-        var j = 0
-        while (j < a.length) { a(j) += b(j); j += 1 }
-        a
-      }
-      bc.unpersist(blocking = false)
-      sums
-    }
-
-    /** Nodes reachable in one hop from the frontier (BFS round). */
-    def reachable(frontier: Array[Boolean]): Array[Boolean] = {
-      val bc = spark.sparkContext.broadcast(frontier)
-      val nCells = nN
-      val reached = edgeParts.mapPartitions { it0 =>
-        val f = bc.value
-        val acc = new Array[Boolean](nCells)
-        it0.foreach { case (si, di, _) =>
-          var i = 0
-          while (i < si.length) {
-            if (f(si(i))) acc(di(i)) = true
-            i += 1
-          }
-        }
-        Iterator.single(acc)
-      }.collect().foldLeft(new Array[Boolean](nN)) { (a, b) =>
-        var j = 0
-        while (j < a.length) { a(j) = a(j) || b(j); j += 1 }
-        a
-      }
-      bc.unpersist(blocking = false)
-      reached
-    }
-
-    /** Per-dst min of frontier(src) + w — one Bellman–Ford relaxation
-      * round; NaN = no candidate. Sums and mins of exact doubles, so
-      * merge order cannot change a value. */
-    def relax(fdist: Array[Double]): Array[Double] = {
-      val bc = spark.sparkContext.broadcast(fdist)
-      val nCells = nN
-      val cand = edgeParts.mapPartitions { it0 =>
-        val f = bc.value
-        val acc = Array.fill(nCells)(Double.NaN)
-        it0.foreach { case (si, di, wv) =>
-          var i = 0
-          while (i < si.length) {
-            val fs = f(si(i))
-            if (!fs.isNaN) {
-              val c = fs + wv(i)
-              val d = di(i)
-              if (acc(d).isNaN || c < acc(d)) acc(d) = c
-            }
-            i += 1
-          }
-        }
-        Iterator.single(acc)
-      }.collect().foldLeft(Array.fill(nN)(Double.NaN)) { (a, b) =>
-        var j = 0
-        while (j < a.length) {
-          if (!b(j).isNaN && (a(j).isNaN || b(j) < a(j))) a(j) = b(j)
-          j += 1
-        }
-        a
-      }
-      bc.unpersist(blocking = false)
-      cand
-    }
-
-    def release(): Unit = {
-      edgeParts.unpersist(blocking = false)
-      bcIdx.unpersist(blocking = false)
     }
   }
 
@@ -968,66 +824,65 @@ object Graph {
     m
   }
 
-  /** Driver-resident loop (see scale posture above): ranks live in a
-    * dense array between rounds; each round is ONE zero-shuffle task
-    * wave over the cached primitive edge partitions, exact-merged —
-    * see [[DriverRankHarness]] for the device and the bit-identity
-    * argument. */
-  private def pageRankDriver(
+  /** Exact cellwise sum of dense 12-dp decimal partials (null cell = no
+    * mass) — the [[DriverHarness.wave]] merge of the rank and HITS
+    * twins. */
+  private def sumDecimals(cells: Int)(ps: Seq[Array[JBD]]): Array[JBD] =
+    ps.foldLeft(new Array[JBD](cells)) { (a, b) =>
+      var j = 0
+      while (j < cells) {
+        if (b(j) != null) a(j) = if (a(j) == null) b(j) else a(j).add(b(j))
+        j += 1
+      }
+      a
+    }
+
+  /** The driver rank loop of [[pageRank]] and [[personalizedPageRank]]
+    * (see the scale posture there) on the [[DriverHarness]] `h`, whose
+    * node table is the rank domain. Per round: the total sink mass
+    * `dm` as an exact 12-dp sum over the sink nodes (0.0 when `sinks`
+    * is false), ONE wave of 12-dp contribution sums round(rank·w/wout,
+    * 12), then the caller's damped `update(v, s, dm)` for node v with
+    * contribution sum s, rounded to 9 dp. */
+  private def rankLoopDriver(
       gt: GraphTable,
+      h: DriverHarness,
+      sinks: Boolean,
+      rank0: Array[Double],
       iters: Int,
-      damping: Double,
-      danglingCorrection: Boolean,
-      epsilon: Option[Double]): DataFrame = {
-    val spark = gt.edges.sparkSession
-    // this body re-scans the edge list every round — persist it when
-    // the table was loaded from parquet (build-time tables already are)
-    val ed =
-      if (gt.cached) gt.edges
-      else gt.edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodesDf =
-      if (danglingCorrection) gt.nodes.select("node")
-      else gt.nodes.where(col("is_src")).select("node")
-    // the node list and per-round ranks are driver-resident (see the
-    // scale-posture note above — the broadcast already pays this).
-    // Non-dangling path: dst ⊆ src is the loud precondition above, so
-    // every edge endpoint resolves in the dense index.
-    val nodeArr: Array[Any] = nodesDf.collect().map(_.get(0))
-    val h = new DriverRankHarness(ed, nodeArr)
+      epsilon: Option[Double])(
+      update: (Int, Double, Double) => Double): DataFrame = {
     val nN = h.nN
-    val n = nN.toDouble
-    val danglingIdx: Array[Int] =
-      if (danglingCorrection)
+    val sinkIdx: Array[Int] =
+      if (sinks)
         gt.nodes.where(!col("is_src")).select("node")
           .collect().map(r => h.indexOf(r.get(0)))
       else Array.emptyIntArray
-
-    val rankSchema = StructType(Seq(
-      StructField("node", gt.nodes.schema.fields(0).dataType,
-        nullable = false),
-      StructField("rank", DoubleType, nullable = false)))
-    def ranksDf(rank: Array[Double]): DataFrame =
-      spark.createDataFrame(
-        nodeArr.indices.map(i => Row(nodeArr(i), rank(i))).asJava,
-        rankSchema)
-
-    var rank: Array[Double] = Array.fill(nN)(1.0 / n)
+    var rank = rank0
     var it = 0
     var converged = false
     while (it < iters && !converged) {
-      // dangling mass, redistributed uniformly: the 12-dp DECIMAL sum
-      // of sink ranks (exact, order-independent) over one double
-      // division by N — free on the driver-resident rank array
-      val dmn: Double =
-        if (danglingIdx.isEmpty) 0.0
-        else h.sinkMass(rank, danglingIdx) / n
-      val sums = h.contribSums(rank)
+      var dms = JBD.ZERO
+      sinkIdx.foreach(d =>
+        dms = dms.add(JBD.valueOf(rank(d)).setScale(12, HALF_UP)))
+      val dm = dms.doubleValue()
+      val sums = h.wave(rank) { (rk, b) =>
+        val acc = new Array[JBD](nN)
+        var i = 0
+        while (i < b.src.length) {
+          val c = JBD.valueOf(rk(b.src(i)) * b.w(i) / b.wout(i))
+            .setScale(12, HALF_UP)
+          val d = b.dst(i)
+          acc(d) = if (acc(d) == null) c else acc(d).add(c)
+          i += 1
+        }
+        acc
+      }(sumDecimals(nN))
       val next = new Array[Double](nN)
       var v = 0
       while (v < nN) {
         val s = if (sums(v) == null) 0.0 else sums(v).doubleValue()
-        val inner = if (danglingCorrection) s + dmn else s
-        next(v) = round9((1.0 - damping) / n + damping * inner)
+        next(v) = round9(update(v, s, dm))
         v += 1
       }
       converged = epsilon.exists(eps => maxAbsDelta(next, rank) <= eps)
@@ -1035,37 +890,42 @@ object Graph {
       it += 1
     }
     h.release()
-    if (!gt.cached) ed.unpersist(blocking = false)
-    ranksDf(rank).orderBy(desc("rank"), col("node"))
+    val r = rank
+    h.frame(_ => true, ("rank", DoubleType, r(_)))
+      .orderBy(desc("rank"), col("node"))
   }
 
-  /** Distributed loop (see scale posture above): the rank table stays
-    * a hash-partitioned, per-round-checkpointed DataFrame; the driver
-    * never holds a rank. */
-  private def pageRankDistributed(
+  /** The distributed rank loop of [[pageRank]] and
+    * [[personalizedPageRank]] (see the scale posture there): the rank
+    * table stays a hash-partitioned, per-round-checkpointed DataFrame;
+    * the driver never holds a rank. `nodes` is the rank domain: node,
+    * then the `sink` flag and the reset weight `rv` when the caller
+    * has them. `rank0` is the round-0 rank column over it, `dmScalar`
+    * turns the exact sink-mass sum (a double) into the round's scalar
+    * `dm`, and `update(sd, dm)` is the caller's damped update from the
+    * contribution sum `sd`. Without a sink flag `dm` is 0.0. */
+  private def rankLoopDistributed(
       gt: GraphTable,
-      nL: Long,
+      nodes: DataFrame,
+      rank0: Column,
       iters: Int,
-      damping: Double,
-      danglingCorrection: Boolean,
-      epsilon: Option[Double]): DataFrame = {
+      epsilon: Option[Double])(
+      dmScalar: Column => Column,
+      update: (Column, Column) => Column): DataFrame = {
     // edges co-partitioned on src ONCE; every round's rank join reuses
     // the cached partitioning, so only the N-row rank side ever moves
     val ed = gt.edges.repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // node list co-partitioned on node: the per-round left join that
     // re-attaches zero-contribution nodes needs no exchange on it.
-    // With the dangling correction the SINK FLAG rides the node (and
-    // therefore rank) table, so the per-round sink-mass aggregate is a
-    // filter over the already-checkpointed ranks — the old per-round
-    // semi-join against a dangling table (and its exchanges) is gone.
-    val nodesDf =
-      (if (danglingCorrection)
-         gt.nodes.select(col("node"), (!col("is_src")).as("sink"))
-       else gt.nodes.where(col("is_src")).select("node"))
-        .repartition(col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nL.toDouble
+    // The SINK FLAG rides the node (and therefore rank) table, so the
+    // per-round sink-mass aggregate is a filter over the
+    // already-checkpointed ranks — no per-round semi-join against a
+    // dangling table.
+    val nodesDf = nodes.repartition(col("node"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sinkCols =
+      if (nodesDf.columns.contains("sink")) Seq(col("sink")) else Nil
     // overlap the two cache-priming counts — independent jobs over
     // independent caches (the buildGraphTable device): each alone
     // underutilizes the cluster, and the E-row repartition dominates,
@@ -1080,14 +940,13 @@ object Graph {
       Await.result(fn, Duration.Inf)
     }
 
-    val baseTerm = (1.0 - damping) / n
     // round 0 is a LAZY projection over the cached node table — its
-    // lineage is one cache read + withColumn, and the projection
+    // lineage is one cache read + projection, and the projection
     // preserves the cache's hash partitioning, so round 1 plans
-    // exactly as it did over the old eager checkpoint (which only
-    // re-materialized a second copy of the node rows). Checkpoints
+    // exactly as it did over an eager checkpoint (which would only
+    // re-materialize a second copy of the node rows). Checkpoints
     // start with round 1's output.
-    var ranks = nodesDf.withColumn("rank", lit(1.0 / n))
+    var ranks = nodesDf.select(col("node") +: sinkCols :+ rank0.as("rank"): _*)
     var it = 0
     var converged = false
     while (it < iters && !converged) {
@@ -1100,27 +959,25 @@ object Graph {
           round(col("rank") * col("w") / col("wout"), 12)
             .cast(Dec12).as("c"))
         .groupBy("node").agg(sum(col("c")).as("s"))
-      val sinkCols: Seq[org.apache.spark.sql.Column] =
-        if (danglingCorrection) Seq(col("sink")) else Nil
       val joined = nodesDf
         .join(contrib.hint("shuffle_hash"), Seq("node"), "left")
-        .select(Seq(col("node")) ++ sinkCols :+
+        .select(nodesDf.columns.toSeq.map(col) :+
           coalesce(col("s").cast("double"), lit(0.0)).as("sd"): _*)
-      // dangling mass: a ONE-ROW aggregate over the checkpointed rank
+      // sink mass: a ONE-ROW aggregate over the checkpointed rank
       // table's sink rows, cross-joined into the update — the scalar
-      // stays inside the plan, no driver collect, no per-round join
+      // stays inside the plan, no driver collect, no per-round join.
+      // Without sinks sd + 0.0 == sd (contributions are ≥ 0, so no
+      // -0.0 edge), keeping the two bodies bit-identical.
       val withDm =
-        if (danglingCorrection) {
+        if (sinkCols.nonEmpty) {
           val dm = ranks.where(col("sink"))
             .agg(coalesce(
               sum(round(col("rank"), 12).cast(Dec12)),
-              lit(java.math.BigDecimal.ZERO).cast(Dec12))
+              lit(JBD.ZERO).cast(Dec12))
               .as("dms"))
-            .select((col("dms").cast("double") / lit(n)).as("dmn"))
+            .select(dmScalar(col("dms").cast("double")).as("dm"))
           joined.crossJoin(broadcast(dm))
-        } else joined.withColumn("dmn", lit(0.0))
-      // sd + 0.0 == sd for the non-dangling path (contributions are
-      // ≥ 0, so no -0.0 edge), keeping the two bodies bit-identical
+        } else joined.withColumn("dm", lit(0.0))
       // partitioning-preserving eager checkpoint (graftshim): a plain
       // localCheckpoint reports UnknownPartitioning under AQE, which
       // re-exchanged the N-row rank side of BOTH next-round reads
@@ -1131,10 +988,8 @@ object Graph {
       // logical lineage a checkpoint gives (a persist chain doubles
       // the logical plan per round — ranks is referenced twice).
       val next = checkpointPartitioned(
-        withDm
-          .select(Seq(col("node")) ++ sinkCols :+
-            round(lit(baseTerm) + lit(damping) * (col("sd") + col("dmn")), 9)
-              .as("rank"): _*))
+        withDm.select(col("node") +: sinkCols :+
+          round(update(col("sd"), col("dm")), 9).as("rank"): _*))
       converged = epsilon.exists { eps =>
         // bounded scalar action (one row), the K-Means-convergence
         // category — only paid when an epsilon is requested
@@ -1191,16 +1046,17 @@ object Graph {
     *    anywhere (GraphSpec's listener assertion pins this body).
     *
     *  - driver-resident (the small-N fast path): the
-    *    [[DriverRankHarness]] device — the reset weights join is
-    *    collected as the N-bounded node table (bounded by N whatever
-    *    the seed cardinality), and each round is one zero-shuffle
-    *    task wave with the sink mass summed on the driver.
+    *    [[DriverHarness]] — the reset weights join is collected as the
+    *    N-bounded node table (bounded by N whatever the seed
+    *    cardinality), and each round is one zero-shuffle task wave
+    *    with the sink mass summed on the driver.
     *
     * Determinism: the same 12-dp DECIMAL contribution sums and 9-dp
     * HALF_UP damped update as [[pageRank]], with the fixed association
     * `(1−d)·r + d·(s + dm·r)` — bit-replayable in any IEEE engine
     * (the q113 oracle), and bit-identical across the two bodies by
-    * the [[DriverRankHarness]] argument.
+    * the [[DriverHarness]] argument. Both bodies are [[pageRank]]'s
+    * rank loops with a different node table and update.
     */
   def personalizedPageRank(
       edges: DataFrame,
@@ -1239,164 +1095,34 @@ object Graph {
     require(k > 0, "no seed node appears in the graph")
     val distributed = distributedRanks.getOrElse(
       gt.numNodes > maxDriverRankNodes(gt.edges.sparkSession))
-    if (distributed)
-      personalizedPageRankDistributed(gt, seedsDf, k, iters, damping,
-        epsilon)
-    else
-      personalizedPageRankDriver(gt, seedsDf, k, iters, damping, epsilon)
-  }
-
-  /** Distributed PPR body (see the scale posture on
-    * [[personalizedPageRank]]). */
-  private def personalizedPageRankDistributed(
-      gt: GraphTable,
-      seedsDf: DataFrame,
-      k: Long,
-      iters: Int,
-      damping: Double,
-      epsilon: Option[Double]): DataFrame = withIterParallelism(gt) {
-    val ed = gt.edges.repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val rv0 = 1.0 / k
-    // node list with the per-node reset weight attached ONCE: 1/|S| on
-    // seed nodes (seeds outside the graph are ignored), 0 elsewhere.
-    // The SINK FLAG rides along (the pageRankDistributed device), so
-    // the per-round sink-mass aggregate filters the checkpointed rank
-    // table instead of semi-joining a dangling table.
-    val nodesDf = gt.nodes
-      .select(col("node"), (!col("is_src")).as("sink"))
-      .join(seedsDf.withColumn("_g_seed", lit(true)), Seq("node"), "left")
-      .select(col("node"), col("sink"),
-        when(col("_g_seed").isNotNull, lit(rv0)).otherwise(lit(0.0)).as("rv"))
-      .repartition(col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // overlapped cache-priming counts + lazy round 0 — the
-    // pageRankDistributed devices (see there for the rationale)
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fe = Future(ed.count())
-      val fn = Future(nodesDf.count())
-      Await.result(fe, Duration.Inf)
-      Await.result(fn, Duration.Inf)
-    }
-
-    var ranks = nodesDf
-      .select(col("node"), col("sink"), col("rv").as("rank"))
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val contrib = ed
-        .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
-        .select(col("dst").as("node"),
-          round(col("rank") * col("w") / col("wout"), 12)
-            .cast(Dec12).as("c"))
-        .groupBy("node").agg(sum(col("c")).as("s"))
-      val joined = nodesDf
-        .join(contrib.hint("shuffle_hash"), Seq("node"), "left")
-        .select(col("node"), col("sink"), col("rv"),
-          coalesce(col("s").cast("double"), lit(0.0)).as("sd"))
-      // total sink mass (NOT divided by N — it rides the reset
-      // distribution): a one-row aggregate over the checkpointed rank
-      // table's sink rows, cross-joined in — no per-round join
-      val dm = ranks.where(col("sink"))
-        .agg(coalesce(
-          sum(round(col("rank"), 12).cast(Dec12)),
-          lit(java.math.BigDecimal.ZERO).cast(Dec12))
-          .as("dms"))
-        .select(col("dms").cast("double").as("dmt"))
-      // partitioning-preserving checkpoint — the pageRankDistributed
-      // device (see there): kills the per-round rank-side exchanges a
-      // plain checkpoint's UnknownPartitioning re-introduced
-      val next = checkpointPartitioned(
-        joined.crossJoin(broadcast(dm))
-          .select(col("node"), col("sink"),
-            round(lit(1.0 - damping) * col("rv") +
-              lit(damping) * (col("sd") + col("dmt") * col("rv")), 9)
-              .as("rank")))
-      converged = epsilon.exists { eps =>
-        val prev = ranks.select(col("node"), col("rank").as("prev_rank"))
-        next.join(prev, Seq("node"))
-          .agg(max(abs(col("rank") - col("prev_rank"))).as("d"))
-          .head().getDouble(0) <= eps
-      }
-      if (it > 0) releaseCheckpoint(ranks)
-      ranks = next
-      it += 1
-    }
-    ed.unpersist()
-    nodesDf.unpersist()
-    ranks.select(col("node"), col("rank"))
-      .orderBy(desc("rank"), col("node"))
-  }
-
-  /** Driver-resident PPR twin ([[DriverRankHarness]] device): the
-    * reset-weight join collapses to an N-bounded (node, rv) collect —
-    * bounded by the node count whatever the seed cardinality — and
-    * each round is one zero-shuffle task wave with the sink mass
-    * riding the reset distribution, summed exactly on the driver. */
-  private def personalizedPageRankDriver(
-      gt: GraphTable,
-      seedsDf: DataFrame,
-      k: Long,
-      iters: Int,
-      damping: Double,
-      epsilon: Option[Double]): DataFrame = {
-    val spark = gt.edges.sparkSession
-    val ed =
-      if (gt.cached) gt.edges
-      else gt.edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val rv0 = 1.0 / k
-    // node list with the per-node reset weight attached ONCE: 1/|S| on
+    // `base` with the per-node reset weight attached ONCE: 1/|S| on
     // seed nodes (seeds outside the graph are ignored), 0 elsewhere
-    val nodeRows = gt.nodes.select("node")
-      .join(seedsDf.withColumn("_g_seed", lit(true)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("_g_seed").isNotNull, lit(rv0)).otherwise(lit(0.0))
-          .as("rv"))
-      .collect()
-    val nodeArr: Array[Any] = nodeRows.map(_.get(0))
-    val h = new DriverRankHarness(ed, nodeArr)
-    val nN = h.nN
-    val rv: Array[Double] = nodeRows.map(_.getDouble(1))
-    val danglingIdx: Array[Int] =
-      gt.nodes.where(!col("is_src")).select("node")
-        .collect().map(r => h.indexOf(r.get(0)))
-
-    val rankSchema = StructType(Seq(
-      StructField("node", gt.nodes.schema.fields(0).dataType,
-        nullable = false),
-      StructField("rank", DoubleType, nullable = false)))
-
-    var rank: Array[Double] = rv.clone()
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      // total sink mass (NOT divided by N — it rides the reset
-      // distribution): exact 12-dp sum, one double conversion
-      val dmt: Double =
-        if (danglingIdx.isEmpty) 0.0
-        else h.sinkMass(rank, danglingIdx)
-      val sums = h.contribSums(rank)
-      val next = new Array[Double](nN)
-      var v = 0
-      while (v < nN) {
-        val sd = if (sums(v) == null) 0.0 else sums(v).doubleValue()
-        next(v) = round9(
-          (1.0 - damping) * rv(v) + damping * (sd + dmt * rv(v)))
-        v += 1
+    def withReset(base: DataFrame): DataFrame =
+      base.join(seedsDf.withColumn("_g_seed", lit(true)), Seq("node"), "left")
+        .select(base.columns.toSeq.map(col) :+
+          when(col("_g_seed").isNotNull, lit(rv0)).otherwise(lit(0.0))
+            .as("rv"): _*)
+    // the total sink mass rides the reset distribution (NOT divided
+    // by N)
+    if (distributed) withIterParallelism(gt) {
+      rankLoopDistributed(gt,
+        withReset(gt.nodes.select(col("node"), (!col("is_src")).as("sink"))),
+        col("rv"), iters, epsilon)(
+        identity,
+        (sd, dmt) => lit(1.0 - damping) * col("rv") +
+          lit(damping) * (sd + dmt * col("rv")))
+    } else {
+      // the reset-weight join collapses to an N-bounded (node, rv)
+      // collect — bounded by the node count whatever the seed
+      // cardinality
+      val h = new DriverHarness(withReset(gt.nodes.select("node")),
+        gt.edges.select("src", "dst", "w", "wout"))
+      val rv: Array[Double] = h.nodeRows.map(_.getDouble(1))
+      rankLoopDriver(gt, h, sinks = true, rv.clone(), iters, epsilon) {
+        (v, s, dmt) => (1.0 - damping) * rv(v) + damping * (s + dmt * rv(v))
       }
-      converged = epsilon.exists(eps => maxAbsDelta(next, rank) <= eps)
-      rank = next
-      it += 1
     }
-    h.release()
-    if (!gt.cached) ed.unpersist(blocking = false)
-    spark.createDataFrame(
-      nodeArr.indices.map(i => Row(nodeArr(i), rank(i))).asJava,
-      rankSchema)
-      .orderBy(desc("rank"), col("node"))
   }
 
   // ------------------------------------------------------------- HITS
@@ -1438,11 +1164,10 @@ object Graph {
     * one set of semantics, auto-selected by node count against
     * [[maxDriverRankNodes]] unless `distributedScores` pins one: the
     * driver-resident twin folds BOTH gathers in one zero-shuffle task
-    * wave per round over cached primitive edge partitions (the
-    * [[pageRankDriver]] device — dense exact-decimal accumulators,
-    * associative merge), bit-identical by the same argument since the
-    * gathers sum identical 12-dp addend multisets and the L1 divide +
-    * 9-dp round is the same IEEE expression either way.
+    * wave per round on the [[DriverHarness]], bit-identical by its
+    * argument since the gathers sum identical 12-dp addend multisets
+    * and the L1 divide + 9-dp round is the same IEEE expression either
+    * way.
     *
     * Returns (node, auth, hub), authorities first. */
   def hits(
@@ -1539,107 +1264,57 @@ object Graph {
     scores.orderBy(desc("auth"), col("node"))
   }
 
-  /** Driver-resident HITS twin (see [[pageRankDriver]] for the device
-    * and the lossless-round-trip bit-identity argument): scores live
-    * in dense arrays between rounds; each round is ONE zero-shuffle
-    * task wave over cached primitive edge partitions folding BOTH
-    * gathers at once — auth(dst) += r12(hub(src)) and
-    * hub(src) += r12(auth(dst)) per edge, exact decimals rounded ONCE
-    * per node per round (the distributed form rounds per edge row;
-    * same addend values, same multisets) — merged exactly and
+  /** Driver-resident HITS twin ([[DriverHarness]]): scores live in
+    * dense arrays between rounds; each round is ONE wave folding BOTH
+    * gathers at once into one 2N-cell partial — auth(dst) += r12(hub(src))
+    * in cell dst, hub(src) += r12(auth(dst)) in cell N + src — exact
+    * decimals rounded ONCE per node per round (the distributed form
+    * rounds per edge row; same addend values, same multisets), then
     * L1-normalized on the driver. */
   private def hitsDriver(
       gt: GraphTable,
       iters: Int,
       epsilon: Option[Double]): DataFrame = {
-    import java.math.{BigDecimal => JBD}
-    import java.math.RoundingMode.HALF_UP
-    val spark = gt.edges.sparkSession
-    val nodeArr: Array[Any] =
-      gt.nodes.select("node").collect().map(_.get(0))
-    val nN = nodeArr.length
+    val h = new DriverHarness(gt.nodes.select("node"),
+      gt.edges.select(col("src"), col("dst")))
+    val nN = h.nN
     val n = nN.toDouble
-    val idx = new java.util.HashMap[Any, Integer](nN * 2)
-    var i0 = 0
-    while (i0 < nN) { idx.put(nodeArr(i0), i0); i0 += 1 }
-
-    val bcIdx = spark.sparkContext.broadcast(idx)
-    val edgeParts = gt.edges.select(col("src"), col("dst"))
-      .rdd.mapPartitions { rows =>
-        val m = bcIdx.value
-        val si = new scala.collection.mutable.ArrayBuilder.ofInt
-        val di = new scala.collection.mutable.ArrayBuilder.ofInt
-        rows.foreach { r =>
-          si += m.get(r.get(0)).intValue()
-          di += m.get(r.get(1)).intValue()
-        }
-        Iterator.single((si.result(), di.result()))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    edgeParts.count()
-
-    def merge(a: (Array[JBD], Array[JBD]), b: (Array[JBD], Array[JBD]))
-        : (Array[JBD], Array[JBD]) = {
-      var j = 0
-      while (j < nN) {
-        if (b._1(j) != null)
-          a._1(j) = if (a._1(j) == null) b._1(j) else a._1(j).add(b._1(j))
-        if (b._2(j) != null)
-          a._2(j) = if (a._2(j) == null) b._2(j) else a._2(j).add(b._2(j))
-        j += 1
-      }
-      a
-    }
-    val treeGate =
-      spark.conf.getOption("spark.graft.graph.treeReducePartitions")
-        .map(_.toInt).getOrElse(1024)
-
     var auth = Array.fill(nN)(1.0 / n)
     var hub = Array.fill(nN)(1.0 / n)
     var it = 0
     var converged = false
     while (it < iters && !converged) {
-      // one rounded decimal per node per round — the gathers add only
-      // these table values, so the addend multisets match the
-      // distributed form's per-edge-row rounding exactly
-      val ra = new Array[JBD](nN)
-      val rh = new Array[JBD](nN)
+      // one rounded decimal per node per round (auth cells, then hub
+      // cells) — the gathers add only these table values, so the addend
+      // multisets match the distributed form's per-edge-row rounding
+      val r12 = new Array[JBD](2 * nN)
       var p = 0
       while (p < nN) {
-        ra(p) = JBD.valueOf(auth(p)).setScale(12, HALF_UP)
-        rh(p) = JBD.valueOf(hub(p)).setScale(12, HALF_UP)
+        r12(p) = JBD.valueOf(auth(p)).setScale(12, HALF_UP)
+        r12(nN + p) = JBD.valueOf(hub(p)).setScale(12, HALF_UP)
         p += 1
       }
-      val bc = spark.sparkContext.broadcast((ra, rh))
-      val partials = edgeParts.mapPartitions { it0 =>
-        val (ra0, rh0) = bc.value
-        val aAcc = new Array[JBD](nN)
-        val hAcc = new Array[JBD](nN)
-        it0.foreach { case (si, di) =>
-          var i = 0
-          while (i < si.length) {
-            val s = si(i)
-            val d = di(i)
-            aAcc(d) = if (aAcc(d) == null) rh0(s) else aAcc(d).add(rh0(s))
-            hAcc(s) = if (hAcc(s) == null) ra0(d) else hAcc(s).add(ra0(d))
-            i += 1
-          }
+      val sums = h.wave(r12) { (r, b) =>
+        val acc = new Array[JBD](2 * nN)
+        var i = 0
+        while (i < b.src.length) {
+          val s = b.src(i)
+          val d = b.dst(i)
+          val hs = nN + s
+          acc(d) = if (acc(d) == null) r(hs) else acc(d).add(r(hs))
+          acc(hs) = if (acc(hs) == null) r(d) else acc(hs).add(r(d))
+          i += 1
         }
-        Iterator.single((aAcc, hAcc))
-      }
-      val (sa, sh) =
-        if (edgeParts.getNumPartitions > treeGate)
-          partials.treeReduce(merge _, depth = 2)
-        else partials.collect()
-          .foldLeft((new Array[JBD](nN), new Array[JBD](nN)))(merge)
-      bc.unpersist(blocking = false)
+        acc
+      }(sumDecimals(2 * nN))
       // L1 totals: exact sums of the non-null cells — the same
       // multisets the distributed one-row aggregates sum
       var ta = JBD.ZERO
       var th = JBD.ZERO
       var t = 0
       while (t < nN) {
-        if (sa(t) != null) ta = ta.add(sa(t))
-        if (sh(t) != null) th = th.add(sh(t))
+        if (sums(t) != null) ta = ta.add(sums(t))
+        if (sums(nN + t) != null) th = th.add(sums(nN + t))
         t += 1
       }
       val taD = ta.doubleValue()
@@ -1649,9 +1324,10 @@ object Graph {
       var v = 0
       while (v < nN) {
         nextAuth(v) = round9(
-          (if (sa(v) == null) 0.0 else sa(v).doubleValue()) / taD)
+          (if (sums(v) == null) 0.0 else sums(v).doubleValue()) / taD)
         nextHub(v) = round9(
-          (if (sh(v) == null) 0.0 else sh(v).doubleValue()) / thD)
+          (if (sums(nN + v) == null) 0.0 else sums(nN + v).doubleValue()) /
+            thD)
         v += 1
       }
       converged = epsilon.exists { eps =>
@@ -1669,16 +1345,9 @@ object Graph {
       hub = nextHub
       it += 1
     }
-    edgeParts.unpersist(blocking = false)
-    bcIdx.unpersist(blocking = false)
-    val schema = StructType(Seq(
-      StructField("node", gt.nodes.schema.fields(0).dataType,
-        nullable = false),
-      StructField("auth", DoubleType, nullable = false),
-      StructField("hub", DoubleType, nullable = false)))
-    spark.createDataFrame(
-      nodeArr.indices.map(i => Row(nodeArr(i), auth(i), hub(i))).asJava,
-      schema)
+    h.release()
+    val (a, hb) = (auth, hub)
+    h.frame(_ => true, ("auth", DoubleType, a(_)), ("hub", DoubleType, hb(_)))
       .orderBy(desc("auth"), col("node"))
   }
 
@@ -1727,40 +1396,62 @@ object Graph {
     else labelPropagationDistributed(gt, iters)
   }
 
-  /** Driver-resident label-propagation twin ([[DriverLoopHarness]]
-    * device): labels live in a dense int array between rounds; each
-    * round is ONE zero-shuffle task wave producing the exact
-    * (dst, label) offer counts, argmax'd on the driver. The node list
-    * is collected VALUE-ORDERED, so dense-index comparisons ARE value
-    * comparisons and the "smallest label on ties" break matches the
-    * distributed `min(struct(-cnt, lbl))` bit-for-bit (all counts are
-    * exact longs — no rounding device anywhere). */
+  /** Driver-resident label-propagation twin ([[DriverHarness]]): labels
+    * live in a dense int array between rounds; each round is ONE wave
+    * producing the exact (dst, label) offer counts, argmax'd on the
+    * driver. The node list is collected VALUE-ORDERED, so dense-index
+    * comparisons ARE value comparisons and the "smallest label on ties"
+    * break matches the distributed `min(struct(-cnt, lbl))`.
+    *
+    * Offers are keyed (dstIdx << 32 | lblIdx), bounded by distinct
+    * (dst, label) pairs ≤ E — the reason for the [[maxDriverLoopEdges]]
+    * gate. Partials cross as primitive (keys, counts) arrays and merge
+    * into a [[LongCountMap]]: the boxed java.util.HashMap form measured
+    * ~1.8 s/line at sf0.1 volumes (≈2M boxed entries serialized per
+    * round), the primitive form ~0.1 s. */
   private def labelPropagationDriver(
       gt: GraphTable, iters: Int): DataFrame = {
-    val spark = gt.edges.sparkSession
-    val nodeArr: Array[Any] =
-      gt.nodes.select("node").orderBy("node").collect().map(_.get(0))
-    val h = new DriverLoopHarness(
-      gt.edges.select("src", "dst"), nodeArr, withW = false)
+    val h = new DriverHarness(gt.nodes.select("node").orderBy("node"),
+      gt.edges.select("src", "dst"))
     val nN = h.nN
     var lbl = Array.tabulate(nN)(identity)
     var it = 0
     var converged = false
     while (it < iters && !converged) {
-      val cnts = h.labelCounts(lbl)
+      val (ks, cs) = h.wave(lbl) { (l, b) =>
+        val m = new LongCountMap(1 << 12)
+        var i = 0
+        while (i < b.src.length) {
+          m.add((b.dst(i).toLong << 32) | (l(b.src(i)).toLong & 0xffffffffL),
+            1L)
+          i += 1
+        }
+        m.toArrays
+      } { ps =>
+        val merged = new LongCountMap(
+          math.max(1 << 12, ps.iterator.map(_._1.length).sum))
+        ps.foreach { case (ks, vs) =>
+          var i = 0
+          while (i < ks.length) { merged.add(ks(i), vs(i)); i += 1 }
+        }
+        merged.toArrays
+      }
       // deterministic argmax per dst: most frequent label, smallest
       // (by value = by index) on ties; nodes with no in-edges keep
       val bestCnt = new Array[Long](nN)
       val bestLbl = new Array[Int](nN)
       java.util.Arrays.fill(bestLbl, -1)
-      cnts.foreachEntry { (key, c) =>
-        val d = (key >>> 32).toInt
-        val l = (key & 0xffffffffL).toInt
+      var e = 0
+      while (e < ks.length) {
+        val d = (ks(e) >>> 32).toInt
+        val l = (ks(e) & 0xffffffffL).toInt
+        val c = cs(e)
         if (bestLbl(d) == -1 || c > bestCnt(d) ||
             (c == bestCnt(d) && l < bestLbl(d))) {
           bestCnt(d) = c
           bestLbl(d) = l
         }
+        e += 1
       }
       var changed = 0L
       val next = new Array[Int](nN)
@@ -1775,13 +1466,9 @@ object Graph {
       it += 1
     }
     h.release()
-    val nodeType = gt.nodes.schema.fields(0).dataType
-    val schema = StructType(Seq(
-      StructField("node", nodeType, nullable = false),
-      StructField("lbl", nodeType, nullable = false)))
-    spark.createDataFrame(
-      nodeArr.indices.map(i => Row(nodeArr(i), nodeArr(lbl(i)))).asJava,
-      schema).orderBy("node")
+    val l = lbl
+    h.frame(_ => true, ("lbl", h.nodeType, i => h.nodeArr(l(i))))
+      .orderBy("node")
   }
 
   /** Distributed label-propagation body (the 100 TB path — see the
@@ -2227,25 +1914,35 @@ object Graph {
     else kCoreDistributed(gt, k, maxRounds)
   }
 
-  /** Driver-resident k-core twin ([[DriverLoopHarness]] device): the
-    * alive set lives in a dense boolean array between rounds; each
-    * round is ONE zero-shuffle task wave computing exact per-node
-    * degrees over both-alive edges (the symmetric feed makes the
-    * src-side count the degree and its sum the surviving edge count,
-    * so the stationary check needs no extra job). The peel set, keep
-    * test, and stationary check are integer-exact — bit-identical to
-    * the distributed rounds by construction. */
+  /** Driver-resident k-core twin ([[DriverHarness]]): the alive set
+    * lives in a dense boolean array between rounds; each round is ONE
+    * wave computing exact per-node degrees over both-alive edges (the
+    * symmetric feed makes the src-side count the degree and its sum
+    * the surviving edge count, so the stationary check needs no extra
+    * job). */
   private def kCoreDriver(
       gt: GraphTable, k: Int, maxRounds: Int): DataFrame = {
-    val spark = gt.edges.sparkSession
-    val nodeArr: Array[Any] =
-      gt.nodes.select("node").collect().map(_.get(0))
-    val h = new DriverLoopHarness(
-      gt.edges.where(col("src") =!= col("dst")).select("src", "dst"),
-      nodeArr, withW = false)
+    val h = new DriverHarness(gt.nodes.select("node"),
+      gt.edges.where(col("src") =!= col("dst")).select("src", "dst"))
     val nN = h.nN
+    def aliveDegrees(alive: Array[Boolean]): Array[Long] =
+      h.wave(alive) { (a, b) =>
+        val acc = new Array[Long](nN)
+        var i = 0
+        while (i < b.src.length) {
+          if (a(b.src(i)) && a(b.dst(i))) acc(b.src(i)) += 1L
+          i += 1
+        }
+        acc
+      } { ps =>
+        ps.foldLeft(new Array[Long](nN)) { (a, b) =>
+          var j = 0
+          while (j < nN) { a(j) += b(j); j += 1 }
+          a
+        }
+      }
     var alive = Array.fill(nN)(true)
-    var deg = h.aliveDegrees(alive)
+    var deg = aliveDegrees(alive)
     var m = 0L
     var v0 = 0
     while (v0 < nN) { m += deg(v0); v0 += 1 }
@@ -2255,7 +1952,7 @@ object Graph {
       val keep = new Array[Boolean](nN)
       var v = 0
       while (v < nN) { keep(v) = alive(v) && deg(v) >= k; v += 1 }
-      val deg2 = h.aliveDegrees(keep)
+      val deg2 = aliveDegrees(keep)
       var m2 = 0L
       v = 0
       while (v < nN) { m2 += deg2(v); v += 1 }
@@ -2266,15 +1963,8 @@ object Graph {
       it += 1
     }
     h.release()
-    val nodeType = gt.nodes.schema.fields(0).dataType
-    val schema = StructType(Seq(
-      StructField("node", nodeType, nullable = false),
-      StructField("deg", org.apache.spark.sql.types.LongType,
-        nullable = false)))
-    val rows = nodeArr.indices.collect {
-      case i if deg(i) > 0L => Row(nodeArr(i), deg(i))
-    }
-    spark.createDataFrame(rows.asJava, schema).orderBy("node")
+    val d = deg
+    h.frame(d(_) > 0L, ("deg", LongType, d(_))).orderBy("node")
   }
 
   /** Distributed k-core body (the 100 TB path — see the scale posture
@@ -2337,23 +2027,15 @@ object Graph {
     else bfsLevelsDistributed(gt, seeds, maxDepth)
   }
 
-  /** Driver-resident BFS twin ([[DriverLoopHarness]] device): the
-    * frontier and level table live in dense arrays between rounds;
-    * each round is ONE zero-shuffle task wave marking one-hop
-    * reachability. Levels are exact ints with a unique fixpoint —
-    * bit-identical to the distributed rounds by construction. Seeds
-    * absent from the graph are ignored (the distributed semi-join). */
+  /** Driver-resident BFS twin ([[DriverHarness]]): the frontier and
+    * level table live in dense arrays between rounds; each round is ONE
+    * wave marking one-hop reachability. */
   private def bfsLevelsDriver(
       gt: GraphTable, seeds: DataFrame, maxDepth: Int): DataFrame = {
-    val spark = gt.edges.sparkSession
-    val nodeArr: Array[Any] =
-      gt.nodes.select("node").collect().map(_.get(0))
-    val h = new DriverLoopHarness(
-      gt.edges.select("src", "dst"), nodeArr, withW = false)
+    val h = new DriverHarness(gt.nodes.select("node"),
+      gt.edges.select("src", "dst"))
     val nN = h.nN
-    val seedIdx = seeds.select(col(seeds.columns.head).as("node"))
-      .distinct().collect().map(r => h.indexOf(r.get(0)))
-      .filter(_ >= 0)
+    val seedIdx = h.seedIndices(seeds)
     val lvl = Array.fill(nN)(-1)
     var frontier = new Array[Boolean](nN)
     seedIdx.foreach { i => lvl(i) = 0; frontier(i) = true }
@@ -2361,7 +2043,21 @@ object Graph {
     var frontierSize = seedIdx.length.toLong
     while (depth < maxDepth && frontierSize > 0) {
       depth += 1
-      val reached = h.reachable(frontier)
+      val reached = h.wave(frontier) { (f, b) =>
+        val acc = new Array[Boolean](nN)
+        var i = 0
+        while (i < b.src.length) {
+          if (f(b.src(i))) acc(b.dst(i)) = true
+          i += 1
+        }
+        acc
+      } { ps =>
+        ps.foldLeft(new Array[Boolean](nN)) { (a, b) =>
+          var j = 0
+          while (j < nN) { a(j) = a(j) || b(j); j += 1 }
+          a
+        }
+      }
       val nf = new Array[Boolean](nN)
       frontierSize = 0L
       var v = 0
@@ -2376,15 +2072,7 @@ object Graph {
       frontier = nf
     }
     h.release()
-    val nodeType = gt.nodes.schema.fields(0).dataType
-    val schema = StructType(Seq(
-      StructField("node", nodeType, nullable = false),
-      StructField("lvl", org.apache.spark.sql.types.IntegerType,
-        nullable = false)))
-    val rows = nodeArr.indices.collect {
-      case i if lvl(i) >= 0 => Row(nodeArr(i), lvl(i))
-    }
-    spark.createDataFrame(rows.asJava, schema).orderBy("node")
+    h.frame(lvl(_) >= 0, ("lvl", IntegerType, lvl(_))).orderBy("node")
   }
 
   /** Distributed BFS body (the 100 TB path — see the scale posture on
@@ -2458,25 +2146,16 @@ object Graph {
     else shortestPathsDistributed(gt, seeds, maxRounds)
   }
 
-  /** Driver-resident Bellman–Ford twin ([[DriverLoopHarness]] device):
-    * the distance table and improved-frontier live in dense double
-    * arrays between rounds; each round is ONE zero-shuffle task wave
-    * computing per-dst candidate minima (NaN = no candidate). Every
-    * candidate is ONE double add of exact values and `min` over exact
-    * doubles is order-free, so the rounds are bit-identical to the
-    * distributed body's relax/improve/refresh joins. Seeds absent
-    * from the graph are ignored (the distributed semi-join). */
+  /** Driver-resident Bellman–Ford twin ([[DriverHarness]]): the
+    * distance table and improved-frontier live in dense double arrays
+    * between rounds; each round is ONE wave computing per-dst candidate
+    * minima (NaN = no candidate). */
   private def shortestPathsDriver(
       gt: GraphTable, seeds: DataFrame, maxRounds: Int): DataFrame = {
-    val spark = gt.edges.sparkSession
-    val nodeArr: Array[Any] =
-      gt.nodes.select("node").collect().map(_.get(0))
-    val h = new DriverLoopHarness(
-      gt.edges.select("src", "dst", "w"), nodeArr, withW = true)
+    val h = new DriverHarness(gt.nodes.select("node"),
+      gt.edges.select("src", "dst", "w"))
     val nN = h.nN
-    val seedIdx = seeds.select(col(seeds.columns.head).as("node"))
-      .distinct().collect().map(r => h.indexOf(r.get(0)))
-      .filter(_ >= 0)
+    val seedIdx = h.seedIndices(seeds)
     val dist = Array.fill(nN)(Double.NaN)
     var fdist = Array.fill(nN)(Double.NaN)
     seedIdx.foreach { i => dist(i) = 0.0; fdist(i) = 0.0 }
@@ -2484,7 +2163,29 @@ object Graph {
     var frontierSize = seedIdx.length.toLong
     while (round < maxRounds && frontierSize > 0) {
       round += 1
-      val cand = h.relax(fdist)
+      val cand = h.wave(fdist) { (f, b) =>
+        val acc = Array.fill(nN)(Double.NaN)
+        var i = 0
+        while (i < b.src.length) {
+          val fs = f(b.src(i))
+          if (!fs.isNaN) {
+            val c = fs + b.w(i)
+            val d = b.dst(i)
+            if (acc(d).isNaN || c < acc(d)) acc(d) = c
+          }
+          i += 1
+        }
+        acc
+      } { ps =>
+        ps.foldLeft(Array.fill(nN)(Double.NaN)) { (a, b) =>
+          var j = 0
+          while (j < nN) {
+            if (!b(j).isNaN && (a(j).isNaN || b(j) < a(j))) a(j) = b(j)
+            j += 1
+          }
+          a
+        }
+      }
       val nf = Array.fill(nN)(Double.NaN)
       frontierSize = 0L
       var v = 0
@@ -2500,14 +2201,7 @@ object Graph {
       fdist = nf
     }
     h.release()
-    val nodeType = gt.nodes.schema.fields(0).dataType
-    val schema = StructType(Seq(
-      StructField("node", nodeType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-    val rows = nodeArr.indices.collect {
-      case i if !dist(i).isNaN => Row(nodeArr(i), dist(i))
-    }
-    spark.createDataFrame(rows.asJava, schema).orderBy("node")
+    h.frame(!dist(_).isNaN, ("dist", DoubleType, dist(_))).orderBy("node")
   }
 
   /** Distributed Bellman–Ford body (the 100 TB path — see the scale

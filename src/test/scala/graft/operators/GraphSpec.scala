@@ -1306,25 +1306,181 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  /** The 200-node seeded random digraph (sinks at multiples of 13). */
+  private def digraph200: Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(43)
+    (0L until 200L).flatMap { s =>
+      if (s % 13 == 0) Seq.empty
+      else (0 until (1 + rnd.nextInt(4))).map(_ => s -> rnd.nextInt(200).toLong)
+    }.distinct
+  }
+
+  /** Rows with every double replaced by its raw IEEE bits, so `===`
+    * means bit-equal (0.0 vs -0.0 and NaN payloads included). */
+  private def bits(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case x => x
+    })
+
   test("graph treeReducePartitions: treeReduce merge ≡ collect fold " +
     "in the driver rank loops") {
     import spark.implicits._
-    val rnd = new scala.util.Random(43)
-    val g = (0L until 200L).flatMap { s =>
-      if (s % 13 == 0) Seq.empty
-      else (0 until (1 + rnd.nextInt(4))).map(_ => s -> rnd.nextInt(200).toLong)
-    }.distinct.toDF("src", "dst").repartition(5)
+    val g = digraph200.toDF("src", "dst").repartition(5)
+    val sym = Graph.buildGraphTable(
+      randomSym(60, 220, seed = 41L).toDF("src", "dst").repartition(5),
+      "src", "dst", assumeDistinct = true)
+    val wt = Graph.buildGraphTable(
+      digraph200.map { case (s, t) => (s, t, ((s * 13 + t * 7) % 4 + 1).toDouble) }
+        .toDF("src", "dst", "w").repartition(5),
+      "src", "dst", weightCol = Some("w"), assumeDistinct = true)
+    val seeds = Seq(0L, 1L, 2L, 999L).toDF("node") // 999 absent
     val key = "spark.graft.graph.treeReducePartitions"
-    def run() = (
-      Graph.pageRank(g, "src", "dst", iters = 6, danglingCorrection = true)
-        .collect().toSeq,
-      Graph.hits(g, "src", "dst", iters = 6).collect().toSeq)
+    // every driver twin, each on a graph it accepts
+    def run() = Seq(
+      "pageRank" -> Graph.pageRank(g, "src", "dst", iters = 6,
+        danglingCorrection = true),
+      "personalizedPageRank" -> Graph.personalizedPageRank(g, "src", "dst",
+        seeds, iters = 6),
+      "hits" -> Graph.hits(g, "src", "dst", iters = 6),
+      "labelPropagation" -> sym.labelPropagation(iters = 4),
+      "kCore" -> sym.kCore(5, maxRounds = 50),
+      "bfsLevels" -> wt.bfsLevels(seeds, maxDepth = 3),
+      "shortestPaths" -> wt.shortestPaths(seeds, maxRounds = 4))
+      .map { case (name, df) => name -> bits(df) }
     try {
       val viaCollect = run() // 5 edge partitions <= the 1024 default
       spark.conf.set(key, "0") // every partition count exceeds 0
       val viaTree = run()
-      assert(viaTree === viaCollect)
-    } finally spark.conf.unset(key)
+      viaCollect.zip(viaTree).foreach { case ((name, c), (_, t)) =>
+        assert(c.nonEmpty, name)
+        assert(t === c, name)
+      }
+    } finally {
+      spark.conf.unset(key)
+      sym.unpersist()
+      wt.unpersist()
+    }
+  }
+
+  test("driver twins persist nothing past the call (in-memory and " +
+    "parquet-loaded graph tables)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_gt_release").toString
+    // graph tables are built BEFORE the measured calls: their own
+    // caches are held on both sides of every call, so they never count
+    val gt = Graph.buildGraphTable(digraph200.toDF("src", "dst")
+      .repartition(5), "src", "dst")
+    Graph.writeGraphTable(digraph200.toDF("src", "dst"), "src", "dst",
+      s"$dir/g")
+    val art = Graph.readGraphTable(spark, s"$dir/g")
+    val sym = Graph.buildGraphTable(
+      randomSym(60, 220, seed = 41L).toDF("src", "dst").repartition(5),
+      "src", "dst", assumeDistinct = true)
+    val seeds = Seq(0L, 1L, 2L).toDF("node")
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => gt.pageRank(iters = 4,
+        danglingCorrection = true, distributedRanks = Some(false))),
+      "pageRank (artifact)" -> (() => art.pageRank(iters = 4,
+        danglingCorrection = true, distributedRanks = Some(false))),
+      "personalizedPageRank" -> (() => gt.personalizedPageRank(seeds,
+        iters = 4, distributedRanks = Some(false))),
+      "personalizedPageRank (artifact)" -> (() => art.personalizedPageRank(
+        seeds, iters = 4, distributedRanks = Some(false))),
+      "hits" -> (() => gt.hits(iters = 4, distributedScores = Some(false))),
+      "labelPropagation" -> (() => sym.labelPropagation(iters = 4)),
+      "kCore" -> (() => sym.kCore(5, maxRounds = 50)),
+      "bfsLevels" -> (() => sym.bfsLevels(seeds, maxDepth = 3)),
+      "shortestPaths" -> (() => gt.shortestPaths(seeds, maxRounds = 4)))
+    // getPersistentRDDs holds its RDDs weakly: a leaked RDD that the GC
+    // has already reclaimed no longer shows, so a leak can slip past one
+    // call, but a clean call can never fail here
+    try {
+      calls.foreach { case (name, call) =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        assert(call().collect().nonEmpty, name)
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"$name left RDDs ${leaked.toSeq.sorted} persisted")
+      }
+    } finally {
+      gt.unpersist()
+      sym.unpersist()
+      org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("distributed rank loops keep their per-round job and stage " +
+    "counts (PageRank with and without the sink correction, PPR)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(42)
+    val g = (0L until 300L).flatMap { s =>
+      if (s % 17 == 0) Seq.empty
+      else (0 until (1 + rnd.nextInt(4))).map(_ => s -> rnd.nextInt(300).toLong)
+    }.distinct
+    val gt = Graph.buildGraphTable(g.toDF("src", "dst").repartition(5),
+      "src", "dst")
+    // the cheap (no-correction) path needs a sink-free graph: the same
+    // digraph with every edge also reversed
+    val gtSym = Graph.buildGraphTable(
+      (g ++ g.map(_.swap)).toDF("src", "dst").repartition(5), "src", "dst")
+    val seeds = (0L until 300L by 10).toDF("node")
+    // (jobs, stages) of one call. Counts every job in the window, not a
+    // job group: the loop primes its caches from pool threads, which do
+    // not reliably inherit the caller's group. Specs in this JVM run one
+    // at a time, so the window holds only this call's jobs. AQE is off
+    // for the counted calls: with it on, a join re-planned from runtime
+    // sizes races the stages still running, and the same call submits a
+    // different number of jobs from run to run; the static plan's job
+    // and stage counts are exact.
+    def shape(call: => org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+      val jl = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet()
+          stages.addAndGet(js.stageInfos.size)
+          ()
+        }
+      }
+      org.apache.spark.graftshim.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.addSparkListener(jl)
+      try {
+        call
+        org.apache.spark.graftshim.drainListenerBus(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(jl)
+      (jobs.get(), stages.get())
+    }
+    def perRound(call: Int => org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val (j2, s2) = shape(call(2))
+      val (j3, s3) = shape(call(3))
+      (j3 - j2, s3 - s2)
+    }
+    val aqe = "spark.sql.adaptive.enabled"
+    try {
+      spark.conf.set(aqe, "false")
+      val got = Seq(
+        "pageRank, sink correction" -> perRound(it => gt.pageRank(it,
+          danglingCorrection = true, distributedRanks = Some(true))),
+        "pageRank, no correction" -> perRound(it => gtSym.pageRank(it,
+          distributedRanks = Some(true))),
+        "personalizedPageRank" -> perRound(it => gt.personalizedPageRank(
+          seeds, it, distributedRanks = Some(true))))
+      // measured (twice, identical) on the code before the PageRank and
+      // PPR distributed bodies shared one rank loop; the shared loop
+      // must reproduce them exactly
+      val expected = Seq(
+        "pageRank, sink correction" -> (2, 9),
+        "pageRank, no correction" -> (1, 8),
+        "personalizedPageRank" -> (2, 9))
+      assert(got === expected)
+    } finally {
+      spark.conf.unset(aqe)
+      gt.unpersist()
+      gtSym.unpersist()
+    }
   }
 
   test("adamicAdar packed-key gate: an id >= 2^31 that is only a " +
