@@ -3742,11 +3742,14 @@ object SparkEntry {
       val sigs = (0 until k)
         .map(i => s"max(CASE WHEN cluster=$i THEN sig END) AS s$i")
         .mkString(", ")
+      // greatest() skips NULL ratios as Dbi's running max skips NaN; a
+      // cluster with no defined ratio (an empty centroid) keeps Dbi's
+      // -Infinity seed instead of turning the whole sum NULL
       val maxes = (0 until k).map { i =>
         val ratios = (0 until k).filter(_ != i)
           .map(j => s"(s$i+s$j)/${d(i)(j)}")
           .mkString(", ")
-        s"greatest($ratios)"
+        s"coalesce(greatest($ratios), '-infinity'::DOUBLE)"
       }.mkString(" + ")
       s"""WITH ${hpAssignSql("vec_id")},
          |sc AS (SELECT cluster, sqrt(least(d0, d1, d2, d3)) AS dist FROM a_),

@@ -128,13 +128,22 @@ case class VecSqDist(left: Expression, right: Expression) extends VecBinaryFold 
   * double fold, null elements contribute 0, dim mismatch throws). The
   * one argmin behind [[graft.functions.VectorFunctions.assignCol]].
   *
+  * Each row is read ONCE into a per-task primitive `double[]` scratch
+  * (a codegen mutable state — one `isNullAt`/`get` per element instead
+  * of one per element per centroid) and handed to the static blocked
+  * kernel [[graft.functions.VectorFunctions.argminSqDist]] that
+  * `KMeans.fit`'s Lloyd fold also runs, over the codebook flattened
+  * once into a k×dim `double[]`. A row with a null element keeps the
+  * per-element "null contributes 0" loop
+  * ([[graft.functions.VectorFunctions.argminRow]]).
+  *
   * Why an expression and not a chain of [[VecSqDist]] comparisons:
   * a chain inlines each distance's generated code O(k²) times into
   * ONE whole-stage method (expressions over codegen locals cannot be
   * split into sub-methods), which overran janino's 64 KB limit when
   * the PQ encoder put m+1 chains in one projection. Here the codebook
   * rides along as a single `references[]` object and the generated
-  * code is a fixed ~20-line double loop regardless of k·dim. */
+  * code is a dimension check plus one call regardless of k·dim. */
 case class VecArgminSqDist(
     child: Expression,
     codebook: Seq[Seq[Float]])
@@ -145,91 +154,48 @@ case class VecArgminSqDist(
   override def prettyName: String = "vec_argmin_sqdist"
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
 
-  private def elemGet: String =
-    if (child.dataType.asInstanceOf[ArrayType].elementType == FloatType)
-      "getFloat" else "getDouble"
-
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires an array<float|double> input, got ${other.sql}")
   }
 
-  @transient private lazy val cb: Array[Array[Float]] =
-    codebook.map(_.toArray).toArray
+  private def k: Int = codebook.length
+  private def dim: Int = codebook.head.length
+
+  /** The codebook as one flat k×dim `double[]` (exact float widening). */
+  @transient private lazy val cents: Array[Double] =
+    codebook.iterator.flatMap(_.iterator.map(_.toDouble)).toArray
+
+  @transient private lazy val isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(v: Any): Any = {
     val vv = v.asInstanceOf[ArrayData]
-    val isFloat =
-      child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    val n = vv.numElements()
-    if (n != cb(0).length)
+    if (vv.numElements() != dim)
       throw new IllegalArgumentException(
-        s"$prettyName: dim mismatch $n vs ${cb(0).length}")
-    def distTo(cent: Array[Float]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        if (!vv.isNullAt(i)) {
-          val av = if (isFloat) vv.getFloat(i).toDouble else vv.getDouble(i)
-          val bv = cent(i).toDouble
-          s += (av - bv) * (av - bv)
-        }
-        i += 1
-      }
-      s
-    }
+        s"$prettyName: dim mismatch ${vv.numElements()} vs $dim")
     // Seeded from centroid 0 like [[VectorFunctions.argminCentroid]]
     // (not best=-1/+∞): an all-NaN distance row then yields 0, a valid
     // index, instead of -1 leaking into PQ codes or cluster labels.
     // (A NULL input array still yields NULL via nullSafeEval.)
-    var best = 0
-    var bestD = distTo(cb(0))
-    var c = 1
-    while (c < cb.length) {
-      val s = distTo(cb(c))
-      if (s < bestD) { bestD = s; best = c }
-      c += 1
-    }
-    best
+    graft.functions.VectorFunctions.argminRow(
+      vv, isFloat, new Array[Double](dim), cents, k)
   }
 
   override protected def doGenCode(
       ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
-      val cbRef = ctx.addReferenceObj("graftCodebook", cb, "float[][]")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val cent = ctx.freshName("cent")
-      val av = ctx.freshName("av")
-      val bv = ctx.freshName("bv")
-      // Seeded from centroid 0 (argminCentroid parity): all-NaN rows
-      // yield index 0, never -1 — see nullSafeEval.
+      val centsRef = ctx.addReferenceObj("graftCodebook", cents, "double[]")
+      val row = ctx.addMutableState("double[]", "graftRow",
+        r => s"$r = new double[$dim];")
       s"""
-         |int $n = $v.numElements();
-         |if ($n != $cbRef[0].length) {
+         |if ($v.numElements() != $dim) {
          |  throw new IllegalArgumentException(
-         |    "$prettyName: dim mismatch " + $n + " vs " + $cbRef[0].length);
+         |    "$prettyName: dim mismatch " + $v.numElements() + " vs $dim");
          |}
-         |int $best = 0;
-         |double $bestD = Double.POSITIVE_INFINITY;
-         |for (int $c = 0; $c < $cbRef.length; $c++) {
-         |  float[] $cent = $cbRef[$c];
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (!$v.isNullAt($i)) {
-         |      double $av = (double) $v.$elemGet($i);
-         |      double $bv = (double) $cent[$i];
-         |      $s += ($av - $bv) * ($av - $bv);
-         |    }
-         |  }
-         |  if ($c == 0 || $s < $bestD) { $bestD = $s; $best = $c; }
-         |}
-         |${ev.value} = $best;
+         |${ev.value} = graft.functions.VectorFunctions.argminRow(
+         |  $v, $isFloat, $row, $centsRef, $k);
        """.stripMargin
     })
 

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Vector math used across the engine: clustering (assignment distance),
@@ -75,18 +76,70 @@ object VectorFunctions {
     while (i < v.length) { acc(i) += v(i); i += 1 }
   }
 
-  /** Blocked Lloyd fold of one packed chunk — [[argminCentroid]] then
-    * [[addInto]] for every row, four centroids per pass over the row.
+  /** The one blocked argmin behind every assignment: the index of the
+    * nearest of the `k` centroids of the flat k×dim codebook `cents` to
+    * the row `x` (dim = `x.length`), picks bit-identical to
+    * [[argminCentroid]].
     *
-    * `rows` is row-major n×dim floats; `cents` is the k×dim codebook as
-    * one flat `double[]` (each float coordinate widened exactly, so
-    * `row(i).toDouble - cents(..)` is the very difference [[sqdist]]
-    * squares). Each of the four centroids in a block keeps its own
+    * `x` and `cents` hold float coordinates widened exactly to double,
+    * so `x(i) - cents(..)` is the very difference [[sqdist]] squares.
+    * Four centroids run per pass over the row, each with its own
     * left-to-right double accumulator, so every distance is bit-equal
     * to [[sqdist]]'s; the picks then run the same strict-`<` running
     * min seeded from centroid 0 in index order — identical winners,
-    * NaN and ±Inf included. The row is added into the winner's cells
-    * of the flat k×dim `sums` exactly as [[addInto]] adds it. */
+    * NaN and ±Inf included. */
+  def argminSqDist(x: Array[Double], cents: Array[Double], k: Int): Int = {
+    val dim = x.length
+    val k4 = k - k % 4
+    var best = 0
+    var bestD = 0.0
+    var c = 0
+    while (c < k4) {
+      val b0 = c * dim; val b1 = b0 + dim; val b2 = b1 + dim; val b3 = b2 + dim
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      var i = 0
+      while (i < dim) {
+        val v = x(i)
+        val d0 = v - cents(b0 + i); s0 += d0 * d0
+        val d1 = v - cents(b1 + i); s1 += d1 * d1
+        val d2 = v - cents(b2 + i); s2 += d2 * d2
+        val d3 = v - cents(b3 + i); s3 += d3 * d3
+        i += 1
+      }
+      if (c == 0) bestD = s0
+      else if (s0 < bestD) { bestD = s0; best = c }
+      if (s1 < bestD) { bestD = s1; best = c + 1 }
+      if (s2 < bestD) { bestD = s2; best = c + 2 }
+      if (s3 < bestD) { bestD = s3; best = c + 3 }
+      c += 4
+    }
+    while (c < k) {
+      val s = sqdistTo(x, cents, c)
+      if (c == 0) bestD = s
+      else if (s < bestD) { bestD = s; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Squared distance from the row `x` to centroid `c` of the flat
+    * codebook `cents` — [[sqdist]]'s left-to-right double fold. */
+  def sqdistTo(x: Array[Double], cents: Array[Double], c: Int): Double = {
+    val dim = x.length
+    val b = c * dim
+    var s = 0.0
+    var i = 0
+    while (i < dim) { val d = x(i) - cents(b + i); s += d * d; i += 1 }
+    s
+  }
+
+  /** Blocked Lloyd fold of one packed chunk — [[argminCentroid]] then
+    * [[addInto]] for every row, through the [[argminSqDist]] kernel.
+    *
+    * `rows` is row-major n×dim floats; `cents` is the k×dim codebook as
+    * one flat `double[]`. Each row is widened once into a `dim` scratch
+    * and added into the winner's cells of the flat k×dim `sums` exactly
+    * as [[addInto]] adds it. */
   def lloydFoldChunk(
       rows: Array[Float],
       dim: Int,
@@ -94,52 +147,80 @@ object VectorFunctions {
       sums: Array[Double],
       cnts: Array[Long]): Unit = {
     val k = cnts.length
-    val k4 = k - k % 4
     val n = rows.length / dim
+    val x = new Array[Double](dim)
     var r = 0
     while (r < n) {
       val o = r * dim
-      var best = 0
-      var bestD = 0.0
-      var c = 0
-      while (c < k4) {
-        val b0 = c * dim; val b1 = b0 + dim; val b2 = b1 + dim; val b3 = b2 + dim
-        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-        var i = 0
-        while (i < dim) {
-          val x = rows(o + i).toDouble
-          val d0 = x - cents(b0 + i); s0 += d0 * d0
-          val d1 = x - cents(b1 + i); s1 += d1 * d1
-          val d2 = x - cents(b2 + i); s2 += d2 * d2
-          val d3 = x - cents(b3 + i); s3 += d3 * d3
-          i += 1
-        }
-        if (c == 0) bestD = s0
-        else if (s0 < bestD) { bestD = s0; best = c }
-        if (s1 < bestD) { bestD = s1; best = c + 1 }
-        if (s2 < bestD) { bestD = s2; best = c + 2 }
-        if (s3 < bestD) { bestD = s3; best = c + 3 }
-        c += 4
-      }
-      while (c < k) {
-        val b = c * dim
-        var s = 0.0
-        var i = 0
-        while (i < dim) {
-          val d = rows(o + i).toDouble - cents(b + i); s += d * d
-          i += 1
-        }
-        if (c == 0) bestD = s
-        else if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      val b = best * dim
       var i = 0
-      while (i < dim) { sums(b + i) += rows(o + i); i += 1 }
+      while (i < dim) { x(i) = rows(o + i); i += 1 }
+      val best = argminSqDist(x, cents, k)
+      val b = best * dim
+      i = 0
+      while (i < dim) { sums(b + i) += x(i); i += 1 }
       cnts(best) += 1
       r += 1
     }
   }
+
+  /** Reads the `x.length` elements of an `array<float|double>` value
+    * into `x`, widening floats exactly; false (with `x` partly
+    * written) when an element is null. */
+  def readRow(v: ArrayData, isFloat: Boolean, x: Array[Double]): Boolean = {
+    val n = x.length
+    var i = 0
+    if (isFloat) while (i < n) {
+      if (v.isNullAt(i)) return false
+      x(i) = v.getFloat(i)
+      i += 1
+    }
+    else while (i < n) {
+      if (v.isNullAt(i)) return false
+      x(i) = v.getDouble(i)
+      i += 1
+    }
+    true
+  }
+
+  /** Squared distance from `v` to centroid `c` of the flat codebook
+    * with null elements contributing 0 — the per-element
+    * [[graft.functions.VecSqDist]] loop, for rows [[readRow]] rejects. */
+  def sqdistNullable(
+      v: ArrayData, isFloat: Boolean, cents: Array[Double], c: Int): Double = {
+    val dim = v.numElements()
+    val b = c * dim
+    var s = 0.0
+    var i = 0
+    while (i < dim) {
+      if (!v.isNullAt(i)) {
+        val d = (if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)) -
+          cents(b + i)
+        s += d * d
+      }
+      i += 1
+    }
+    s
+  }
+
+  /** [[VecArgminSqDist]]'s per-row step (codegen and eval): the row is
+    * read once into the caller's `x` scratch and handed to
+    * [[argminSqDist]]; a row with a null element keeps the per-element
+    * "null contributes 0" loop. The caller checks the dimension. */
+  def argminRow(
+      v: ArrayData, isFloat: Boolean, x: Array[Double],
+      cents: Array[Double], k: Int): Int =
+    if (readRow(v, isFloat, x)) argminSqDist(x, cents, k)
+    else {
+      var best = 0
+      var bestD = sqdistNullable(v, isFloat, cents, 0)
+      var c = 1
+      while (c < k) {
+        val s = sqdistNullable(v, isFloat, cents, c)
+        if (s < bestD) { bestD = s; best = c }
+        c += 1
+      }
+      best
+    }
 
   /** Mean with the reference's 5-dp round-half-up on each coordinate
     * (`PointWritable.calcAverage`, PointWritable.java:106-112:
@@ -185,12 +266,14 @@ object VectorFunctions {
 
   /** J1 argmin-over-centroids: index of the nearest centroid, ties to
     * the LOWEST index (strict `<` running min seeded from centroid 0,
-    * KMapper.java:34-43) — the native [[VecArgminSqDist]] loop, picks
-    * bit-identical to [[argminCentroid]] (same left-to-right double
-    * fold per centroid). The codebook rides in the plan as ONE
-    * `references[]` object, so the generated code is a fixed ~20-line
-    * loop at any k·dim: a narrow map, no shuffle, no UDF, and several
-    * argmins can share one projection (the PQ encoder). */
+    * KMapper.java:34-43) — the native [[VecArgminSqDist]] expression,
+    * which reads each row once into a per-task `double[]` scratch and
+    * calls the blocked [[argminSqDist]] kernel the Lloyd fold uses, so
+    * picks are bit-identical to [[argminCentroid]] and to `fit`'s. The
+    * codebook rides in the plan as ONE flat `double[]` reference, so the
+    * generated code is a dimension check plus one call at any k·dim: a
+    * narrow map, no shuffle, no UDF, and several argmins can share one
+    * projection (the PQ encoder). */
   def assignCol(features: Column, centroids: Array[Array[Float]]): Column =
     toCol(VecArgminSqDist(expr(features), centroids.map(_.toSeq).toSeq))
 }

@@ -37,10 +37,12 @@ final case class KMeansModel(
   /** Label every row with its nearest centroid — a pure narrow map, no
     * shuffle (reference does this driver-side over the whole dataset,
     * Main.java:345-355; we stay distributed). The argmin is the native
-    * `VecArgminSqDist` loop ([[graft.functions.VectorFunctions.assignCol]]):
-    * the codebook sits in the plan as one reference object and the
-    * generated code is the same short loop at any k — inside
-    * whole-stage codegen, no shuffle, no UDF, lowest-index ties. */
+    * `VecArgminSqDist` expression
+    * ([[graft.functions.VectorFunctions.assignCol]]): each row is read
+    * once into a per-task `double[]` and handed to the same blocked
+    * kernel as [[KMeans.fit]]'s Lloyd fold, so labels are the fit's
+    * picks — inside whole-stage codegen, no UDF, lowest-index ties. It
+    * keeps the caller's partitioning: one task per input partition. */
   def transform(
       df: DataFrame,
       featuresCol: String = "features",

@@ -373,7 +373,7 @@ object EventWindows {
   /** Streaming model scoring (SURVEY §7.5: streaming J1 against a
     * broadcast model): the embeddings table driven as a file stream,
     * every arriving vector labeled with its nearest centroid via the
-    * codegen'd assignment chain — a pure narrow map on the stream, no
+    * native argmin (`assignCol`) — a pure narrow map on the stream, no
     * state — then a running per-cluster count (update mode; the tiny
     * k-row state needs no watermark to stay bounded). This is the
     * deployment shape for scoring an unbounded feed against a fitted

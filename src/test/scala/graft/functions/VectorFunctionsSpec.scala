@@ -139,4 +139,80 @@ class VectorFunctionsColumnSpec extends SparkSpec {
       } finally spark.conf.unset("spark.sql.codegen.factoryMode")
     }
   }
+
+  test("VecArgminSqDist ≡ argminCentroid, codegen and eval, on " +
+    "array<float> and array<double> (ties, NaN, ±Inf, null elements; " +
+    "k in 1,3,4,5,17,129; dim 1, 16)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(17)
+    val specials = Array(Float.NaN, Float.PositiveInfinity,
+      Float.NegativeInfinity)
+    // small integer grid: exact distance ties are common; 1 in 10
+    // coordinates is NaN or ±Inf (Inf − Inf makes NaN distances too)
+    def coord(): Float = rnd.nextInt(10) match {
+      case 0 => specials(rnd.nextInt(3))
+      case 1 | 2 | 3 => rnd.nextFloat() * 4f - 1f
+      case _ => rnd.nextInt(3).toFloat
+    }
+    // the per-element reference: double fold, null contributes 0,
+    // strict-`<` running min seeded from centroid 0
+    def ref(p: Seq[Any], cents: Array[Array[Float]]): Int = {
+      def dist(c: Array[Float]) = p.indices.foldLeft(0.0) { (s, i) =>
+        p(i) match {
+          case null => s
+          case v: Float => val d = v.toDouble - c(i).toDouble; s + d * d
+          case v: Double => val d = v - c(i).toDouble; s + d * d
+        }
+      }
+      var best = 0
+      var bestD = dist(cents(0))
+      for (c <- 1 until cents.length) {
+        val d = dist(cents(c))
+        if (d < bestD) { bestD = d; best = c }
+      }
+      best
+    }
+    val modes = Seq(
+      Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "true"),
+      Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false"))
+    for (dim <- Seq(1, 16); k <- Seq(1, 3, 4, 5, 17, 129)) {
+      val cents = Array.fill(k)(Array.fill(dim)(coord()))
+      if (k > 1) cents(k - 1) = cents(0).clone() // exact tie with 0
+      val floatRows: Seq[Seq[Any]] =
+        Seq.fill(300)(Seq.fill(dim)(coord())) ++ cents.map(_.toSeq) ++
+          Seq.fill(20)(Seq.tabulate(dim)(i =>
+            if (i == 0 || rnd.nextInt(3) == 0) null else coord()))
+      // doubles off the float grid, plus the float rows widened
+      val doubleRows: Seq[Seq[Any]] = floatRows.map(_.map {
+        case null => null
+        case v: Float =>
+          if (rnd.nextBoolean()) v.toDouble else v.toDouble + 1e-9 * rnd.nextGaussian()
+      })
+      for ((et, rows) <- Seq(FloatType -> floatRows, DoubleType -> doubleRows)) {
+        val schema = StructType(Seq(StructField("id", IntegerType),
+          StructField("v", ArrayType(et, containsNull = true))))
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(
+          rows.zipWithIndex.map { case (r, i) => Row(i, r) }, 3), schema)
+        val want = rows.map(ref(_, cents))
+        rows.zip(want).foreach { case (r, w) =>
+          if (et == FloatType && !r.contains(null))
+            assert(w === argminCentroid(r.map(_.asInstanceOf[Float]).toArray, cents))
+        }
+        for (conf <- modes) {
+          conf.foreach { case (key, v) => spark.conf.set(key, v) }
+          try {
+            val got = df.select(col("id"), assignCol(col("v"), cents))
+              .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+            rows.indices.foreach { i =>
+              assert(got(i) === want(i),
+                s"k=$k dim=$dim $et $conf row=${rows(i)}")
+            }
+          } finally conf.keys.foreach(spark.conf.unset)
+        }
+      }
+    }
+  }
 }
