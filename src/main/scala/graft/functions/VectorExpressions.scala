@@ -128,22 +128,28 @@ case class VecSqDist(left: Expression, right: Expression) extends VecBinaryFold 
   * double fold, null elements contribute 0, dim mismatch throws). The
   * one argmin behind [[graft.functions.VectorFunctions.assignCol]].
   *
-  * Each row is read ONCE into a per-task primitive `double[]` scratch
-  * (a codegen mutable state — one `isNullAt`/`get` per element instead
-  * of one per element per centroid) and handed to the static blocked
-  * kernel [[graft.functions.VectorFunctions.argminSqDist]] that
+  * Each row is read ONCE into the `double[]` scratch of a per-task
+  * [[graft.functions.GuessArgmin]] (a codegen mutable state — one
+  * `isNullAt`/`get` per element instead of one per element per
+  * centroid). Its nearest centroid over the first two coordinates is
+  * the guess; when the half-gap test
+  * ([[graft.functions.VectorFunctions.halfGapHit]], radii computed once
+  * per codebook on the driver and shipped as a second reference)
+  * proves it, it is the pick, and otherwise the row runs the static
+  * blocked scan [[graft.functions.VectorFunctions.argminSqDist]] that
   * `KMeans.fit`'s Lloyd fold also runs, over the codebook flattened
-  * once into a k×dim `double[]`. A row with a null element keeps the
-  * per-element "null contributes 0" loop
-  * ([[graft.functions.VectorFunctions.argminRow]]).
+  * once into a k×dim `double[]`. Either way the pick is the scan's. A
+  * row with a null element keeps the per-element "null contributes 0"
+  * loop ([[graft.functions.VectorFunctions.argminRow]]).
   *
   * Why an expression and not a chain of [[VecSqDist]] comparisons:
   * a chain inlines each distance's generated code O(k²) times into
   * ONE whole-stage method (expressions over codegen locals cannot be
   * split into sub-methods), which overran janino's 64 KB limit when
   * the PQ encoder put m+1 chains in one projection. Here the codebook
-  * rides along as a single `references[]` object and the generated
-  * code is a dimension check plus one call regardless of k·dim. */
+  * and its radii ride along as two `references[]` objects and the
+  * generated code is a dimension check plus one call regardless of
+  * k·dim. */
 case class VecArgminSqDist(
     child: Expression,
     codebook: Seq[Seq[Float]])
@@ -167,6 +173,11 @@ case class VecArgminSqDist(
   @transient private lazy val cents: Array[Double] =
     codebook.iterator.flatMap(_.iterator.map(_.toDouble)).toArray
 
+  /** The codebook's half-gap radii, once per codebook (null: shortcut
+    * off). */
+  @transient private lazy val radii: Array[Double] =
+    graft.functions.VectorFunctions.halfGapRadii(cents, k)
+
   @transient private lazy val isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
@@ -180,22 +191,23 @@ case class VecArgminSqDist(
     // index, instead of -1 leaking into PQ codes or cluster labels.
     // (A NULL input array still yields NULL via nullSafeEval.)
     graft.functions.VectorFunctions.argminRow(
-      vv, isFloat, new Array[Double](dim), cents, k)
+      vv, isFloat, new GuessArgmin(cents, k, radii))
   }
 
   override protected def doGenCode(
       ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
       val centsRef = ctx.addReferenceObj("graftCodebook", cents, "double[]")
-      val row = ctx.addMutableState("double[]", "graftRow",
-        r => s"$r = new double[$dim];")
+      val radiiRef = ctx.addReferenceObj("graftRadii", radii, "double[]")
+      val am = ctx.addMutableState(classOf[GuessArgmin].getName, "graftArgmin",
+        r => s"$r = new ${classOf[GuessArgmin].getName}($centsRef, $k, $radiiRef);")
       s"""
          |if ($v.numElements() != $dim) {
          |  throw new IllegalArgumentException(
          |    "$prettyName: dim mismatch " + $v.numElements() + " vs $dim");
          |}
          |${ev.value} = graft.functions.VectorFunctions.argminRow(
-         |  $v, $isFloat, $row, $centsRef, $k);
+         |  $v, $isFloat, $am);
        """.stripMargin
     })
 

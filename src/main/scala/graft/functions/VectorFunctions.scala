@@ -76,10 +76,11 @@ object VectorFunctions {
     while (i < v.length) { acc(i) += v(i); i += 1 }
   }
 
-  /** The one blocked argmin behind every assignment: the index of the
-    * nearest of the `k` centroids of the flat k×dim codebook `cents` to
-    * the row `x` (dim = `x.length`), picks bit-identical to
-    * [[argminCentroid]].
+  /** The one blocked argmin scan behind every assignment: the index of
+    * the nearest of the `k` centroids of the flat k×dim codebook `cents`
+    * to the row `x` (dim = `x.length`), picks bit-identical to
+    * [[argminCentroid]]. Callers reach it through [[GuessArgmin]], which
+    * skips it whenever [[halfGapHit]] proves a guess.
     *
     * `x` and `cents` hold float coordinates widened exactly to double,
     * so `x(i) - cents(..)` is the very difference [[sqdist]] squares.
@@ -122,6 +123,91 @@ object VectorFunctions {
     best
   }
 
+  /** The verified-guess shortcut in front of [[argminSqDist]]: true
+    * when `guess` is provably the scan's pick, because
+    *
+    *   d(x, c_g)²·(1+ε) < r²(g),  r²(g) = ¼·min_{j≠g} d(c_g, c_j)²·(1−ε)
+    *
+    * (`radii` from [[halfGapRadii]], ε = [[halfGapEps]]`(dim)`). It costs
+    * one distance instead of k.
+    *
+    * Why that is exact (Elkan's half-gap lemma): in real arithmetic
+    * d(x,c_g) < ½·d(c_g,c_j) gives d(x,c_j) ≥ d(c_g,c_j) − d(x,c_g) >
+    * d(x,c_g) for every j ≠ g. Each computed squared distance over dim
+    * terms is within a relative (dim+2)·2⁻⁵³ of the real one, so a
+    * margin ε of about 1.5× that keeps every computed d(x,c_j)² strictly
+    * above the computed d(x,c_g)²: the strict-`<` scan could not pick
+    * another index, not even a lower one on a tie. A NaN or ±Inf row
+    * distance fails the test (the caller then scans). */
+  def halfGapHit(
+      x: Array[Double], cents: Array[Double], radii: Array[Double],
+      guess: Int): Boolean =
+    sqdistTo(x, cents, guess) * (1.0 + halfGapEps(x.length)) < radii(guess)
+
+  /** The rounding margin ε of the half-gap test for rows of `dim`
+    * coordinates: 16× the relative error bound (dim+2)·2⁻⁵³ of one
+    * computed squared distance, about 10× what the proof needs. */
+  def halfGapEps(dim: Int): Double = (dim + 2) * Ulp49
+
+  private val Ulp49 = math.scalb(1.0, -49)
+
+  /** Smallest non-zero centroid-to-centroid squared distance the
+    * shortcut accepts: far above the subnormal range, so underflow in
+    * a squared term moves a distance by far less than ε of the radius. */
+  private val HalfGapFloor = math.scalb(1.0, -900)
+
+  /** The half-gap radii r²(g) = ¼·min_{j≠g} d(c_g, c_j)²·(1−ε) of the
+    * flat k×dim codebook `cents` — computed once per codebook, O(k²·dim).
+    * Null (the shortcut off) when a coordinate is NaN or ±Inf, or a
+    * pairwise squared distance overflows or lies in (0, 2⁻⁹⁰⁰). A
+    * centroid with a duplicate gets radius 0, which no row passes; with
+    * k = 1 the radius is +∞ and every finite row passes. */
+  def halfGapRadii(cents: Array[Double], k: Int): Array[Double] = {
+    if (!cents.forall(v => !v.isNaN && !v.isInfinite)) return null
+    val dim = cents.length / k
+    val minD = Array.fill(k)(Double.PositiveInfinity)
+    val cg = new Array[Double](dim)
+    var g = 0
+    while (g < k) {
+      System.arraycopy(cents, g * dim, cg, 0, dim)
+      var j = g + 1
+      while (j < k) {
+        val d = sqdistTo(cg, cents, j)
+        if (d.isInfinite || (d > 0 && d < HalfGapFloor)) return null
+        if (d < minD(g)) minD(g) = d
+        if (d < minD(j)) minD(j) = d
+        j += 1
+      }
+      g += 1
+    }
+    val shrink = 1.0 - halfGapEps(dim)
+    minD.map(d => 0.25 * d * shrink)
+  }
+
+  /** A cheap guess for the shortcut when no earlier pick is at hand:
+    * the nearest centroid over the first two coordinates only (the
+    * scan's pick at dim 1). Any index is a valid guess — the half-gap
+    * test decides. */
+  def probeGuess(x: Array[Double], cents: Array[Double], k: Int): Int = {
+    val dim = x.length
+    if (dim == 1) return argminSqDist(x, cents, k)
+    val x0 = x(0)
+    val x1 = x(1)
+    var best = 0
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    var b = 0
+    while (c < k) {
+      val d0 = x0 - cents(b)
+      val d1 = x1 - cents(b + 1)
+      val s = d0 * d0 + d1 * d1
+      if (s < bestD) { bestD = s; best = c }
+      c += 1
+      b += dim
+    }
+    best
+  }
+
   /** Squared distance from the row `x` to centroid `c` of the flat
     * codebook `cents` — [[sqdist]]'s left-to-right double fold. */
   def sqdistTo(x: Array[Double], cents: Array[Double], c: Int): Double = {
@@ -133,13 +219,52 @@ object VectorFunctions {
     s
   }
 
+  /** The picks of one packed chunk (row-major n×dim floats): each row
+    * widened once into the argmin's scratch and picked by
+    * [[GuessArgmin.pick]], guessing `prev(r)` — the row's pick from the
+    * round before — or, when `prev` is null, the [[probeGuess]]. */
+  def assignChunk(
+      rows: Array[Float], dim: Int, am: GuessArgmin,
+      prev: Array[Int]): Array[Int] = {
+    val n = rows.length / dim
+    val picks = new Array[Int](n)
+    val x = am.x
+    var r = 0
+    while (r < n) {
+      val o = r * dim
+      var i = 0
+      while (i < dim) { x(i) = rows(o + i); i += 1 }
+      picks(r) = am.pick(if (prev != null) prev(r) else -1)
+      r += 1
+    }
+    picks
+  }
+
+  /** Adds each row of one packed chunk into its pick's cells of the
+    * flat k×dim `sums` exactly as [[addInto]] adds it, in row order,
+    * and counts it in `cnts`. */
+  def addChunk(
+      rows: Array[Float], dim: Int, picks: Array[Int],
+      sums: Array[Double], cnts: Array[Long]): Unit = {
+    var r = 0
+    while (r < picks.length) {
+      val o = r * dim
+      val b = picks(r) * dim
+      var i = 0
+      while (i < dim) { sums(b + i) += rows(o + i); i += 1 }
+      cnts(picks(r)) += 1
+      r += 1
+    }
+  }
+
   /** Blocked Lloyd fold of one packed chunk — [[argminCentroid]] then
-    * [[addInto]] for every row, through the [[argminSqDist]] kernel.
+    * [[addInto]] for every row: [[assignChunk]] (half-gap shortcut on
+    * the probe guess, else the blocked scan) then [[addChunk]].
     *
     * `rows` is row-major n×dim floats; `cents` is the k×dim codebook as
-    * one flat `double[]`. Each row is widened once into a `dim` scratch
-    * and added into the winner's cells of the flat k×dim `sums` exactly
-    * as [[addInto]] adds it. */
+    * one flat `double[]`. `KMeans.fit` runs the two halves in separate
+    * steps so it can keep each round's picks as the next round's
+    * guesses. */
   def lloydFoldChunk(
       rows: Array[Float],
       dim: Int,
@@ -147,20 +272,8 @@ object VectorFunctions {
       sums: Array[Double],
       cnts: Array[Long]): Unit = {
     val k = cnts.length
-    val n = rows.length / dim
-    val x = new Array[Double](dim)
-    var r = 0
-    while (r < n) {
-      val o = r * dim
-      var i = 0
-      while (i < dim) { x(i) = rows(o + i); i += 1 }
-      val best = argminSqDist(x, cents, k)
-      val b = best * dim
-      i = 0
-      while (i < dim) { sums(b + i) += x(i); i += 1 }
-      cnts(best) += 1
-      r += 1
-    }
+    val am = new GuessArgmin(cents, k, halfGapRadii(cents, k))
+    addChunk(rows, dim, assignChunk(rows, dim, am, null), sums, cnts)
   }
 
   /** Reads the `x.length` elements of an `array<float|double>` value
@@ -203,14 +316,15 @@ object VectorFunctions {
   }
 
   /** [[VecArgminSqDist]]'s per-row step (codegen and eval): the row is
-    * read once into the caller's `x` scratch and handed to
-    * [[argminSqDist]]; a row with a null element keeps the per-element
-    * "null contributes 0" loop. The caller checks the dimension. */
-  def argminRow(
-      v: ArrayData, isFloat: Boolean, x: Array[Double],
-      cents: Array[Double], k: Int): Int =
-    if (readRow(v, isFloat, x)) argminSqDist(x, cents, k)
+    * read once into the argmin's scratch and picked by
+    * [[GuessArgmin.pick]] on the [[probeGuess]]; a row with a null
+    * element keeps the per-element "null contributes 0" loop. The
+    * caller checks the dimension. */
+  def argminRow(v: ArrayData, isFloat: Boolean, am: GuessArgmin): Int =
+    if (readRow(v, isFloat, am.x)) am.pick(-1)
     else {
+      val cents = am.cents
+      val k = am.k
       var best = 0
       var bestD = sqdistNullable(v, isFloat, cents, 0)
       var c = 1
@@ -267,13 +381,61 @@ object VectorFunctions {
   /** J1 argmin-over-centroids: index of the nearest centroid, ties to
     * the LOWEST index (strict `<` running min seeded from centroid 0,
     * KMapper.java:34-43) — the native [[VecArgminSqDist]] expression,
-    * which reads each row once into a per-task `double[]` scratch and
-    * calls the blocked [[argminSqDist]] kernel the Lloyd fold uses, so
-    * picks are bit-identical to [[argminCentroid]] and to `fit`'s. The
+    * which reads each row once into a per-task scratch, keeps a
+    * two-coordinate probe guess when [[halfGapHit]] proves it, and
+    * otherwise calls the blocked [[argminSqDist]] scan the Lloyd fold
+    * uses, so picks are bit-identical to [[argminCentroid]] and to
+    * `fit`'s. The half-gap radii are computed once per codebook. The
     * codebook rides in the plan as ONE flat `double[]` reference, so the
     * generated code is a dimension check plus one call at any k·dim: a
     * narrow map, no shuffle, no UDF, and several argmins can share one
     * projection (the PQ encoder). */
   def assignCol(features: Column, centroids: Array[Array[Float]]): Column =
     toCol(VecArgminSqDist(expr(features), centroids.map(_.toSeq).toSeq))
+}
+
+/** The argmin over one flat k×dim codebook with the verified-guess
+  * shortcut in front, for one caller at a time (a fit task, a labelling
+  * task): [[pick]] always returns `VectorFunctions.argminSqDist(x,
+  * cents, k)`, and skips that k-centroid scan whenever
+  * [[VectorFunctions.halfGapHit]] proves the guess.
+  *
+  * A miss costs the guess's distance (and the probe) on top of the
+  * scan, so after [[GuessArgmin.MissRun]] consecutive misses the next
+  * [[GuessArgmin.MissRest]] rows scan without trying; then it tries
+  * again. On an input where the test never passes that bounds the
+  * extra cost to a few per cent; it never changes a pick.
+  *
+  * @param radii the codebook's [[VectorFunctions.halfGapRadii]]; null
+  *              runs the plain scan for every row */
+final class GuessArgmin(
+    val cents: Array[Double], val k: Int, radii: Array[Double]) {
+
+  /** The row scratch: the caller widens the row into it, then picks. */
+  val x = new Array[Double](cents.length / k)
+
+  private var misses = 0
+
+  /** The pick of the row in [[x]], trying `hint` first — or the
+    * [[VectorFunctions.probeGuess]] when `hint` is negative. */
+  def pick(hint: Int): Int =
+    if (radii == null) VectorFunctions.argminSqDist(x, cents, k)
+    else if (misses < GuessArgmin.MissRun) {
+      val g = if (hint >= 0) hint else VectorFunctions.probeGuess(x, cents, k)
+      if (VectorFunctions.halfGapHit(x, cents, radii, g)) { misses = 0; g }
+      else { misses += 1; VectorFunctions.argminSqDist(x, cents, k) }
+    } else {
+      misses =
+        if (misses < GuessArgmin.MissRun + GuessArgmin.MissRest) misses + 1
+        else 0
+      VectorFunctions.argminSqDist(x, cents, k)
+    }
+}
+
+object GuessArgmin {
+  /** Consecutive misses after which [[GuessArgmin.pick]] stops trying. */
+  val MissRun = 16
+
+  /** Rows it then scans without trying. */
+  val MissRest = 1024
 }

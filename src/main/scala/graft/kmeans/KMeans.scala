@@ -4,8 +4,8 @@ import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.functions.GuessArgmin
 import graft.functions.VectorFunctions._
 
 /** Parameters mirroring the reference CLI
@@ -39,10 +39,12 @@ final case class KMeansModel(
     * Main.java:345-355; we stay distributed). The argmin is the native
     * `VecArgminSqDist` expression
     * ([[graft.functions.VectorFunctions.assignCol]]): each row is read
-    * once into a per-task `double[]` and handed to the same blocked
-    * kernel as [[KMeans.fit]]'s Lloyd fold, so labels are the fit's
-    * picks — inside whole-stage codegen, no UDF, lowest-index ties. It
-    * keeps the caller's partitioning: one task per input partition. */
+    * once into a per-task scratch, a guess from its first two
+    * coordinates is kept when the half-gap test proves it, and
+    * otherwise the row runs the same blocked scan as [[KMeans.fit]] —
+    * so labels are the fit's picks, bit for bit, inside whole-stage
+    * codegen, no UDF, lowest-index ties. It keeps the caller's
+    * partitioning: one task per input partition. */
   def transform(
       df: DataFrame,
       featuresCol: String = "features",
@@ -71,25 +73,38 @@ final case class KMeansModel(
   *     of one flat k×dim `double[]`;
   *   - reducer-output file round-trip (Main.java:175-203)  →  `collect()`
   *     of per-slice partials, final merge on the driver;
-  *   - input re-read per job (Main.java:318 in-loop)  →  `persist()` once.
+  *   - input re-read per job (Main.java:318 in-loop)  →  the packed
+  *     chunks cached with each round's picks.
   *
   * The iteration body is the combiner/reducer split made explicit
-  * (KCombiner.java:9-18 / KReducer.java:12-26): each slice folds its
-  * chunks into k×(dim+1) partial (sum, count) cells with the blocked
-  * [[graft.functions.VectorFunctions.lloydFoldChunk]] kernel — A2 — and
-  * the driver merges the k-sized partials and takes the rounded mean —
-  * A3. It runs as `mapPartitions` + `collect` rather than a
-  * per-iteration `groupBy().agg()` because an iterative loop re-plans a
-  * k×dim aggregate every pass (measured ~1.2 s/iteration of analysis/
-  * codegen/scheduling overhead at bench scale — the dominant cost for
-  * small inputs), whereas this loop reuses one cached RDD and ships only
-  * k×(dim+1)×P doubles to the driver per iteration. There is one
+  * (KCombiner.java:9-18 / KReducer.java:12-26): each slice picks every
+  * row's nearest centroid and adds the row into k×(dim+1) partial
+  * (sum, count) cells — A2 — and the driver merges the k-sized partials
+  * and takes the rounded mean — A3. It runs as `mapPartitions` +
+  * `collect` rather than a per-iteration `groupBy().agg()` because an
+  * iterative loop re-plans a k×dim aggregate every pass (measured
+  * ~1.2 s/iteration of analysis/codegen/scheduling overhead at bench
+  * scale — the dominant cost for small inputs), whereas this loop
+  * reuses the cached chunks and ships only k×(dim+1)×P doubles to the
+  * driver per iteration. There is one
   * rebalancing shuffle at cache time, none per round: rows are packed
   * into chunks inside their source partition, and chunk (source s,
   * index c) moves to slice (s + c) mod P. The declarative `groupBy` form
   * of the same aggregation remains the engine's single-step operator
   * (q07) where Catalyst's partial/final HashAggregate split is asserted
   * by PlanSpec.
+  *
+  * Verified guesses: a round's generation is its slices' chunks, each
+  * paired with its rows' picks (one `Int` per row), cached and locally
+  * checkpointed. The next round tries each row's previous pick first
+  * and keeps it when Elkan's half-gap test proves it
+  * ([[graft.functions.VectorFunctions.halfGapHit]]: one distance
+  * instead of k; round 1 guesses from the first two coordinates); a
+  * miss runs the plain blocked scan
+  * ([[graft.functions.VectorFunctions.argminSqDist]]). Every pick is
+  * the scan's, and rows are added in the same order, so centroids are
+  * bit-identical to a fit that always scans (KMeansSpec pins it). The
+  * previous generation is released after each round's collect.
   *
   * Determinism: each slice folds in chunk-key order — the rebalancing
   * shuffle sorts each slice by (s, c), so the order never depends on
@@ -172,7 +187,14 @@ object KMeans {
       out
     }
 
-  def fit(df: DataFrame, params: KMeansParams): KMeansModel = {
+  def fit(df: DataFrame, params: KMeansParams): KMeansModel =
+    fit(df, params, shortcut = true)
+
+  /** [[fit]]; with `shortcut` false every row of every round runs the
+    * plain k-centroid scan — the reference the specs pin the hinted
+    * fold against, bit for bit. */
+  private[kmeans] def fit(
+      df: DataFrame, params: KMeansParams, shortcut: Boolean): KMeansModel = {
     val spark = df.sparkSession
     val k = params.k
     var centroids = params.initCentroids
@@ -188,16 +210,16 @@ object KMeans {
     // Parse and pack the rows ONCE into P balanced slices of chunks,
     // chunk (source partition s, chunk index c) landing in slice
     // (s + c) mod P; every round is then one narrow job over them.
+    // Generation 0 pairs each chunk with no picks yet.
     val rows = rowsOf(df, params.featuresCol)
     val numSlices =
       math.max(rows.getNumPartitions, spark.sparkContext.defaultParallelism)
-    val slices = rows
+    var gen: RDD[(Array[Float], Array[Int])] = rows
       .mapPartitionsWithIndex { (s, it) =>
         packChunks(it, dim).zipWithIndex.map { case (ch, c) => ((s, c), ch) }
       }
       .repartitionAndSortWithinPartitions(new SlicePartitioner(numSlices))
-      .values
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .map { case (_, ch) => (ch, null: Array[Int]) }
     try {
       val treeGate = treeReducePartitions(spark)
       val cells = k * dim
@@ -221,18 +243,30 @@ object KMeans {
       var loop = 1
       var converged = false
       while (loop < params.maxLoop && !converged) {
-        val bc = spark.sparkContext.broadcast(centroids.flatMap(_.map(_.toDouble)))
-        // A2 — the combiner: each slice folds its chunks into k (sum,
-        // count) cells, primitive doubles in chunk-key order
+        val flat = centroids.flatMap(_.map(_.toDouble))
+        val bc = spark.sparkContext.broadcast(
+          (flat, if (shortcut) halfGapRadii(flat, k) else null))
+        // This round's generation: each chunk with its rows' picks,
+        // guessed from the previous round's picks (the probe in round
+        // 1) and verified by the half-gap test. Cached and locally
+        // checkpointed, so the next round reads it without lineage.
+        val next = gen.mapPartitions { it =>
+          val (cents, radii) = bc.value
+          val am = new GuessArgmin(cents, k, radii)
+          it.map { case (ch, prev) => (ch, assignChunk(ch, dim, am, prev)) }
+        }.localCheckpoint()
+        val prev = gen
+        gen = next
+        // A2 — the combiner: each slice adds its chunks' rows into k
+        // (sum, count) cells in chunk-key order, primitive doubles
         // (KCombiner.java:9-18 semantics), each cell lifted to an EXACT
         // BigDecimal at slice exit (`new BigDecimal(double)` represents
         // every finite double exactly) so the A3 merge is
         // order-independent.
-        val partialsRdd = slices.mapPartitions { it =>
-          val cents = bc.value
+        val partialsRdd = next.mapPartitions { it =>
           val sums = new Array[Double](cells)
           val cnts = new Array[Long](k)
-          it.foreach(lloydFoldChunk(_, dim, cents, sums, cnts))
+          it.foreach { case (ch, picks) => addChunk(ch, dim, picks, sums, cnts) }
           Iterator.single((sums.map(new java.math.BigDecimal(_)), cnts))
         }
 
@@ -241,35 +275,38 @@ object KMeans {
         // .calcAverage). Above the partition gate the merge runs as a
         // 2-level treeReduce (executors pre-merge; the driver receives
         // ONE table, not P) — bit-identical to the collect fold by the
-        // exactness argument above, pinned by KMeansSpec.
+        // exactness argument above, pinned by KMeansSpec. The previous
+        // generation is released once this round's is checkpointed.
         val (exactSums, cnts) =
-          if (numSlices > treeGate)
-            partialsRdd.treeReduce(merge _, depth = 2)
-          else {
-            val zero = (Array.fill(cells)(java.math.BigDecimal.ZERO),
-              new Array[Long](k))
-            partialsRdd.collect().foldLeft(zero)(merge)
-          }
+          try {
+            if (numSlices > treeGate)
+              partialsRdd.treeReduce(merge _, depth = 2)
+            else {
+              val zero = (Array.fill(cells)(java.math.BigDecimal.ZERO),
+                new Array[Long](k))
+              partialsRdd.collect().foldLeft(zero)(merge)
+            }
+          } finally prev.unpersist(blocking = false)
         // Empty cluster -> keep previous centroid (documented divergence).
-        val next = centroids.map(_.clone())
+        val nextCents = centroids.map(_.clone())
         var c = 0
         while (c < k) {
           if (cnts(c) > 0) {
             val s = Array.tabulate(dim)(i => exactSums(c * dim + i).doubleValue())
-            next(c) = meanRounded5(s, cnts(c))
+            nextCents(c) = meanRounded5(s, cnts(c))
           }
           c += 1
         }
         converged =
-          centroids.zip(next).forall { case (o, n) =>
+          centroids.zip(nextCents).forall { case (o, n) =>
             euclidean(o, n) <= params.threshold
           }
-        centroids = next
+        centroids = nextCents
         bc.unpersist(blocking = false)
         loop += 1
       }
       KMeansModel(centroids, loop - 1, converged)
-    } finally slices.unpersist()
+    } finally gen.unpersist()
   }
 }
 

@@ -21,8 +21,8 @@ final case class VecBuf(sums: Array[Double], n: Long)
   *
   * The declarative `groupBy().agg(sum(element_at(...)))` form (the
   * engine's single-step operator, q07) is the codegen-friendly twin;
-  * tests assert both agree. [[KMeans.fit]] uses neither: it folds packed
-  * chunks with `VectorFunctions.lloydFoldChunk`.
+  * tests assert both agree. [[KMeans.fit]] uses neither: it picks and adds
+  * packed chunks with `VectorFunctions.assignChunk` / `addChunk`.
   */
 final class VectorMeanAggregator(dim: Int)
     extends Aggregator[Array[Float], VecBuf, Array[Float]] {

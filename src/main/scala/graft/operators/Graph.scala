@@ -1550,19 +1550,26 @@ object Graph {
     * Returns (node, deg, tri) for EVERY node (tri = 0 when the node
     * closes no triangle), ordered by node. */
   private[operators] def triangleCountsImpl(gt: GraphTable): DataFrame =
-    triangleCountsCore(gt).orderBy("node")
+    persistedTriangleCore(gt).orderBy("node")
 
-  /** Unsorted (node, deg, tri) core shared by [[triangleCountsImpl]]
-    * and [[clusteringCoefficientImpl]] — the latter persists it before
-    * its full-output sort (see there). */
-  private def triangleCountsCore(gt: GraphTable): DataFrame = {
+  /** The (node, deg, tri) core of [[triangleCountsImpl]] and
+    * [[clusteringCoefficientImpl]], persisted (lazy, CachePool-tracked)
+    * under one tag. Both return a global sort, and a FULL-output
+    * consumer of a sort directly over the lazy close pipeline would
+    * execute the close's last stage twice (the range partitioner's
+    * sampling pass runs the child once before the sort pass); with the
+    * core persisted, the sampling pass materializes it once and the
+    * sort pass reads the cache. Top-k consumers (q119-style) fuse into
+    * TakeOrdered over the cache. */
+  private def persistedTriangleCore(gt: GraphTable): DataFrame = {
     require(gt.numNodes > 0, "graph has no nodes")
     require(gt.numDangling == 0,
       "triangleCounts requires a symmetric double-edged feed " +
         s"(found ${gt.numDangling} sink nodes)")
-    triangleCore(
-      gt.edges.where(col("src") =!= col("dst")).select("src", "dst"),
-      gt.numEdges)
+    graft.CachePool.swap("graph.tri.core",
+      triangleCore(
+        gt.edges.where(col("src") =!= col("dst")).select("src", "dst"),
+        gt.numEdges).persist(StorageLevel.MEMORY_AND_DISK))
   }
 
   /** Degree-oriented per-node triangle counts over a symmetric,
@@ -1862,23 +1869,13 @@ object Graph {
     * a single double division of exact longs — bit-identical in any
     * engine that evaluates the same expression, so no rounding device
     * is needed. Returns (node, deg, tri, cc) ordered by node. */
-  private[operators] def clusteringCoefficientImpl(gt: GraphTable): DataFrame = {
-    // FULL-output consumer: a global sort directly over the lazy close
-    // pipeline would execute the close twice (the range partitioner's
-    // sampling pass runs the child once before the sort pass) — so the
-    // N-row core is persisted (lazy, CachePool-tracked): the sampling
-    // pass materializes it once and the sort pass reads the cache.
-    // Top-k consumers (q119-style) fuse into TakeOrdered and need no
-    // such guard.
-    val core = graft.CachePool.swap("graph.tri.ccbase",
-      triangleCountsCore(gt).persist(StorageLevel.MEMORY_AND_DISK))
-    core
+  private[operators] def clusteringCoefficientImpl(gt: GraphTable): DataFrame =
+    persistedTriangleCore(gt)
       .withColumn("cc",
         when(col("deg") < 2, lit(0.0))
           .otherwise(col("tri") * lit(2.0) /
             (col("deg") * (col("deg") - lit(1)))))
       .orderBy("node")
-  }
 
   /** k-core: the maximal subgraph in which every node has degree ≥ k
     * (Seidman 1983), by synchronous (Jacobi) peeling: each round drops
@@ -2354,10 +2351,15 @@ object Graph {
       // csr: LAZY result (the triangleCoreCsr discipline) — csr plans
       // at ambient partitions, so no conf scope needs to be alive when
       // the caller's top-k finally plans; the caches the plan
-      // references are generation-tracked below. Wedge: keep the eager
+      // references are generation-tracked below. The result itself is
+      // persisted (lazy, CachePool-tracked) for the sort below: a
+      // full-output consumer would otherwise run its last stage twice
+      // (the [[persistedTriangleCore]] hazard). Wedge: keep the eager
       // checkpoint — its exchanges are pW-scoped and must plan inside
       // this scope, and the E-row caches are released right after.
-      if (csr) res else res.localCheckpoint(eager = true)
+      if (csr) graft.CachePool.swap("graph.ej.result",
+        res.persist(StorageLevel.MEMORY_AND_DISK))
+      else res.localCheckpoint(eager = true)
     }
     if (csr) {
       graft.CachePool.swap("graph.ej.deg", deg)

@@ -94,6 +94,161 @@ class VectorFunctionsScalaSpec extends AnyFunSuite {
       assert(cnts.toSeq === wantN.toSeq, s"k=$k dim=$dim")
     }
   }
+
+  /** The half-gap shortcut against the scan: for every row and every
+    * guess (a sample at k = 129), a guess the test passes is the scan's
+    * pick, and [[GuessArgmin.pick]] always is. Returns the number of
+    * passing (row, guess) pairs. */
+  private def checkShortcut(
+      rows: Seq[Array[Double]], cents: Array[Array[Double]],
+      what: String): Int = {
+    val k = cents.length
+    val flat = cents.flatten
+    val radii = halfGapRadii(flat, k)
+    val rnd = new scala.util.Random(k * 31 + rows.size)
+    var hits = 0
+    rows.foreach { x =>
+      // today's scan, and the per-centroid sqdist fold it must equal
+      val want = argminSqDist(x, flat, k)
+      var ref = 0
+      var refD = sqdistTo(x, flat, 0)
+      for (c <- 1 until k) {
+        val d = sqdistTo(x, flat, c)
+        if (d < refD) { refD = d; ref = c }
+      }
+      assert(want === ref, s"$what: scan vs fold, row ${x.toSeq}")
+      val guesses =
+        if (k <= 17) 0 until k
+        else Seq(want, (want + 1) % k, (want + k - 1) % k) ++
+          Seq.fill(6)(rnd.nextInt(k))
+      guesses.foreach { g =>
+        if (radii != null && halfGapHit(x, flat, radii, g)) {
+          hits += 1
+          assert(g === want, s"$what: guess $g passed, scan picks $want, " +
+            s"row ${x.toSeq}")
+        }
+        val am = new GuessArgmin(flat, k, radii)
+        System.arraycopy(x, 0, am.x, 0, x.length)
+        assert(am.pick(g) === want, s"$what: pick($g), row ${x.toSeq}")
+      }
+      val am = new GuessArgmin(flat, k, radii)
+      System.arraycopy(x, 0, am.x, 0, x.length)
+      assert(am.pick(-1) === want, s"$what: probe pick, row ${x.toSeq}")
+    }
+    hits
+  }
+
+  test("half-gap shortcut: a guess that passes is always the scan's " +
+    "pick (random rows and centroids, k in 1,2,3,4,5,17,129; dim 1, " +
+    "16, 64), and every pick equals argminCentroid") {
+    val rnd = new scala.util.Random(23)
+    var hits = 0
+    for (dim <- Seq(1, 16, 64); k <- Seq(1, 2, 3, 4, 5, 17, 129)) {
+      val cents = Array.fill(k)(Array.fill(dim)((rnd.nextGaussian() * 10).toFloat))
+      // near-duplicate and duplicate centroids
+      if (k > 2) cents(2) = cents(1).map(v => Math.nextUp(v))
+      if (k > 4) cents(4) = cents(3).clone()
+      def near(c: Array[Float], s: Double) =
+        c.map(v => (v + rnd.nextGaussian() * s).toFloat)
+      val rows: Seq[Array[Float]] =
+        Seq.fill(150)(near(cents(rnd.nextInt(k)), 0.5)) ++
+          Seq.fill(150)(near(cents(rnd.nextInt(k)), 5.0)) ++
+          Seq.fill(50)(Array.fill(dim)((rnd.nextGaussian() * 20).toFloat)) ++
+          cents.map(_.clone())
+      rows.foreach { p =>
+        assert(argminSqDist(p.map(_.toDouble), cents.flatten.map(_.toDouble), k) ===
+          argminCentroid(p, cents), s"k=$k dim=$dim")
+      }
+      hits += checkShortcut(rows.map(_.map(_.toDouble)),
+        cents.map(_.map(_.toDouble)), s"k=$k dim=$dim")
+    }
+    assert(hits > 2000, s"the shortcut passed only $hits times")
+  }
+
+  test("half-gap shortcut edges: half-way rows, duplicate centroids, " +
+    "k = 1 and 2, NaN and ±Inf, squares that overflow, subnormal-range " +
+    "separations, rounding-level ties") {
+    val rnd = new scala.util.Random(29)
+    // rows exactly half-way between two centroids on an even integer
+    // grid (the midpoint is exact), tried with either index as guess
+    for (dim <- Seq(1, 16, 64); k <- Seq(2, 3, 5)) {
+      val cents = Array.fill(k)(Array.fill(dim)(2.0 * rnd.nextInt(8)))
+      val mids = for (a <- 0 until k; b <- a + 1 until k)
+        yield cents(a).zip(cents(b)).map { case (u, v) => (u + v) / 2 }
+      checkShortcut(mids, cents, s"half-way k=$k dim=$dim")
+    }
+    // a row ON a centroid that has a duplicate: distance 0, radius 0
+    val dup = Array(Array(1.0, 2.0), Array(5.0, 5.0), Array(1.0, 2.0))
+    assert(halfGapRadii(dup.flatten, 3).toSeq.map(_ == 0.0) ===
+      Seq(true, false, true))
+    checkShortcut(Seq(Array(1.0, 2.0), Array(1.0, 2.5), Array(5.0, 4.0)),
+      dup, "duplicates")
+    // k = 1: radius +Inf, every finite row passes; NaN and ±Inf do not
+    val one = Array(Array(3.0, -1.0))
+    assert(halfGapRadii(one.flatten, 1).toSeq === Seq(Double.PositiveInfinity))
+    checkShortcut(Seq(Array(0.0, 0.0), Array(Double.NaN, 0.0),
+      Array(Double.PositiveInfinity, 0.0), Array(1e300, 1e300)), one, "k=1")
+    // NaN and ±Inf rows against a finite codebook, k = 2
+    val two = Array(Array(0.0, 0.0), Array(4.0, 0.0))
+    checkShortcut(Seq(Array(Double.NaN, 0.0), Array(0.5, Double.NaN),
+      Array(Double.PositiveInfinity, 0.0), Array(Double.NegativeInfinity, 0.0),
+      Array(2.0, 0.0), Array(0.1, 0.0), Array(3.9, 0.0)), two, "k=2 specials")
+    // NaN or ±Inf in the codebook turns the shortcut off
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      val cb = Array(Array(0.0, 0.0), Array(bad, 1.0), Array(2.0, 2.0))
+      assert(halfGapRadii(cb.flatten, 3) === null, s"codebook with $bad")
+      checkShortcut(Seq(Array(0.0, 0.0), Array(2.0, 2.0), Array(bad, 1.0)),
+        cb, s"codebook with $bad")
+    }
+    // coordinates near 1e154: row squares overflow to +Inf, and a
+    // codebook whose pairwise squares overflow is refused
+    val big = Array(Array(1e154, 0.0), Array(-1e154, 0.0), Array(0.0, 1e153))
+    assert(halfGapRadii(big.flatten, 3) === null)
+    val fl = Array(Array(0.0, 0.0), Array(3e38, 0.0), Array(0.0, -3e38))
+    assert(halfGapRadii(fl.flatten, 3) != null)
+    checkShortcut(Seq(Array(1e154, 1e154), Array(-1e154, 0.0),
+      Array(2.9e38, 1e154), Array(1e-3, 0.0), Array(2.9e38, 1.0)), fl,
+      "overflowing squares")
+    // subnormal-range separations: refused in the codebook; a row a
+    // subnormal-range distance from its centroid passes and is right
+    val tiny = Array(Array(0.0, 0.0), Array(1e-160, 0.0), Array(1.0, 1.0))
+    assert(halfGapRadii(tiny.flatten, 3) === null)
+    checkShortcut(Seq(Array(0.0, 0.0), Array(5e-161, 0.0), Array(1e-160, 0.0)),
+      tiny, "subnormal separations")
+    val minF = java.lang.Float.MIN_VALUE.toDouble
+    val sub = Array(Array(0.0, 0.0), Array(minF, 0.0), Array(1.0, 0.0))
+    assert(halfGapRadii(sub.flatten, 3) != null)
+    assert(checkShortcut(Seq(Array(0.0, 0.0), Array(minF, 0.0),
+      Array(1e-300, 0.0), Array(minF / 2, 0.0), Array(minF * 0.4, 0.0),
+      Array(minF * 0.6, 1e-320)), sub, "subnormal rows") > 0)
+    // rounding-level ties: c0 = h, c1 = −h and the row x = p + t·h,
+    // p ⊥ h at 2⁻³⁰|h| (each (h₂ᵢ, h₂ᵢ₊₁) paired with (−h₂ᵢ₊₁, h₂ᵢ)·2⁻³⁰,
+    // exact) and |t| ≤ 2⁻⁵², so the real distances to c0 and c1 and
+    // ¼·d(c0,c1)² agree to a few ulps and the computed ones are ordered
+    // by rounding: with ε = 0 a guess passes where the scan picks the
+    // other index. Float centroids (the fit's and the labeller's
+    // codebooks) and full-mantissa double ones.
+    for (dim <- Seq(2, 16, 64); float <- Seq(false, true)) {
+      val s = math.scalb(1.0, -30)
+      var hits = 0
+      for (_ <- 0 until 300) {
+        val h = Array.fill(dim) {
+          val v = 0.5 + rnd.nextDouble() / 2
+          if (float) v.toFloat.toDouble else v
+        }
+        val t = (rnd.nextInt(9) - 4) * math.scalb(1.0, -54)
+        val x = Array.tabulate(dim) { i =>
+          val p =
+            if (i % 2 == 0) (if (i + 1 < dim) -h(i + 1) * s else 0.0)
+            else h(i - 1) * s
+          p + t * h(i)
+        }
+        hits += checkShortcut(Seq(x), Array(h, h.map(-_)),
+          s"rounding tie dim=$dim float=$float")
+      }
+      assert(hits === 0, s"dim=$dim float=$float")
+    }
+  }
 }
 
 class VectorFunctionsColumnSpec extends SparkSpec {

@@ -219,6 +219,54 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
+  /** `n` seeded Gaussian blobs around `k` centres in [-40, 40)^dim, in
+    * three partitions. */
+  private def blobs(n: Int, dim: Int, k: Int, sigma: Double, seed: Int) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val centres = Array.fill(k)(Array.fill(dim)(rnd.nextDouble() * 80 - 40))
+    val pts = Seq.fill(n) {
+      centres(rnd.nextInt(k)).map(v => (v + sigma * rnd.nextGaussian()).toFloat)
+    }
+    spark.sparkContext.parallelize(pts.map(Tuple1(_)), 3).toDF("features")
+  }
+
+  test("the hinted fit (half-gap shortcut on each row's previous pick) " +
+    "is bit-identical to the plain-scan fold on separated and " +
+    "overlapping blobs, through the collect merge and through treeReduce") {
+    val key = "spark.graft.kmeans.treeReducePartitions"
+    for (sigma <- Seq(1.0, 30.0); tree <- Seq(None, Some("0"))) {
+      val df = blobs(20000, 16, 8, sigma, 5)
+      val params = KMeansParams(k = 8, threshold = 1e-4, maxLoop = 15,
+        seed = 11L)
+      tree.foreach(spark.conf.set(key, _))
+      try {
+        val hinted = KMeans.fit(df, params)
+        val plain = KMeans.fit(df, params, shortcut = false)
+        val what = s"sigma=$sigma treeReducePartitions=$tree"
+        assert(hinted.iterations === plain.iterations, what)
+        assert(hinted.converged === plain.converged, what)
+        hinted.centroids.zip(plain.centroids).zipWithIndex.foreach {
+          case ((a, b), i) =>
+            assert(a.map(java.lang.Float.floatToRawIntBits).toSeq ===
+              b.map(java.lang.Float.floatToRawIntBits).toSeq, s"$what centroid $i")
+        }
+      } finally spark.conf.unset(key)
+    }
+  }
+
+  test("a maxLoop = 200 fit runs all 199 rounds over locally " +
+    "checkpointed generations and leaves no RDD persisted") {
+    val sc = spark.sparkContext
+    val df = blobs(3000, 4, 3, 1.0, 9)
+    val before = sc.getPersistentRDDs.keySet
+    val model = KMeans.fit(df, KMeansParams(k = 3, threshold = -1.0,
+      maxLoop = 200, seed = 2L))
+    assert(model.iterations === 199)
+    val after = sc.getPersistentRDDs.keySet
+    assert(after.subsetOf(before), s"left persisted: ${after -- before}")
+  }
+
   test("a row whose length is not dim fails loudly when rows are packed") {
     val pts = Seq(Array(0f, 0f), Array(1f, 1f), Array(2f))
     val init = Some(Array(Array(0f, 0f), Array(1f, 1f)))

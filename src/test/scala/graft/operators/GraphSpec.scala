@@ -1018,6 +1018,60 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("a full-output action over triangleCounts, clusteringCoefficient " +
+      "or csr edgeJaccard runs each stage once: every shuffle record " +
+      "written is read exactly once") {
+    import spark.implicits._
+    val sym = randomSym(40, 150, seed = 13L)
+    val gt = Graph.buildGraphTable(
+      sym.toDF("src", "dst").repartition(3), "src", "dst",
+      assumeDistinct = true)
+    // (shuffle records written, shuffle records read) by every task of
+    // `action`. A stage that ran twice (the range partitioner's sampling
+    // pass, then the sort's map stage, both over a lazy pipeline) reads
+    // its input shuffle twice.
+    def shuffleRecords(action: => Unit): (Long, Long) = {
+      val written = new java.util.concurrent.atomic.AtomicLong(0)
+      val read = new java.util.concurrent.atomic.AtomicLong(0)
+      val jl = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (te.taskMetrics != null) {
+            written.addAndGet(
+              te.taskMetrics.shuffleWriteMetrics.recordsWritten)
+            read.addAndGet(te.taskMetrics.shuffleReadMetrics.recordsRead)
+            ()
+          }
+      }
+      org.apache.spark.graftshim.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.addSparkListener(jl)
+      try {
+        action
+        org.apache.spark.graftshim.drainListenerBus(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(jl)
+      (written.get(), read.get())
+    }
+    val algoKey = "spark.graft.graph.triangleAlgo"
+    try {
+      spark.conf.set(algoKey, "csr")
+      val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "triangleCounts" -> (() => gt.triangleCounts()),
+        "clusteringCoefficient" -> (() => gt.clusteringCoefficient()),
+        "edgeJaccard" -> (() => gt.edgeJaccard()))
+      calls.foreach { case (name, call) =>
+        val df = call() // the builder's own eager jobs run here
+        var rows = 0
+        val (written, read) = shuffleRecords { rows = df.collect().length }
+        assert(rows > 0, name)
+        assert(written > 0, name)
+        assert(read === written, name)
+      }
+    } finally {
+      spark.conf.unset(algoKey)
+      gt.unpersist()
+    }
+  }
+
   test("clusteringCoefficient: complete graph 1.0, path graph 0.0") {
     import spark.implicits._
     val k4 = (for {
