@@ -2213,9 +2213,10 @@ object SparkEntry {
 
     // Personalized PageRank: reset + dangling mass ride the SEED
     // distribution (customers 1-50), so rank measures proximity to
-    // the seed set — built on the distributed rank-table body (no
-    // driver collect, GraphSpec-asserted); 10 iterations replayed in
-    // the recursive-CTE oracle.
+    // the seed set — N is far below maxDriverRankNodes at every
+    // catalogue scale, so this runs the driver rank loop (bit-identical
+    // to the distributed body, GraphSpec-asserted); 10 iterations
+    // replayed in the recursive-CTE oracle.
     "q113_ppr" -> ((s, dir) => {
       val seeds = T(s, dir, "orders")
         .select(col("o_custkey").as("node"))

@@ -257,25 +257,6 @@ object VectorFunctions {
     }
   }
 
-  /** Blocked Lloyd fold of one packed chunk — [[argminCentroid]] then
-    * [[addInto]] for every row: [[assignChunk]] (half-gap shortcut on
-    * the probe guess, else the blocked scan) then [[addChunk]].
-    *
-    * `rows` is row-major n×dim floats; `cents` is the k×dim codebook as
-    * one flat `double[]`. `KMeans.fit` runs the two halves in separate
-    * steps so it can keep each round's picks as the next round's
-    * guesses. */
-  def lloydFoldChunk(
-      rows: Array[Float],
-      dim: Int,
-      cents: Array[Double],
-      sums: Array[Double],
-      cnts: Array[Long]): Unit = {
-    val k = cnts.length
-    val am = new GuessArgmin(cents, k, halfGapRadii(cents, k))
-    addChunk(rows, dim, assignChunk(rows, dim, am, null), sums, cnts)
-  }
-
   /** Reads the `x.length` elements of an `array<float|double>` value
     * into `x`, widening floats exactly; false (with `x` partly
     * written) when an element is null. */

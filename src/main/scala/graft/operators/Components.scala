@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an edge list — the canonical post-pass of
@@ -30,20 +33,15 @@ import org.apache.spark.storage.StorageLevel
   *
   * 100 TB posture: each round is a constant number of shuffles over
   * the (id, lbl) table — 16 bytes per node — plus one pass of the edge
-  * list; no step is ever quadratic in a component's size. Each round's
-  * labels are `localCheckpoint`ed (eager): a round references the
-  * previous labels THREE times (offer union, pointer-jump self-join,
-  * convergence diff), so without truncation the logical plan grows
-  * ~4^rounds and Catalyst analysis — not the data — becomes the
-  * bottleneck by round 8 (measured: the suite hangs). Checkpointing
-  * pins each round to its materialized blocks and keeps the analyzed
-  * plan O(1) per round — the same replan trap the K-Means loop
-  * eliminated (KMeans.scala), with the standard caveat that local
-  * checkpoints forgo lineage-replay fault tolerance (a production
-  * cluster run points `sparkContext.setCheckpointDir` at reliable
-  * storage and swaps in `checkpoint`). Near-dup graphs are
-  * near-forests of tiny cliques, so rounds-to-fixpoint is small
-  * (single digits) regardless of corpus size.
+  * list; no step is ever quadratic in a component's size. The loop
+  * runs on [[Graph.VertexProgram]]: a round references the previous
+  * labels THREE times (offer union, pointer-jump self-join,
+  * convergence diff), so without its per-round checkpoint the logical
+  * plan would grow ~4^rounds and Catalyst analysis — not the data —
+  * would become the bottleneck by round 8 (measured: the suite hangs).
+  * Near-dup graphs are near-forests of tiny cliques, so
+  * rounds-to-fixpoint is small (single digits) regardless of corpus
+  * size.
   */
 object Components {
 
@@ -84,78 +82,44 @@ object Components {
       // dense int arrays on the driver — one collect of the cached
       // primitive pairs, zero per-round shuffles, IDENTICAL round
       // function and maxRounds throw. Above the gate the distributed
-      // loop below runs unchanged (the 100 TB path).
+      // loop below runs (the 100 TB path).
       val maxDriver = spark.conf
         .getOption("spark.graft.components.maxDriverEdges")
         .map(_.toLong).getOrElse(8000000L)
       if (nRows <= maxDriver)
         return driverComponents(und, maxRounds)
 
-      // eager localCheckpoint: materializes AND truncates lineage (see
-      // the scale note above — persist alone leaves the logical plan
-      // growing ~4× per round). The partitioning-preserving graftshim
-      // variant only helps where the checkpointed plan reports ONE hash
-      // partitioning. The executed plans of a 3-round distributed run
-      // (AQE on, small graph) show:
-      //  - this initial table reports a PartitioningCollection (`lbl`
-      //    aliases `id`), so the shim falls back to a plain checkpoint
-      //    and round 1's offer join re-exchanges the label table;
-      //  - round 2's offer join reads round 1's `jumped` as
-      //    hashpartitioning(id) with no exchange, only because AQE
-      //    broadcast `parents` and streamed `merged` (grouped on id);
-      //    a shuffled jump join is keyed on lbl, which the projection
-      //    drops, so it falls back too;
-      //  - the union-agg re-exchanges the union, label rows included,
-      //    every round: the union reports no partitioning.
-      var labels = Graph.checkpointPartitioned(
-        und.select(col("_g_src").as("id"))
+      Graph.vertexProgram(nRows, und, "_g_src") { vp =>
+        // the executor's copy of `und`, co-partitioned on the offering
+        // side, is primed: the gate's copy is dead
+        und.unpersist(blocking = false)
+        val init = vp.checkpoint(vp.edges.select(col("_g_src").as("node"))
           .distinct()
-          .withColumn("lbl", col("id")))
-
-      var round = 0
-      var converged = false
-      Graph.withShufflePartitions(spark,
-          Graph.iterPartitions(spark, nRows)) {
-      while (!converged && round < maxRounds) {
-        // (1) offer labels across edges, keep the per-node min
-        val offers = und
-          .join(labels.hint("shuffle_hash"), und("_g_src") === labels("id"))
-          .select(col("_g_dst").as("id"), col("lbl"))
-        val merged = labels.select("id", "lbl").unionAll(offers)
-          .groupBy("id").agg(min("lbl").as("lbl"))
-        // (2) pointer jump: lbl ← label(lbl). Every label is a node id
-        // (min over ids), so the inner self-join matches every row.
-        val parents = merged.select(col("id").as("p_id"), col("lbl").as("p_lbl"))
-        val jumped = Graph.checkpointPartitioned(merged
-          .join(parents, merged("lbl") === parents("p_id"))
-          .select(col("id"), col("p_lbl").as("lbl")))
-        // (3) converged iff no label moved. Labels only ever decrease,
-        // so "changed" is exactly "new < old".
-        val changed = jumped.as("n")
-          .join(labels.as("o"), col("n.id") === col("o.id"))
-          .where(col("n.lbl") < col("o.lbl"))
-          .limit(1).count()
-        // the previous round's checkpoint blocks are dead once the
-        // convergence diff has run — drop them now, or peak storage is
-        // rounds × label-table size instead of 2× (jumped is already
-        // materialized, so it never recomputes through this parent)
-        releaseCheckpoint(labels)
-        labels = jumped
-        converged = changed == 0L
-        round += 1
+          .withColumn("lbl", col("node")))
+        val (labels, converged) = vp.loop(init, maxRounds) { (labels, _) =>
+          // (1) offer labels across edges, keep the per-node min
+          val offers = vp.gather(labels)
+            .select(col("_g_dst").as("node"), col("lbl"))
+          val merged = labels.select("node", "lbl").unionAll(offers)
+            .groupBy("node").agg(min("lbl").as("lbl"))
+          // (2) pointer jump: lbl ← label(lbl). Every label is a node id
+          // (min over ids), so the inner self-join matches every row.
+          val parents = merged.select(col("node").as("p_id"),
+            col("lbl").as("p_lbl"))
+          vp.checkpoint(merged
+            .join(parents, merged("lbl") === parents("p_id"))
+            .select(col("node"), col("p_lbl").as("lbl")))
+        } { (labels, jumped) =>
+          // (3) converged iff no label moved. Labels only ever decrease,
+          // so "changed" is exactly "new < old".
+          jumped.as("n")
+            .join(labels.as("o"), col("n.node") === col("o.node"))
+            .where(col("n.lbl") < col("o.lbl"))
+            .limit(1).count() == 0L
+        }
+        if (!converged) throw tooDeep(maxRounds)
+        labels.select(col("node").as("id"), col("lbl").as("component"))
       }
-      }
-      if (!converged) {
-        releaseCheckpoint(labels) // don't pin the last round's blocks on the throw
-        throw new IllegalArgumentException(
-          s"connectedComponents did not converge in $maxRounds rounds — " +
-            "the input is pathologically deep for a near-dup graph")
-      }
-      // The returned frame reads the final round's checkpoint blocks —
-      // they stay pinned while the frame is reachable and are reclaimed
-      // by the ContextCleaner once the caller drops it (same lifecycle
-      // as any cached result handed to a caller).
-      labels.select(col("id"), col("lbl").as("component"))
     } finally und.unpersist(blocking = false)
   }
 
@@ -206,57 +170,34 @@ object Components {
     }
     val s = es.result()
     val d = ed.result()
-    var lbl = Array.tabulate(n)(identity)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      // (1) offer labels across edges, keep the per-node min
-      val merged = lbl.clone()
-      var k = 0
-      while (k < s.length) {
-        val l = lbl(s(k))
-        if (l < merged(d(k))) merged(d(k)) = l
-        k += 1
-      }
-      // (2) pointer jump: lbl ← label(label-node)
-      val jumped = new Array[Int](n)
-      var i = 0
-      var changed = false
-      while (i < n) {
-        jumped(i) = merged(merged(i))
-        if (jumped(i) < lbl(i)) changed = true
-        i += 1
-      }
-      lbl = jumped
-      converged = !changed
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalArgumentException(
-        s"connectedComponents did not converge in $maxRounds rounds — " +
-          "the input is pathologically deep for a near-dup graph")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("component",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    import scala.jdk.CollectionConverters._
+    val (lbl, converged) =
+      Graph.rounds(Array.tabulate(n)(identity), maxRounds) { (lbl, _) =>
+        // (1) offer labels across edges, keep the per-node min
+        val merged = lbl.clone()
+        var k = 0
+        while (k < s.length) {
+          val l = lbl(s(k))
+          if (l < merged(d(k))) merged(d(k)) = l
+          k += 1
+        }
+        // (2) pointer jump: lbl ← label(label-node)
+        Array.tabulate(n)(i => merged(merged(i)))
+      } { (lbl, jumped) => !lbl.indices.exists(i => jumped(i) < lbl(i)) }
+    if (!converged) throw tooDeep(maxRounds)
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("component", LongType, nullable = false)))
     spark.createDataFrame(
       ids.indices.map(i =>
-        org.apache.spark.sql.Row(ids(i), ids(lbl(i)))).asJava,
+        Row(ids(i), ids(lbl(i)))).asJava,
       schema)
   }
 
-  /** Unpersist the cached RDD behind an eager `localCheckpoint`ed
-    * frame (Dataset.unpersist only reaches CacheManager entries, not
-    * checkpoint blocks). Only safe once nothing will read the frame
-    * again — a local checkpoint has no lineage to recompute from. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  /** The loud `maxRounds` stop of both loop bodies: a fixpoint this
+    * slow means the input is not a near-dup graph. */
+  private def tooDeep(maxRounds: Int) = new IllegalArgumentException(
+    s"connectedComponents did not converge in $maxRounds rounds — " +
+      "the input is pathologically deep for a near-dup graph")
 
   /** Duplicate clusters straight from a pair list (`idA`, `idB` — the
     * shape every [[Dedup]] pair emitter returns): each doc that occurs

@@ -3,9 +3,12 @@ package graft.operators
 import java.math.{BigDecimal => JBD}
 import java.math.RoundingMode.HALF_UP
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType,
@@ -34,8 +37,8 @@ import org.apache.spark.storage.StorageLevel
   * `cached` records whether the frames are persisted (built in-memory)
   * or plain parquet reads (loaded artifact). No iterative algorithm
   * re-scans `edges` per round either way: the driver twins lift it
-  * once into their own cache, the distributed bodies persist their
-  * own repartitioned view.
+  * once into [[Graph.DriverHarness]]'s cache, the distributed bodies
+  * into [[Graph.VertexProgram]]'s repartitioned one.
   */
 final case class GraphTable(
     edges: DataFrame,
@@ -122,21 +125,16 @@ object Graph {
   private val iterRowsPerTask = 250000L
 
   /** Shuffle-partition count for an iterative body over `rows`-row
-    * working sets: ⌈rows / target⌉, clamped to [1, session setting].
-    * The session setting stays the CEILING — on a cluster where the
+    * working sets: ⌈rows / target⌉, clamped to [1, `ceiling`] — the
+    * session setting. It stays the CEILING: on a cluster where the
     * operator sized `spark.sql.shuffle.partitions` to the data,
     * rows/target far exceeds it and behavior is unchanged; only
-    * small-graph rounds get fewer, larger tasks. */
-  private[operators] def iterPartitions(
-      spark: org.apache.spark.sql.SparkSession, rows: Long): Int =
-    iterPartitions(spark.sessionState.conf.numShufflePartitions, rows)
-
-  /** Ceiling-explicit form for callers that size an INNER scope from
-    * the TRUE session setting (inside [[withShufflePartitions]] the
-    * conf reads back the scoped value, which would wrongly cap a
-    * larger inner stage — the wedge stream is bigger than the edge
-    * list it came from). */
-  private[operators] def iterPartitions(ceiling: Int, rows: Long): Int =
+    * small-graph rounds get fewer, larger tasks. Callers that size an
+    * INNER scope pass the TRUE session setting (inside
+    * [[withShufflePartitions]] the conf reads back the scoped value,
+    * which would wrongly cap a larger inner stage — the wedge stream is
+    * bigger than the edge list it came from). */
+  private def iterPartitions(ceiling: Int, rows: Long): Int =
     math.max(1L, math.min(ceiling.toLong,
       (rows + iterRowsPerTask - 1) / iterRowsPerTask)).toInt
 
@@ -170,7 +168,7 @@ object Graph {
     * queries with iterative graph calls should use separate
     * `SparkSession.newSession()` handles (isolated conf, shared
     * context). */
-  private[operators] def withShufflePartitions[A](
+  private def withShufflePartitions[A](
       spark: org.apache.spark.sql.SparkSession, p: Int)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val lock = confScopeLocks.computeIfAbsent(spark, _ => new Object)
@@ -184,13 +182,6 @@ object Graph {
         }
       }
     }
-  }
-
-  /** [[withShufflePartitions]] sized for `gt`'s loop working sets. */
-  private def withIterParallelism[A](gt: GraphTable)(f: => A): A = {
-    val spark = gt.edges.sparkSession
-    withShufflePartitions(spark,
-      iterPartitions(spark, math.max(gt.numEdges, gt.numNodes)))(f)
   }
 
   /** Oriented-list ROW count (E/2) below which the wedge-join family
@@ -307,8 +298,6 @@ object Graph {
     // The two count actions share the eD cache (block-level locks:
     // first computes, the other reuses) and are independent jobs —
     // overlap them instead of leaving 32 cores half-idle twice.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val numEdgesF = Future(edgesFull.count()) // also materializes eD
     val cntsF = Future(nodesDf
@@ -358,11 +347,9 @@ object Graph {
     // 1.6 → 3.2 s, q98/q102 similarly); the commit-overhead saving was
     // ~0.2 s. Ambient-partition writes keep the read side parallel.
     graft.sources.Artifacts.publishVersion(spark, path) { vdir =>
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      implicit val ec: ExecutionContext =
+        ExecutionContext.fromExecutorService(pool)
       val writes = Seq(
         Future(gt.edges.write.mode("overwrite").parquet(s"$vdir/edges")),
         Future(gt.nodes.write.mode("overwrite").parquet(s"$vdir/nodes")),
@@ -488,17 +475,12 @@ object Graph {
     *    fit the driver/executor broadcast envelope — which is exactly
     *    what the auto-switch threshold encodes.
     *
-    *  - distributed rank table (the 100-TB path): the rank table NEVER
-    *    visits the driver. Edges (out-weights pre-attached) are
-    *    hash-repartitioned on `src` and persisted once; ranks live as
-    *    a DataFrame hash-partitioned on `node`, `localCheckpoint`ed
-    *    per round (the [[Components]] lineage-truncation device, with
-    *    the same release-previous-round bookkeeping). Each round is a
-    *    shuffled-hash join of the cached edge partitions with the rank
-    *    table (the E-row side reuses its cached partitioning; only the
-    *    N-row rank side moves), a partial/final DECIMAL aggregate on
-    *    `dst`, and a left join back onto the (also cached,
-    *    co-partitioned) node list. The dangling mass is a ONE-ROW
+    *  - distributed rank table (the 100-TB path, on the
+    *    [[VertexProgram]]): the rank table NEVER visits the driver.
+    *    Each round gathers the rank table into the cached edges
+    *    (out-weights pre-attached), sums contributions in a
+    *    partial/final DECIMAL aggregate on `dst`, and left-joins them
+    *    back onto the cached node list. The dangling mass is a ONE-ROW
     *    aggregate cross-joined into the update — a plan, not a
     *    collect: no loop step moves more than a broadcast-sized
     *    payload to the driver, so the plan's ceiling is cluster
@@ -554,7 +536,7 @@ object Graph {
       damping: Double,
       danglingCorrection: Boolean,
       distributedRanks: Option[Boolean],
-      epsilon: Option[Double]): DataFrame = withIterParallelism(gt) {
+      epsilon: Option[Double]): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0,1), got $damping")
@@ -731,6 +713,158 @@ object Graph {
     }
   }
 
+  /** The round cap and halt test of every graph loop, driver twin or
+    * [[VertexProgram]]: up to `maxRounds` rounds from `s0` —
+    * `step(s, r)` builds round r's state (0-based), then `halt(s, next)`
+    * decides whether to stop (never asked when `halted`). Returns the
+    * final state and whether `halt` fired. */
+  private[operators] def rounds[S](
+      s0: S, maxRounds: Int, halted: Boolean = false)(
+      step: (S, Int) => S)(halt: (S, S) => Boolean): (S, Boolean) = {
+    var s = s0
+    var done = halted
+    var r = 0
+    while (r < maxRounds && !done) {
+      val next = step(s, r)
+      done = halt(s, next)
+      s = next
+      r += 1
+    }
+    (s, done)
+  }
+
+  /** The distributed executor every distributed graph loop runs on
+    * (PageRank and PPR through the shared rank loop, HITS, label
+    * propagation, k-core, BFS, shortest paths, and
+    * [[Components.connectedComponents]]) — the counterpart of
+    * [[DriverHarness]]. Round state stays in hash-partitioned,
+    * per-round-checkpointed DataFrames; the driver never holds a row of
+    * it. [[vertexProgram]] opens one and owns its lifetime.
+    *
+    *  - `edges` is the body's edge projection, hash-partitioned on the
+    *    gather key and persisted once, so only the state side of
+    *    [[gather]] ever moves. `nodes`, when the body has a node
+    *    domain, is cached beside it on `node`; the body's left joins
+    *    back onto it need no exchange on that side.
+    *  - [[checkpoint]] materializes a state frame eagerly and keeps the
+    *    executed plan's hash partitioning visible (graftshim device): a
+    *    plain `localCheckpoint` reports UnknownPartitioning under AQE,
+    *    which re-exchanged a key-partitioned state table every round.
+    *    It falls back to the plain checkpoint when the executed plan
+    *    reports no single hash partitioning (e.g. after a union). The
+    *    truncated lineage keeps the analyzed plan O(1) per round — a
+    *    persist chain would double it each round wherever a round reads
+    *    its state twice.
+    *  - [[loop]] runs the rounds: after each round's halt test it
+    *    releases every checkpoint taken before that round. A state may
+    *    start lazy (the rank loop's round 0 over the node cache, k-core's
+    *    over the edge cache); nothing is released for it.
+    *
+    * A body declares only what differs: its initial state, its edge
+    * message and exact combine over [[gather]], its apply step (the
+    * frames it [[checkpoint]]s) and its halt test. Local checkpoints
+    * forgo lineage replay: a lost block fails the call (a production
+    * cluster that must survive executor loss points
+    * `sparkContext.setCheckpointDir` at reliable storage). */
+  private[operators] final class VertexProgram(
+      edgeProj: DataFrame, gatherKey: String, nodeProj: Option[DataFrame]) {
+    val edges: DataFrame = edgeProj.repartition(col(gatherKey))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    private val nodeCache = nodeProj.map(_.repartition(col("node"))
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    /** Checkpoints taken and not yet released. */
+    private var live = List.empty[RDD[_]]
+    private var edgeRows = -1L
+
+    /** The cached node domain (bodies that declared one). */
+    def nodes: DataFrame = nodeCache.get
+
+    /** The edge cache's row count, from its priming job. */
+    def numEdgeRows: Long = edgeRows
+
+    /** The sending state rows (keyed `node`) joined to their edges: a
+      * shuffled-hash join whose state side builds and whose edge side
+      * streams from the cache. */
+    def gather(state: DataFrame): DataFrame =
+      edges.join(state.hint("shuffle_hash"), col(gatherKey) === col("node"))
+
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = org.apache.spark.sql.graftshim.localCheckpointPartitioned(df)
+      live = rddsOf(c).toList ++ live
+      c
+    }
+
+    /** [[rounds]], releasing after each round's halt test every
+      * checkpoint taken before that round. */
+    def loop[S](s0: S, maxRounds: Int, halted: Boolean = false)(
+        step: (S, Int) => S)(halt: (S, S) => Boolean): (S, Boolean) = {
+      var older = Set.empty[RDD[_]]
+      rounds(s0, maxRounds, halted) { (s, r) =>
+        older = live.toSet
+        step(s, r)
+      } { (s, next) =>
+        val done = halt(s, next)
+        release(keep = !older(_))
+        done
+      }
+    }
+
+    /** Primes both caches at once: independent jobs, each alone
+      * underutilizing the cluster, and the N-row one rides inside the
+      * E-row one's tail. */
+    private[Graph] def prime(): Unit = {
+      val fn = nodeCache.map(n => Future(n.count())(ExecutionContext.global))
+      edgeRows = edges.count()
+      fn.foreach(Await.result(_, Duration.Inf))
+    }
+
+    /** Unpersists both caches and releases every checkpoint the
+      * returned frame `out` (null on a throw) does not read. */
+    private[Graph] def close(out: DataFrame): Unit = {
+      release(keep = Option(out).toSet.flatMap(rddsOf))
+      edges.unpersist()
+      nodeCache.foreach(_.unpersist())
+    }
+
+    /** Unpersists the blocks of every live checkpoint `keep` rejects
+      * (Dataset.unpersist reaches only CacheManager entries, not
+      * checkpoint blocks). A checkpoint has no lineage to recompute
+      * from, so this is safe only once nothing reads it again. */
+    private def release(keep: RDD[_] => Boolean): Unit = {
+      live.filterNot(keep).foreach(_.unpersist(blocking = false))
+      live = live.filter(keep)
+    }
+  }
+
+  /** The RDDs behind `df`'s `LogicalRDD` leaves — its checkpoints. */
+  private def rddsOf(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+
+  /** Runs `body` on a [[VertexProgram]] over `edges` (hash-partitioned
+    * on `gatherKey`) and, when given, `nodes` (on `node`), with
+    * `spark.sql.shuffle.partitions` scoped to [[iterPartitions]] of
+    * `rows` for everything it plans. The caches are freed on return or
+    * throw; on return every checkpoint is released except those the
+    * returned frame reads — its last round's state. */
+  private[operators] def vertexProgram(
+      rows: Long, edges: DataFrame, gatherKey: String,
+      nodes: Option[DataFrame] = None)(
+      body: VertexProgram => DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    withShufflePartitions(spark,
+        iterPartitions(spark.sessionState.conf.numShufflePartitions, rows)) {
+      val vp = new VertexProgram(edges, gatherKey, nodes)
+      var out: DataFrame = null
+      try {
+        vp.prime()
+        out = body(vp)
+        out
+      } finally vp.close(out)
+    }
+  }
+
   /** Edge-count gate for the driver-resident LOOP twins
     * ([[labelPropagationDriver]], [[kCoreDriver]], [[bfsLevelsDriver]],
     * [[shortestPathsDriver]]): the lifted primitive edge partitions
@@ -858,10 +992,7 @@ object Graph {
         gt.nodes.where(!col("is_src")).select("node")
           .collect().map(r => h.indexOf(r.get(0)))
       else Array.emptyIntArray
-    var rank = rank0
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
+    val (rank, _) = rounds(rank0, iters) { (rank, _) =>
       var dms = JBD.ZERO
       sinkIdx.foreach(d =>
         dms = dms.add(JBD.valueOf(rank(d)).setScale(12, HALF_UP)))
@@ -885,20 +1016,16 @@ object Graph {
         next(v) = round9(update(v, s, dm))
         v += 1
       }
-      converged = epsilon.exists(eps => maxAbsDelta(next, rank) <= eps)
-      rank = next
-      it += 1
-    }
+      next
+    }((rank, next) => epsilon.exists(eps => maxAbsDelta(next, rank) <= eps))
     h.release()
-    val r = rank
-    h.frame(_ => true, ("rank", DoubleType, r(_)))
+    h.frame(_ => true, ("rank", DoubleType, rank(_)))
       .orderBy(desc("rank"), col("node"))
   }
 
   /** The distributed rank loop of [[pageRank]] and
-    * [[personalizedPageRank]] (see the scale posture there): the rank
-    * table stays a hash-partitioned, per-round-checkpointed DataFrame;
-    * the driver never holds a rank. `nodes` is the rank domain: node,
+    * [[personalizedPageRank]] (see the scale posture there) on the
+    * [[VertexProgram]]. `nodes` is the rank domain: node,
     * then the `sink` flag and the reset weight `rv` when the caller
     * has them. `rank0` is the round-0 rank column over it, `dmScalar`
     * turns the exact sink-mass sum (a double) into the round's scalar
@@ -911,107 +1038,74 @@ object Graph {
       iters: Int,
       epsilon: Option[Double])(
       dmScalar: Column => Column,
-      update: (Column, Column) => Column): DataFrame = {
-    // edges co-partitioned on src ONCE; every round's rank join reuses
-    // the cached partitioning, so only the N-row rank side ever moves
-    val ed = gt.edges.repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // node list co-partitioned on node: the per-round left join that
-    // re-attaches zero-contribution nodes needs no exchange on it.
-    // The SINK FLAG rides the node (and therefore rank) table, so the
-    // per-round sink-mass aggregate is a filter over the
-    // already-checkpointed ranks — no per-round semi-join against a
-    // dangling table.
-    val nodesDf = nodes.repartition(col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sinkCols =
-      if (nodesDf.columns.contains("sink")) Seq(col("sink")) else Nil
-    // overlap the two cache-priming counts — independent jobs over
-    // independent caches (the buildGraphTable device): each alone
-    // underutilizes the cluster, and the E-row repartition dominates,
-    // so the N-row one rides inside its tail
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fe = Future(ed.count())
-      val fn = Future(nodesDf.count())
-      Await.result(fe, Duration.Inf)
-      Await.result(fn, Duration.Inf)
+      update: (Column, Column) => Column): DataFrame =
+    vertexProgram(loopRows(gt), gt.edges, "src", Some(nodes)) { vp =>
+      // the SINK FLAG rides the node (and therefore rank) table, so the
+      // per-round sink-mass aggregate is a filter over the
+      // already-checkpointed ranks — no per-round semi-join against a
+      // dangling table
+      val sinkCols =
+        if (nodes.columns.contains("sink")) Seq(col("sink")) else Nil
+      // round 0 is a LAZY projection over the cached node table — its
+      // lineage is one cache read + projection, and the projection
+      // preserves the cache's hash partitioning, so round 1 plans
+      // exactly as it did over an eager checkpoint (which would only
+      // re-materialize a second copy of the node rows)
+      val (ranks, _) = vp.loop(
+          vp.nodes.select(col("node") +: sinkCols :+ rank0.as("rank"): _*),
+          iters) { (ranks, _) =>
+        // contributions: 12-dp DECIMAL partial/final aggregate — the
+        // round's one E-row shuffle
+        val contrib = vp.gather(ranks)
+          .select(col("dst").as("node"),
+            round(col("rank") * col("w") / col("wout"), 12)
+              .cast(Dec12).as("c"))
+          .groupBy("node").agg(sum(col("c")).as("s"))
+        val joined = vp.nodes
+          .join(contrib.hint("shuffle_hash"), Seq("node"), "left")
+          .select(vp.nodes.columns.toSeq.map(col) :+
+            coalesce(col("s").cast("double"), lit(0.0)).as("sd"): _*)
+        // sink mass: a ONE-ROW aggregate over the checkpointed rank
+        // table's sink rows, cross-joined into the update — the scalar
+        // stays inside the plan, no driver collect, no per-round join.
+        // Without sinks sd + 0.0 == sd (contributions are ≥ 0, so no
+        // -0.0 edge), keeping the two bodies bit-identical.
+        val withDm =
+          if (sinkCols.nonEmpty) {
+            val dm = ranks.where(col("sink"))
+              .agg(coalesce(
+                sum(round(col("rank"), 12).cast(Dec12)),
+                lit(JBD.ZERO).cast(Dec12))
+                .as("dms"))
+              .select(dmScalar(col("dms").cast("double")).as("dm"))
+            joined.crossJoin(broadcast(dm))
+          } else joined.withColumn("dm", lit(0.0))
+        vp.checkpoint(withDm.select(col("node") +: sinkCols :+
+          round(update(col("sd"), col("dm")), 9).as("rank"): _*))
+      }(maxDeltaWithin(epsilon, "rank"))
+      ranks.select(col("node"), col("rank"))
+        .orderBy(desc("rank"), col("node"))
     }
 
-    // round 0 is a LAZY projection over the cached node table — its
-    // lineage is one cache read + projection, and the projection
-    // preserves the cache's hash partitioning, so round 1 plans
-    // exactly as it did over an eager checkpoint (which would only
-    // re-materialize a second copy of the node rows). Checkpoints
-    // start with round 1's output.
-    var ranks = nodesDf.select(col("node") +: sinkCols :+ rank0.as("rank"): _*)
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      // contributions: shuffled-hash join (rank side builds; edge side
-      // streams from cache, already partitioned on src) + 12-dp DECIMAL
-      // partial/final aggregate — the round's one E-row shuffle
-      val contrib = ed
-        .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
-        .select(col("dst").as("node"),
-          round(col("rank") * col("w") / col("wout"), 12)
-            .cast(Dec12).as("c"))
-        .groupBy("node").agg(sum(col("c")).as("s"))
-      val joined = nodesDf
-        .join(contrib.hint("shuffle_hash"), Seq("node"), "left")
-        .select(nodesDf.columns.toSeq.map(col) :+
-          coalesce(col("s").cast("double"), lit(0.0)).as("sd"): _*)
-      // sink mass: a ONE-ROW aggregate over the checkpointed rank
-      // table's sink rows, cross-joined into the update — the scalar
-      // stays inside the plan, no driver collect, no per-round join.
-      // Without sinks sd + 0.0 == sd (contributions are ≥ 0, so no
-      // -0.0 edge), keeping the two bodies bit-identical.
-      val withDm =
-        if (sinkCols.nonEmpty) {
-          val dm = ranks.where(col("sink"))
-            .agg(coalesce(
-              sum(round(col("rank"), 12).cast(Dec12)),
-              lit(JBD.ZERO).cast(Dec12))
-              .as("dms"))
-            .select(dmScalar(col("dms").cast("double")).as("dm"))
-          joined.crossJoin(broadcast(dm))
-        } else joined.withColumn("dm", lit(0.0))
-      // partitioning-preserving eager checkpoint (graftshim): a plain
-      // localCheckpoint reports UnknownPartitioning under AQE, which
-      // re-exchanged the N-row rank side of BOTH next-round reads
-      // (the contribution join and the sink-mass aggregate's scan) —
-      // every round. Declaring the executed plan's own
-      // hashpartitioning(node) on the checkpoint removes those two
-      // exchanges from the steady-state round while keeping the O(1)
-      // logical lineage a checkpoint gives (a persist chain doubles
-      // the logical plan per round — ranks is referenced twice).
-      val next = checkpointPartitioned(
-        withDm.select(col("node") +: sinkCols :+
-          round(update(col("sd"), col("dm")), 9).as("rank"): _*))
-      converged = epsilon.exists { eps =>
-        // bounded scalar action (one row), the K-Means-convergence
-        // category — only paid when an epsilon is requested
-        val prev = ranks.select(col("node"), col("rank").as("prev_rank"))
-        next.join(prev, Seq("node"))
-          .agg(max(abs(col("rank") - col("prev_rank"))).as("d"))
-          .head().getDouble(0) <= eps
-      }
-      // the previous round's checkpoint blocks are dead once the next
-      // round is materialized (and the epsilon diff has run); round 0
-      // has none — it reads the node cache directly
-      if (it > 0) releaseCheckpoint(ranks)
-      ranks = next
-      it += 1
+  /** Max over nodes of the largest |Δ| across `cols` between two state
+    * tables keyed `node`, compared with `epsilon` (inclusive) — the
+    * epsilon halt of the rank loop and HITS. One one-row aggregate
+    * (a bounded scalar action, the K-Means-convergence category),
+    * paid only when an epsilon is set. */
+  private def maxDeltaWithin(epsilon: Option[Double], cols: String*)(
+      prev: DataFrame, next: DataFrame): Boolean =
+    epsilon.exists { eps =>
+      val p = prev.select(
+        col("node") +: cols.map(c => col(c).as(s"prev_$c")): _*)
+      val ds = cols.map(c => abs(col(c) - col(s"prev_$c")))
+      next.join(p, Seq("node"))
+        .agg(max(if (ds.size == 1) ds.head else greatest(ds: _*)).as("d"))
+        .head().getDouble(0) <= eps
     }
-    ed.unpersist()
-    nodesDf.unpersist()
-    // the returned frame reads the final round's checkpoint blocks —
-    // pinned while reachable, reclaimed by the ContextCleaner after
-    ranks.select(col("node"), col("rank"))
-      .orderBy(desc("rank"), col("node"))
-  }
+
+  /** The row count that sizes a [[vertexProgram]] over `gt`. */
+  private def loopRows(gt: GraphTable): Long =
+    math.max(gt.numEdges, gt.numNodes)
 
   // --------------------------------------- personalized PageRank
 
@@ -1035,15 +1129,12 @@ object Graph {
     * [[pageRank]] discipline, auto-selected by node count against
     * [[maxDriverRankNodes]] unless `distributedRanks` pins one:
     *
-    *  - distributed (the 100-TB path): ranks live as a
-    *    hash-partitioned, per-round-checkpointed DataFrame carrying
-    *    the per-node reset weight alongside (computed once from a
-    *    seed semi-join; seeds are a DataFrame, not a driver
-    *    collection, so the seed set itself can be large); per round
-    *    one shuffled-hash join against the cached co-partitioned
-    *    edges, a DECIMAL partial/final agg, and a one-row dangling
-    *    aggregate cross-joined into the update. No driver collect
-    *    anywhere (GraphSpec's listener assertion pins this body).
+    *  - distributed (the 100-TB path): [[pageRank]]'s rank loop on the
+    *    [[VertexProgram]], the rank table carrying the per-node reset
+    *    weight alongside (computed once from a seed semi-join; seeds
+    *    are a DataFrame, not a driver collection, so the seed set
+    *    itself can be large). No driver collect anywhere (GraphSpec's
+    *    listener assertion pins this body).
     *
     *  - driver-resident (the small-N fast path): the
     *    [[DriverHarness]] — the reset weights join is collected as the
@@ -1105,14 +1196,14 @@ object Graph {
             .as("rv"): _*)
     // the total sink mass rides the reset distribution (NOT divided
     // by N)
-    if (distributed) withIterParallelism(gt) {
+    if (distributed)
       rankLoopDistributed(gt,
         withReset(gt.nodes.select(col("node"), (!col("is_src")).as("sink"))),
         col("rv"), iters, epsilon)(
         identity,
         (sd, dmt) => lit(1.0 - damping) * col("rv") +
           lit(damping) * (sd + dmt * col("rv")))
-    } else {
+    else {
       // the reset-weight join collapses to an N-bounded (node, rv)
       // collect — bounded by the node count whatever the seed
       // cardinality
@@ -1158,9 +1249,9 @@ object Graph {
     * sums (exact, associative — the conditional split sums exactly
     * the same term multisets as the separate gathers, so scores are
     * bit-identical), the L1 totals are one-row aggregates cross-joined
-    * in (a plan, not a collect), scores are 9-dp rounded and the frame
-    * is per-round `localCheckpoint`ed. No driver collect anywhere in
-    * the distributed body. Like [[pageRank]], TWO loop bodies behind
+    * in (a plan, not a collect), and scores are 9-dp rounded, on the
+    * [[VertexProgram]]. No driver collect anywhere in the distributed
+    * body. Like [[pageRank]], TWO loop bodies behind
     * one set of semantics, auto-selected by node count against
     * [[maxDriverRankNodes]] unless `distributedScores` pins one: the
     * driver-resident twin folds BOTH gathers in one zero-shuffle task
@@ -1201,7 +1292,7 @@ object Graph {
   private def hitsDistributed(
       gt: GraphTable,
       iters: Int,
-      epsilon: Option[Double]): DataFrame = withIterParallelism(gt) {
+      epsilon: Option[Double]): DataFrame = {
     val e = gt.edges.select("src", "dst")
     // ONE bidirectional gather cache: (gfrom → gto) carries hub mass
     // when is_auth (the src→dst direction) and auth mass otherwise
@@ -1211,57 +1302,37 @@ object Graph {
         lit(true).as("is_auth"))
       .unionAll(e.select(col("dst").as("gfrom"), col("src").as("gto"),
         lit(false).as("is_auth")))
-      .repartition(col("gfrom"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodesDf = gt.nodes.select("node")
-      .repartition(col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val n = gt.numNodes.toDouble
-    bi.count(); nodesDf.count()
-
     val dec0 = lit(java.math.BigDecimal.ZERO).cast(Dec12)
-    var scores = checkpointPartitioned(nodesDf
-      .select(col("node"), lit(1.0 / n).as("auth"), lit(1.0 / n).as("hub")))
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      // fused gather: one pass over the bidirectional cache; the
-      // conditional 12-dp DECIMAL sums split the auth and hub term
-      // multisets exactly as the separate gathers did (null terms are
-      // skipped by sum), so both totals stay bit-identical
-      val perNode = bi
-        .join(scores.hint("shuffle_hash"), col("gfrom") === col("node"))
-        .select(col("gto").as("node"),
-          when(col("is_auth"), round(col("hub"), 12).cast(Dec12)).as("ca"),
-          when(!col("is_auth"), round(col("auth"), 12).cast(Dec12)).as("ch"))
-        .groupBy("node")
-        .agg(sum(col("ca")).as("sa"), sum(col("ch")).as("sh"))
-      // L1 totals as ONE one-row aggregate, cross-joined (no collect)
-      val tots = perNode.agg(coalesce(sum(col("sa")), dec0).as("ta"),
-        coalesce(sum(col("sh")), dec0).as("th"))
-      val next = checkpointPartitioned(nodesDf
-        .join(perNode.hint("shuffle_hash"), Seq("node"), "left")
-        .crossJoin(broadcast(tots))
-        .select(col("node"),
-          round(coalesce(col("sa").cast("double"), lit(0.0)) /
-            col("ta").cast("double"), 9).as("auth"),
-          round(coalesce(col("sh").cast("double"), lit(0.0)) /
-            col("th").cast("double"), 9).as("hub")))
-      converged = epsilon.exists { eps =>
-        // one-row bounded scalar action per round, epsilon path only
-        val prev = scores.select(col("node"), col("auth").as("pa"),
-          col("hub").as("ph"))
-        next.join(prev, Seq("node"))
-          .agg(max(greatest(abs(col("auth") - col("pa")),
-            abs(col("hub") - col("ph")))).as("d"))
-          .head().getDouble(0) <= eps
-      }
-      releaseCheckpoint(scores)
-      scores = next
-      it += 1
+    val nodes = gt.nodes.select("node")
+    vertexProgram(loopRows(gt), bi, "gfrom", Some(nodes)) { vp =>
+      val init = vp.checkpoint(vp.nodes.select(col("node"),
+        lit(1.0 / n).as("auth"), lit(1.0 / n).as("hub")))
+      val (scores, _) = vp.loop(init, iters) { (scores, _) =>
+        // fused gather: one pass over the bidirectional cache; the
+        // conditional 12-dp DECIMAL sums split the auth and hub term
+        // multisets exactly as the separate gathers did (null terms are
+        // skipped by sum), so both totals stay bit-identical
+        val perNode = vp.gather(scores)
+          .select(col("gto").as("node"),
+            when(col("is_auth"), round(col("hub"), 12).cast(Dec12)).as("ca"),
+            when(!col("is_auth"), round(col("auth"), 12).cast(Dec12)).as("ch"))
+          .groupBy("node")
+          .agg(sum(col("ca")).as("sa"), sum(col("ch")).as("sh"))
+        // L1 totals as ONE one-row aggregate, cross-joined (no collect)
+        val tots = perNode.agg(coalesce(sum(col("sa")), dec0).as("ta"),
+          coalesce(sum(col("sh")), dec0).as("th"))
+        vp.checkpoint(vp.nodes
+          .join(perNode.hint("shuffle_hash"), Seq("node"), "left")
+          .crossJoin(broadcast(tots))
+          .select(col("node"),
+            round(coalesce(col("sa").cast("double"), lit(0.0)) /
+              col("ta").cast("double"), 9).as("auth"),
+            round(coalesce(col("sh").cast("double"), lit(0.0)) /
+              col("th").cast("double"), 9).as("hub")))
+      }(maxDeltaWithin(epsilon, "auth", "hub"))
+      scores.orderBy(desc("auth"), col("node"))
     }
-    bi.unpersist(); nodesDf.unpersist()
-    scores.orderBy(desc("auth"), col("node"))
   }
 
   /** Driver-resident HITS twin ([[DriverHarness]]): scores live in
@@ -1279,11 +1350,8 @@ object Graph {
       gt.edges.select(col("src"), col("dst")))
     val nN = h.nN
     val n = nN.toDouble
-    var auth = Array.fill(nN)(1.0 / n)
-    var hub = Array.fill(nN)(1.0 / n)
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
+    val u = Array.fill(nN)(1.0 / n) // never written: both may share it
+    val ((auth, hub), _) = rounds((u, u), iters) { case ((auth, hub), _) =>
       // one rounded decimal per node per round (auth cells, then hub
       // cells) — the gathers add only these table values, so the addend
       // multisets match the distributed form's per-edge-row rounding
@@ -1330,7 +1398,9 @@ object Graph {
             thD)
         v += 1
       }
-      converged = epsilon.exists { eps =>
+      (nextAuth, nextHub)
+    } { case ((auth, hub), (nextAuth, nextHub)) =>
+      epsilon.exists { eps =>
         var m = 0.0
         var j = 0
         while (j < nN) {
@@ -1341,13 +1411,10 @@ object Graph {
         }
         m <= eps
       }
-      auth = nextAuth
-      hub = nextHub
-      it += 1
     }
     h.release()
-    val (a, hb) = (auth, hub)
-    h.frame(_ => true, ("auth", DoubleType, a(_)), ("hub", DoubleType, hb(_)))
+    h.frame(_ => true, ("auth", DoubleType, auth(_)),
+      ("hub", DoubleType, hub(_)))
       .orderBy(desc("auth"), col("node"))
   }
 
@@ -1367,13 +1434,12 @@ object Graph {
     * at the cost of possible 2-cycles on bipartite structures, which
     * a fixed round count simply samples.
     *
-    * Scale posture: the distributed rank-table body — the edge list
-    * cached co-partitioned on `src` once; per round one shuffled-hash
-    * join labels→edges, an exact (dst, label) count aggregate, a
-    * per-node argmax via one `min(struct(-cnt, label))` aggregate
-    * (no window, no collect — all counts are exact longs, so no
-    * rounding device is even needed), and a co-partitioned left join
-    * back onto the label table, `localCheckpoint`ed per round.
+    * Scale posture: the distributed body runs on the [[VertexProgram]]
+    * — per round one gather of the labels into the edges, an exact
+    * (dst, label) count aggregate, a per-node argmax via one
+    * `min(struct(-cnt, label))` aggregate (no window, no collect — all
+    * counts are exact longs, so no rounding device is even needed), and
+    * a co-partitioned left join back onto the label table.
     *
     * Returns (node, label) ordered by node. */
   def labelPropagation(
@@ -1414,10 +1480,7 @@ object Graph {
     val h = new DriverHarness(gt.nodes.select("node").orderBy("node"),
       gt.edges.select("src", "dst"))
     val nN = h.nN
-    var lbl = Array.tabulate(nN)(identity)
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
+    val (lbl, _) = rounds(Array.tabulate(nN)(identity), iters) { (lbl, _) =>
       val (ks, cs) = h.wave(lbl) { (l, b) =>
         val m = new LongCountMap(1 << 12)
         var i = 0
@@ -1453,21 +1516,10 @@ object Graph {
         }
         e += 1
       }
-      var changed = 0L
-      val next = new Array[Int](nN)
-      var v = 0
-      while (v < nN) {
-        next(v) = if (bestLbl(v) == -1) lbl(v) else bestLbl(v)
-        if (next(v) != lbl(v)) changed += 1
-        v += 1
-      }
-      lbl = next
-      converged = changed == 0L
-      it += 1
-    }
+      Array.tabulate(nN)(v => if (bestLbl(v) == -1) lbl(v) else bestLbl(v))
+    }((lbl, next) => java.util.Arrays.equals(lbl, next))
     h.release()
-    val l = lbl
-    h.frame(_ => true, ("lbl", h.nodeType, i => h.nodeArr(l(i))))
+    h.frame(_ => true, ("lbl", h.nodeType, i => h.nodeArr(lbl(i))))
       .orderBy("node")
   }
 
@@ -1475,52 +1527,40 @@ object Graph {
     * scale posture on [[labelPropagation]]). */
   private def labelPropagationDistributed(
       gt: GraphTable,
-      iters: Int): DataFrame = withIterParallelism(gt) {
-    val ed = gt.edges.select("src", "dst").repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ed.count()
-
-    var labels = checkpointPartitioned(
-      gt.nodes.select(col("node"), col("node").as("lbl"))
-        .repartition(col("node")))
-    // early fixpoint stop (the kCoreImpl stationary device): each round
-    // is a pure function of the previous labels, so a round that changes
-    // NOTHING proves every remaining round is a no-op — the result is
-    // bit-identical to running the full `iters`, and the oracle's
-    // cap-round recursive-CTE replay still matches. The per-round
-    // changed-count is one aggregate over the freshly checkpointed
-    // label table (N rows, co-partitioned — no extra shuffle).
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      // exact in-neighbor label counts (one E-row shuffle), then the
-      // deterministic argmax: min over (−count, label) structs picks
-      // the most frequent label, smallest on ties
-      val cnts = ed
-        .join(labels.select("node", "lbl").hint("shuffle_hash"),
-          col("src") === col("node"))
-        .groupBy(col("dst"), col("lbl"))
-        .agg(count(lit(1)).as("cnt"))
-      val pick = cnts
-        .groupBy(col("dst").as("node"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l")))
-          .as("m"))
-        .select(col("node"), col("m").getField("l").as("new_lbl"))
-      val next = checkpointPartitioned(labels
-        .select(col("node"), col("lbl").as("prev"))
-        .join(pick.hint("shuffle_hash"), Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("new_lbl"), col("prev")).as("lbl"),
-          col("prev")))
-      val changed = next.where(col("lbl") =!= col("prev")).count()
-      releaseCheckpoint(labels)
-      labels = next
-      converged = changed == 0L
-      it += 1
+      iters: Int): DataFrame =
+    vertexProgram(loopRows(gt), gt.edges.select("src", "dst"), "src") { vp =>
+      val init = vp.checkpoint(
+        gt.nodes.select(col("node"), col("node").as("lbl"))
+          .repartition(col("node")))
+      val (labels, _) = vp.loop(init, iters) { (labels, _) =>
+        // exact in-neighbor label counts (one E-row shuffle), then the
+        // deterministic argmax: min over (−count, label) structs picks
+        // the most frequent label, smallest on ties
+        val cnts = vp.gather(labels.select("node", "lbl"))
+          .groupBy(col("dst"), col("lbl"))
+          .agg(count(lit(1)).as("cnt"))
+        val pick = cnts
+          .groupBy(col("dst").as("node"))
+          .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l")))
+            .as("m"))
+          .select(col("node"), col("m").getField("l").as("new_lbl"))
+        vp.checkpoint(labels
+          .select(col("node"), col("lbl").as("prev"))
+          .join(pick.hint("shuffle_hash"), Seq("node"), "left")
+          .select(col("node"),
+            coalesce(col("new_lbl"), col("prev")).as("lbl"),
+            col("prev")))
+      } { (_, next) =>
+        // early fixpoint stop (the kCoreImpl stationary device): each
+        // round is a pure function of the previous labels, so a round
+        // that changes NOTHING proves every remaining round is a no-op —
+        // the result is bit-identical to running the full `iters`, and
+        // the oracle's cap-round recursive-CTE replay still matches. One
+        // aggregate over the freshly checkpointed, co-partitioned table.
+        next.where(col("lbl") =!= col("prev")).count() == 0L
+      }
+      labels.select(col("node"), col("lbl")).orderBy(col("node"))
     }
-    ed.unpersist()
-    labels.select(col("node"), col("lbl")).orderBy(col("node"))
-  }
 
   // ------------------------------------------- triangles / k-core
 
@@ -1891,11 +1931,11 @@ object Graph {
     * `maxRounds` cap; because the fixpoint is stationary, the result
     * equals the cap-round state of a full replay either way.
     *
-    * Requires a symmetric double-edged feed. Scale posture: per round
-    * one degree aggregate co-partitioned on `src` and two semi-joins
-    * of the E-row edge list against the (shrinking) N-row keep list;
-    * the edge frame is `localCheckpoint`ed per round with the
-    * [[Components]] release bookkeeping. All counts exact longs.
+    * Requires a symmetric double-edged feed. Scale posture: the
+    * distributed body's state is the surviving edge list itself, on
+    * the [[VertexProgram]]; per round one degree aggregate
+    * co-partitioned on `src` and two semi-joins of the E-row edge list
+    * against the (shrinking) N-row keep list. All counts exact longs.
     *
     * Returns surviving (node, deg) — degree WITHIN the core — ordered
     * by node (empty when the k-core is empty). */
@@ -1938,63 +1978,48 @@ object Graph {
           a
         }
       }
-    var alive = Array.fill(nN)(true)
-    var deg = aliveDegrees(alive)
-    var m = 0L
-    var v0 = 0
-    while (v0 < nN) { m += deg(v0); v0 += 1 }
-    var it = 0
-    var converged = m == 0L
-    while (it < maxRounds && !converged) {
-      val keep = new Array[Boolean](nN)
-      var v = 0
-      while (v < nN) { keep(v) = alive(v) && deg(v) >= k; v += 1 }
-      val deg2 = aliveDegrees(keep)
-      var m2 = 0L
-      v = 0
-      while (v < nN) { m2 += deg2(v); v += 1 }
-      converged = m2 == m || m2 == 0L
-      alive = keep
-      deg = deg2
-      m = m2
-      it += 1
+    val all = Array.fill(nN)(true)
+    val deg0 = aliveDegrees(all)
+    val ((_, deg), _) = rounds((all, deg0), maxRounds,
+        halted = deg0.sum == 0L) { case ((alive, deg), _) =>
+      val keep = Array.tabulate(nN)(v => alive(v) && deg(v) >= k)
+      (keep, aliveDegrees(keep))
+    } { case ((_, deg), (_, deg2)) =>
+      val m2 = deg2.sum
+      m2 == deg.sum || m2 == 0L
     }
     h.release()
-    val d = deg
-    h.frame(d(_) > 0L, ("deg", LongType, d(_))).orderBy("node")
+    h.frame(deg(_) > 0L, ("deg", LongType, deg(_))).orderBy("node")
   }
 
   /** Distributed k-core body (the 100 TB path — see the scale posture
-    * on the impl doc above). */
+    * on the impl doc above). Round 0 is the edge cache itself, and its
+    * priming count is the first stationary-check edge count. */
   private def kCoreDistributed(
       gt: GraphTable, k: Int, maxRounds: Int): DataFrame =
-    withIterParallelism(gt) {
-    var edges = checkpointPartitioned(
-      gt.edges.where(col("src") =!= col("dst"))
-        .select("src", "dst")
-        .repartition(col("src")))
-    var m = edges.count()
-    var it = 0
-    var converged = m == 0L
-    while (it < maxRounds && !converged) {
-      val keep = edges.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("d"))
-        .where(col("d") >= k)
-        .select("node")
-      val next = checkpointPartitioned(edges
-        .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst"))
-      val m2 = next.count()
-      converged = m2 == m || m2 == 0L
-      releaseCheckpoint(edges)
-      edges = next
-      m = m2
-      it += 1
+    vertexProgram(loopRows(gt),
+        gt.edges.where(col("src") =!= col("dst")).select("src", "dst"),
+        "src") { vp =>
+      var m = vp.numEdgeRows
+      val (edges, _) =
+        vp.loop(vp.edges, maxRounds, halted = m == 0L) { (edges, _) =>
+          val keep = edges.groupBy(col("src").as("node"))
+            .agg(count(lit(1)).as("d"))
+            .where(col("d") >= k)
+            .select("node")
+          vp.checkpoint(edges
+            .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
+            .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
+            .select("src", "dst"))
+        } { (_, next) =>
+          val m2 = next.count()
+          val stationary = m2 == m || m2 == 0L
+          m = m2
+          stationary
+        }
+      edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+        .orderBy("node")
     }
-    edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .orderBy("node")
-  }
 
   // --------------------------------------------- BFS / link features
 
@@ -2007,12 +2032,11 @@ object Graph {
     * the DISTINCT form — keeps the oracle's state polynomial instead
     * of enumerating paths).
     *
-    * Scale posture: textbook frontier expansion — the edge list is
-    * cached co-partitioned on `src` once; per round the (shrinking)
-    * frontier joins it (only frontier rows move), discovered nodes
-    * are removed by an anti-join against the levels table, and both
-    * frames are `localCheckpoint`ed with the [[Components]] release
-    * bookkeeping. Stops at the first empty frontier or at `maxDepth`.
+    * Scale posture: textbook frontier expansion on the
+    * [[VertexProgram]] — per round only the (shrinking) frontier is
+    * gathered into the edges, and discovered nodes are removed by an
+    * anti-join against the levels table. Stops at the first empty
+    * frontier or at `maxDepth`.
     *
     * Returns (node, lvl) for reached nodes (seeds at 0), ordered by
     * node. Seeds not present in the graph are ignored. */
@@ -2034,12 +2058,9 @@ object Graph {
     val nN = h.nN
     val seedIdx = h.seedIndices(seeds)
     val lvl = Array.fill(nN)(-1)
-    var frontier = new Array[Boolean](nN)
-    seedIdx.foreach { i => lvl(i) = 0; frontier(i) = true }
-    var depth = 0
-    var frontierSize = seedIdx.length.toLong
-    while (depth < maxDepth && frontierSize > 0) {
-      depth += 1
+    val seeded = new Array[Boolean](nN)
+    seedIdx.foreach { i => lvl(i) = 0; seeded(i) = true }
+    rounds(seeded, maxDepth, halted = seedIdx.isEmpty) { (frontier, r) =>
       val reached = h.wave(frontier) { (f, b) =>
         val acc = new Array[Boolean](nN)
         var i = 0
@@ -2056,57 +2077,48 @@ object Graph {
         }
       }
       val nf = new Array[Boolean](nN)
-      frontierSize = 0L
       var v = 0
       while (v < nN) {
         if (reached(v) && lvl(v) == -1) {
-          lvl(v) = depth
+          lvl(v) = r + 1
           nf(v) = true
-          frontierSize += 1
         }
         v += 1
       }
-      frontier = nf
-    }
+      nf
+    }((_, nf) => !nf.contains(true))
     h.release()
     h.frame(lvl(_) >= 0, ("lvl", IntegerType, lvl(_))).orderBy("node")
   }
 
   /** Distributed BFS body (the 100 TB path — see the scale posture on
-    * the impl doc above). */
+    * the impl doc above): the state is (levels, frontier). */
   private def bfsLevelsDistributed(
       gt: GraphTable, seeds: DataFrame, maxDepth: Int): DataFrame =
-    withIterParallelism(gt) {
-    val seedsDf = seeds.select(col(seeds.columns.head).as("node")).distinct()
-    val ed = gt.edges.select("src", "dst").repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ed.count()
-    var levels = checkpointPartitioned(
-      gt.nodes.join(seedsDf, Seq("node"), "left_semi")
-        .select(col("node"), lit(0).as("lvl"))
-        .repartition(col("node")))
-    var frontier = checkpointPartitioned(levels.select("node"))
-    var depth = 0
-    var frontierSize = frontier.count()
-    while (depth < maxDepth && frontierSize > 0) {
-      depth += 1
-      val next = checkpointPartitioned(ed
-        .join(frontier.withColumnRenamed("node", "src")
-          .hint("shuffle_hash"), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(levels, Seq("node"), "left_anti"))
-      frontierSize = next.count()
-      val newLevels = checkpointPartitioned(levels
-        .unionByName(next.select(col("node"), lit(depth).as("lvl"))))
-      releaseCheckpoint(levels)
-      releaseCheckpoint(frontier)
-      levels = newLevels
-      frontier = next
+    vertexProgram(loopRows(gt), gt.edges.select("src", "dst"), "src") { vp =>
+      val seeded = seedTable(vp, gt, seeds, lit(0).as("lvl"))
+      val ((levels, _), _) = vp.loop((seeded, seeded), maxDepth,
+          halted = seeded.count() == 0L) { case ((levels, frontier), r) =>
+        val next = vp.checkpoint(vp.gather(frontier)
+          .select(col("dst").as("node")).distinct()
+          .join(levels, Seq("node"), "left_anti"))
+        (vp.checkpoint(levels
+          .unionByName(next.select(col("node"), lit(r + 1).as("lvl")))),
+          next)
+      } { case (_, (_, frontier)) => frontier.count() == 0L }
+      levels.orderBy("node")
     }
-    ed.unpersist()
-    releaseCheckpoint(frontier) // the levels union re-checkpointed it
-    levels.orderBy("node")
-  }
+
+  /** Round 0 of BFS and shortest paths, both its table and its
+    * frontier: (node, `value`) over the distinct seeds (first column)
+    * present in the graph. */
+  private def seedTable(vp: VertexProgram, gt: GraphTable, seeds: DataFrame,
+      value: Column): DataFrame =
+    vp.checkpoint(gt.nodes
+      .join(seeds.select(col(seeds.columns.head).as("node")).distinct(),
+        Seq("node"), "left_semi")
+      .select(col("node"), value)
+      .repartition(col("node")))
 
   /** Weighted single-source(-set) shortest paths — [[bfsLevelsImpl]]'s
     * weighted sibling: Bellman–Ford frontier relaxation bounded at
@@ -2124,13 +2136,11 @@ object Graph {
     * the edge set, which turns `min(carry, relax)` into one `min` over
     * in-edges — a single recursive reference.
     *
-    * Scale posture: the edge list is cached co-partitioned on `src`
-    * once; per round only the IMPROVED (node, dist) rows join it
-    * (frontier shrinks as distances settle), the candidate min is a
+    * Scale posture: on the [[VertexProgram]], per round only the
+    * IMPROVED (node, dist) rows are gathered into the edges (the
+    * frontier shrinks as distances settle), the candidate min is a
     * partial/final aggregate, and the cumulative table is refreshed by
-    * a union + min-aggregate on the node key. Both iteration frames
-    * are `localCheckpoint`ed per round with the [[Components]] release
-    * bookkeeping, so the analyzed plan stays O(1) across rounds.
+    * a union + min-aggregate on the node key.
     *
     * Returns (node, dist) for nodes reachable within `maxRounds` hops
     * (seeds at 0.0), ordered by node. Seeds absent from the graph are
@@ -2154,12 +2164,9 @@ object Graph {
     val nN = h.nN
     val seedIdx = h.seedIndices(seeds)
     val dist = Array.fill(nN)(Double.NaN)
-    var fdist = Array.fill(nN)(Double.NaN)
-    seedIdx.foreach { i => dist(i) = 0.0; fdist(i) = 0.0 }
-    var round = 0
-    var frontierSize = seedIdx.length.toLong
-    while (round < maxRounds && frontierSize > 0) {
-      round += 1
+    val seeded = Array.fill(nN)(Double.NaN)
+    seedIdx.foreach { i => dist(i) = 0.0; seeded(i) = 0.0 }
+    rounds(seeded, maxRounds, halted = seedIdx.isEmpty) { (fdist, _) =>
       val cand = h.wave(fdist) { (f, b) =>
         val acc = Array.fill(nN)(Double.NaN)
         var i = 0
@@ -2184,63 +2191,43 @@ object Graph {
         }
       }
       val nf = Array.fill(nN)(Double.NaN)
-      frontierSize = 0L
       var v = 0
       while (v < nN) {
         val c = cand(v)
         if (!c.isNaN && (dist(v).isNaN || c < dist(v))) {
           dist(v) = c
           nf(v) = c
-          frontierSize += 1
         }
         v += 1
       }
-      fdist = nf
-    }
+      nf
+    }((_, nf) => nf.forall(_.isNaN))
     h.release()
     h.frame(!dist(_).isNaN, ("dist", DoubleType, dist(_))).orderBy("node")
   }
 
   /** Distributed Bellman–Ford body (the 100 TB path — see the scale
-    * posture on the impl doc above). */
+    * posture on the impl doc above): the state is (dist, improved). */
   private def shortestPathsDistributed(
       gt: GraphTable, seeds: DataFrame, maxRounds: Int): DataFrame =
-    withIterParallelism(gt) {
-    val seedsDf = seeds.select(col(seeds.columns.head).as("node")).distinct()
-    val ed = gt.edges.select("src", "dst", "w").repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ed.count()
-    var dist = checkpointPartitioned(
-      gt.nodes.join(seedsDf, Seq("node"), "left_semi")
-        .select(col("node"), lit(0.0).as("dist"))
-        .repartition(col("node")))
-    var frontier = checkpointPartitioned(dist.select("node", "dist"))
-    var round = 0
-    var frontierSize = frontier.count()
-    while (round < maxRounds && frontierSize > 0) {
-      round += 1
-      val relaxed = ed
-        .join(frontier.withColumnRenamed("node", "src")
-          .hint("shuffle_hash"), "src")
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-      val improved = checkpointPartitioned(relaxed
-        .join(dist.select(col("node"), col("dist").as("old")),
-          Seq("node"), "left")
-        .where(col("old").isNull || col("dist") < col("old"))
-        .select("node", "dist"))
-      frontierSize = improved.count()
-      val newDist = checkpointPartitioned(dist.unionByName(improved)
-        .groupBy("node").agg(min(col("dist")).as("dist")))
-      releaseCheckpoint(dist)
-      releaseCheckpoint(frontier)
-      dist = newDist
-      frontier = improved
+    vertexProgram(loopRows(gt), gt.edges.select("src", "dst", "w"),
+        "src") { vp =>
+      val seeded = seedTable(vp, gt, seeds, lit(0.0).as("dist"))
+      val ((dist, _), _) = vp.loop((seeded, seeded), maxRounds,
+          halted = seeded.count() == 0L) { case ((dist, frontier), _) =>
+        val relaxed = vp.gather(frontier)
+          .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+          .groupBy("node").agg(min(col("dist")).as("dist"))
+        val improved = vp.checkpoint(relaxed
+          .join(dist.select(col("node"), col("dist").as("old")),
+            Seq("node"), "left")
+          .where(col("old").isNull || col("dist") < col("old"))
+          .select("node", "dist"))
+        (vp.checkpoint(dist.unionByName(improved)
+          .groupBy("node").agg(min(col("dist")).as("dist"))), improved)
+      } { case (_, (_, improved)) => improved.count() == 0L }
+      dist.orderBy("node")
     }
-    ed.unpersist()
-    releaseCheckpoint(frontier)
-    dist.orderBy("node")
-  }
 
   /** Neighborhood Jaccard of every edge's endpoints — the tie-strength
     * / link-feature primitive ("related products" on a co-purchase
@@ -2702,32 +2689,4 @@ object Graph {
         .where(col("src") < col("dst"))
         .groupBy("src", "dst").agg(count(lit(1)).as("w"))
   }
-
-  /** Eager localCheckpoint that keeps the executed plan's hash
-    * partitioning visible (graftshim device — see there): a plain
-    * checkpoint reports UnknownPartitioning under AQE, so every
-    * iterative operator that checkpoints a key-partitioned table per
-    * round re-paid that table's exchange per round. Falls back to the
-    * plain checkpoint when the executed plan has no hash partitioning
-    * (e.g. after a union). */
-  private[operators] def checkpointPartitioned(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.localCheckpointPartitioned(df)
-
-  /** Unpersist the cached RDD behind an eager `localCheckpoint`ed
-    * frame (Dataset.unpersist only reaches CacheManager entries, not
-    * checkpoint blocks). Only safe once nothing will read the frame
-    * again — a local checkpoint has no lineage to recompute from.
-    * A non-LogicalRDD plan here means a refactor inserted an operator
-    * between the checkpoint and this call — warn loudly so the
-    * resulting per-round block leak is visible instead of silent. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case other =>
-        System.err.println(
-          "[graft] releaseCheckpoint: expected a bare LogicalRDD but " +
-            s"got ${other.getClass.getSimpleName} — checkpoint blocks " +
-            "will accumulate until the ContextCleaner reclaims them")
-    }
 }

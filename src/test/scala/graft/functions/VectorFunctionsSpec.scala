@@ -50,8 +50,9 @@ class VectorFunctionsScalaSpec extends AnyFunSuite {
     assert(acc.toSeq === Seq(1.5, 2.5))
   }
 
-  test("lloydFoldChunk picks argminCentroid's index row by row and sums " +
-    "bit-equal to addInto (ties, NaN, ±Inf; k in 1,3,4,5,17; dim 1, 16)") {
+  test("assignChunk + addChunk pick argminCentroid's index row by row, " +
+    "unhinted and wrongly hinted, and sum bit-equal to addInto (ties, " +
+    "NaN, ±Inf; k in 1,3,4,5,17; dim 1, 16)") {
     val rnd = new scala.util.Random(5)
     val specials = Array(Float.NaN, Float.PositiveInfinity,
       Float.NegativeInfinity)
@@ -69,29 +70,42 @@ class VectorFunctionsScalaSpec extends AnyFunSuite {
       val flat = cents.flatMap(_.map(_.toDouble))
       val rows = Seq.fill(400)(Array.fill(dim)(coord())) ++
         cents.map(_.clone()) // rows sitting exactly on a centroid
-      // per row: a one-row chunk lands in exactly argminCentroid's cell
-      rows.foreach { p =>
+      val want = rows.map(argminCentroid(_, cents))
+      // the fit's two steps, guessing the probe (no earlier pick) or a
+      // hint that is never the scan's pick (when k > 1)
+      def fold(chunk: Seq[Array[Float]], prev: Array[Int],
+          sums: Array[Double], cnts: Array[Long]): Unit = {
+        val p = chunk.flatten.toArray
+        addChunk(p, dim, assignChunk(p, dim,
+          new GuessArgmin(flat, k, halfGapRadii(flat, k)), prev), sums, cnts)
+      }
+      val wrong = want.map(c => (c + 1) % k).toArray
+      for ((hints, how) <- Seq((null, "no hint"), (wrong, "wrong hint"))) {
+        // per row: a one-row chunk lands in exactly argminCentroid's cell
+        rows.indices.foreach { r =>
+          val cnts = new Array[Long](k)
+          fold(Seq(rows(r)), if (hints == null) null else Array(hints(r)),
+            new Array[Double](k * dim), cnts)
+          assert(cnts.indexOf(1L) === want(r),
+            s"k=$k dim=$dim $how row=${rows(r).toSeq}")
+          assert(cnts.sum === 1L)
+        }
+        // per slice: several chunks in row order ≡ addInto over the rows
+        val wantSums = Array.fill(k)(new Array[Double](dim))
+        val wantN = new Array[Long](k)
+        rows.zip(want).foreach { case (p, c) =>
+          addInto(wantSums(c), p)
+          wantN(c) += 1
+        }
+        val sums = new Array[Double](k * dim)
         val cnts = new Array[Long](k)
-        lloydFoldChunk(p, dim, flat, new Array[Double](k * dim), cnts)
-        assert(cnts.indexOf(1L) === argminCentroid(p, cents),
-          s"k=$k dim=$dim row=${p.toSeq}")
-        assert(cnts.sum === 1L)
+        rows.indices.grouped(7).foreach { g =>
+          fold(g.map(rows), if (hints == null) null else g.map(hints).toArray,
+            sums, cnts)
+        }
+        assert(bits(sums) === bits(wantSums.flatten), s"k=$k dim=$dim $how")
+        assert(cnts.toSeq === wantN.toSeq, s"k=$k dim=$dim $how")
       }
-      // per slice: several chunks in row order ≡ addInto over the rows
-      val want = Array.fill(k)(new Array[Double](dim))
-      val wantN = new Array[Long](k)
-      rows.foreach { p =>
-        val c = argminCentroid(p, cents)
-        addInto(want(c), p)
-        wantN(c) += 1
-      }
-      val sums = new Array[Double](k * dim)
-      val cnts = new Array[Long](k)
-      rows.grouped(7).foreach { g =>
-        lloydFoldChunk(g.flatten.toArray, dim, flat, sums, cnts)
-      }
-      assert(bits(sums) === bits(want.flatten), s"k=$k dim=$dim")
-      assert(cnts.toSeq === wantN.toSeq, s"k=$k dim=$dim")
     }
   }
 

@@ -1465,8 +1465,37 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("distributed rank loops keep their per-round job and stage " +
-    "counts (PageRank with and without the sink correction, PPR)") {
+  /** A 60-node path fed as both directions with weights 1-3, and a
+    * 300-node one-direction path for [[Components]]: label propagation
+    * oscillates on a path, k = 2 peels one node off each end per round,
+    * BFS and shortest paths reach one more node per round, and the
+    * components' pointer jumping needs more than 3 rounds — so no
+    * round-counted call below stops early. */
+  private def paths(): (GraphTable, org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    val path = (0L until 59L).map(v => (v, v + 1, (v % 3 + 1).toDouble))
+    val pathW = Graph.buildGraphTable(
+      (path ++ path.map(e => (e._2, e._1, e._3))).toDF("src", "dst", "w")
+        .repartition(5),
+      "src", "dst", weightCol = Some("w"), assumeDistinct = true)
+    (pathW, (0L until 299L).map(v => (v, v + 1)).toDF("src", "dst")
+      .repartition(5))
+  }
+
+  /** Runs `f` with every loop family forced onto its distributed body. */
+  private def forcedDistributed[A](f: => A): A = {
+    val keys = Seq("spark.graft.graph.maxDriverLoopEdges",
+      "spark.graft.components.maxDriverEdges")
+    try {
+      keys.foreach(spark.conf.set(_, "0"))
+      f
+    } finally keys.foreach(spark.conf.unset)
+  }
+
+  test("distributed graph loops keep their per-round job and stage " +
+    "counts (PageRank with and without the sink correction, PPR, HITS, " +
+    "label propagation, k-core, BFS, shortest paths, connected " +
+    "components)") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val g = (0L until 300L).flatMap { s =>
@@ -1480,6 +1509,8 @@ class GraphSpec extends SparkSpec {
     val gtSym = Graph.buildGraphTable(
       (g ++ g.map(_.swap)).toDF("src", "dst").repartition(5), "src", "dst")
     val seeds = (0L until 300L by 10).toDF("node")
+    val (pathW, long) = paths()
+    val seed0 = Seq(0L).toDF("node")
     // (jobs, stages) of one call. Counts every job in the window, not a
     // job group: the loop primes its caches from pool threads, which do
     // not reliably inherit the caller's group. Specs in this JVM run one
@@ -1488,7 +1519,7 @@ class GraphSpec extends SparkSpec {
     // sizes races the stages still running, and the same call submits a
     // different number of jobs from run to run; the static plan's job
     // and stage counts are exact.
-    def shape(call: => org.apache.spark.sql.DataFrame): (Int, Int) = {
+    def shape(call: => Any): (Int, Int) = {
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
       val stages = new java.util.concurrent.atomic.AtomicInteger(0)
       val jl = new org.apache.spark.scheduler.SparkListener {
@@ -1507,13 +1538,13 @@ class GraphSpec extends SparkSpec {
       } finally spark.sparkContext.removeSparkListener(jl)
       (jobs.get(), stages.get())
     }
-    def perRound(call: Int => org.apache.spark.sql.DataFrame): (Int, Int) = {
+    def perRound(call: Int => Any): (Int, Int) = {
       val (j2, s2) = shape(call(2))
       val (j3, s3) = shape(call(3))
       (j3 - j2, s3 - s2)
     }
     val aqe = "spark.sql.adaptive.enabled"
-    try {
+    try forcedDistributed {
       spark.conf.set(aqe, "false")
       val got = Seq(
         "pageRank, sink correction" -> perRound(it => gt.pageRank(it,
@@ -1521,19 +1552,102 @@ class GraphSpec extends SparkSpec {
         "pageRank, no correction" -> perRound(it => gtSym.pageRank(it,
           distributedRanks = Some(true))),
         "personalizedPageRank" -> perRound(it => gt.personalizedPageRank(
-          seeds, it, distributedRanks = Some(true))))
+          seeds, it, distributedRanks = Some(true))),
+        "hits" -> perRound(it => gt.hits(it, distributedScores = Some(true))),
+        "labelPropagation" -> perRound(it => pathW.labelPropagation(it)),
+        "kCore" -> perRound(it => pathW.kCore(2, maxRounds = it)),
+        "bfsLevels" -> perRound(it => pathW.bfsLevels(seed0, maxDepth = it)),
+        "shortestPaths" -> perRound(it =>
+          pathW.shortestPaths(seed0, maxRounds = it)),
+        "connectedComponents" -> perRound(it =>
+          intercept[IllegalArgumentException](
+            Components.connectedComponents(long, maxRounds = it))))
       // measured (twice, identical) on the code before the PageRank and
       // PPR distributed bodies shared one rank loop; the shared loop
       // must reproduce them exactly
-      val expected = Seq(
+      val exact = Map(
         "pageRank, sink correction" -> (2, 9),
         "pageRank, no correction" -> (1, 8),
         "personalizedPageRank" -> (2, 9))
-      assert(got === expected)
+      // measured (twice, identical) on the code before the other bodies
+      // ran on one executor; a round may get cheaper, never dearer
+      val ceiling = Map(
+        "hits" -> (2, 12),
+        "labelPropagation" -> (2, 4),
+        "kCore" -> (3, 3),
+        "bfsLevels" -> (3, 8),
+        "shortestPaths" -> (3, 9),
+        "connectedComponents" -> (2, 9))
+      got.foreach { case (name, (jobs, stages)) =>
+        exact.get(name) match {
+          case Some(want) => assert((jobs, stages) === want, name)
+          case None =>
+            val (j, s) = ceiling(name)
+            assert(jobs <= j && stages <= s,
+              s"$name: ($jobs, $stages) per round, ceiling ($j, $s)")
+        }
+      }
     } finally {
       spark.conf.unset(aqe)
       gt.unpersist()
       gtSym.unpersist()
+      pathW.unpersist()
+    }
+  }
+
+  test("distributed bodies persist nothing past the call but the " +
+    "returned frame's last checkpoint, and nothing on a throw") {
+    import spark.implicits._
+    val gt = Graph.buildGraphTable(digraph200.toDF("src", "dst")
+      .repartition(5), "src", "dst")
+    val sym = Graph.buildGraphTable(
+      randomSym(60, 220, seed = 41L).toDF("src", "dst").repartition(5),
+      "src", "dst", assumeDistinct = true)
+    val (pathW, long) = paths()
+    val seeds = Seq(0L, 1L, 2L).toDF("node")
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => gt.pageRank(iters = 4,
+        danglingCorrection = true, distributedRanks = Some(true))),
+      "pageRank, epsilon" -> (() => gt.pageRank(iters = 40,
+        danglingCorrection = true, distributedRanks = Some(true),
+        epsilon = Some(1e-4))),
+      "personalizedPageRank" -> (() => gt.personalizedPageRank(seeds,
+        iters = 4, distributedRanks = Some(true))),
+      "hits" -> (() => gt.hits(iters = 4, epsilon = Some(1e-4),
+        distributedScores = Some(true))),
+      "labelPropagation" -> (() => sym.labelPropagation(iters = 4)),
+      "kCore" -> (() => sym.kCore(5, maxRounds = 50)),
+      "bfsLevels" -> (() => sym.bfsLevels(seeds, maxDepth = 3)),
+      "shortestPaths" -> (() => pathW.shortestPaths(seeds, maxRounds = 4)),
+      "connectedComponents" -> (() =>
+        Components.connectedComponents(sym.edges)))
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // getPersistentRDDs holds its RDDs weakly: a leaked RDD that the GC
+    // has already reclaimed no longer shows, so a leak can slip past one
+    // call, but a clean call can never fail here
+    try forcedDistributed {
+      calls.foreach { case (name, call) =>
+        val before = persisted
+        val df = call()
+        val kept = df.queryExecution.analyzed.collect {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+        }.toSet
+        val added = persisted -- before
+        assert(kept.nonEmpty && added === kept,
+          s"$name left RDDs ${added.toSeq.sorted} persisted; its result " +
+            s"reads ${kept.toSeq.sorted}")
+        assert(df.collect().nonEmpty, name)
+      }
+      val before = persisted
+      intercept[IllegalArgumentException](
+        Components.connectedComponents(long, maxRounds = 2))
+      val leaked = persisted -- before
+      assert(leaked.isEmpty,
+        s"the maxRounds throw left RDDs ${leaked.toSeq.sorted} persisted")
+    } finally {
+      gt.unpersist()
+      sym.unpersist()
+      pathW.unpersist()
     }
   }
 
