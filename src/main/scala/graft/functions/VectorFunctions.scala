@@ -240,6 +240,25 @@ object VectorFunctions {
     picks
   }
 
+  /** Rows of one packed chunk whose pick `picks(r)` the half-gap test
+    * does not prove — what a round guessing these picks would scan;
+    * every row when `radii` is null. `x` is a dim-long scratch. */
+  def unprovenRows(
+      rows: Array[Float], dim: Int, cents: Array[Double],
+      radii: Array[Double], picks: Array[Int], x: Array[Double]): Int = {
+    if (radii == null) return picks.length
+    var n = 0
+    var r = 0
+    while (r < picks.length) {
+      val o = r * dim
+      var i = 0
+      while (i < dim) { x(i) = rows(o + i); i += 1 }
+      if (!halfGapHit(x, cents, radii, picks(r))) n += 1
+      r += 1
+    }
+    n
+  }
+
   /** Adds each row of one packed chunk into its pick's cells of the
     * flat k×dim `sums` exactly as [[addInto]] adds it, in row order,
     * and counts it in `cnts`. */
@@ -397,20 +416,30 @@ final class GuessArgmin(
 
   private var misses = 0
 
+  private var scanned = 0L
+
+  /** Rows so far that ran the k-centroid scan (each k × dim products). */
+  def scans: Long = scanned
+
   /** The pick of the row in [[x]], trying `hint` first — or the
     * [[VectorFunctions.probeGuess]] when `hint` is negative. */
   def pick(hint: Int): Int =
-    if (radii == null) VectorFunctions.argminSqDist(x, cents, k)
+    if (radii == null) scan()
     else if (misses < GuessArgmin.MissRun) {
       val g = if (hint >= 0) hint else VectorFunctions.probeGuess(x, cents, k)
       if (VectorFunctions.halfGapHit(x, cents, radii, g)) { misses = 0; g }
-      else { misses += 1; VectorFunctions.argminSqDist(x, cents, k) }
+      else { misses += 1; scan() }
     } else {
       misses =
         if (misses < GuessArgmin.MissRun + GuessArgmin.MissRest) misses + 1
         else 0
-      VectorFunctions.argminSqDist(x, cents, k)
+      scan()
     }
+
+  private def scan(): Int = {
+    scanned += 1
+    VectorFunctions.argminSqDist(x, cents, k)
+  }
 }
 
 object GuessArgmin {

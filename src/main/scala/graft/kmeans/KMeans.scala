@@ -3,6 +3,8 @@ package graft.kmeans
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 import graft.functions.GuessArgmin
@@ -63,60 +65,70 @@ final case class KMeansModel(
 /** Spark-native Lloyd's K-Means — the reference's whole pipeline
   * (SURVEY §3.1) re-expressed:
   *
-  *   - per-iteration MapReduce job  →  one cached distributed dataset +
-  *     one narrow partial-aggregation pass per iteration;
-  *   - Hadoop's input splits  →  P balanced slices of packed row-major
-  *     float chunks, P = max(input partitions, default parallelism), so
-  *     every core folds a share of the rows however the caller's input
-  *     is partitioned;
-  *   - centroids through Hadoop `Configuration` →  `sparkContext.broadcast`
-  *     of one flat k×dim `double[]`;
-  *   - reducer-output file round-trip (Main.java:175-203)  →  `collect()`
-  *     of per-slice partials, final merge on the driver;
+  *   - per-iteration MapReduce job  →  for a small input, ONE job whose
+  *     single task runs every round; otherwise one narrow partial
+  *     aggregation job per round over cached slices;
+  *   - Hadoop's input splits  →  P slices of packed row-major float
+  *     chunks, P = max(input partitions, default parallelism), chunk
+  *     (source partition s, chunk index c) in slice (s + c) mod P;
+  *   - centroids through Hadoop `Configuration`  →  the task closure
+  *     (one task) or `sparkContext.broadcast` of one flat k×dim
+  *     `double[]` (per round);
+  *   - reducer-output file round-trip (Main.java:175-203)  →  an
+  *     in-task merge, or a `collect()` of per-slice partials merged on
+  *     the driver;
   *   - input re-read per job (Main.java:318 in-loop)  →  the packed
-  *     chunks cached with each round's picks.
+  *     chunks kept with each round's picks.
   *
   * The iteration body is the combiner/reducer split made explicit
   * (KCombiner.java:9-18 / KReducer.java:12-26): each slice picks every
   * row's nearest centroid and adds the row into k×(dim+1) partial
-  * (sum, count) cells — A2 — and the driver merges the k-sized partials
-  * and takes the rounded mean — A3. It runs as `mapPartitions` +
-  * `collect` rather than a per-iteration `groupBy().agg()` because an
-  * iterative loop re-plans a k×dim aggregate every pass (measured
-  * ~1.2 s/iteration of analysis/codegen/scheduling overhead at bench
-  * scale — the dominant cost for small inputs), whereas this loop
-  * reuses the cached chunks and ships only k×(dim+1)×P doubles to the
-  * driver per iteration. There is one
-  * rebalancing shuffle at cache time, none per round: rows are packed
-  * into chunks inside their source partition, and chunk (source s,
-  * index c) moves to slice (s + c) mod P. The declarative `groupBy` form
-  * of the same aggregation remains the engine's single-step operator
-  * (q07) where Catalyst's partial/final HashAggregate split is asserted
-  * by PlanSpec.
+  * (sum, count) cells — A2 — and the partials are merged exactly and
+  * turned into the rounded mean — A3. The declarative `groupBy` form of
+  * the same aggregation remains the engine's single-step operator (q07)
+  * where Catalyst's partial/final HashAggregate split is asserted by
+  * PlanSpec.
   *
-  * Verified guesses: a round's generation is its slices' chunks, each
-  * paired with its rows' picks (one `Int` per row), cached and locally
-  * checkpointed. The next round tries each row's previous pick first
-  * and keeps it when Elkan's half-gap test proves it
-  * ([[graft.functions.VectorFunctions.halfGapHit]]: one distance
-  * instead of k; round 1 guesses from the first two coordinates); a
-  * miss runs the plain blocked scan
+  * One-task fit (the default first try): the rows are read through
+  * `coalesce(1)` — no shuffle — and packed into the same slices in one
+  * task, which runs the whole loop and returns the model: one job for
+  * the fit, no per-round broadcast, checkpoint or collect. The task
+  * gives up reading once the packed input passes 2^23 floats (32 MB),
+  * and hands back as soon as a round's scans (rows the half-gap test
+  * did not prove; in its first round, whose probe guesses miss more,
+  * the rows its picks leave unproven), projected over all rows, pass
+  * 3·2^23 (about 25M) centroid-coordinate products, where P parallel
+  * slices pay for a job per round. Every round is the same pure function of the centroids on
+  * both paths, so the driver then continues with the distributed loop
+  * from the last finished round, and the result is the same bits.
+  *
+  * Distributed loop: one rebalancing shuffle moves chunk (s, c) to its
+  * slice and sorts each slice by (s, c); each round is then one narrow
+  * job over the cached slices that ships k×(dim+1)×P doubles to the
+  * driver.
+  *
+  * Verified guesses: each round keeps every row's pick (one `Int` per
+  * row) beside its chunk — in the task's memory, or in a cached,
+  * locally checkpointed generation per round. The next round tries each
+  * row's previous pick first and keeps it when Elkan's half-gap test
+  * proves it ([[graft.functions.VectorFunctions.halfGapHit]]: one
+  * distance instead of k; a loop's first round guesses from the first
+  * two coordinates); a miss runs the plain blocked scan
   * ([[graft.functions.VectorFunctions.argminSqDist]]). Every pick is
   * the scan's, and rows are added in the same order, so centroids are
   * bit-identical to a fit that always scans (KMeansSpec pins it). The
   * previous generation is released after each round's collect.
   *
-  * Determinism: each slice folds in chunk-key order — the rebalancing
-  * shuffle sorts each slice by (s, c), so the order never depends on
-  * shuffle fetch order — as a double fold (the reference combiner's
-  * semantics per partition); then each slice's cells are lifted to exact
-  * `BigDecimal`s for the merge. Exact addition is associative, so the
-  * merged sum is independent of merge ORDER and merge SHAPE — the
-  * driver's sequential fold and the gated `treeReduce` below are
-  * bit-identical by construction (the PageRank DECIMAL device, applied
-  * to the k×(dim+1) partial cells), and the result is bit-stable across
-  * runs (a parallel `sum()` over raw doubles is not). Each merged cell
-  * is converted to double exactly once before the 5-dp float mean.
+  * Determinism: each slice folds its chunks in (s, c) order as a double
+  * fold (the reference combiner's semantics per partition); then each
+  * slice's cells are lifted to exact `BigDecimal`s for the merge. Exact
+  * addition is associative, so the merged sum is independent of merge
+  * ORDER and merge SHAPE — the one task's fold, the driver's sequential
+  * fold and the gated `treeReduce` below are bit-identical by
+  * construction (the PageRank DECIMAL device, applied to the k×(dim+1)
+  * partial cells), and the result is bit-stable across runs (a parallel
+  * `sum()` over raw doubles is not). Each merged cell is converted to
+  * double exactly once before the 5-dp float mean.
   *
   * Parity-preserving semantics: f32 coordinates, mean computed in float
   * then rounded to 5 dp half-up at the final aggregate only
@@ -126,12 +138,11 @@ final case class KMeansModel(
   * iterations. Divergence (documented, SURVEY §7.4.3): an empty cluster
   * keeps its previous centroid instead of NPE-ing the driver.
   *
-  * At scale: assignment+partial-agg is one narrow pass over cached
-  * slices; a 1000-executor run returns k×(dim+1) cells per slice to the
-  * driver (tens of MB at 10k slices). When k×dim×P outgrows the driver
-  * envelope the loop swaps the `collect` for a 2-level `treeReduce` —
-  * executors pre-merge partials so the driver receives ONE k×(dim+1)
-  * table per round instead of P of them. Gate:
+  * At scale: a 1000-executor run returns k×(dim+1) cells per slice to
+  * the driver (tens of MB at 10k slices). When k×dim×P outgrows the
+  * driver envelope the loop swaps the `collect` for a 2-level
+  * `treeReduce` — executors pre-merge partials so the driver receives
+  * ONE k×(dim+1) table per round instead of P of them. Gate:
   * `spark.graft.kmeans.treeReducePartitions` (default 1024 slices —
   * below it the extra treeReduce stage costs more than it saves; at 10k+
   * slices it bounds driver ingress). The per-slice fold is unchanged and
@@ -147,13 +158,23 @@ object KMeans {
     spark.conf.getOption("spark.graft.kmeans.treeReducePartitions")
       .map(_.toInt).getOrElse(1024)
 
-  /** Rows of `featuresCol` as primitive float arrays, in the caller's
-    * partitioning — what the seeded init samples from. Read off the
-    * internal rows: no external `Row`, no boxed floats. */
-  private def rowsOf(df: DataFrame, featuresCol: String): RDD[Array[Float]] =
-    df.select(col(featuresCol).cast("array<float>"))
-      .queryExecution.toRdd
-      .map(_.getArray(0).toFloatArray())
+  /** The internal rows of `featuresCol` cast to `array<float>`, in the
+    * caller's partitioning: no external `Row`, no boxed floats. */
+  private def featureRows(df: DataFrame, featuresCol: String): RDD[InternalRow] =
+    df.select(col(featuresCol).cast("array<float>")).queryExecution.toRdd
+
+  /** The feature array of one of [[featureRows]]; a null array or a
+    * null element fails loudly. */
+  private def featureArray(r: InternalRow, featuresCol: String): ArrayData = {
+    require(!r.isNullAt(0), s"null feature array in column $featuresCol")
+    val v = r.getArray(0)
+    var i = 0
+    while (i < v.numElements()) {
+      require(!v.isNullAt(i), s"null feature element in column $featuresCol")
+      i += 1
+    }
+    v
+  }
 
   /** Seeded distinct uniform sample as initial centroids — the analog of
     * the reference's positional line sample (Main.java:129-164) with the
@@ -163,7 +184,8 @@ object KMeans {
       featuresCol: String,
       k: Int,
       seed: Long): Array[Array[Float]] = {
-    val rows = rowsOf(df, featuresCol)
+    val rows = featureRows(df, featuresCol)
+      .map(featureArray(_, featuresCol).toFloatArray())
       .takeSample(withReplacement = false, num = k, seed = seed)
     require(rows.length == k, s"dataset has fewer than k=$k rows")
     rows
@@ -172,20 +194,39 @@ object KMeans {
   /** Rows per packed chunk: 16k floats (64 KB), ~1k rows at dim 16. */
   private[kmeans] def chunkRows(dim: Int): Int = math.max(1, 16384 / dim)
 
-  /** Packs `rows` into row-major n×dim float chunks of [[chunkRows]]
+  /** Packs the feature arrays of `rows` into row-major n×dim float
+    * chunks of [[chunkRows]] rows, copied straight off the internal
     * rows; a row of any other length fails loudly here. */
   private def packChunks(
-      rows: Iterator[Array[Float]], dim: Int): Iterator[Array[Float]] =
-    rows.grouped(chunkRows(dim)).map { g =>
-      val out = new Array[Float](g.length * dim)
+      rows: Iterator[InternalRow], dim: Int,
+      featuresCol: String): Iterator[Array[Float]] = {
+    val n = chunkRows(dim)
+    Iterator.continually {
+      val out = new Array[Float](n * dim)
       var o = 0
-      g.foreach { v =>
-        require(v.length == dim, s"dim mismatch: ${v.length} vs $dim")
-        System.arraycopy(v, 0, out, o, dim)
+      while (o < out.length && rows.hasNext) {
+        val v = featureArray(rows.next(), featuresCol)
+        require(v.numElements() == dim, s"dim mismatch: ${v.numElements()} vs $dim")
+        var i = 0
+        while (i < dim) { out(o + i) = v.getFloat(i); i += 1 }
         o += dim
       }
-      out
-    }
+      if (o == out.length) out else java.util.Arrays.copyOf(out, o)
+    }.takeWhile(_.length > 0)
+  }
+
+  /** Packed input floats above which the one-task fit stops reading
+    * and hands the whole fit to the distributed loop: 2^23 floats,
+    * 32 MB held by one task. */
+  private[kmeans] val OneTaskFloats = 1L << 23
+
+  /** Centroid-coordinate products above which one round's projected
+    * scans make the one-task fit hand back to the distributed loop: a
+    * scan is a row the half-gap test did not prove, k × dim products.
+    * Measured at P = 4: a round of ~19M scanned products still runs
+    * faster in one task than as a distributed job, one of ~32M up to
+    * 1.3× slower. */
+  private[kmeans] val OneTaskProducts = 3L << 23
 
   def fit(df: DataFrame, params: KMeansParams): KMeansModel =
     fit(df, params, shortcut = true)
@@ -194,62 +235,221 @@ object KMeans {
     * plain k-centroid scan — the reference the specs pin the hinted
     * fold against, bit for bit. */
   private[kmeans] def fit(
-      df: DataFrame, params: KMeansParams, shortcut: Boolean): KMeansModel = {
+      df: DataFrame, params: KMeansParams, shortcut: Boolean): KMeansModel =
+    fit(df, params, shortcut, OneTaskFloats, OneTaskProducts)
+
+  /** [[fit]] with the one-task limits as arguments: the task gives up
+    * reading past `maxTaskFloats` packed floats (0 runs no one-task job
+    * at all) and hands back once a round's projected scans pass
+    * `maxRoundProducts` products. */
+  private[kmeans] def fit(
+      df: DataFrame, params: KMeansParams, shortcut: Boolean,
+      maxTaskFloats: Long, maxRoundProducts: Long): KMeansModel = {
     val spark = df.sparkSession
     val k = params.k
-    var centroids = params.initCentroids
+    val init = params.initCentroids
       .map { init =>
         require(init.length == k, "init centroid count != k")
         init.map(_.clone())
       }
       .getOrElse(initCentroids(df, params.featuresCol, k, params.seed))
-    val dim = centroids(0).length
-    require(centroids.forall(_.length == dim),
+    val dim = init(0).length
+    require(init.forall(_.length == dim),
       "init centroids differ in dimension")
+    if (params.maxLoop <= 1) return KMeansModel(init, 0, converged = false)
 
-    // Parse and pack the rows ONCE into P balanced slices of chunks,
-    // chunk (source partition s, chunk index c) landing in slice
-    // (s + c) mod P; every round is then one narrow job over them.
-    // Generation 0 pairs each chunk with no picks yet.
-    val rows = rowsOf(df, params.featuresCol)
+    // Rows packed into chunks inside their source partition, each keyed
+    // by (source partition s, chunk index c); chunk (s, c) belongs to
+    // slice (s + c) mod P on both paths.
+    val featuresCol = params.featuresCol
+    val rows = featureRows(df, featuresCol)
     val numSlices =
       math.max(rows.getNumPartitions, spark.sparkContext.defaultParallelism)
-    var gen: RDD[(Array[Float], Array[Int])] = rows
-      .mapPartitionsWithIndex { (s, it) =>
-        packChunks(it, dim).zipWithIndex.map { case (ch, c) => ((s, c), ch) }
+    val keyed = rows.mapPartitionsWithIndex { (s, it) =>
+      packChunks(it, dim, featuresCol).zipWithIndex
+        .map { case (ch, c) => ((s, c), ch) }
+    }
+    val start =
+      if (maxTaskFloats <= 0) FitState(init, 0, converged = false, done = false)
+      else {
+        // an input of no partitions coalesces to none: its loop runs here
+        keyed.coalesce(1).mapPartitions { it =>
+          Iterator.single(oneTaskLoop(it, init, params, dim, numSlices,
+            shortcut, maxTaskFloats, maxRoundProducts))
+        }.collect().headOption.getOrElse(oneTaskLoop(Iterator.empty, init,
+          params, dim, numSlices, shortcut, maxTaskFloats, maxRoundProducts))
       }
+    if (start.done) KMeansModel(start.centroids, start.rounds, start.converged)
+    else distributedLoop(spark, keyed, numSlices, start, params, dim, shortcut)
+  }
+
+  /** Where a fit stands after `rounds` finished rounds; `done` when
+    * the loop has stopped (converged or out of rounds). */
+  private final case class FitState(
+      centroids: Array[Array[Float]], rounds: Int, converged: Boolean,
+      done: Boolean)
+
+  /** The one-task fit: the whole Lloyd loop inside one task over the
+    * chunks of every input partition. The chunks are dealt into the
+    * distributed loop's slices — chunk (s, c) into slice (s + c) mod P,
+    * each slice in (s, c) order, with its own double sums lifted to
+    * exact `BigDecimal`s and merged — and each row's pick stays in
+    * memory as the next round's guess, so every round computes what a
+    * distributed round computes, bit for bit. It stops reading past
+    * `maxFloats` packed floats, and stops a round once its scans so
+    * far, projected over all rows, pass `maxProducts` centroid-coordinate
+    * products; either way it returns the last finished round, undone,
+    * for the distributed loop to continue. */
+  private def oneTaskLoop(
+      chunks: Iterator[((Int, Int), Array[Float])], init: Array[Array[Float]],
+      params: KMeansParams, dim: Int, numSlices: Int, shortcut: Boolean,
+      maxFloats: Long, maxProducts: Long): FitState = {
+    val k = params.k
+    val read = scala.collection.mutable.ArrayBuffer.empty[((Int, Int), Array[Float])]
+    var floats = 0L
+    while (chunks.hasNext) {
+      val kc = chunks.next()
+      floats += kc._2.length
+      if (floats > maxFloats)
+        return FitState(init, 0, converged = false, done = false)
+      read += kc
+    }
+    // slice by slice, each in (s, c) order: the distributed fold order
+    val order = read.sortBy { case ((s, c), _) => ((s + c) % numSlices, s, c) }
+    val data = order.map(_._2).toArray
+    val slice = order.map { case ((s, c), _) => (s + c) % numSlices }.toArray
+    val picks = new Array[Array[Int]](data.length)
+    val totalRows = floats / dim
+    val cells = k * dim
+
+    var centroids = init
+    var rounds = 0
+    var converged = false
+    while (rounds + 1 < params.maxLoop && !converged) {
+      val flat = centroids.flatMap(_.map(_.toDouble))
+      val radii = if (shortcut) halfGapRadii(flat, k) else null
+      val am = new GuessArgmin(flat, k, radii)
+      val total = zeroCells(k, dim)
+      var sums: Array[Double] = null
+      var cnts: Array[Long] = null
+      var rowsDone = 0L
+      var scans = 0L
+      var j = 0
+      while (j < data.length) {
+        if (j == 0 || slice(j) != slice(j - 1)) {
+          if (sums != null) merge(total, liftCells(sums, cnts))
+          sums = new Array[Double](cells)
+          cnts = new Array[Long](k)
+        }
+        val ch = data(j)
+        val probed = picks(j) == null
+        val scans0 = am.scans
+        picks(j) = assignChunk(ch, dim, am, picks(j))
+        addChunk(ch, dim, picks(j), sums, cnts)
+        rowsDone += picks(j).length
+        // The loop's first round guesses with the probe, which misses
+        // far more than a previous pick does on data that later rounds
+        // prove; there the rows its own picks leave unproven stand in
+        // for its scans.
+        scans +=
+          (if (probed) unprovenRows(ch, dim, flat, radii, picks(j), am.x)
+           else am.scans - scans0)
+        // projected from at least a 16th of the rows, so a run of
+        // misses in the first chunks does not decide
+        if (rowsDone * 16 >= totalRows &&
+            scans.toDouble * totalRows / rowsDone * cells > maxProducts)
+          return FitState(centroids, rounds, converged = false, done = false)
+        j += 1
+      }
+      if (sums != null) merge(total, liftCells(sums, cnts))
+      val (next, conv) = meanStep(centroids, total, params.threshold)
+      centroids = next
+      converged = conv
+      rounds += 1
+    }
+    FitState(centroids, rounds, converged, done = true)
+  }
+
+  /** k×dim zero sums and k zero counts: the identity of [[merge]]. */
+  private def zeroCells(k: Int, dim: Int)
+      : (Array[java.math.BigDecimal], Array[Long]) =
+    (Array.fill(k * dim)(java.math.BigDecimal.ZERO), new Array[Long](k))
+
+  /** A slice's double sums lifted to EXACT `BigDecimal`s
+    * (`new BigDecimal(double)` represents every finite double exactly),
+    * so the merge is order-independent. */
+  private def liftCells(sums: Array[Double], cnts: Array[Long])
+      : (Array[java.math.BigDecimal], Array[Long]) =
+    (sums.map(new java.math.BigDecimal(_)), cnts)
+
+  /** Exact merge of two partial tables (k×dim sums + k counts):
+    * BigDecimal addition is exact and associative, so ANY merge
+    * order/shape — the driver's sequential fold, treeReduce's
+    * executor-side pre-merges, the one-task fold — yields the same
+    * cells. Mutates and returns `a` (inputs are task-fresh on every
+    * path). */
+  private def merge(
+      a: (Array[java.math.BigDecimal], Array[Long]),
+      b: (Array[java.math.BigDecimal], Array[Long]))
+      : (Array[java.math.BigDecimal], Array[Long]) = {
+    var i = 0
+    while (i < a._1.length) { a._1(i) = a._1(i).add(b._1(i)); i += 1 }
+    var c = 0
+    while (c < a._2.length) { a._2(c) += b._2(c); c += 1 }
+    a
+  }
+
+  /** A3 — the reducer: one double conversion per merged cell and the
+    * 5-dp rounded float mean (PointWritable.calcAverage); an empty
+    * cluster keeps its previous centroid (documented divergence). Also
+    * returns whether every centroid moved `<= threshold`. */
+  private def meanStep(
+      centroids: Array[Array[Float]],
+      merged: (Array[java.math.BigDecimal], Array[Long]),
+      threshold: Double): (Array[Array[Float]], Boolean) = {
+    val (exactSums, cnts) = merged
+    val dim = centroids(0).length
+    val next = centroids.map(_.clone())
+    var c = 0
+    while (c < next.length) {
+      if (cnts(c) > 0) {
+        val s = Array.tabulate(dim)(i => exactSums(c * dim + i).doubleValue())
+        next(c) = meanRounded5(s, cnts(c))
+      }
+      c += 1
+    }
+    val converged = centroids.zip(next).forall { case (o, n) =>
+      euclidean(o, n) <= threshold
+    }
+    (next, converged)
+  }
+
+  /** The distributed Lloyd loop from `start`: the keyed chunks moved
+    * once into their slices, then one narrow job per round. */
+  private def distributedLoop(
+      spark: SparkSession, keyed: RDD[((Int, Int), Array[Float])],
+      numSlices: Int, start: FitState, params: KMeansParams, dim: Int,
+      shortcut: Boolean): KMeansModel = {
+    val k = params.k
+    var centroids = start.centroids
+    // Generation 0 pairs each chunk with no picks yet; the rebalancing
+    // shuffle sorts each slice by (s, c).
+    var gen: RDD[(Array[Float], Array[Int])] = keyed
       .repartitionAndSortWithinPartitions(new SlicePartitioner(numSlices))
       .map { case (_, ch) => (ch, null: Array[Int]) }
     try {
       val treeGate = treeReducePartitions(spark)
-      val cells = k * dim
-
-      // Exact merge of two partial tables (k×dim sums + k counts):
-      // BigDecimal addition is exact and associative, so ANY merge
-      // order/shape — the driver's sequential fold, treeReduce's
-      // executor-side pre-merges — yields the same cells. Mutates and
-      // returns `a` (inputs are task-fresh on every path).
-      def merge(
-          a: (Array[java.math.BigDecimal], Array[Long]),
-          b: (Array[java.math.BigDecimal], Array[Long]))
-          : (Array[java.math.BigDecimal], Array[Long]) = {
-        var i = 0
-        while (i < cells) { a._1(i) = a._1(i).add(b._1(i)); i += 1 }
-        var c = 0
-        while (c < k) { a._2(c) += b._2(c); c += 1 }
-        a
-      }
-
-      var loop = 1
+      var loop = start.rounds + 1
       var converged = false
       while (loop < params.maxLoop && !converged) {
         val flat = centroids.flatMap(_.map(_.toDouble))
         val bc = spark.sparkContext.broadcast(
           (flat, if (shortcut) halfGapRadii(flat, k) else null))
         // This round's generation: each chunk with its rows' picks,
-        // guessed from the previous round's picks (the probe in round
-        // 1) and verified by the half-gap test. Cached and locally
-        // checkpointed, so the next round reads it without lineage.
+        // guessed from the previous round's picks (the probe in the
+        // loop's first round) and verified by the half-gap test. Cached
+        // and locally checkpointed, so the next round reads it without
+        // lineage.
         val next = gen.mapPartitions { it =>
           val (cents, radii) = bc.value
           val am = new GuessArgmin(cents, k, radii)
@@ -259,48 +459,27 @@ object KMeans {
         gen = next
         // A2 — the combiner: each slice adds its chunks' rows into k
         // (sum, count) cells in chunk-key order, primitive doubles
-        // (KCombiner.java:9-18 semantics), each cell lifted to an EXACT
-        // BigDecimal at slice exit (`new BigDecimal(double)` represents
-        // every finite double exactly) so the A3 merge is
-        // order-independent.
+        // (KCombiner.java:9-18 semantics), lifted at slice exit.
         val partialsRdd = next.mapPartitions { it =>
-          val sums = new Array[Double](cells)
+          val sums = new Array[Double](k * dim)
           val cnts = new Array[Long](k)
           it.foreach { case (ch, picks) => addChunk(ch, dim, picks, sums, cnts) }
-          Iterator.single((sums.map(new java.math.BigDecimal(_)), cnts))
+          Iterator.single(liftCells(sums, cnts))
         }
 
-        // A3 — the reducer: exact merge, then one double conversion per
-        // cell and the 5-dp rounded float mean (PointWritable
-        // .calcAverage). Above the partition gate the merge runs as a
-        // 2-level treeReduce (executors pre-merge; the driver receives
-        // ONE table, not P) — bit-identical to the collect fold by the
-        // exactness argument above, pinned by KMeansSpec. The previous
+        // Above the partition gate the merge runs as a 2-level
+        // treeReduce (executors pre-merge; the driver receives ONE
+        // table, not P) — bit-identical to the collect fold by the
+        // exactness of the merge, pinned by KMeansSpec. The previous
         // generation is released once this round's is checkpointed.
-        val (exactSums, cnts) =
+        val merged =
           try {
             if (numSlices > treeGate)
               partialsRdd.treeReduce(merge _, depth = 2)
-            else {
-              val zero = (Array.fill(cells)(java.math.BigDecimal.ZERO),
-                new Array[Long](k))
-              partialsRdd.collect().foldLeft(zero)(merge)
-            }
+            else partialsRdd.collect().foldLeft(zeroCells(k, dim))(merge)
           } finally prev.unpersist(blocking = false)
-        // Empty cluster -> keep previous centroid (documented divergence).
-        val nextCents = centroids.map(_.clone())
-        var c = 0
-        while (c < k) {
-          if (cnts(c) > 0) {
-            val s = Array.tabulate(dim)(i => exactSums(c * dim + i).doubleValue())
-            nextCents(c) = meanRounded5(s, cnts(c))
-          }
-          c += 1
-        }
-        converged =
-          centroids.zip(nextCents).forall { case (o, n) =>
-            euclidean(o, n) <= params.threshold
-          }
+        val (nextCents, conv) = meanStep(centroids, merged, params.threshold)
+        converged = conv
         centroids = nextCents
         bc.unpersist(blocking = false)
         loop += 1

@@ -189,16 +189,18 @@ class KMeansSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "kmeans balance spec")
+    // the distributed loop (no one-task job)
+    def distributed() = KMeans.fit(df, params, shortcut = true, 0L, 0L)
     val first =
       try {
-        val m = KMeans.fit(df, params)
+        val m = distributed()
         org.apache.spark.graftshim.drainListenerBus(sc)
         m
       } finally {
         sc.clearJobGroup()
         sc.removeSparkListener(listener)
       }
-    val second = KMeans.fit(df, params)
+    val second = distributed()
 
     val stages = roundStages.asScala.toSeq.sorted
     assert(stages.size === params.maxLoop - 1, "one job per round")
@@ -259,12 +261,211 @@ class KMeansSpec extends SparkSpec {
     "checkpointed generations and leaves no RDD persisted") {
     val sc = spark.sparkContext
     val df = blobs(3000, 4, 3, 1.0, 9)
+    val params = KMeansParams(k = 3, threshold = -1.0, maxLoop = 200,
+      seed = 2L)
     val before = sc.getPersistentRDDs.keySet
-    val model = KMeans.fit(df, KMeansParams(k = 3, threshold = -1.0,
-      maxLoop = 200, seed = 2L))
+    val model = KMeans.fit(df, params, shortcut = true, 0L, 0L)
     assert(model.iterations === 199)
     val after = sc.getPersistentRDDs.keySet
     assert(after.subsetOf(before), s"left persisted: ${after -- before}")
+    // the same 199 rounds inside one task
+    val oneTask = KMeans.fit(df, params)
+    assert(oneTask.iterations === 199)
+    assertSameFit(oneTask, model, "one task vs distributed")
+    assert(sc.getPersistentRDDs.keySet.subsetOf(before))
+  }
+
+  private def bits(m: KMeansModel) =
+    m.centroids.map(_.map(java.lang.Float.floatToRawIntBits).toSeq).toSeq
+
+  private def assertSameFit(a: KMeansModel, b: KMeansModel, what: String) = {
+    assert(a.iterations === b.iterations, what)
+    assert(a.converged === b.converged, what)
+    assert(bits(a) === bits(b), what)
+  }
+
+  /** (jobs, tasks) that `body` runs, counted by a listener on a job
+    * group, with its result. */
+  private def jobsAndTasks[T](body: => T): ((Int, Int), T) = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = "kmeans-jobs-spec"
+    val jobs = new AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id")) {
+          jobs.incrementAndGet()
+          js.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (stages.contains(te.stageId)) tasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "kmeans job count spec")
+    val r =
+      try {
+        val v = body
+        org.apache.spark.graftshim.drainListenerBus(sc)
+        v
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    ((jobs.get, tasks.get), r)
+  }
+
+  /** Fits `df` in one task (the default limits), on the distributed
+    * loop, and with the plain scan on both; all four must be the same
+    * bits. Returns the one-task model. */
+  private def fitAllWays(df: org.apache.spark.sql.DataFrame,
+      params: KMeansParams, what: String): KMeansModel = {
+    val oneTask = KMeans.fit(df, params)
+    val distributed = KMeans.fit(df, params, shortcut = true, 0L, 0L)
+    val plainOneTask = KMeans.fit(df, params, shortcut = false)
+    val plain = KMeans.fit(df, params, shortcut = false, 0L, 0L)
+    assertSameFit(oneTask, distributed, s"$what: one task vs distributed")
+    assertSameFit(oneTask, plainOneTask, s"$what: one task vs plain one task")
+    assertSameFit(oneTask, plain, s"$what: one task vs plain scan")
+    oneTask
+  }
+
+  /** Rows whose double sums depend on which chunks share a slice and in
+    * which order a slice adds them: ±2^54 coordinates (with `n` a
+    * multiple of 6 their exact total is 0) among small ones that a
+    * 2^54-sized running sum rounds away. */
+  private def cancelling(n: Int, dim: Int, parts: Int) = {
+    import spark.implicits._
+    val big = math.scalb(1.0f, 54)
+    val pts = Seq.tabulate(n) { i =>
+      Array.tabulate(dim) { d =>
+        (i + d) % 6 match {
+          case 0 => big
+          case 1 => -big
+          case r => (r + (i % 5)).toFloat * 0.75f
+        }
+      }
+    }
+    spark.sparkContext.parallelize(pts.map(Tuple1(_)), parts).toDF("features")
+  }
+
+  test("one-task fit ≡ distributed loop ≡ plain scan, bit for bit, " +
+    "across input layouts, stops and edges") {
+    val key = "spark.graft.kmeans.treeReducePartitions"
+    val sep = blobs(20000, 16, 8, 1.0, 5)        // 3 partitions
+    val wide = blobs(6000, 16, 8, 30.0, 6)
+    val init8 = Some(sep.limit(8).collect().map(_.getSeq[Float](0).toArray))
+    val dim64 = KMeans.chunkRows(64)
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame, KMeansParams)](
+      ("3 partitions", sep,
+        KMeansParams(k = 8, threshold = 1e-4, maxLoop = 12, seed = 11L)),
+      ("coalesce(1)", sep.coalesce(1),
+        KMeansParams(k = 8, threshold = -1.0, maxLoop = 6, seed = 11L)),
+      ("more slices than partitions, partial last chunk", wide.coalesce(2),
+        KMeansParams(k = 8, threshold = -1.0, maxLoop = 5, initCentroids = init8)),
+      ("grouping-sensitive sums, 3 partitions", cancelling(dim64 * 9 + 42, 64, 3),
+        KMeansParams(k = 1, threshold = -1.0, maxLoop = 3, seed = 1L)),
+      ("grouping-sensitive sums, coalesce(1)",
+        cancelling(dim64 * 7 + 2, 64, 3).coalesce(1),
+        KMeansParams(k = 2, threshold = -1.0, maxLoop = 3, seed = 4L)),
+      ("empty cluster", toDF(Seq(Array(0f), Array(1f), Array(2f))),
+        KMeansParams(k = 3, threshold = -1.0, maxLoop = 4,
+          initCentroids = Some(Array(Array(0f), Array(2f), Array(100f))))),
+      ("empty input", toDF(Seq(Array(0f, 0f))).limit(0),
+        KMeansParams(k = 2, threshold = 0.0, maxLoop = 5,
+          initCentroids = Some(Array(Array(0f, 0f), Array(1f, 1f))))),
+      ("maxLoop 1", sep, KMeansParams(k = 8, maxLoop = 1, initCentroids = init8)),
+      ("maxLoop 2", sep, KMeansParams(k = 8, maxLoop = 2, initCentroids = init8)))
+    cases.foreach { case (what, df, params) => fitAllWays(df, params, what) }
+
+    // a threshold stop at round 2: round 1 moves 1.0, round 2 nothing
+    val stop = fitAllWays(
+      toDF(Seq(Array(0f), Array(2f), Array(10f), Array(12f))),
+      KMeansParams(k = 2, threshold = 0.5, maxLoop = 10,
+        initCentroids = Some(Array(Array(0f), Array(12f)))), "threshold stop")
+    assert(stop.converged && stop.iterations === 2)
+    // the empty input converges at once and keeps its centroids
+    val empty = KMeans.fit(toDF(Seq(Array(0f, 0f))).limit(0),
+      KMeansParams(k = 2, threshold = 0.0, maxLoop = 5,
+        initCentroids = Some(Array(Array(0f, 0f), Array(1f, 1f)))))
+    assert(empty.converged && empty.iterations === 1)
+    // maxLoop 1 runs no job; maxLoop 2 runs one
+    val init = KMeansParams(k = 8, initCentroids = init8)
+    assert(jobsAndTasks(KMeans.fit(sep, init.copy(maxLoop = 1)))._1 === ((0, 0)))
+    assert(jobsAndTasks(KMeans.fit(sep, init.copy(maxLoop = 2)))._1 === ((1, 1)))
+
+    spark.conf.set(key, "0") // every distributed round treeReduces
+    try fitAllWays(sep, KMeansParams(k = 8, threshold = -1.0, maxLoop = 5,
+      seed = 3L), "treeReducePartitions=0")
+    finally spark.conf.unset(key)
+  }
+
+  test("a one-task fit that gives up reading or hands back mid-fit ends " +
+    "in the same bits as the distributed loop") {
+    val df = blobs(8000, 16, 8, 1.0, 13)
+    val init = df.limit(8).collect().map(_.getSeq[Float](0).toArray)
+    val params = KMeansParams(k = 8, threshold = -1.0, maxLoop = 6,
+      initCentroids = Some(init))
+    val want = KMeans.fit(df, params, shortcut = true, 0L, 0L)
+    // M = one chunk: gives up while reading, then 5 distributed rounds
+    val chunk = KMeans.chunkRows(16).toLong * 16
+    val ((jobs, _), gaveUp) = jobsAndTasks(
+      KMeans.fit(df, params, shortcut = true, chunk, KMeans.OneTaskProducts))
+    assertSameFit(gaveUp, want, "size give-up")
+    assert(jobs === 1 + 5, "the one-task job, then one job per round")
+
+    // Overlapping 1-d data whose first round every row proves (far-apart
+    // init) and whose second round mostly scans: with a small W the task
+    // finishes round 1 and hands back in round 2.
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val pts = Seq.fill(20000)(Tuple1(Array(
+      (rnd.nextInt(2) + rnd.nextGaussian()).toFloat)))
+    val overlap = spark.sparkContext.parallelize(pts, 3).toDF("features")
+    val p1 = KMeansParams(k = 2, threshold = -1.0, maxLoop = 6,
+      initCentroids = Some(Array(Array(-10f), Array(11f))))
+    val dist = KMeans.fit(overlap, p1, shortcut = true, 0L, 0L)
+    val ((hbJobs, _), handedBack) = jobsAndTasks(
+      KMeans.fit(overlap, p1, shortcut = true, KMeans.OneTaskFloats, 4000L))
+    assertSameFit(handedBack, dist, "mid-fit hand-back")
+    assert(hbJobs === 1 + 4, "one round in the task, four distributed")
+    assertSameFit(KMeans.fit(overlap, p1), dist, "no hand-back")
+  }
+
+  test("a small fit with injected init centroids runs one job of one task") {
+    val df = blobs(20000, 16, 8, 1.0, 5)
+    val init = df.limit(8).collect().map(_.getSeq[Float](0).toArray)
+    val ((jobs, tasks), model) = jobsAndTasks(KMeans.fit(df,
+      KMeansParams(k = 8, threshold = -1.0, maxLoop = 11,
+        initCentroids = Some(init))))
+    assert(model.iterations === 10)
+    assert((jobs, tasks) === ((1, 1)))
+  }
+
+  test("a null feature array or element fails loudly, naming the column, " +
+    "in one task and in the distributed loop") {
+    val withNullElem = spark.range(2).select(
+      array(lit(1f), when(col("id") === 0, lit(null).cast("float"))
+        .otherwise(lit(1f))).as("feats"))
+    val withNullArray = spark.range(2).select(
+      when(col("id") === 0, lit(null).cast("array<float>"))
+        .otherwise(array(lit(1f), lit(1f))).as("feats"))
+    val params = KMeansParams(k = 1, maxLoop = 3, featuresCol = "feats",
+      initCentroids = Some(Array(Array(0f, 0f))))
+    for ((df, what) <- Seq(withNullElem -> "element", withNullArray -> "array");
+         oneTask <- Seq(true, false)) {
+      val e = intercept[Exception](
+        if (oneTask) KMeans.fit(df, params)
+        else KMeans.fit(df, params, shortcut = true, 0L, 0L))
+      val iae = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null)
+        .collectFirst { case t: IllegalArgumentException => t }
+      assert(iae.isDefined, s"$what oneTask=$oneTask: $e")
+      assert(iae.get.getMessage.contains(s"null feature $what in column feats"))
+    }
   }
 
   test("a row whose length is not dim fails loudly when rows are packed") {
