@@ -240,23 +240,27 @@ object VectorFunctions {
     picks
   }
 
-  /** Rows of one packed chunk whose pick `picks(r)` the half-gap test
-    * does not prove — what a round guessing these picks would scan;
-    * every row when `radii` is null. `x` is a dim-long scratch. */
+  /** Rows of one packed chunk whose guess — `guesses(r)`, or the
+    * [[probeGuess]] when `guesses` is null — the half-gap test does not
+    * prove: the rows a [[GuessArgmin]] trying those guesses scans.
+    * Every row when `radii` is null. `x` is a dim-long scratch. */
   def unprovenRows(
       rows: Array[Float], dim: Int, cents: Array[Double],
-      radii: Array[Double], picks: Array[Int], x: Array[Double]): Int = {
-    if (radii == null) return picks.length
-    var n = 0
+      radii: Array[Double], guesses: Array[Int], x: Array[Double]): Int = {
+    val n = rows.length / dim
+    if (radii == null) return n
+    val k = cents.length / dim
+    var u = 0
     var r = 0
-    while (r < picks.length) {
+    while (r < n) {
       val o = r * dim
       var i = 0
       while (i < dim) { x(i) = rows(o + i); i += 1 }
-      if (!halfGapHit(x, cents, radii, picks(r))) n += 1
+      val g = if (guesses != null) guesses(r) else probeGuess(x, cents, k)
+      if (!halfGapHit(x, cents, radii, g)) u += 1
       r += 1
     }
-    n
+    u
   }
 
   /** Adds each row of one packed chunk into its pick's cells of the
@@ -416,30 +420,20 @@ final class GuessArgmin(
 
   private var misses = 0
 
-  private var scanned = 0L
-
-  /** Rows so far that ran the k-centroid scan (each k × dim products). */
-  def scans: Long = scanned
-
   /** The pick of the row in [[x]], trying `hint` first — or the
     * [[VectorFunctions.probeGuess]] when `hint` is negative. */
   def pick(hint: Int): Int =
-    if (radii == null) scan()
+    if (radii == null) VectorFunctions.argminSqDist(x, cents, k)
     else if (misses < GuessArgmin.MissRun) {
       val g = if (hint >= 0) hint else VectorFunctions.probeGuess(x, cents, k)
       if (VectorFunctions.halfGapHit(x, cents, radii, g)) { misses = 0; g }
-      else { misses += 1; scan() }
+      else { misses += 1; VectorFunctions.argminSqDist(x, cents, k) }
     } else {
       misses =
         if (misses < GuessArgmin.MissRun + GuessArgmin.MissRest) misses + 1
         else 0
-      scan()
+      VectorFunctions.argminSqDist(x, cents, k)
     }
-
-  private def scan(): Int = {
-    scanned += 1
-    VectorFunctions.argminSqDist(x, cents, k)
-  }
 }
 
 object GuessArgmin {

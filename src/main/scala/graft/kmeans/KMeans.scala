@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim
 
 import graft.functions.GuessArgmin
 import graft.functions.VectorFunctions._
@@ -89,18 +90,26 @@ final case class KMeansModel(
   * where Catalyst's partial/final HashAggregate split is asserted by
   * PlanSpec.
   *
-  * One-task fit (the default first try): the rows are read through
-  * `coalesce(1)` — no shuffle — and packed into the same slices in one
-  * task, which runs the whole loop and returns the model: one job for
-  * the fit, no per-round broadcast, checkpoint or collect. The task
-  * gives up reading once the packed input passes 2^23 floats (32 MB),
-  * and hands back as soon as a round's scans (rows the half-gap test
-  * did not prove; in its first round, whose probe guesses miss more,
-  * the rows its picks leave unproven), projected over all rows, pass
-  * 3·2^23 (about 25M) centroid-coordinate products, where P parallel
-  * slices pay for a job per round. Every round is the same pure function of the centroids on
-  * both paths, so the driver then continues with the distributed loop
-  * from the last finished round, and the result is the same bits.
+  * One-task fit (the first try on an input cached in memory): when the
+  * input DataFrame's own plan is cached in memory and built, and holds
+  * at most 2^23 packed floats (32 MB) by the cache's row count, its rows
+  * are read through `coalesce(1)` — no shuffle — and packed into the
+  * same slices in one task, which runs the whole loop and returns the
+  * model: one job for the fit, no per-round broadcast, checkpoint or
+  * collect. Each round tests the guesses of its first 16th of the rows;
+  * once the rows the half-gap test does not prove, projected over all
+  * rows, pass 3·2^23 (about 25M) centroid-coordinate products — where P
+  * parallel slices pay for a job per round — the task hands back. The
+  * first round, whose probe guesses miss more, may scan 4× that, and
+  * the rows its picks leave unproven (the next round's scans) are held
+  * to the plain bound; it picks each chunk as it is read, so a hand-back
+  * there has read a 16th of the input. Every round is the same pure
+  * function of the centroids on both paths, so the driver then
+  * continues with the distributed loop from the last finished round,
+  * and the result is the same bits. Any other input (a file scan, a
+  * parse, a filter, a projection of a cached table, a cache not yet
+  * built) goes straight to the distributed loop: its plan would
+  * otherwise run serially in the one task.
   *
   * Distributed loop: one rebalancing shuffle moves chunk (s, c) to its
   * slice and sorts each slice by (s, c); each round is then one narrow
@@ -215,9 +224,8 @@ object KMeans {
     }.takeWhile(_.length > 0)
   }
 
-  /** Packed input floats above which the one-task fit stops reading
-    * and hands the whole fit to the distributed loop: 2^23 floats,
-    * 32 MB held by one task. */
+  /** Packed input floats above which a fit skips the one-task fit:
+    * 2^23 floats, 32 MB held by one task. */
   private[kmeans] val OneTaskFloats = 1L << 23
 
   /** Centroid-coordinate products above which one round's projected
@@ -227,6 +235,12 @@ object KMeans {
     * faster in one task than as a distributed job, one of ~32M up to
     * 1.3× slower. */
   private[kmeans] val OneTaskProducts = 3L << 23
+
+  /** How many times [[OneTaskProducts]] the one-task fit's first round
+    * may scan before it hands back: its probe guesses miss more than
+    * later rounds' previous picks do, so there only the scans its own
+    * picks would cost the next round are held to the plain bound. */
+  private val FirstRoundSlack = 4
 
   def fit(df: DataFrame, params: KMeansParams): KMeansModel =
     fit(df, params, shortcut = true)
@@ -238,9 +252,11 @@ object KMeans {
       df: DataFrame, params: KMeansParams, shortcut: Boolean): KMeansModel =
     fit(df, params, shortcut, OneTaskFloats, OneTaskProducts)
 
-  /** [[fit]] with the one-task limits as arguments: the task gives up
-    * reading past `maxTaskFloats` packed floats (0 runs no one-task job
-    * at all) and hands back once a round's projected scans pass
+  /** [[fit]] with the one-task limits as arguments. The one-task fit
+    * runs only when `df`'s own plan is cached in memory and built, with
+    * at most `maxTaskFloats` packed floats by the cache's row count: any
+    * other input would run its scan, parse or filter serially in the
+    * one task. It hands back once a round's projected scans pass
     * `maxRoundProducts` products. */
   private[kmeans] def fit(
       df: DataFrame, params: KMeansParams, shortcut: Boolean,
@@ -269,16 +285,17 @@ object KMeans {
       packChunks(it, dim, featuresCol).zipWithIndex
         .map { case (ch, c) => ((s, c), ch) }
     }
-    val start =
-      if (maxTaskFloats <= 0) FitState(init, 0, converged = false, done = false)
-      else {
+    val start = graftshim.cachedRowCount(df)
+      .filter(n => maxTaskFloats > 0 && n * dim <= maxTaskFloats) match {
+      case Some(n) =>
         // an input of no partitions coalesces to none: its loop runs here
         keyed.coalesce(1).mapPartitions { it =>
-          Iterator.single(oneTaskLoop(it, init, params, dim, numSlices,
-            shortcut, maxTaskFloats, maxRoundProducts))
-        }.collect().headOption.getOrElse(oneTaskLoop(Iterator.empty, init,
-          params, dim, numSlices, shortcut, maxTaskFloats, maxRoundProducts))
-      }
+          Iterator.single(oneTaskLoop(it, n, init, params, dim, numSlices,
+            shortcut, maxRoundProducts))
+        }.collect().headOption.getOrElse(oneTaskLoop(Iterator.empty, n,
+          init, params, dim, numSlices, shortcut, maxRoundProducts))
+      case None => FitState(init, 0, converged = false, done = false)
+    }
     if (start.done) KMeansModel(start.centroids, start.rounds, start.converged)
     else distributedLoop(spark, keyed, numSlices, start, params, dim, shortcut)
   }
@@ -290,50 +307,84 @@ object KMeans {
       done: Boolean)
 
   /** The one-task fit: the whole Lloyd loop inside one task over the
-    * chunks of every input partition. The chunks are dealt into the
-    * distributed loop's slices — chunk (s, c) into slice (s + c) mod P,
-    * each slice in (s, c) order, with its own double sums lifted to
-    * exact `BigDecimal`s and merged — and each row's pick stays in
-    * memory as the next round's guess, so every round computes what a
-    * distributed round computes, bit for bit. It stops reading past
-    * `maxFloats` packed floats, and stops a round once its scans so
-    * far, projected over all rows, pass `maxProducts` centroid-coordinate
-    * products; either way it returns the last finished round, undone,
-    * for the distributed loop to continue. */
+    * chunks of every input partition, about `rowCount` rows. The chunks are
+    * dealt into the distributed loop's slices — chunk (s, c) into slice
+    * (s + c) mod P, each slice in (s, c) order, with its own double sums
+    * lifted to exact `BigDecimal`s and merged — and each row's pick
+    * stays in memory as the next round's guess, so every round computes
+    * what a distributed round computes, bit for bit.
+    *
+    * Each round tests its first 16th of the rows: the rows whose guess
+    * the half-gap test does not prove are its scans. Projected over all
+    * rows, once they pass `maxProducts` centroid-coordinate products
+    * the task returns the last finished round, undone, for the
+    * distributed loop to continue. The first round guesses with the
+    * probe: its own scans may pass the bound [[FirstRoundSlack]] times,
+    * and the rows its picks leave unproven, the next round's scans,
+    * are held to it. A pick depends on its row and the centroids only,
+    * so the first round picks each chunk as it is read, and a hand-back
+    * there reads a 16th of the input. */
   private def oneTaskLoop(
-      chunks: Iterator[((Int, Int), Array[Float])], init: Array[Array[Float]],
-      params: KMeansParams, dim: Int, numSlices: Int, shortcut: Boolean,
-      maxFloats: Long, maxProducts: Long): FitState = {
+      chunks: Iterator[((Int, Int), Array[Float])], rowCount: Long,
+      init: Array[Array[Float]], params: KMeansParams, dim: Int,
+      numSlices: Int, shortcut: Boolean, maxProducts: Long): FitState = {
     val k = params.k
-    val read = scala.collection.mutable.ArrayBuffer.empty[((Int, Int), Array[Float])]
-    var floats = 0L
-    while (chunks.hasNext) {
-      val kc = chunks.next()
-      floats += kc._2.length
-      if (floats > maxFloats)
-        return FitState(init, 0, converged = false, done = false)
-      read += kc
-    }
-    // slice by slice, each in (s, c) order: the distributed fold order
-    val order = read.sortBy { case ((s, c), _) => ((s + c) % numSlices, s, c) }
-    val data = order.map(_._2).toArray
-    val slice = order.map { case ((s, c), _) => (s + c) % numSlices }.toArray
-    val picks = new Array[Array[Int]](data.length)
-    val totalRows = floats / dim
     val cells = k * dim
-
+    val x = new Array[Double](dim)
+    var rows = rowCount // the exact count once read
     var centroids = init
+    var flat: Array[Double] = null
+    var radii: Array[Double] = null
+    var am: GuessArgmin = null
+    var tested = 0L
+    var scans = 0L
+    var ahead = 0L
+    def newRound(): Unit = {
+      flat = centroids.flatMap(_.map(_.toDouble))
+      radii = if (shortcut) halfGapRadii(flat, k) else null
+      am = new GuessArgmin(flat, k, radii)
+      tested = 0L; scans = 0L; ahead = 0L
+    }
+    // Tests one chunk of the round's first 16th of the rows, guessed
+    // from `guesses` (the probe when null); true once it projects past
+    // the bound.
+    def pastBound(ch: Array[Float], guesses: Array[Int],
+        picks: Array[Int], first: Boolean): Boolean =
+      tested * 16 < rows && {
+        scans += unprovenRows(ch, dim, flat, radii, guesses, x)
+        if (first) ahead += unprovenRows(ch, dim, flat, radii, picks, x)
+        tested += picks.length
+        val perRow = rows.toDouble / tested * cells
+        tested * 16 >= rows &&
+          (if (first) ahead * perRow > maxProducts ||
+             scans * perRow > FirstRoundSlack.toDouble * maxProducts
+           else scans * perRow > maxProducts)
+      }
+
+    newRound()
+    val read = scala.collection.mutable.ArrayBuffer
+      .empty[((Int, Int), Array[Float], Array[Int])]
+    while (chunks.hasNext) {
+      val (key, ch) = chunks.next()
+      val p = assignChunk(ch, dim, am, null)
+      if (pastBound(ch, null, p, first = true))
+        return FitState(init, 0, converged = false, done = false)
+      read += ((key, ch, p))
+    }
+    rows = read.map(_._3.length.toLong).sum
+    // slice by slice, each in (s, c) order: the distributed fold order
+    val order = read.sortBy { case ((s, c), _, _) => ((s + c) % numSlices, s, c) }
+    val data = order.map(_._2).toArray
+    val picks = order.map(_._3).toArray
+    val slice = order.map { case ((s, c), _, _) => (s + c) % numSlices }.toArray
+
     var rounds = 0
     var converged = false
     while (rounds + 1 < params.maxLoop && !converged) {
-      val flat = centroids.flatMap(_.map(_.toDouble))
-      val radii = if (shortcut) halfGapRadii(flat, k) else null
-      val am = new GuessArgmin(flat, k, radii)
+      if (rounds > 0) newRound()
       val total = zeroCells(k, dim)
       var sums: Array[Double] = null
       var cnts: Array[Long] = null
-      var rowsDone = 0L
-      var scans = 0L
       var j = 0
       while (j < data.length) {
         if (j == 0 || slice(j) != slice(j - 1)) {
@@ -342,23 +393,13 @@ object KMeans {
           cnts = new Array[Long](k)
         }
         val ch = data(j)
-        val probed = picks(j) == null
-        val scans0 = am.scans
-        picks(j) = assignChunk(ch, dim, am, picks(j))
+        if (rounds > 0) {
+          val prev = picks(j)
+          picks(j) = assignChunk(ch, dim, am, prev)
+          if (pastBound(ch, prev, picks(j), first = false))
+            return FitState(centroids, rounds, converged = false, done = false)
+        }
         addChunk(ch, dim, picks(j), sums, cnts)
-        rowsDone += picks(j).length
-        // The loop's first round guesses with the probe, which misses
-        // far more than a previous pick does on data that later rounds
-        // prove; there the rows its own picks leave unproven stand in
-        // for its scans.
-        scans +=
-          (if (probed) unprovenRows(ch, dim, flat, radii, picks(j), am.x)
-           else am.scans - scans0)
-        // projected from at least a 16th of the rows, so a run of
-        // misses in the first chunks does not decide
-        if (rowsDone * 16 >= totalRows &&
-            scans.toDouble * totalRows / rowsDone * cells > maxProducts)
-          return FitState(centroids, rounds, converged = false, done = false)
         j += 1
       }
       if (sums != null) merge(total, liftCells(sums, cnts))

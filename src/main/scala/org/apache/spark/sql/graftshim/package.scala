@@ -79,6 +79,18 @@ package object graftshim {
     }
   }
 
+  /** The row count of `df`'s own plan when it is cached in memory with
+    * every cached batch built — reading it then decodes those batches
+    * and computes nothing of the plan — by the cache's own statistic;
+    * None otherwise. */
+  def cachedRowCount(df: Dataset[_]): Option[Long] = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(b => b.storageLevel.useMemory && b.isCachedColumnBuffersLoaded)
+      .map(_.rowCountStats.value.longValue)
+  }
+
   /** Force-compile every whole-stage-codegen subtree of `df`'s
     * executed plan, returning the compile-error messages (empty =
     * everything stays compiled). Production Spark falls back to

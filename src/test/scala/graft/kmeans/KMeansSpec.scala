@@ -269,11 +269,22 @@ class KMeansSpec extends SparkSpec {
     val after = sc.getPersistentRDDs.keySet
     assert(after.subsetOf(before), s"left persisted: ${after -- before}")
     // the same 199 rounds inside one task
-    val oneTask = KMeans.fit(df, params)
+    val oneTask = oneTaskFit(df, params)
     assert(oneTask.iterations === 199)
     assertSameFit(oneTask, model, "one task vs distributed")
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))
   }
+
+  /** `body`, with `df` cached in memory and built; uncached after. */
+  private def whileCached[T](df: org.apache.spark.sql.DataFrame)(body: => T): T = {
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY).count()
+    try body finally df.unpersist(blocking = true)
+  }
+
+  /** The fit of `df` cached in memory: the one-task fit when it is small. */
+  private def oneTaskFit(df: org.apache.spark.sql.DataFrame,
+      params: KMeansParams, shortcut: Boolean = true) =
+    whileCached(df)(KMeans.fit(df, params, shortcut))
 
   private def bits(m: KMeansModel) =
     m.centroids.map(_.map(java.lang.Float.floatToRawIntBits).toSeq).toSeq
@@ -318,14 +329,18 @@ class KMeansSpec extends SparkSpec {
     ((jobs.get, tasks.get), r)
   }
 
-  /** Fits `df` in one task (the default limits), on the distributed
-    * loop, and with the plain scan on both; all four must be the same
-    * bits. Returns the one-task model. */
+  /** Fits `df`, cached in memory, in one task (the default limits),
+    * then on the distributed loop, and with the plain scan on both; all
+    * four must be the same bits. Returns the one-task model. */
   private def fitAllWays(df: org.apache.spark.sql.DataFrame,
       params: KMeansParams, what: String): KMeansModel = {
-    val oneTask = KMeans.fit(df, params)
+    val ((jobs, _), oneTask) =
+      whileCached(df)(jobsAndTasks(KMeans.fit(df, params)))
+    // a seeded init adds takeSample's count and sample jobs
+    val sampling = if (params.initCentroids.isEmpty) 2 else 0
+    assert(jobs <= sampling + 1, s"$what: the one-task fit ran $jobs jobs")
     val distributed = KMeans.fit(df, params, shortcut = true, 0L, 0L)
-    val plainOneTask = KMeans.fit(df, params, shortcut = false)
+    val plainOneTask = oneTaskFit(df, params, shortcut = false)
     val plain = KMeans.fit(df, params, shortcut = false, 0L, 0L)
     assertSameFit(oneTask, distributed, s"$what: one task vs distributed")
     assertSameFit(oneTask, plainOneTask, s"$what: one task vs plain one task")
@@ -395,7 +410,9 @@ class KMeansSpec extends SparkSpec {
     // maxLoop 1 runs no job; maxLoop 2 runs one
     val init = KMeansParams(k = 8, initCentroids = init8)
     assert(jobsAndTasks(KMeans.fit(sep, init.copy(maxLoop = 1)))._1 === ((0, 0)))
-    assert(jobsAndTasks(KMeans.fit(sep, init.copy(maxLoop = 2)))._1 === ((1, 1)))
+    whileCached(sep) {
+      assert(jobsAndTasks(KMeans.fit(sep, init.copy(maxLoop = 2)))._1 === ((1, 1)))
+    }
 
     spark.conf.set(key, "0") // every distributed round treeReduces
     try fitAllWays(sep, KMeansParams(k = 8, threshold = -1.0, maxLoop = 5,
@@ -403,19 +420,26 @@ class KMeansSpec extends SparkSpec {
     finally spark.conf.unset(key)
   }
 
-  test("a one-task fit that gives up reading or hands back mid-fit ends " +
-    "in the same bits as the distributed loop") {
+  test("a cached fit past M runs the distributed loop only, and a " +
+    "one-task fit that hands back mid-fit ends in the same bits") {
     val df = blobs(8000, 16, 8, 1.0, 13)
     val init = df.limit(8).collect().map(_.getSeq[Float](0).toArray)
     val params = KMeansParams(k = 8, threshold = -1.0, maxLoop = 6,
       initCentroids = Some(init))
     val want = KMeans.fit(df, params, shortcut = true, 0L, 0L)
-    // M = one chunk: gives up while reading, then 5 distributed rounds
-    val chunk = KMeans.chunkRows(16).toLong * 16
-    val ((jobs, _), gaveUp) = jobsAndTasks(
-      KMeans.fit(df, params, shortcut = true, chunk, KMeans.OneTaskProducts))
-    assertSameFit(gaveUp, want, "size give-up")
-    assert(jobs === 1 + 5, "the one-task job, then one job per round")
+    whileCached(df) {
+      // M one float short of the input: 5 distributed rounds; M the
+      // input's floats: one task
+      val floats = 8000L * 16
+      val ((jobs, _), over) = jobsAndTasks(KMeans.fit(df, params,
+        shortcut = true, floats - 1, KMeans.OneTaskProducts))
+      assertSameFit(over, want, "past M")
+      assert(jobs === 5, "one job per round")
+      val ((atJobs, _), at) = jobsAndTasks(KMeans.fit(df, params,
+        shortcut = true, floats, KMeans.OneTaskProducts))
+      assertSameFit(at, want, "at M")
+      assert(atJobs === 1)
+    }
 
     // Overlapping 1-d data whose first round every row proves (far-apart
     // init) and whose second round mostly scans: with a small W the task
@@ -428,21 +452,56 @@ class KMeansSpec extends SparkSpec {
     val p1 = KMeansParams(k = 2, threshold = -1.0, maxLoop = 6,
       initCentroids = Some(Array(Array(-10f), Array(11f))))
     val dist = KMeans.fit(overlap, p1, shortcut = true, 0L, 0L)
-    val ((hbJobs, _), handedBack) = jobsAndTasks(
-      KMeans.fit(overlap, p1, shortcut = true, KMeans.OneTaskFloats, 4000L))
-    assertSameFit(handedBack, dist, "mid-fit hand-back")
-    assert(hbJobs === 1 + 4, "one round in the task, four distributed")
-    assertSameFit(KMeans.fit(overlap, p1), dist, "no hand-back")
+    whileCached(overlap) {
+      val ((hbJobs, _), handedBack) = jobsAndTasks(KMeans.fit(overlap, p1,
+        shortcut = true, KMeans.OneTaskFloats, 4000L))
+      assertSameFit(handedBack, dist, "mid-fit hand-back")
+      assert(hbJobs === 1 + 4, "one round in the task, four distributed")
+      assertSameFit(KMeans.fit(overlap, p1), dist, "no hand-back")
+    }
+
+    // Two blobs apart only in their third coordinate: the first round's
+    // probe (first two coordinates) misses about every other row, and
+    // every pick it ends with is proven. Its scans, about 3,000 rows of
+    // 6 products, pass 4 × 1,000 but not 4 × 10,000.
+    val far = spark.sparkContext.parallelize(Seq.tabulate(6000) { i =>
+      Tuple1(Array(rnd.nextGaussian().toFloat, rnd.nextGaussian().toFloat,
+        (if (i % 2 == 0) -50 else 50) + rnd.nextGaussian().toFloat))
+    }, 3).toDF("features")
+    val p2 = KMeansParams(k = 2, threshold = -1.0, maxLoop = 6,
+      initCentroids = Some(Array(Array(0f, 0f, -40f), Array(0f, 0f, 40f))))
+    val farDist = KMeans.fit(far, p2, shortcut = true, 0L, 0L)
+    whileCached(far) {
+      val ((r1Jobs, _), r1) = jobsAndTasks(
+        KMeans.fit(far, p2, shortcut = true, KMeans.OneTaskFloats, 1000L))
+      assertSameFit(r1, farDist, "first-round hand-back")
+      assert(r1Jobs === 1 + 5, "no round in the task, five distributed")
+      val ((stayJobs, _), stay) = jobsAndTasks(
+        KMeans.fit(far, p2, shortcut = true, KMeans.OneTaskFloats, 10000L))
+      assertSameFit(stay, farDist, "first round within its slack")
+      assert(stayJobs === 1)
+    }
   }
 
-  test("a small fit with injected init centroids runs one job of one task") {
+  test("a small fit of an input cached in memory runs one job of one " +
+    "task; an uncached or unbuilt input runs the distributed loop") {
     val df = blobs(20000, 16, 8, 1.0, 5)
     val init = df.limit(8).collect().map(_.getSeq[Float](0).toArray)
-    val ((jobs, tasks), model) = jobsAndTasks(KMeans.fit(df,
-      KMeansParams(k = 8, threshold = -1.0, maxLoop = 11,
-        initCentroids = Some(init))))
-    assert(model.iterations === 10)
-    assert((jobs, tasks) === ((1, 1)))
+    val params = KMeansParams(k = 8, threshold = -1.0, maxLoop = 11,
+      initCentroids = Some(init))
+    val ((uncached, _), want) = jobsAndTasks(KMeans.fit(df, params))
+    assert(uncached === 10, "one job per round")
+    df.cache()
+    try {
+      // cached but not yet built: the loop's parallel read builds it
+      val ((unbuilt, _), m1) = jobsAndTasks(KMeans.fit(df, params))
+      assert(unbuilt === 10, "one job per round")
+      val ((jobs, tasks), model) = jobsAndTasks(KMeans.fit(df, params))
+      assert(model.iterations === 10)
+      assert((jobs, tasks) === ((1, 1)))
+      assertSameFit(m1, want, "unbuilt cache")
+      assertSameFit(model, want, "built cache")
+    } finally df.unpersist(blocking = true)
   }
 
   test("a null feature array or element fails loudly, naming the column, " +
@@ -458,7 +517,7 @@ class KMeansSpec extends SparkSpec {
     for ((df, what) <- Seq(withNullElem -> "element", withNullArray -> "array");
          oneTask <- Seq(true, false)) {
       val e = intercept[Exception](
-        if (oneTask) KMeans.fit(df, params)
+        if (oneTask) oneTaskFit(df, params)
         else KMeans.fit(df, params, shortcut = true, 0L, 0L))
       val iae = Iterator.iterate[Throwable](e)(_.getCause)
         .takeWhile(_ != null)
