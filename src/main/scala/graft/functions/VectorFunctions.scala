@@ -240,29 +240,6 @@ object VectorFunctions {
     picks
   }
 
-  /** Rows of one packed chunk whose guess — `guesses(r)`, or the
-    * [[probeGuess]] when `guesses` is null — the half-gap test does not
-    * prove: the rows a [[GuessArgmin]] trying those guesses scans.
-    * Every row when `radii` is null. `x` is a dim-long scratch. */
-  def unprovenRows(
-      rows: Array[Float], dim: Int, cents: Array[Double],
-      radii: Array[Double], guesses: Array[Int], x: Array[Double]): Int = {
-    val n = rows.length / dim
-    if (radii == null) return n
-    val k = cents.length / dim
-    var u = 0
-    var r = 0
-    while (r < n) {
-      val o = r * dim
-      var i = 0
-      while (i < dim) { x(i) = rows(o + i); i += 1 }
-      val g = if (guesses != null) guesses(r) else probeGuess(x, cents, k)
-      if (!halfGapHit(x, cents, radii, g)) u += 1
-      r += 1
-    }
-    u
-  }
-
   /** Adds each row of one packed chunk into its pick's cells of the
     * flat k×dim `sums` exactly as [[addInto]] adds it, in row order,
     * and counts it in `cnts`. */

@@ -96,20 +96,21 @@ final case class KMeansModel(
   * are read through `coalesce(1)` — no shuffle — and packed into the
   * same slices in one task, which runs the whole loop and returns the
   * model: one job for the fit, no per-round broadcast, checkpoint or
-  * collect. Each round tests the guesses of its first 16th of the rows;
-  * once the rows the half-gap test does not prove, projected over all
-  * rows, pass 3·2^23 (about 25M) centroid-coordinate products — where P
-  * parallel slices pay for a job per round — the task hands back. The
-  * first round, whose probe guesses miss more, may scan 4× that, and
-  * the rows its picks leave unproven (the next round's scans) are held
-  * to the plain bound; it picks each chunk as it is read, so a hand-back
-  * there has read a 16th of the input. Every round is the same pure
-  * function of the centroids on both paths, so the driver then
-  * continues with the distributed loop from the last finished round,
-  * and the result is the same bits. Any other input (a file scan, a
-  * parse, a filter, a projection of a cached table, a cache not yet
-  * built) goes straight to the distributed loop: its plan would
-  * otherwise run serially in the one task.
+  * collect. The task decides in round 1 only: it picks the first 16th
+  * of the rows as they are read and tests them, projected over all
+  * rows, and hands back when its own scans pass 4·3·2^23
+  * centroid-coordinate products, or when the rows its picks leave
+  * unproven (the next round's scans) pass 3·2^23 (about 25M) — where
+  * P parallel slices pay for a job per round. A hand-back has read a
+  * 16th of the input, and the driver runs the distributed loop from
+  * the initial centroids. Otherwise the task runs every round with no
+  * further test: a fit whose later rounds scan more than round 1
+  * predicted stays in the one task, each round bounded by M·k products
+  * (M the packed floats). Every round is the same pure function of the
+  * centroids on both paths, so the result is the same bits. Any other
+  * input (a file scan, a parse, a filter, a projection of a cached
+  * table, a cache not yet built) goes straight to the distributed loop:
+  * its plan would otherwise run serially in the one task.
   *
   * Distributed loop: one rebalancing shuffle moves chunk (s, c) to its
   * slice and sorts each slice by (s, c); each round is then one narrow
@@ -228,7 +229,7 @@ object KMeans {
     * 2^23 floats, 32 MB held by one task. */
   private[kmeans] val OneTaskFloats = 1L << 23
 
-  /** Centroid-coordinate products above which one round's projected
+  /** Centroid-coordinate products above which round 1's projected
     * scans make the one-task fit hand back to the distributed loop: a
     * scan is a row the half-gap test did not prove, k × dim products.
     * Measured at P = 4: a round of ~19M scanned products still runs
@@ -247,20 +248,16 @@ object KMeans {
 
   /** [[fit]]; with `shortcut` false every row of every round runs the
     * plain k-centroid scan — the reference the specs pin the hinted
-    * fold against, bit for bit. */
-  private[kmeans] def fit(
-      df: DataFrame, params: KMeansParams, shortcut: Boolean): KMeansModel =
-    fit(df, params, shortcut, OneTaskFloats, OneTaskProducts)
-
-  /** [[fit]] with the one-task limits as arguments. The one-task fit
-    * runs only when `df`'s own plan is cached in memory and built, with
-    * at most `maxTaskFloats` packed floats by the cache's row count: any
-    * other input would run its scan, parse or filter serially in the
-    * one task. It hands back once a round's projected scans pass
-    * `maxRoundProducts` products. */
+    * fold against, bit for bit. The one-task fit runs only when `df`'s
+    * own plan is cached in memory and built, with at most
+    * `maxTaskFloats` packed floats by the cache's row count: any other
+    * input would run its scan, parse or filter serially in the one
+    * task. It hands back in round 1 once that round's projected scans
+    * pass `maxRoundProducts` products. */
   private[kmeans] def fit(
       df: DataFrame, params: KMeansParams, shortcut: Boolean,
-      maxTaskFloats: Long, maxRoundProducts: Long): KMeansModel = {
+      maxTaskFloats: Long = OneTaskFloats,
+      maxRoundProducts: Long = OneTaskProducts): KMeansModel = {
     val spark = df.sparkSession
     val k = params.k
     val init = params.initCentroids
@@ -285,143 +282,147 @@ object KMeans {
       packChunks(it, dim, featuresCol).zipWithIndex
         .map { case (ch, c) => ((s, c), ch) }
     }
-    val start = graftshim.cachedRowCount(df)
-      .filter(n => maxTaskFloats > 0 && n * dim <= maxTaskFloats) match {
-      case Some(n) =>
+    graftshim.cachedRowCount(df)
+      .filter(n => maxTaskFloats > 0 && n * dim <= maxTaskFloats)
+      .flatMap { n =>
         // an input of no partitions coalesces to none: its loop runs here
         keyed.coalesce(1).mapPartitions { it =>
           Iterator.single(oneTaskLoop(it, n, init, params, dim, numSlices,
             shortcut, maxRoundProducts))
         }.collect().headOption.getOrElse(oneTaskLoop(Iterator.empty, n,
           init, params, dim, numSlices, shortcut, maxRoundProducts))
-      case None => FitState(init, 0, converged = false, done = false)
-    }
-    if (start.done) KMeansModel(start.centroids, start.rounds, start.converged)
-    else distributedLoop(spark, keyed, numSlices, start, params, dim, shortcut)
+      }
+      .getOrElse(
+        distributedLoop(spark, keyed, numSlices, init, params, dim, shortcut))
   }
 
-  /** Where a fit stands after `rounds` finished rounds; `done` when
-    * the loop has stopped (converged or out of rounds). */
-  private final case class FitState(
-      centroids: Array[Array[Float]], rounds: Int, converged: Boolean,
-      done: Boolean)
-
-  /** The one-task fit: the whole Lloyd loop inside one task over the
-    * chunks of every input partition, about `rowCount` rows. The chunks are
-    * dealt into the distributed loop's slices — chunk (s, c) into slice
-    * (s + c) mod P, each slice in (s, c) order, with its own double sums
-    * lifted to exact `BigDecimal`s and merged — and each row's pick
-    * stays in memory as the next round's guess, so every round computes
-    * what a distributed round computes, bit for bit.
-    *
-    * Each round tests its first 16th of the rows: the rows whose guess
-    * the half-gap test does not prove are its scans. Projected over all
-    * rows, once they pass `maxProducts` centroid-coordinate products
-    * the task returns the last finished round, undone, for the
-    * distributed loop to continue. The first round guesses with the
-    * probe: its own scans may pass the bound [[FirstRoundSlack]] times,
-    * and the rows its picks leave unproven, the next round's scans,
-    * are held to it. A pick depends on its row and the centroids only,
-    * so the first round picks each chunk as it is read, and a hand-back
-    * there reads a 16th of the input. */
-  private def oneTaskLoop(
-      chunks: Iterator[((Int, Int), Array[Float])], rowCount: Long,
-      init: Array[Array[Float]], params: KMeansParams, dim: Int,
-      numSlices: Int, shortcut: Boolean, maxProducts: Long): FitState = {
-    val k = params.k
-    val cells = k * dim
-    val x = new Array[Double](dim)
-    var rows = rowCount // the exact count once read
+  /** The Lloyd loop of both paths: from `init`, at most `maxLoop − 1`
+    * rounds, each turning `round`'s merged cells for the current
+    * centroids into the next centroids, until every centroid moves
+    * `<= threshold`. */
+  private def lloyd(init: Array[Array[Float]], params: KMeansParams)(
+      round: Array[Array[Float]] => (Array[java.math.BigDecimal], Array[Long]))
+      : KMeansModel = {
     var centroids = init
-    var flat: Array[Double] = null
-    var radii: Array[Double] = null
-    var am: GuessArgmin = null
-    var tested = 0L
-    var scans = 0L
-    var ahead = 0L
-    def newRound(): Unit = {
-      flat = centroids.flatMap(_.map(_.toDouble))
-      radii = if (shortcut) halfGapRadii(flat, k) else null
-      am = new GuessArgmin(flat, k, radii)
-      tested = 0L; scans = 0L; ahead = 0L
-    }
-    // Tests one chunk of the round's first 16th of the rows, guessed
-    // from `guesses` (the probe when null); true once it projects past
-    // the bound.
-    def pastBound(ch: Array[Float], guesses: Array[Int],
-        picks: Array[Int], first: Boolean): Boolean =
-      tested * 16 < rows && {
-        scans += unprovenRows(ch, dim, flat, radii, guesses, x)
-        if (first) ahead += unprovenRows(ch, dim, flat, radii, picks, x)
-        tested += picks.length
-        val perRow = rows.toDouble / tested * cells
-        tested * 16 >= rows &&
-          (if (first) ahead * perRow > maxProducts ||
-             scans * perRow > FirstRoundSlack.toDouble * maxProducts
-           else scans * perRow > maxProducts)
-      }
-
-    newRound()
-    val read = scala.collection.mutable.ArrayBuffer
-      .empty[((Int, Int), Array[Float], Array[Int])]
-    while (chunks.hasNext) {
-      val (key, ch) = chunks.next()
-      val p = assignChunk(ch, dim, am, null)
-      if (pastBound(ch, null, p, first = true))
-        return FitState(init, 0, converged = false, done = false)
-      read += ((key, ch, p))
-    }
-    rows = read.map(_._3.length.toLong).sum
-    // slice by slice, each in (s, c) order: the distributed fold order
-    val order = read.sortBy { case ((s, c), _, _) => ((s + c) % numSlices, s, c) }
-    val data = order.map(_._2).toArray
-    val picks = order.map(_._3).toArray
-    val slice = order.map { case ((s, c), _, _) => (s + c) % numSlices }.toArray
-
     var rounds = 0
     var converged = false
     while (rounds + 1 < params.maxLoop && !converged) {
-      if (rounds > 0) newRound()
-      val total = zeroCells(k, dim)
-      var sums: Array[Double] = null
-      var cnts: Array[Long] = null
-      var j = 0
-      while (j < data.length) {
-        if (j == 0 || slice(j) != slice(j - 1)) {
-          if (sums != null) merge(total, liftCells(sums, cnts))
-          sums = new Array[Double](cells)
-          cnts = new Array[Long](k)
-        }
-        val ch = data(j)
-        if (rounds > 0) {
-          val prev = picks(j)
-          picks(j) = assignChunk(ch, dim, am, prev)
-          if (pastBound(ch, prev, picks(j), first = false))
-            return FitState(centroids, rounds, converged = false, done = false)
-        }
-        addChunk(ch, dim, picks(j), sums, cnts)
-        j += 1
-      }
-      if (sums != null) merge(total, liftCells(sums, cnts))
-      val (next, conv) = meanStep(centroids, total, params.threshold)
+      val (next, conv) = meanStep(centroids, round(centroids), params.threshold)
       centroids = next
       converged = conv
       rounds += 1
     }
-    FitState(centroids, rounds, converged, done = true)
+    KMeansModel(centroids, rounds, converged)
+  }
+
+  /** The flat k×dim double codebook of `centroids` and, with the
+    * shortcut on, its half-gap radii. */
+  private def codebook(centroids: Array[Array[Float]], shortcut: Boolean)
+      : (Array[Double], Array[Double]) = {
+    val flat = centroids.flatMap(_.map(_.toDouble))
+    (flat, if (shortcut) halfGapRadii(flat, centroids.length) else null)
+  }
+
+  /** The one-task fit: the whole Lloyd loop inside one task over the
+    * chunks of every input partition, about `rowCount` rows. The chunks are
+    * dealt into the distributed loop's slices — chunk (s, c) into slice
+    * (s + c) mod P, each slice in (s, c) order, folded by [[foldSlice]]
+    * and merged — and each row's pick stays in memory as the next
+    * round's guess, so every round computes what a distributed round
+    * computes, bit for bit.
+    *
+    * Round 1 decides, None to hand back. A pick depends on its row and
+    * the centroids only, so it picks the first 16th of the rows as they
+    * are read and tests them: projected over all rows, the rows whose
+    * probe guess the half-gap test does not prove (its own scans) may
+    * pass `maxProducts` centroid-coordinate products [[FirstRoundSlack]]
+    * times, and the rows its picks leave unproven (the next round's
+    * scans) may not pass it. Later rounds run with no test. */
+  private def oneTaskLoop(
+      chunks: Iterator[((Int, Int), Array[Float])], rowCount: Long,
+      init: Array[Array[Float]], params: KMeansParams, dim: Int,
+      numSlices: Int, shortcut: Boolean,
+      maxProducts: Long): Option[KMeansModel] = {
+    val k = params.k
+    val (flat, radii) = codebook(init, shortcut)
+    val am = new GuessArgmin(flat, k, radii)
+    val x = new Array[Double](dim)
+    var tested = 0L
+    var scans = 0L
+    var ahead = 0L
+    val read = scala.collection.mutable.ArrayBuffer
+      .empty[((Int, Int), Array[Float], Array[Int])]
+    while (chunks.hasNext) {
+      val (key, ch) = chunks.next()
+      // a tested chunk's picks are its round-1 guesses; the rest probe
+      val p = if (tested * 16 >= rowCount) null else {
+        val p = assignChunk(ch, dim, am, null)
+        scans += unprovenRows(ch, dim, flat, radii, null, x)
+        ahead += unprovenRows(ch, dim, flat, radii, p, x)
+        tested += p.length
+        val perRow = rowCount.toDouble / tested * (k * dim)
+        if (tested * 16 >= rowCount && (ahead * perRow > maxProducts ||
+            scans * perRow > FirstRoundSlack.toDouble * maxProducts))
+          return None
+        p
+      }
+      read += ((key, ch, p))
+    }
+    // slice by slice, each in (s, c) order: the distributed fold order
+    val slices = read.sortBy(_._1)
+      .groupBy { case ((s, c), _, _) => (s + c) % numSlices }.values
+      .map(sl => (sl.map(_._2).toArray, sl.map(_._3).toArray)).toArray
+    Some(lloyd(init, params) { centroids =>
+      val (flat, radii) = codebook(centroids, shortcut)
+      val am = new GuessArgmin(flat, k, radii)
+      slices.foldLeft(zeroCells(k, dim)) { case (total, (data, picks)) =>
+        for (j <- data.indices) picks(j) = assignChunk(data(j), dim, am, picks(j))
+        merge(total, foldSlice(data.iterator.zip(picks.iterator), k, dim))
+      }
+    })
+  }
+
+  /** Rows of one packed chunk whose guess — `guesses(r)`, or the
+    * [[probeGuess]] when `guesses` is null — the half-gap test does not
+    * prove: the rows a [[GuessArgmin]] trying those guesses scans.
+    * Every row when `radii` is null. `x` is a dim-long scratch. */
+  private def unprovenRows(
+      rows: Array[Float], dim: Int, cents: Array[Double],
+      radii: Array[Double], guesses: Array[Int], x: Array[Double]): Int = {
+    val n = rows.length / dim
+    if (radii == null) return n
+    val k = cents.length / dim
+    var u = 0
+    var r = 0
+    while (r < n) {
+      val o = r * dim
+      var i = 0
+      while (i < dim) { x(i) = rows(o + i); i += 1 }
+      val g = if (guesses != null) guesses(r) else probeGuess(x, cents, k)
+      if (!halfGapHit(x, cents, radii, g)) u += 1
+      r += 1
+    }
+    u
+  }
+
+  /** A2 — the combiner: one slice's chunks added, in chunk-key order,
+    * into fresh k×dim (sum, count) cells of primitive doubles
+    * (KCombiner.java:9-18 semantics), lifted at slice exit to EXACT
+    * `BigDecimal`s (`new BigDecimal(double)` represents every finite
+    * double exactly), so the merge is order-independent. */
+  private def foldSlice(
+      chunks: Iterator[(Array[Float], Array[Int])], k: Int, dim: Int)
+      : (Array[java.math.BigDecimal], Array[Long]) = {
+    val sums = new Array[Double](k * dim)
+    val cnts = new Array[Long](k)
+    chunks.foreach { case (ch, picks) => addChunk(ch, dim, picks, sums, cnts) }
+    (sums.map(new java.math.BigDecimal(_)), cnts)
   }
 
   /** k×dim zero sums and k zero counts: the identity of [[merge]]. */
   private def zeroCells(k: Int, dim: Int)
       : (Array[java.math.BigDecimal], Array[Long]) =
     (Array.fill(k * dim)(java.math.BigDecimal.ZERO), new Array[Long](k))
-
-  /** A slice's double sums lifted to EXACT `BigDecimal`s
-    * (`new BigDecimal(double)` represents every finite double exactly),
-    * so the merge is order-independent. */
-  private def liftCells(sums: Array[Double], cnts: Array[Long])
-      : (Array[java.math.BigDecimal], Array[Long]) =
-    (sums.map(new java.math.BigDecimal(_)), cnts)
 
   /** Exact merge of two partial tables (k×dim sums + k counts):
     * BigDecimal addition is exact and associative, so ANY merge
@@ -465,27 +466,22 @@ object KMeans {
     (next, converged)
   }
 
-  /** The distributed Lloyd loop from `start`: the keyed chunks moved
+  /** The distributed Lloyd loop from `init`: the keyed chunks moved
     * once into their slices, then one narrow job per round. */
   private def distributedLoop(
       spark: SparkSession, keyed: RDD[((Int, Int), Array[Float])],
-      numSlices: Int, start: FitState, params: KMeansParams, dim: Int,
-      shortcut: Boolean): KMeansModel = {
+      numSlices: Int, init: Array[Array[Float]], params: KMeansParams,
+      dim: Int, shortcut: Boolean): KMeansModel = {
     val k = params.k
-    var centroids = start.centroids
+    val treeGate = treeReducePartitions(spark)
     // Generation 0 pairs each chunk with no picks yet; the rebalancing
     // shuffle sorts each slice by (s, c).
     var gen: RDD[(Array[Float], Array[Int])] = keyed
       .repartitionAndSortWithinPartitions(new SlicePartitioner(numSlices))
       .map { case (_, ch) => (ch, null: Array[Int]) }
-    try {
-      val treeGate = treeReducePartitions(spark)
-      var loop = start.rounds + 1
-      var converged = false
-      while (loop < params.maxLoop && !converged) {
-        val flat = centroids.flatMap(_.map(_.toDouble))
-        val bc = spark.sparkContext.broadcast(
-          (flat, if (shortcut) halfGapRadii(flat, k) else null))
+    try lloyd(init, params) { centroids =>
+      val bc = spark.sparkContext.broadcast(codebook(centroids, shortcut))
+      try {
         // This round's generation: each chunk with its rows' picks,
         // guessed from the previous round's picks (the probe in the
         // loop's first round) and verified by the half-gap test. Cached
@@ -498,34 +494,20 @@ object KMeans {
         }.localCheckpoint()
         val prev = gen
         gen = next
-        // A2 — the combiner: each slice adds its chunks' rows into k
-        // (sum, count) cells in chunk-key order, primitive doubles
-        // (KCombiner.java:9-18 semantics), lifted at slice exit.
-        val partialsRdd = next.mapPartitions { it =>
-          val sums = new Array[Double](k * dim)
-          val cnts = new Array[Long](k)
-          it.foreach { case (ch, picks) => addChunk(ch, dim, picks, sums, cnts) }
-          Iterator.single(liftCells(sums, cnts))
-        }
+        val partialsRdd =
+          next.mapPartitions(it => Iterator.single(foldSlice(it, k, dim)))
 
         // Above the partition gate the merge runs as a 2-level
         // treeReduce (executors pre-merge; the driver receives ONE
         // table, not P) — bit-identical to the collect fold by the
         // exactness of the merge, pinned by KMeansSpec. The previous
         // generation is released once this round's is checkpointed.
-        val merged =
-          try {
-            if (numSlices > treeGate)
-              partialsRdd.treeReduce(merge _, depth = 2)
-            else partialsRdd.collect().foldLeft(zeroCells(k, dim))(merge)
-          } finally prev.unpersist(blocking = false)
-        val (nextCents, conv) = meanStep(centroids, merged, params.threshold)
-        converged = conv
-        centroids = nextCents
-        bc.unpersist(blocking = false)
-        loop += 1
-      }
-      KMeansModel(centroids, loop - 1, converged)
+        try {
+          if (numSlices > treeGate)
+            partialsRdd.treeReduce(merge _, depth = 2)
+          else partialsRdd.collect().foldLeft(zeroCells(k, dim))(merge)
+        } finally prev.unpersist(blocking = false)
+      } finally bc.unpersist(blocking = false)
     } finally gen.unpersist()
   }
 }

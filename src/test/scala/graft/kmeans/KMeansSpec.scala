@@ -421,7 +421,7 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("a cached fit past M runs the distributed loop only, and a " +
-    "one-task fit that hands back mid-fit ends in the same bits") {
+    "one-task fit that hands back in round 1 ends in the same bits") {
     val df = blobs(8000, 16, 8, 1.0, 13)
     val init = df.limit(8).collect().map(_.getSeq[Float](0).toArray)
     val params = KMeansParams(k = 8, threshold = -1.0, maxLoop = 6,
@@ -442,8 +442,8 @@ class KMeansSpec extends SparkSpec {
     }
 
     // Overlapping 1-d data whose first round every row proves (far-apart
-    // init) and whose second round mostly scans: with a small W the task
-    // finishes round 1 and hands back in round 2.
+    // init) and whose second round mostly scans: round 1 passes even a
+    // small W, and the task then runs every round.
     import spark.implicits._
     val rnd = new scala.util.Random(17)
     val pts = Seq.fill(20000)(Tuple1(Array(
@@ -453,10 +453,10 @@ class KMeansSpec extends SparkSpec {
       initCentroids = Some(Array(Array(-10f), Array(11f))))
     val dist = KMeans.fit(overlap, p1, shortcut = true, 0L, 0L)
     whileCached(overlap) {
-      val ((hbJobs, _), handedBack) = jobsAndTasks(KMeans.fit(overlap, p1,
+      val ((lateJobs, _), late) = jobsAndTasks(KMeans.fit(overlap, p1,
         shortcut = true, KMeans.OneTaskFloats, 4000L))
-      assertSameFit(handedBack, dist, "mid-fit hand-back")
-      assert(hbJobs === 1 + 4, "one round in the task, four distributed")
+      assertSameFit(late, dist, "later rounds past W")
+      assert(lateJobs === 1, "every round in the task")
       assertSameFit(KMeans.fit(overlap, p1), dist, "no hand-back")
     }
 

@@ -1,4 +1,4 @@
-"""Unit tests for tools/ab.py's summary: python3 -m unittest discover -s tools/tests"""
+"""Unit tests for tools/ab.py's summary, verdict and failure naming: python3 -m unittest discover -s tools/tests"""
 import os
 import sys
 import unittest
@@ -33,6 +33,45 @@ class SummarizeTest(unittest.TestCase):
         s = ab.summarize([({"x": 2.0}, {"x": 1.0})], {"x": "lower"})
         self.assertEqual(s["x"]["parent"], (2.0, 2.0, 2.0))
         self.assertEqual(s["x"]["ratios"], [0.5])
+
+
+class VerdictTest(unittest.TestCase):
+    def test_within_bound_and_worse(self):
+        ps = [1.0, 1.02, 1.04, 1.06, 1.08]
+        self.assertEqual(ab.verdict(ps, [1.2, 1.25, 1.3], "lower", 0.25), "within bound")
+        self.assertEqual(ab.verdict(ps, [1.3, 1.35, 1.4], "lower", 0.25), "worse")
+        # a faster change is within bound however far it moves
+        self.assertEqual(ab.verdict(ps, [0.1, 0.2, 0.3], "lower", 0.25), "within bound")
+
+    def test_higher_is_better(self):
+        ps = [100.0, 101.0, 102.0]
+        self.assertEqual(ab.verdict(ps, [90.0, 91.0, 92.0], "higher", 0.15), "within bound")
+        self.assertEqual(ab.verdict(ps, [80.0, 84.0, 85.0], "higher", 0.15), "worse")
+        self.assertEqual(ab.verdict(ps, [150.0], "higher", 0.15), "within bound")
+
+    def test_unresolved_when_the_parent_spreads_past_the_bound(self):
+        # parent quartiles 1.0 / 1.5 / 2.0: an IQR of 67 % of the median
+        ps = [0.5, 1.0, 1.5, 2.0, 2.5]
+        self.assertEqual(ab.verdict(ps, [1.5, 1.6], "lower", 0.25), "unresolved")
+        self.assertEqual(ab.verdict(ps, [5.0, 6.0], "lower", 0.25), "unresolved")
+        # unless every change run beats every parent run
+        self.assertEqual(ab.verdict(ps, [0.2, 0.4], "lower", 0.25), "within bound")
+
+    def test_summarize_attaches_the_verdict_of_bounded_metrics(self):
+        pairs = [({"wall_s": p, "rate": 1.0}, {"wall_s": c, "rate": 1.0})
+                 for p, c in [(1.0, 1.5), (1.0, 1.5), (1.0, 1.5)]]
+        s = ab.summarize(pairs, {"wall_s": "lower", "rate": "higher"}, {"wall_s": 0.25})
+        self.assertEqual(s["wall_s"]["verdict"], "worse")
+        self.assertNotIn("verdict", s["rate"])
+
+
+class RunFailureTest(unittest.TestCase):
+    def test_names_failed_runs(self):
+        self.assertIsNone(ab.run_failure(1, "parent", {"wall_s": 1.0}, 0))
+        self.assertEqual(ab.run_failure(2, "change", None, None),
+                         "pair 2 change: the run failed")
+        self.assertEqual(ab.run_failure(3, "parent", {"wall_s": 1.0}, 4),
+                         "pair 3 parent: 4 failed operations")
 
 
 if __name__ == "__main__":
