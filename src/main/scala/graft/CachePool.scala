@@ -47,6 +47,12 @@ object CachePool {
     ds
   }
 
+  /** Release the generation registered under `tag`, if any. */
+  def release(tag: String): Unit = {
+    val prev = live.remove(tag)
+    if (prev != null) prev.unpersist(blocking = false)
+  }
+
   /** Release every tracked cache (session quiesce point). */
   def releaseAll(): Unit = {
     val it = live.entrySet().iterator()

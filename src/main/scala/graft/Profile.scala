@@ -12,11 +12,7 @@ object Profile {
       case Some("plans") => dumpPlans(args.drop(1))
       case Some("nb-phases") => nbPhases(
         args.lift(1).getOrElse("/root/testdata/sf0.1"))
-      case Some("aa-phases") => aaPhases(
-        args.lift(1).getOrElse("/root/testdata/sf0.1"))
       case Some("cm-phases") => cmPhases(
-        args.lift(1).getOrElse("/root/testdata/sf0.1"))
-      case Some("bp-phases") => bpPhases(
         args.lift(1).getOrElse("/root/testdata/sf0.1"))
       case Some("ga-phases") => gaPhases(
         args.lift(1).getOrElse("/root/testdata/sf0.1"))
@@ -33,10 +29,6 @@ object Profile {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B hook for the wedge-family algorithm selector (floors runs
-    // set GRAFT_TRIANGLE_ALGO=csr against the default wedge form)
-    sys.env.get("GRAFT_TRIANGLE_ALGO").foreach(a =>
-      spark.conf.set("spark.graft.graph.triangleAlgo", a))
     // A/B hook: GRAFT_AQE_COALESCE=1 sets the guide-§9 aggressive
     // AQE coalescing posture (size-targeted, not parallelism-first)
     if (sys.env.contains("GRAFT_AQE_COALESCE")) {
@@ -124,204 +116,6 @@ object Profile {
       time(s"full q186 [$rep]")(
         SparkEntry.queries("q186_lang_nb_corpus")(spark, dir)
           .write.format("noop").mode("overwrite").save())
-    }
-    spark.stop()
-  }
-
-  /** Phase attribution for q156 adamic-adar on the copurchase graph:
-    * replicates adamicAdarImpl's stages (big-graph path) with
-    * per-stage forcing so the expensive exchange is visible. */
-  def aaPhases(dir: String): Unit = {
-    import org.apache.spark.sql.types.DecimalType
-    import org.apache.spark.storage.StorageLevel
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[prof] $name: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    val maxDegree = 100
-    (1 to 2).foreach { rep =>
-      println(s"[prof] === rep $rep")
-      val lp = sources.Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      val pp = lp.select(col("ok"), col("pk").as("p1"))
-        .join(lp.select(col("ok"), col("pk").as("p2")), "ok")
-        .where(col("p1") < col("p2"))
-        .select(col("p1").as("src"), col("p2").as("dst"))
-        .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      val e = t("build:copurchase sym persist+count") {
-        val e0 = pp.union(pp.select(col("dst").as("src"),
-          col("src").as("dst")))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        println(s"[prof]   E=${e0.count()}")
-        e0
-      }
-      val deg = t("deg agg persist+count") {
-        val d = e.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        println(s"[prof]   N=${d.count()}")
-        d
-      }
-      val nb = t("nb build persist+count") {
-        val n0 = e
-          .join(deg.select(col("node").as("src"), col("deg")), "src")
-          .where(col("deg") >= 2 && col("deg") <= maxDegree)
-          .select(col("src").as("b"), col("dst").as("n"),
-            (round(lit(1.0) / log(col("deg").cast("double")), 12)
-              .cast(DecimalType(14, 12))
-              * lit(java.math.BigDecimal.valueOf(1000000000000L)))
-              .cast("long").as("units"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        println(s"[prof]   nb=${n0.count()}")
-        n0
-      }
-      t("wedge volume probe") {
-        val w = deg.where(col("deg") >= 2 && col("deg") <= maxDegree)
-          .agg(coalesce(sum(col("deg") * (col("deg") - 1) / 2), lit(0L))
-            .cast("long")).head.getLong(0)
-        println(s"[prof]   wedges=$w")
-      }
-      val nbRight = nb.select(col("b"), col("n").as("w"))
-      val scored = nb.select(col("b"), col("n").as("u"), col("units"))
-        .join(nbRight.hint("shuffle_hash"), "b")
-        .where(col("u") < col("w"))
-        .groupBy("u", "w")
-        .agg(sum(col("units")).as("aa_units"), count(lit(1)).as("common"))
-      t("scored agg (join+groupBy) noop") {
-        scored.write.format("noop").mode("overwrite").save()
-      }
-      val out = t("anti-join + checkpoint") {
-        scored.join(e.select(col("src").as("u"), col("dst").as("w")),
-            Seq("u", "w"), "left_anti")
-          .select(col("u").as("src"), col("w").as("dst"), col("common"),
-            (col("aa_units").cast("double") / lit(1.0e12)).as("aa"))
-          .localCheckpoint(eager = true)
-      }
-      t("top-20") {
-        out.orderBy(desc("aa"), col("src"), col("dst")).limit(20).collect()
-      }
-      t("candidate count") {
-        println(s"[prof]   candidates=${out.count()}")
-      }
-      // ---- variant B: broadcast close side, same agg
-      val scoredB = nb.select(col("b"), col("n").as("u"), col("units"))
-        .join(broadcast(nbRight), "b")
-        .where(col("u") < col("w"))
-        .groupBy("u", "w")
-        .agg(sum(col("units")).as("aa_units"), count(lit(1)).as("common"))
-      t("B: scored agg broadcast noop") {
-        scoredB.write.format("noop").mode("overwrite").save()
-      }
-      // ---- variant C: packed single-long pair key (ids < 2^31)
-      val scoredC = nb.select(col("b"), col("n").as("u"), col("units"))
-        .join(broadcast(nbRight), "b")
-        .where(col("u") < col("w"))
-        .select((col("u") * lit(4294967296L) + col("w")).as("uw"),
-          col("units"))
-        .groupBy("uw")
-        .agg(sum(col("units")).as("aa_units"), count(lit(1)).as("common"))
-      t("C: scored agg packed-key noop") {
-        scoredC.write.format("noop").mode("overwrite").save()
-      }
-      // ---- variant E: grouped-adjacency + graft_pair_longs kernel
-      val scoredE = nb
-        .groupBy(col("b"), col("units"))
-        .agg(collect_list(col("n").cast("long")).as("ns"))
-        .select(col("units"),
-          explode(org.apache.spark.sql.graftshim.column(
-            graft.functions.GraftPairLongs(
-              org.apache.spark.sql.graftshim.expression(col("ns")))))
-            .as("uw"))
-        .groupBy("uw")
-        .agg(sum(col("units")).as("aa_units"), count(lit(1)).as("common"))
-      t("E: scored agg pair-kernel noop") {
-        scoredE.write.format("noop").mode("overwrite").save()
-      }
-      // ---- variant D: packed key + packed anti-join + direct top-20
-      val outD = scoredC
-        .join(e.select((col("src") * lit(4294967296L) + col("dst"))
-          .as("uw")), Seq("uw"), "left_anti")
-        .select((col("uw") / lit(4294967296L)).cast("long").as("src"),
-          pmod(col("uw"), lit(4294967296L)).cast("long").as("dst"),
-          col("common"),
-          (col("aa_units").cast("double") / lit(1.0e12)).as("aa"))
-      t("D: packed anti + direct top-20") {
-        outD.orderBy(desc("aa"), col("src"), col("dst")).limit(20)
-          .collect()
-      }
-      Seq(nb, deg, e, pp, lp).foreach(_.unpersist(blocking = false))
-    }
-    spark.stop()
-  }
-
-  /** A/B for q160's projection aggregate: packed pair-kernel vs the
-    * two-sided self-join, over the same pruned incidence — wall-clock
-    * AND total shuffle bytes written (task-metrics listener), the
-    * at-scale cost the kernel form was adopted for. */
-  def bpPhases(dir: String): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
-    def t[A](name: String)(f: => A): A = {
-      Thread.sleep(300) // drain listener events from the previous phase
-      val b0 = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      val r = f
-      Thread.sleep(300)
-      println(f"[prof] $name: ${(System.nanoTime() - t0) / 1e9}%.2fs " +
-        f"shuffleMB=${(shuffleBytes.get() - b0) / 1048576.0}%.1f")
-      r
-    }
-    (1 to 2).foreach { rep =>
-      println(s"[prof] === rep $rep")
-      val o = sources.Tables(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val l = sources.Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-      val lp = l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("l"), col("l_partkey").as("r"))
-        .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      val keep = lp.groupBy("r").agg(count(lit(1)).as("dc"))
-        .where(col("dc") <= 40).select("r")
-      val pruned = t("pruned build+count") {
-        val p = lp.join(keep, "r").persist(StorageLevel.MEMORY_AND_DISK)
-        println(s"[prof]   pruned=${p.count()}")
-        p
-      }
-      val joinForm = pruned.select(col("r"), col("l").as("src"))
-        .join(pruned.select(col("r"), col("l").as("dst"))
-          .hint("shuffle_hash"), "r")
-        .where(col("src") < col("dst"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      t("A: self-join agg noop") {
-        joinForm.write.format("noop").mode("overwrite").save()
-      }
-      val kernelForm = pruned.groupBy(col("r"))
-        .agg(collect_list(col("l").cast("long")).as("ls"))
-        .select(explode(org.apache.spark.sql.graftshim.column(
-          graft.functions.GraftPairLongs(
-            org.apache.spark.sql.graftshim.expression(col("ls")))))
-          .as("uw"))
-        .groupBy("uw").agg(count(lit(1)).as("w"))
-      t("B: pair-kernel agg noop") {
-        kernelForm.write.format("noop").mode("overwrite").save()
-      }
-      pruned.unpersist(blocking = false)
-      lp.unpersist(blocking = false)
     }
     spark.stop()
   }

@@ -479,6 +479,13 @@ object KMeans {
     var gen: RDD[(Array[Float], Array[Int])] = keyed
       .repartitionAndSortWithinPartitions(new SlicePartitioner(numSlices))
       .map { case (_, ch) => (ch, null: Array[Int]) }
+    // Each round's codebook broadcast is destroyed one round late:
+    // destroyed, because `unpersist` keeps the driver's copy (in local
+    // mode the only one); late, because the next round's tasks still
+    // serialize this round's generation, whose closure holds it (a
+    // checkpoint drops an RDD's parent, not its closure).
+    var lastBc: org.apache.spark.broadcast.Broadcast[_] = null
+    def destroyLastBc(): Unit = if (lastBc != null) lastBc.destroy()
     try lloyd(init, params) { centroids =>
       val bc = spark.sparkContext.broadcast(codebook(centroids, shortcut))
       try {
@@ -507,8 +514,8 @@ object KMeans {
             partialsRdd.treeReduce(merge _, depth = 2)
           else partialsRdd.collect().foldLeft(zeroCells(k, dim))(merge)
         } finally prev.unpersist(blocking = false)
-      } finally bc.unpersist(blocking = false)
-    } finally gen.unpersist()
+      } finally { destroyLastBc(); lastBc = bc }
+    } finally { gen.unpersist(); destroyLastBc() }
   }
 }
 

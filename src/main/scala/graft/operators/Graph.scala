@@ -129,11 +129,7 @@ object Graph {
     * session setting. It stays the CEILING: on a cluster where the
     * operator sized `spark.sql.shuffle.partitions` to the data,
     * rows/target far exceeds it and behavior is unchanged; only
-    * small-graph rounds get fewer, larger tasks. Callers that size an
-    * INNER scope pass the TRUE session setting (inside
-    * [[withShufflePartitions]] the conf reads back the scoped value,
-    * which would wrongly cap a larger inner stage — the wedge stream is
-    * bigger than the edge list it came from). */
+    * small-graph rounds get fewer, larger tasks. */
   private def iterPartitions(ceiling: Int, rows: Long): Int =
     math.max(1L, math.min(ceiling.toLong,
       (rows + iterRowsPerTask - 1) / iterRowsPerTask)).toInt
@@ -183,33 +179,6 @@ object Graph {
       }
     }
   }
-
-  /** Oriented-list ROW count (E/2) below which the wedge-join family
-    * (triangles, clustering coefficient, edge Jaccard, Adamic-Adar)
-    * takes its SMALL-graph path: scale-aware scoped task counts, an
-    * exact wedge-volume probe, and a broadcast build side that lets
-    * the O(E^1.5) wedge stream fuse map-side with no exchange. Above
-    * the gate the plain ambient-partition shuffle_hash plan runs with
-    * no probe job. The 300k default is set by round-12 min-of-five
-    * in-bench floors at sf0.1, NOT by broadcast-memory headroom: at
-    * 1.2M oriented rows the device COSTS ~1-3 s per line (q119 floor
-    * 4.97→6.12, q156 5.42→8.32, q160 3.38→4.27, untouched controls
-    * flat ±0.3 s — the probe job, the narrower scaffolding scope, and
-    * the big shared broadcast relation each hurt; per-partition
-    * shuffle_hash maps fit cache, one 100 MB relation does not),
-    * while a 0.24M-row side wins outright (q127 floor 4.77→4.01, and
-    * 4.8→1.6 s isolated). Override with
-    * `spark.graft.graph.wedgeBroadcastMaxRows`. */
-  def wedgeBroadcastMaxRows(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.graph.wedgeBroadcastMaxRows")
-      .map { v =>
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            "spark.graft.graph.wedgeBroadcastMaxRows must be a long row " +
-              s"count, got '$v'")
-        }
-      }.getOrElse(300000L)
 
   /** Node count above which [[pageRank]] auto-selects the distributed
     * rank-table loop body (the rank table must fit the driver/broadcast
@@ -1581,11 +1550,10 @@ object Graph {
     * the loud no-sink precondition instead of silently undercounting.
     *
     * Plan shape: degree attach is two N-row joins onto the E-row edge
-    * list (broadcast-eligible when N is small, shuffled-hash at
-    * scale); the wedge build is one self-join of the oriented list
-    * co-partitioned on the spoke `u`; closing is one join of the
-    * wedge set against the oriented list on (b, c). No window over
-    * the corpus, no driver collect.
+    * list; the close is picked by size ([[orientedTriangles]]): a
+    * broadcast grouped-adjacency intersect, or at scale the wedge
+    * self-join on the spoke `u` plus one close join on (b, c). No
+    * window over the corpus, no driver collect.
     *
     * Returns (node, deg, tri) for EVERY node (tri = 0 when the node
     * closes no triangle), ordered by node. */
@@ -1593,79 +1561,47 @@ object Graph {
     persistedTriangleCore(gt).orderBy("node")
 
   /** The (node, deg, tri) core of [[triangleCountsImpl]] and
-    * [[clusteringCoefficientImpl]], persisted (lazy, CachePool-tracked)
-    * under one tag. Both return a global sort, and a FULL-output
-    * consumer of a sort directly over the lazy close pipeline would
-    * execute the close's last stage twice (the range partitioner's
-    * sampling pass runs the child once before the sort pass); with the
-    * core persisted, the sampling pass materializes it once and the
-    * sort pass reads the cache. Top-k consumers (q119-style) fuse into
-    * TakeOrdered over the cache. */
+    * [[clusteringCoefficientImpl]], kept for their global sorts (on the
+    * csr side persisted under `graph.tri.result`, see
+    * [[orientedTriangles]]). Top-k consumers (q119-style) fuse into
+    * TakeOrdered over the kept result. */
   private def persistedTriangleCore(gt: GraphTable): DataFrame = {
     require(gt.numNodes > 0, "graph has no nodes")
     require(gt.numDangling == 0,
       "triangleCounts requires a symmetric double-edged feed " +
         s"(found ${gt.numDangling} sink nodes)")
-    graft.CachePool.swap("graph.tri.core",
-      triangleCore(
-        gt.edges.where(col("src") =!= col("dst")).select("src", "dst"),
-        gt.numEdges).persist(StorageLevel.MEMORY_AND_DISK))
+    triangleCore(
+      gt.edges.where(col("src") =!= col("dst")).select("src", "dst"),
+      gt.numEdges / 2, keepResult = true)
   }
 
-  /** Degree-oriented per-node triangle counts over a symmetric,
-    * self-loop-free edge frame — the shared core of the exact counter
-    * and the DOULION sampled estimator. Returns an eagerly
-    * materialized (node, deg, tri) frame (checkpoint blocks, caches
-    * released).
-    *
-    * SMALL-graph path (oriented list ≤ [[wedgeBroadcastMaxRows]]):
-    * task counts are scale-aware — the E-row scaffolding stages run at
-    * ⌈edgeHint/250k⌉ tasks and the wedge stages at ⌈wedges/250k⌉ (the
-    * EXACT wedge volume Σ C(odeg(u),2), one cheap aggregate over the
-    * already-persisted oriented list), both clamped to the session
-    * setting — and the triangle close probes a BROADCAST of the tiny
-    * oriented list, so the wedge stream never exchanges. ABOVE the
-    * gate, the plan is the plain ambient-partition shuffle_hash form
-    * with no probe job: the round-12 floors showed the probe +
-    * scaffolding scope + broadcast each COST ~0.3-1 s in-bench at
-    * sf0.1 volumes (q119 floor 4.97→6.12 with them, controls flat),
-    * so the device is reserved for graphs small enough that the
-    * broadcast pays for all three. Counts are integer-exact, so
-    * neither partitioning nor join strategy can move a bit
-    * (parity-pinned in GraphSpec). */
-  private def triangleCore(e: DataFrame, edgeHint: Long): DataFrame =
-    if (useCsr(e.sparkSession, edgeHint / 2)) triangleCoreCsr(e, edgeHint)
-    else triangleCoreWedge(e, edgeHint)
-
-  /** Triangle-close algorithm selector:
-    * `spark.graft.graph.triangleAlgo` = `auto` (default), `wedge`
-    * (the wedge-stream self-join + close join), or `csr` (grouped
-    * adjacency: per-edge array intersection, no wedge stream —
-    * [[triangleCoreCsr]]). Both are exact and parity-pinned in
-    * GraphSpec. `auto` picks csr while the oriented list fits the
-    * adjacency-broadcast envelope ([[csrMaxOrientedRows]]) and the
-    * always-scaling wedge shuffle plan above it — set by round-13
-    * min-of-8 A/B at sf0.1 (1.2M oriented rows: q119 3.34→2.12,
-    * q120 3.22→2.25, q129 3.70→2.28, q127 2.99→2.10 s, controls
-    * flat-to-worse under rising load), not theory. */
-  private[operators] def triangleAlgo(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.graph.triangleAlgo")
-      .getOrElse("auto") match {
-      case a @ ("auto" | "wedge" | "csr") => a
-      case bad => throw new IllegalArgumentException(
-        s"spark.graft.graph.triangleAlgo must be 'auto', 'wedge' or " +
-          s"'csr', got '$bad'")
+  /** Per-node (node, deg, tri) over a symmetric, self-loop-free edge
+    * frame: the shared core of the exact counter, the clustering
+    * coefficient and the DOULION sampled estimator. Each triangle
+    * credits its three corners; lifecycle and CachePool tags
+    * (`graph.tri.*`) as in [[orientedTriangles]]. */
+  private def triangleCore(
+      e: DataFrame, orientedRows: Long, keepResult: Boolean): DataFrame =
+    orientedTriangles(e, orientedRows, "tri", keepResult) { (deg, tri) =>
+      val perNode = tri
+        .select(explode(array(col("u"), col("b"), col("c"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("tri"))
+      deg
+        .join(perNode.hint("shuffle_hash"), Seq("node"), "left")
+        .select(col("node"), col("deg"),
+          coalesce(col("tri"), lit(0L)).as("tri"))
     }
 
-  /** Oriented-list row cap for the auto csr pick: the broadcast
-    * adjacency packs one long per oriented edge plus one array row
-    * per source node, so 2M rows ≈ 30-60 MB as a hashed relation —
-    * comfortably inside executor memory with headroom over the 1.2M
-    * rows the A/B measured. Beyond it `auto` falls back to the wedge
-    * shuffle plan, whose exchanges scale with cluster width instead
-    * of a single broadcast (a 100 TB edge list must never be forced
-    * through one driver collect). Override with
-    * `spark.graft.graph.csrMaxOrientedRows`. */
+  /** Oriented-list row cap (E/2) of the csr close, the only selector
+    * of the triangle family's enumeration ([[orientedTriangles]]): at
+    * or below it csr runs, above it the wedge shuffle plan. The
+    * broadcast adjacency packs one long per oriented edge plus one
+    * array row per source node, so 2M rows ≈ 30-60 MB as a hashed
+    * relation — inside executor memory with headroom over the 1.2M
+    * rows of the sf0.1 copurchase graph. Beyond it the wedge plan's
+    * exchanges scale with cluster width instead of a single broadcast
+    * (a 100 TB edge list must never be forced through one driver
+    * collect). Override with `spark.graft.graph.csrMaxOrientedRows`. */
   private[operators] def csrMaxOrientedRows(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.graph.csrMaxOrientedRows")
       .map { v =>
@@ -1677,177 +1613,101 @@ object Graph {
         }
       }.getOrElse(2000000L)
 
-  private[operators] def useCsr(
-      spark: SparkSession, orientedRows: Long): Boolean =
-    triangleAlgo(spark) match {
-      case "csr" =>
-        // forcing csr does NOT bypass the broadcast envelope: a stale
-        // conf pinned on a graph 100× bigger than when it was set
-        // would force-collect the whole adjacency onto the driver and
-        // OOM. Fail soft to the wedge shuffle plan with a warning; the
-        // cap itself stays overridable via csrMaxOrientedRows.
-        val cap = csrMaxOrientedRows(spark)
-        val fits = orientedRows <= cap
-        if (!fits) org.slf4j.LoggerFactory.getLogger("graft.Graph").warn(
-          s"triangleAlgo=csr forced but orientedRows=$orientedRows > " +
-            s"csrMaxOrientedRows=$cap — falling back to the wedge " +
-            "shuffle plan (raise spark.graft.graph.csrMaxOrientedRows " +
-            "to force-broadcast anyway)")
-        fits
-      case "wedge" => false
-      case _       => orientedRows <= csrMaxOrientedRows(spark)
-    }
-
-  /** Grouped-adjacency (CSR-style) triangle counting: orient edges by
-    * (degree, id) as in the wedge path, group each node's oriented
-    * out-neighbors into ONE array row, broadcast that adjacency table,
-    * and close triangles per oriented edge as an array intersection
-    * `N⁺(u) ∩ N⁺(v)` — triangle (u,v,w) (u lowest, w highest in
-    * orientation order) is found exactly once, at its base edge (u,v).
+  /** Triangle enumeration over a symmetric, self-loop-free (src, dst)
+    * edge frame, written once for the whole family: degree → orient
+    * each edge from its smaller (degree, id) endpoint → close. Then
+    * `credit(deg, tri)` builds the caller's result from `deg` (node,
+    * deg) and `tri`, which holds every triangle exactly once as the
+    * oriented triple (u, b, c): u lowest, c highest in orientation
+    * order.
     *
-    * Why this can beat the wedge stream: the work is the same
-    * Σ(d⁺(u)+d⁺(v)) = O(E^1.5) bound, but it runs as tight per-row
-    * array ops instead of W join-machinery rows, and NOTHING of wedge
-    * volume ever moves — the adjacency broadcast packs E longs into N
-    * array rows (~an order denser than a hashed E-row relation, which
-    * is what sank the r12 broadcast device at 1.2M rows), the closing
-    * stage is fully map-side, and the only shuffles are the E-row
-    * adjacency groupBy and the 3T-row credit aggregate (partial-agg
-    * combined map-side). At 100 TB the adjacency table outgrows the
-    * broadcast envelope and the wedge plan is the right one — this
-    * path's value is the (large) mid range where N-array adjacency
-    * fits memory but the wedge stream dominates wall time. */
-  private def triangleCoreCsr(e: DataFrame, edgeHint: Long): DataFrame = {
-    // AMBIENT task counts throughout, no scoping: the closing stage's
-    // work is WEDGE-volume-proportional (Σ d⁺(u)+d⁺(v) per edge) but
-    // runs over the E-row oriented list, so narrowing tasks to
-    // E/250k (the iterative-body heuristic) would starve it — the r12
-    // floors already showed narrowed scope costing on big graphs.
-    // (Ambient planning is also what makes the LAZY return below safe:
-    // unlike the wedge path, no conf scope has to be alive when the
-    // caller's action finally plans the exchanges.)
-    {
-      val deg = graft.CachePool.swap("graph.tri.deg",
-        e.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
-      val orient = graft.CachePool.swap("graph.tri.orient", e
-        .join(deg.select(col("node").as("src"), col("deg").as("ds")), "src")
-        .join(deg.select(col("node").as("dst"), col("deg").as("dd")), "dst")
-        .where(struct(col("ds"), col("src")) < struct(col("dd"), col("dst")))
-        .select(col("src").as("u"), col("dst").as("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-      // adjacency rows SORTED once per group (one cheap N-row pass):
-      // the per-edge close is then a linear two-pointer merge
-      // (graft_sorted_intersect) instead of array_intersect's per-ROW
-      // hash-set build + probe. Long-typed nodes only — other types
-      // keep the unsorted collect + array_intersect (the intersection
-      // SET is identical either way; every consumer below is an
-      // order-invariant count)
-      val longNodes =
-        e.schema.head.dataType == org.apache.spark.sql.types.LongType
-      val adj = graft.CachePool.swap("graph.tri.adj",
-        orient.groupBy(col("u"))
-          .agg((if (longNodes) sort_array(collect_list(col("v")))
-            else collect_list(col("v"))).as("nbrs"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
-      adj.count() // materialize once; both broadcast builds read the cache
-      // INNER join on the v side: an edge whose head has no oriented
-      // out-neighbors can close nothing, so dropping it is exact
-      val closed = orient
-        .join(broadcast(adj), Seq("u"))
-        .join(broadcast(adj.select(col("u").as("v"),
-          col("nbrs").as("nbrs_v"))), Seq("v"))
-        .select(col("u"), col("v"),
-          (if (longNodes) sortedIntersectCol(col("nbrs"), col("nbrs_v"))
-           else array_intersect(col("nbrs"), col("nbrs_v"))).as("ws"))
-        .where(size(col("ws")) > 0)
-      // ONE pass: T triangle rows → 3T node credits → partial-agg'd
-      // count (u and v are in every triangle of their base edge; each
-      // w in exactly one)
-      val perNode = closed
-        .select(col("u"), col("v"), explode(col("ws")).as("w"))
-        .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("tri"))
-      // LAZY result (the adamicAdarImpl discipline): the old eager
-      // `localCheckpoint` materialized every per-node row only for a
-      // top-k caller to re-scan them — dropping it lets q119-style
-      // callers fuse sort/limit into TakeOrdered over the close
-      // pipeline, and the plan dumps show the real close instead of a
-      // bare checkpoint scan. The deg/orient/adj caches the plan
-      // references are generation-tracked in CachePool (the next
-      // triangle call or releaseAll frees them; an evicted cache
-      // recomputes from lineage — correctness unaffected).
-      deg
-        .join(perNode.hint("shuffle_hash"), Seq("node"), "left")
-        .select(col("node"), col("deg"),
-          coalesce(col("tri"), lit(0L)).as("tri"))
+    * The close is picked by size alone. At or below
+    * [[csrMaxOrientedRows]] oriented rows the grouped-adjacency (csr)
+    * close runs: each node's oriented out-neighbours are grouped into
+    * ONE sorted array row, that table is broadcast, and each oriented
+    * edge (u, b) closes as N⁺(u) ∩ N⁺(b). Above it the wedge plan
+    * runs: the oriented list's self-join on the spoke u (the wedge
+    * stream), then a close join on (b, c), both shuffle_hash at the
+    * ambient partition count. The work is the same O(E^1.5) bound;
+    * csr runs it as per-row array merges and never moves wedge-volume
+    * rows (round-13 min-of-8 at sf0.1, 1.2M oriented rows: q119 3.34
+    * → 2.12 s, q129 3.70 → 2.28 s). Counts are integer-exact, so the
+    * side cannot move a bit (parity-pinned in GraphSpec).
+    *
+    * Lifecycle. csr returns a LAZY result, so a top-k caller fuses
+    * into TakeOrdered over the close. Its caches are persisted under
+    * the CachePool tags `graph.<tag>.deg`, `.orient` and `.adj`; each
+    * lives until the next call under the same tag (on either side) or
+    * `CachePool.releaseAll`, and an evicted one recomputes from
+    * lineage. With `keepResult` (for a caller that sorts the whole
+    * result) the csr result is persisted too, under `graph.<tag>.result`:
+    * a full-output sort directly over the lazy close would run the
+    * close's last stage twice, as the range partitioner's sampling pass
+    * runs the child once before the sort pass. Wedge first releases the
+    * tag's csr caches, materializes the result with an eager
+    * `localCheckpoint`, which needs no such cache, and releases its
+    * E-row caches before it returns. */
+  private def orientedTriangles(
+      e: DataFrame, orientedRows: Long, tag: String, keepResult: Boolean)(
+      credit: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val csr = orientedRows <= csrMaxOrientedRows(e.sparkSession)
+    if (!csr) Seq("deg", "orient", "adj", "result")
+      .foreach(n => graft.CachePool.release(s"graph.$tag.$n"))
+    def cache(name: String, df: DataFrame): DataFrame = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      if (csr) graft.CachePool.swap(s"graph.$tag.$name", p) else p
     }
-  }
-
-  private def triangleCoreWedge(e: DataFrame, edgeHint: Long): DataFrame = {
-    val spark = e.sparkSession
-    val ceiling = spark.sessionState.conf.numShufflePartitions
-    val small = edgeHint / 2 <= wedgeBroadcastMaxRows(spark)
-    val pE = if (small) iterPartitions(ceiling, edgeHint) else ceiling
-    withShufflePartitions(spark, pE) {
-    // symmetric feed: degree = out-edge count (NOT the weight total —
-    // triangles are a structural count, so parallel-edge weights are
-    // irrelevant by construction: the edge list is already distinct)
-    val deg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val orient = e
+    // symmetric feed: degree = out-edge count (a structural count; the
+    // edge list is already distinct, so weights are irrelevant)
+    val deg = cache("deg", e.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("deg")))
+    val orient = cache("orient", e
       .join(deg.select(col("node").as("src"), col("deg").as("ds")), "src")
       .join(deg.select(col("node").as("dst"), col("deg").as("dd")), "dst")
       .where(struct(col("ds"), col("src")) < struct(col("dd"), col("dst")))
-      .select(col("src").as("u"), col("dst").as("v"), col("dd").as("dv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // exact wedge volume, small path only (materializes deg + orient
-    // as a side effect); the big path pays no probe job
-    val pW =
-      if (!small) ceiling
-      else {
-        val wedgeRows = orient.groupBy("u").agg(count(lit(1)).as("d"))
-          .agg(coalesce(sum(col("d") * (col("d") - 1) / 2), lit(0L))
-            .cast("long"))
-          .head.getLong(0)
-        iterPartitions(ceiling, math.max(edgeHint, wedgeRows))
-      }
-    val out = withShufflePartitions(spark, pW) {
-      // The ONE expensive exchange in this plan is the O(E^1.5)-row
-      // wedge stream feeding the triangle-close join on (b,c). On the
-      // small path the E/2-row close side broadcasts instead, so wedge
-      // generation, the close, and the partial count fuse into one
-      // map-side codegen stage with no wedge exchange at all. The
-      // wedge SELF-join stays shuffle_hash in both modes — it only
-      // exchanges 2·(E/2) oriented rows, and hashing the E-row list
-      // while streaming wedges past it beats sort-merge (which would
-      // sort the wedge stream) by ~2× measured.
-      val wedges = orient.select(col("u"), col("v").as("b"), col("dv").as("db"))
-        .join(orient.select(col("u"), col("v").as("c"), col("dv").as("dc"))
-          .hint("shuffle_hash"), "u")
-        .where(struct(col("db"), col("b")) < struct(col("dc"), col("c")))
-        .select(col("u"), col("b"), col("c"))
-      val closeSide = orient.select(col("u").as("b"), col("v").as("c"))
-      val tri = wedges
-        .join(if (small) broadcast(closeSide)
-          else closeSide.hint("shuffle_hash"), Seq("b", "c"))
-      val perNode = tri
-        .select(explode(array(col("u"), col("b"), col("c"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("tri"))
-      // materialize the N-row result, then release the E-row caches —
-      // the returned frame reads its own checkpoint blocks (pinned while
-      // reachable, reclaimed by the ContextCleaner), not the caches
-      deg
-        .join(perNode.hint("shuffle_hash"), Seq("node"), "left")
-        .select(col("node"), col("deg"),
-          coalesce(col("tri"), lit(0L)).as("tri"))
-        .localCheckpoint(eager = true)
-    }
-    orient.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    out
+      // the head's degree orders the wedge's two legs; csr needs none
+      .select(Seq(col("src").as("u"), col("dst").as("v")) ++
+        (if (csr) Nil else Seq(col("dd").as("dv"))): _*))
+    val tri = if (csr) {
+      // adjacency rows sorted once per group: the per-edge close is a
+      // linear two-pointer merge (graft_sorted_intersect) instead of
+      // array_intersect's per-row hash set. Other node types keep
+      // array_intersect, which yields the same intersection set.
+      val longNodes =
+        e.schema.head.dataType == org.apache.spark.sql.types.LongType
+      val adj = cache("adj", orient.groupBy(col("u"))
+        .agg((if (longNodes) sort_array(collect_list(col("v")))
+          else collect_list(col("v"))).as("nbrs")))
+      adj.count() // materialize once; both broadcast builds read the cache
+      // inner join on the head: an edge whose head has no oriented
+      // out-neighbours closes nothing
+      orient
+        .join(broadcast(adj), Seq("u"))
+        .join(broadcast(adj.select(col("u").as("v"),
+          col("nbrs").as("nbrs_v"))), Seq("v"))
+        .select(col("u"), col("v").as("b"),
+          explode(if (longNodes)
+            sortedIntersectCol(col("nbrs"), col("nbrs_v"))
+          else array_intersect(col("nbrs"), col("nbrs_v"))).as("c"))
+    } else orient
+      // shuffle_hash self-join: hashing the E-row list while streaming
+      // wedges past it beats sort-merge (which sorts the stream) ~2×
+      .select(col("u"), col("v").as("b"), col("dv").as("db"))
+      .join(orient.select(col("u"), col("v").as("c"), col("dv").as("dc"))
+        .hint("shuffle_hash"), "u")
+      .where(struct(col("db"), col("b")) < struct(col("dc"), col("c")))
+      .select(col("u"), col("b"), col("c"))
+      .join(orient.select(col("u").as("b"), col("v").as("c"))
+        .hint("shuffle_hash"), Seq("b", "c"))
+    val out = credit(deg, tri)
+    if (csr) { if (keepResult) cache("result", out) else out }
+    else {
+      // the checkpoint blocks are pinned while the result is reachable
+      // and reclaimed by the ContextCleaner, so the caches can go
+      val done = out.localCheckpoint(eager = true)
+      orient.unpersist(blocking = false)
+      deg.unpersist(blocking = false)
+      done
     }
   }
 
@@ -1885,14 +1745,13 @@ object Graph {
       .select("src", "dst")
     val sym = pairs.union(
       pairs.select(col("dst").as("src"), col("src").as("dst")))
-    // The size hint is the EXPECTED sampled edge count, not the actual
-    // sample cardinality — the gate is therefore probabilistic for
-    // DOULION (a sample landing above the estimate broadcasts a
-    // slightly larger relation). A pure performance heuristic: results
-    // stay exact either way (parity-pinned plans), and counting the
+    // The size hint is the EXPECTED sampled oriented-row count, not
+    // the sample's cardinality, so the csr pick is probabilistic here
+    // (a sample landing above the estimate broadcasts a slightly larger
+    // adjacency). Results are exact on either side, and counting the
     // sample first would cost an extra job per estimate call.
-    val perNode = triangleCore(sym,
-      math.max(1L, gt.numEdges * keepPct / 100))
+    val perNode = triangleCore(sym, gt.numEdges * keepPct / 200,
+      keepResult = false)
     val scale = 1000000.0 / (keepPct.toLong * keepPct * keepPct).toDouble
     perNode
       .agg(
@@ -2244,73 +2103,17 @@ object Graph {
     *
     * Requires a symmetric double-edged feed. Returns one row per
     * undirected edge: (src, dst, deg_src, deg_dst, common, jac) with
-    * src < dst, ordered by (jac DESC, src, dst). */
+    * src < dst, ordered by (jac DESC, src, dst). The enumeration, its
+    * `graph.ej.*` caches and the kept unsorted result are
+    * [[orientedTriangles]]'. */
   private[operators] def edgeJaccardImpl(gt: GraphTable): DataFrame = {
     require(gt.numNodes > 0, "graph has no nodes")
     require(gt.numDangling == 0,
       "edgeJaccard requires a symmetric double-edged feed " +
         s"(found ${gt.numDangling} sink nodes)")
-    val spark = gt.edges.sparkSession
-    val ceiling = spark.sessionState.conf.numShufflePartitions
     val e = gt.edges.where(col("src") =!= col("dst")).select("src", "dst")
-    // small-graph path vs plain ambient shuffle_hash plan — the same
-    // gate, probe, and scoping rationale as [[triangleCore]]
-    val small = gt.numEdges / 2 <= wedgeBroadcastMaxRows(spark)
-    val pE = if (small) iterPartitions(ceiling, gt.numEdges) else ceiling
-    withShufflePartitions(spark, pE) {
-    val deg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val orient2 = e
-      .join(deg.select(col("node").as("src"), col("deg").as("ds")), "src")
-      .join(deg.select(col("node").as("dst"), col("deg").as("dd")), "dst")
-      .where(struct(col("ds"), col("src")) < struct(col("dd"), col("dst")))
-      .select(col("src").as("u"), col("dst").as("v"), col("dd").as("dv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val csr = useCsr(spark, gt.numEdges / 2)
-    val pW =
-      if (!small || csr) ceiling
-      else {
-        val wedgeRows = orient2.groupBy("u").agg(count(lit(1)).as("d"))
-          .agg(coalesce(sum(col("d") * (col("d") - 1) / 2), lit(0L))
-            .cast("long"))
-          .head.getLong(0)
-        iterPartitions(ceiling, math.max(gt.numEdges, wedgeRows))
-      }
-    // csr: grouped-adjacency close ([[triangleCoreCsr]] rationale) —
-    // same (u, b=middle, c=top) triangle triples, so the per-edge
-    // explode+agg below is shared verbatim between the two algorithms
-    var adjToRelease: Option[DataFrame] = None
-    val out = withShufflePartitions(spark, pW) {
-      val closeSide = orient2.select(col("u").as("b"), col("v").as("c"))
-      val tri = if (csr) {
-        // sorted adjacency + linear-merge intersect for long-typed
-        // nodes (the [[triangleCoreCsr]] device); set-identical
-        val longNodes = gt.edges.schema.head.dataType ==
-          org.apache.spark.sql.types.LongType
-        val adj = graft.CachePool.swap("graph.ej.adj",
-          orient2.groupBy(col("u"))
-            .agg((if (longNodes) sort_array(collect_list(col("v")))
-              else collect_list(col("v"))).as("nbrs"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-        adj.count()
-        adjToRelease = Some(adj)
-        orient2
-          .join(broadcast(adj), Seq("u"))
-          .join(broadcast(adj.select(col("u").as("v"),
-            col("nbrs").as("nbrs_v"))), Seq("v"))
-          .select(col("u"), col("v").as("b"),
-            explode(if (longNodes)
-              sortedIntersectCol(col("nbrs"), col("nbrs_v"))
-            else array_intersect(col("nbrs"), col("nbrs_v"))).as("c"))
-      } else orient2
-        .select(col("u"), col("v").as("b"), col("dv").as("db"))
-        .join(orient2.select(col("u"), col("v").as("c"), col("dv").as("dc"))
-          .hint("shuffle_hash"), "u")
-        .where(struct(col("db"), col("b")) < struct(col("dc"), col("c")))
-        .select(col("u"), col("b"), col("c"))
-        .join(if (small) broadcast(closeSide)
-          else closeSide.hint("shuffle_hash"), Seq("b", "c"))
+    orientedTriangles(e, gt.numEdges / 2, "ej", keepResult = true) {
+        (deg, tri) =>
       // each triangle (u,b,c) lies on its three undirected edges
       val perEdge = tri
         .select(explode(array(
@@ -2322,42 +2125,18 @@ object Graph {
             greatest(col("b"), col("c")).as("z")))).as("k"))
         .select(col("k.a").as("src"), col("k.z").as("dst"))
         .groupBy("src", "dst").agg(count(lit(1)).as("common"))
-      def degSide(df: DataFrame): DataFrame =
-        if (small) broadcast(df) else df
-      val res = e.where(col("src") < col("dst"))
-        .join(degSide(deg.select(col("node").as("src"),
-          col("deg").as("deg_src"))), "src")
-        .join(degSide(deg.select(col("node").as("dst"),
-          col("deg").as("deg_dst"))), "dst")
+      e.where(col("src") < col("dst"))
+        .join(deg.select(col("node").as("src"), col("deg").as("deg_src")),
+          "src")
+        .join(deg.select(col("node").as("dst"), col("deg").as("deg_dst")),
+          "dst")
         .join(perEdge.hint("shuffle_hash"), Seq("src", "dst"), "left")
         .select(col("src"), col("dst"), col("deg_src"), col("deg_dst"),
           coalesce(col("common"), lit(0L)).as("common"))
         .withColumn("jac",
           col("common").cast("double") /
             (col("deg_src") + col("deg_dst") - col("common")))
-      // csr: LAZY result (the triangleCoreCsr discipline) — csr plans
-      // at ambient partitions, so no conf scope needs to be alive when
-      // the caller's top-k finally plans; the caches the plan
-      // references are generation-tracked below. The result itself is
-      // persisted (lazy, CachePool-tracked) for the sort below: a
-      // full-output consumer would otherwise run its last stage twice
-      // (the [[persistedTriangleCore]] hazard). Wedge: keep the eager
-      // checkpoint — its exchanges are pW-scoped and must plan inside
-      // this scope, and the E-row caches are released right after.
-      if (csr) graft.CachePool.swap("graph.ej.result",
-        res.persist(StorageLevel.MEMORY_AND_DISK))
-      else res.localCheckpoint(eager = true)
-    }
-    if (csr) {
-      graft.CachePool.swap("graph.ej.deg", deg)
-      graft.CachePool.swap("graph.ej.orient", orient2)
-    } else {
-      adjToRelease.foreach(_.unpersist(blocking = false))
-      orient2.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-    }
-    out.orderBy(desc("jac"), col("src"), col("dst"))
-    }
+    }.orderBy(desc("jac"), col("src"), col("dst"))
   }
 
   /** Adamic-Adar link prediction over a symmetric double-edged feed:

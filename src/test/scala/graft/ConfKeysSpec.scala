@@ -37,6 +37,6 @@ class ConfKeysSpec extends AnyFunSuite {
       .toSet
 
     assert(inCode === inTable)
-    assert(inTable.size === 10)
+    assert(inTable.size === 8)
   }
 }

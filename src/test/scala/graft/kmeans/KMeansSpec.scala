@@ -275,6 +275,19 @@ class KMeansSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))
   }
 
+  test("a distributed fit leaves none of its rounds' codebook " +
+    "broadcasts in the driver's block manager") {
+    val sc = spark.sparkContext
+    // a round's codebook: (flat k×dim centroids, half-gap radii)
+    def codebooks = org.apache.spark.graftshim.driverBroadcastValues(sc)
+      .collect { case (id, (_: Array[Double], _)) => id }.toSet
+    val before = codebooks
+    val model = KMeans.fit(blobs(3000, 4, 3, 1.0, 9), KMeansParams(k = 3,
+      threshold = -1.0, maxLoop = 6, seed = 2L), shortcut = true, 0L, 0L)
+    assert(model.iterations === 5)
+    assert(codebooks -- before === Set.empty[Long])
+  }
+
   /** `body`, with `df` cached in memory and built; uncached after. */
   private def whileCached[T](df: org.apache.spark.sql.DataFrame)(body: => T): T = {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY).count()

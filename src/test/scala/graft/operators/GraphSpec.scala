@@ -951,69 +951,104 @@ class GraphSpec extends SparkSpec {
     } finally gt.unpersist()
   }
 
-  test("wedge family: the size-gated broadcast close and the " +
-      "shuffle_hash form are bit-identical") {
-    import spark.implicits._
-    val sym = randomSym(40, 150, seed = 7L)
-    val gt = Graph.buildGraphTable(
-      sym.toDF("src", "dst").repartition(3), "src", "dst",
-      assumeDistinct = true)
-    val pairs = Seq((1L, 10L), (2L, 10L), (3L, 10L), (1L, 11L),
-      (2L, 11L), (4L, 12L), (1L, 12L), (4L, 13L)).toDF("c", "p")
-    val key = "spark.graft.graph.wedgeBroadcastMaxRows"
-    def runAll() = (
-      gt.triangleCounts().collect().toSeq,
-      gt.edgeJaccard().collect().toSeq,
-      gt.adamicAdar(maxDegree = 10).collect().toSeq,
-      Graph.bipartiteProject(pairs, "c", "p", maxRightDegree = 3)
-        .orderBy("src", "dst").collect().toSeq)
+  /** Runs `f` on each side of `csrMaxOrientedRows`: the default (csr
+    * for every graph here), then 0 (the wedge plan for any graph with
+    * an edge). */
+  private def onBothTriangleSides[A](f: => A): (A, A) = {
+    val key = "spark.graft.graph.csrMaxOrientedRows"
     try {
-      // force the wedge algorithm: under the default auto selector
-      // these tiny graphs resolve to csr, which ignores this gate
-      spark.conf.set("spark.graft.graph.triangleAlgo", "wedge")
-      spark.conf.set(key, "0") // every edge count exceeds the gate
-      val viaShuffle = runAll()
-      spark.conf.unset(key) // default gate: these tiny graphs broadcast
-      val viaBroadcast = runAll()
-      assert(viaBroadcast === viaShuffle)
-    } finally {
-      spark.conf.unset("spark.graft.graph.triangleAlgo")
-      spark.conf.unset(key)
-      gt.unpersist()
-    }
+      val viaCsr = f
+      spark.conf.set(key, "0")
+      (viaCsr, f)
+    } finally spark.conf.unset(key)
   }
 
-  test("triangle algo: csr (grouped-adjacency intersect) is " +
-      "bit-identical to the wedge stream, both gate sides") {
+  /** The triangle family's results on `gt`, collected in order. */
+  private def triangleFamily(gt: GraphTable) = (
+    gt.triangleCounts().collect().toSeq,
+    gt.clusteringCoefficient().collect().toSeq,
+    gt.edgeJaccard().collect().toSeq,
+    Seq(30, 100).map(p =>
+      gt.triangleCountEstimate(keepPct = p, seed = 5L).head()))
+
+  test("triangle family: the csr and wedge sides of csrMaxOrientedRows " +
+      "both match the brute-force replica") {
     import spark.implicits._
-    val sym = randomSym(40, 150, seed = 11L)
+    val sym = randomSym(40, 150, seed = 7L)
+    val adj = sym.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val tri = bruteTriangles(sym)
+    val counts = adj.keys.toSeq.sorted.map(v => (v, adj(v).size.toLong, tri(v)))
+    val cc = counts.map { case (v, d, t) =>
+      (v, d, t, if (d < 2) 0.0 else t * 2.0 / (d * (d - 1))) }
+    val jac = sym.filter(e => e._1 < e._2).map { case (u, v) =>
+      val common = (adj(u) & adj(v)).size.toLong
+      (u, v, adj(u).size.toLong, adj(v).size.toLong, common,
+        common.toDouble / (adj(u).size + adj(v).size - common))
+    }.sortBy(r => (-r._6, r._1, r._2))
+    // DOULION: the seeded-md5 coin replayed, then the exact count
+    def estimate(keepPct: Int, seed: Long): (Long, Long, Double) = {
+      val kept = sym.filter { case (s, d) =>
+        val md5 = java.security.MessageDigest.getInstance("MD5")
+          .digest(s"$seed-$s-$d".getBytes("UTF-8"))
+          .map(b => f"${b & 0xff}%02x").mkString
+        s < d && java.lang.Long.parseLong(md5.take(8), 16) % 100 < keepPct
+      }
+      val t = bruteTriangles(kept ++ kept.map(_.swap)).values.sum / 3
+      (kept.size.toLong, t, t.toDouble *
+        (1000000.0 / (keepPct.toLong * keepPct * keepPct).toDouble))
+    }
+    val est = Seq(30, 100).map(estimate(_, 5L))
+    assert(est(1) === ((sym.size / 2).toLong, tri.values.sum / 3,
+      (tri.values.sum / 3).toDouble))
     val gt = Graph.buildGraphTable(
       sym.toDF("src", "dst").repartition(3), "src", "dst",
       assumeDistinct = true)
-    val algoKey = "spark.graft.graph.triangleAlgo"
-    val gateKey = "spark.graft.graph.wedgeBroadcastMaxRows"
-    def runBoth() = (
-      gt.triangleCounts().collect().toSeq,
-      gt.clusteringCoefficient().collect().toSeq,
-      gt.edgeJaccard().collect().toSeq)
     try {
-      val viaAuto = runBoth() // default: auto resolves to csr here
-      spark.conf.set(algoKey, "wedge")
-      val viaWedge = runBoth() // forced wedge, small-graph device
-      spark.conf.set(gateKey, "0")
-      val viaWedgeBig = runBoth() // forced wedge, shuffle_hash form
-      spark.conf.unset(gateKey)
-      spark.conf.set(algoKey, "csr")
-      val viaCsr = runBoth() // forced csr
-      assert(viaCsr === viaAuto)
-      assert(viaCsr === viaWedge)
-      assert(viaCsr === viaWedgeBig)
-      spark.conf.set(algoKey, "nonsense")
+      val (viaCsr, viaWedge) = onBothTriangleSides(triangleFamily(gt))
+      Seq("csr" -> viaCsr, "wedge" -> viaWedge).foreach {
+        case (side, (gotCounts, gotCc, gotJac, gotEst)) =>
+          assert(gotCounts.map(r => (r.getLong(0), r.getLong(1),
+            r.getLong(2))) === counts, side)
+          assert(gotCc.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getDouble(3))) === cc, side)
+          assert(gotJac.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getDouble(5))) === jac, side)
+          assert(gotEst.map(r => (r.getLong(0), r.getLong(1),
+            r.getDouble(2))) === est, side)
+      }
+    } finally gt.unpersist()
+  }
+
+  test("triangle algo: the csr and wedge sides of csrMaxOrientedRows " +
+      "are bit-identical for long and int node ids") {
+    import spark.implicits._
+    val sym = randomSym(40, 150, seed = 11L)
+    // int ids take csr's array_intersect close instead of the sorted merge
+    Seq(sym.toDF("src", "dst"),
+        sym.map { case (a, b) => (a.toInt, b.toInt) }.toDF("src", "dst"))
+      .foreach { edges =>
+        val gt = Graph.buildGraphTable(edges.repartition(3), "src", "dst",
+          assumeDistinct = true)
+        try {
+          graft.CachePool.releaseAll()
+          // a wedge call releases what a csr call left under its tags
+          val ((viaCsr, csrLive), (viaWedge, wedgeLive)) =
+            onBothTriangleSides(
+              (triangleFamily(gt), graft.CachePool.liveCount))
+          assert(viaCsr === viaWedge, edges.schema.head.dataType)
+          assert(viaCsr._1.nonEmpty && viaCsr._3.nonEmpty)
+          assert(csrLive > 0 && wedgeLive === 0, (csrLive, wedgeLive))
+        } finally gt.unpersist()
+      }
+    val key = "spark.graft.graph.csrMaxOrientedRows"
+    val gt = Graph.buildGraphTable(sym.toDF("src", "dst"), "src", "dst",
+      assumeDistinct = true)
+    try {
+      spark.conf.set(key, "lots")
       val e = intercept[IllegalArgumentException](gt.triangleCounts())
-      assert(e.getMessage.contains(algoKey))
+      assert(e.getMessage.contains(key))
     } finally {
-      spark.conf.unset(algoKey)
-      spark.conf.unset(gateKey)
+      spark.conf.unset(key)
       gt.unpersist()
     }
   }
@@ -1051,25 +1086,23 @@ class GraphSpec extends SparkSpec {
       } finally spark.sparkContext.removeSparkListener(jl)
       (written.get(), read.get())
     }
-    val algoKey = "spark.graft.graph.triangleAlgo"
-    try {
-      spark.conf.set(algoKey, "csr")
-      val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-        "triangleCounts" -> (() => gt.triangleCounts()),
-        "clusteringCoefficient" -> (() => gt.clusteringCoefficient()),
-        "edgeJaccard" -> (() => gt.edgeJaccard()))
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "triangleCounts" -> (() => gt.triangleCounts()),
+      "clusteringCoefficient" -> (() => gt.clusteringCoefficient()),
+      "edgeJaccard" -> (() => gt.edgeJaccard()))
+    // both sides: csr's lazy close and wedge's eager checkpoint
+    try onBothTriangleSides {
       calls.foreach { case (name, call) =>
         val df = call() // the builder's own eager jobs run here
         var rows = 0
         val (written, read) = shuffleRecords { rows = df.collect().length }
-        assert(rows > 0, name)
-        assert(written > 0, name)
-        assert(read === written, name)
+        val side = spark.conf.getOption(
+          "spark.graft.graph.csrMaxOrientedRows").fold("csr")(_ => "wedge")
+        assert(rows > 0, s"$name $side")
+        assert(written > 0, s"$name $side")
+        assert(read === written, s"$name $side")
       }
-    } finally {
-      spark.conf.unset(algoKey)
-      gt.unpersist()
-    }
+    } finally gt.unpersist()
   }
 
   test("clusteringCoefficient: complete graph 1.0, path graph 0.0") {
@@ -1780,6 +1813,15 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(got === exp)
+    // left ids >= 2^31 fail the packed pair kernel's id-range probe and
+    // take the self-join form, which must give the same pairs and weights
+    val big = 1L << 31
+    val gotSelfJoin = Graph.bipartiteProject(
+        all.map { case (l, r) => (l + big, r) }.toDF("l", "r").repartition(3),
+        "l", "r", maxRightDegree = cap)
+      .collect().map(r => (r.getLong(0) - big, r.getLong(1) - big,
+        r.getLong(2))).toSet
+    assert(gotSelfJoin === exp)
     assert(intercept[IllegalArgumentException](
       Graph.bipartiteProject(all.toDF("l", "r"), "l", "r", 1))
       .getMessage.contains("maxRightDegree"))

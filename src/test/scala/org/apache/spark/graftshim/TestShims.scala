@@ -12,4 +12,16 @@ package object graftshim {
     * draining the bus is sufficient, not racy. */
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** The value of every broadcast variable the driver's block manager
+    * still holds, by broadcast id. `Broadcast.unpersist` keeps the
+    * driver's copy (in `local` mode the only one); `destroy` or the
+    * ContextCleaner drops it. */
+  def driverBroadcastValues(sc: SparkContext): Map[Long, Any] = {
+    val bm = sc.env.blockManager
+    bm.getMatchingBlockIds(_.isBroadcast).collect {
+      case id @ org.apache.spark.storage.BroadcastBlockId(bid, "") =>
+        bm.getLocalValues(id).map(r => bid -> r.data.toList.headOption.orNull)
+    }.flatten.toMap
+  }
 }

@@ -27,6 +27,20 @@ against the metric's BENCHMARK.json `bound`:
 
 Exits 1, naming the runs, when any run fails or reports failed
 operations; the summary then covers the pairs whose runs completed.
+
+    python3 tools/ab.py --parent REV --lines q119_triangles,q160_bipartite_project \
+        --sf /path/to/sf0.1 --reps 5
+
+Same-window A/B of catalogue lines, which perfbench does not run. Each
+tree is compiled once (`sbt compile`, which also prints its runtime
+classpath and JVM options); then, REPS times, the parent's and the
+change's `graft.Profile queries SF 4 LINES` run in fresh JVMs, the
+parent first in odd reps. The first in-JVM pass warms the JVM and
+builds the artifacts and is dropped; a rep's time for a line is the
+minimum of the other three passes, as graft.Bench takes a minimum.
+Prints each line's median and quartiles per side, the change/parent
+ratio of every rep and the number of reps the change is faster; exits
+1 when a run fails or misses a line.
 """
 import argparse
 import json
@@ -40,6 +54,8 @@ import tarfile
 import tempfile
 
 STEAL = re.compile(r"host steal ([0-9.]+)%")
+PROF = re.compile(r"^\[prof\] (\S+): ((?:[0-9.]+ ?)+)$")
+TIMED_PASSES = 3  # per JVM in --lines mode, after one warm-up pass
 
 
 def quartiles(xs):
@@ -116,32 +132,122 @@ def run_once(tree, build_dir, workload, seed, seconds):
     return metrics, res["failed"], steal, ""
 
 
+def parse_prof(stdout):
+    """{line: [seconds per in-JVM pass]} from `graft.Profile queries`
+    output; its `[prof] artifact NAME: Ns` build-cost lines are skipped."""
+    out = {}
+    for ln in stdout.splitlines():
+        m = PROF.match(ln.strip())
+        if m:
+            out[m.group(1)] = [float(t) for t in m.group(2).split()]
+    return out
+
+
+def parse_sbt_runtime(stdout):
+    """(classpath, JVM options) from `sbt --batch compile "export
+    Runtime/fullClasspath" "show javaOptions"` output."""
+    cp = [ln for ln in stdout.splitlines()
+          if ln.startswith("/") and "scala-2.13/classes" in ln]
+    opts = [ln[len("[info] * "):] for ln in stdout.splitlines()
+            if ln.startswith("[info] * ")]
+    if not cp:
+        raise RuntimeError("no runtime classpath in sbt output:\n" + stdout[-2000:])
+    return cp[-1], opts
+
+
+def unpack_parent(root, rev, tmp):
+    """`git archive` of `rev` unpacked into tmp/parent; returns its path."""
+    parent = os.path.join(tmp, "parent")
+    os.makedirs(parent)
+    archive = os.path.join(tmp, "parent.tar")
+    subprocess.run(["git", "archive", "-o", archive, rev], cwd=root, check=True)
+    with tarfile.open(archive) as t:
+        if hasattr(tarfile, "data_filter"):
+            t.extractall(parent, filter="data")
+        else:
+            t.extractall(parent)
+    os.remove(archive)
+    return parent
+
+
+def lines_ab(a, root, tmp):
+    """The --lines mode (see the module doc); returns the failed runs."""
+    lines = [q for q in a.lines.split(",") if q]
+    env = dict(os.environ, COURSIER_MODE="offline")
+    runtime = {}
+    for side, tree in (("parent", unpack_parent(root, a.parent, tmp)),
+                       ("change", root)):
+        proc = subprocess.run(
+            ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
+             "export Runtime/fullClasspath", "show javaOptions"],
+            cwd=tree, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
+            text=True, stdin=subprocess.DEVNULL, check=True)
+        runtime[side] = (tree, *parse_sbt_runtime(proc.stdout))
+    pairs, failures = [], []
+    for rep in range(1, a.reps + 1):
+        order = ["parent", "change"] if rep % 2 else ["change", "parent"]
+        got = {}
+        for side in order:
+            tree, cp, opts = runtime[side]
+            proc = subprocess.run(
+                ["java", *opts, "-cp", cp, "graft.Profile", "queries", a.sf,
+                 str(1 + TIMED_PASSES), *lines],
+                cwd=tree, env=env, stdout=subprocess.PIPE,
+                stderr=subprocess.PIPE, text=True, stdin=subprocess.DEVNULL)
+            times = parse_prof(proc.stdout)
+            missing = [q for q in lines
+                       if len(times.get(q, [])) < 1 + TIMED_PASSES]
+            if proc.returncode != 0 or missing:
+                failures.append(f"rep {rep} {side}: exit {proc.returncode}, "
+                                f"missing {missing}: {proc.stderr[-500:]}")
+                continue
+            got[side] = {q: min(times[q][1:]) for q in lines}
+            print(f"rep {rep} {side}: " + " ".join(
+                f"{q} {got[side][q]:.2f}" for q in lines), flush=True)
+        if len(got) == 2:
+            pairs.append((got["parent"], got["change"]))
+    for q, s in summarize(pairs, {q: "lower" for q in lines}).items():
+        p, c = s["parent"], s["change"]
+        print(f"{q}: parent {p[1]:.2f} s (IQR {p[0]:.2f}-{p[2]:.2f}) -> change "
+              f"{c[1]:.2f} s (IQR {c[0]:.2f}-{c[2]:.2f}), "
+              f"{(c[1] / p[1] - 1) * 100:+.1f} %; change faster in "
+              f"{s['wins']}/{s['pairs']}; ratios "
+              + " ".join(f"{r:.3f}" for r in s["ratios"]))
+    return failures
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--parent", required=True)
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--workload")
+    ap.add_argument("--pairs", type=int)
     ap.add_argument("--seconds", type=float, default=6)
+    ap.add_argument("--lines", help="comma-separated catalogue lines")
+    ap.add_argument("--sf", help="scale-factor data directory (--lines)")
+    ap.add_argument("--reps", type=int, default=5)
     a = ap.parse_args()
+    if a.lines and not a.sf:
+        ap.error("--lines needs --sf")
+    if not a.lines and (not a.workload or not a.pairs):
+        ap.error("give --workload and --pairs, or --lines and --sf")
 
     root = os.getcwd()
+    tmp = tempfile.mkdtemp(prefix="ab-")
+    if a.lines:
+        try:
+            failures = lines_ab(a, root, tmp)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        if failures:
+            print("FAILED runs:\n  " + "\n  ".join(failures), file=sys.stderr)
+            sys.exit(1)
+        return
     with open(os.path.join(root, "BENCHMARK.json")) as f:
         end_to_end = json.load(f)["end_to_end"]
     better = {m["name"]: m["better"] for m in end_to_end}
     bounds = {m["name"]: m["bound"] for m in end_to_end}
-    tmp = tempfile.mkdtemp(prefix="ab-")
     try:
-        parent = os.path.join(tmp, "parent")
-        os.makedirs(parent)
-        archive = os.path.join(tmp, "parent.tar")
-        subprocess.run(["git", "archive", "-o", archive, a.parent],
-                       cwd=root, check=True)
-        with tarfile.open(archive) as t:
-            if hasattr(tarfile, "data_filter"):
-                t.extractall(parent, filter="data")
-            else:
-                t.extractall(parent)
-        os.remove(archive)
+        parent = unpack_parent(root, a.parent, tmp)
         trees = {"parent": (parent, os.path.join(tmp, "build-parent")),
                  "change": (root, os.path.join(tmp, "build-change"))}
         pairs = []

@@ -74,5 +74,35 @@ class RunFailureTest(unittest.TestCase):
                          "pair 3 parent: 4 failed operations")
 
 
+class ParseTest(unittest.TestCase):
+    def test_prof_lines(self):
+        out = "\n".join([
+            "WARN some spark noise",
+            "[prof] q119_triangles: 71.62 0.82 0.80",
+            "[prof] q160_bipartite_project: 5.54",
+            "[prof] artifact copurchase: 12.3s",
+            "[prof] q1: not a time",
+        ])
+        self.assertEqual(ab.parse_prof(out), {
+            "q119_triangles": [71.62, 0.82, 0.80],
+            "q160_bipartite_project": [5.54]})
+        self.assertEqual(ab.parse_prof(""), {})
+
+    def test_sbt_runtime(self):
+        out = "\n".join([
+            "[info] welcome to sbt 1.10.0",
+            "/t/target/scala-2.13/classes:/lib/a.jar:/lib/b.jar",
+            "[info] * --add-opens",
+            "[info] * java.base/java.lang=ALL-UNNAMED",
+            "[info] * -Xmx4g",
+        ])
+        cp, opts = ab.parse_sbt_runtime(out)
+        self.assertEqual(cp, "/t/target/scala-2.13/classes:/lib/a.jar:"
+                         "/lib/b.jar")
+        self.assertEqual(opts, ["--add-opens", "java.base/java.lang=ALL-UNNAMED", "-Xmx4g"])
+        with self.assertRaises(RuntimeError):
+            ab.parse_sbt_runtime("[info] * -Xmx4g")
+
+
 if __name__ == "__main__":
     unittest.main()
