@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim
 
+import graft.ExactMerge
 import graft.functions.GuessArgmin
 import graft.functions.VectorFunctions._
 
@@ -134,7 +135,7 @@ final case class KMeansModel(
   * slice's cells are lifted to exact `BigDecimal`s for the merge. Exact
   * addition is associative, so the merged sum is independent of merge
   * ORDER and merge SHAPE — the one task's fold, the driver's sequential
-  * fold and the gated `treeReduce` below are bit-identical by
+  * fold and the `treeReduce` below are bit-identical by
   * construction (the PageRank DECIMAL device, applied to the k×(dim+1)
   * partial cells), and the result is bit-stable across runs (a parallel
   * `sum()` over raw doubles is not). Each merged cell is converted to
@@ -148,25 +149,12 @@ final case class KMeansModel(
   * iterations. Divergence (documented, SURVEY §7.4.3): an empty cluster
   * keeps its previous centroid instead of NPE-ing the driver.
   *
-  * At scale: a 1000-executor run returns k×(dim+1) cells per slice to
-  * the driver (tens of MB at 10k slices). When k×dim×P outgrows the
-  * driver envelope the loop swaps the `collect` for a 2-level
-  * `treeReduce` — executors pre-merge partials so the driver receives
-  * ONE k×(dim+1) table per round instead of P of them. Gate:
-  * `spark.graft.kmeans.treeReducePartitions` (default 1024 slices —
-  * below it the extra treeReduce stage costs more than it saves; at 10k+
-  * slices it bounds driver ingress). The per-slice fold is unchanged and
-  * the exact-cell merge makes the two paths bit-identical (KMeansSpec
-  * pins it).
+  * At scale: above 1024 slices the partials merge in a 2-level
+  * `treeReduce` ([[graft.ExactMerge]]), so the driver receives about
+  * √P tables per round instead of P; the exact-cell merge makes it
+  * bit-identical to the collect fold (KMeansSpec pins it).
   */
 object KMeans {
-
-  /** Partition count above which [[fit]]'s per-round partial merge
-    * runs as a 2-level `treeReduce` instead of a driver `collect`.
-    * Override with `spark.graft.kmeans.treeReducePartitions`. */
-  private def treeReducePartitions(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.kmeans.treeReducePartitions")
-      .map(_.toInt).getOrElse(1024)
 
   /** The internal rows of `featuresCol` cast to `array<float>`, in the
     * caller's partitioning: no external `Row`, no boxed floats. */
@@ -253,11 +241,13 @@ object KMeans {
     * `maxTaskFloats` packed floats by the cache's row count: any other
     * input would run its scan, parse or filter serially in the one
     * task. It hands back in round 1 once that round's projected scans
-    * pass `maxRoundProducts` products. */
+    * pass `maxRoundProducts` products. The distributed loop's partials
+    * merge in a `treeReduce` above `treeAbove` slices. */
   private[kmeans] def fit(
       df: DataFrame, params: KMeansParams, shortcut: Boolean,
       maxTaskFloats: Long = OneTaskFloats,
-      maxRoundProducts: Long = OneTaskProducts): KMeansModel = {
+      maxRoundProducts: Long = OneTaskProducts,
+      treeAbove: Int = ExactMerge.TreeAbove): KMeansModel = {
     val spark = df.sparkSession
     val k = params.k
     val init = params.initCentroids
@@ -293,7 +283,8 @@ object KMeans {
           init, params, dim, numSlices, shortcut, maxRoundProducts))
       }
       .getOrElse(
-        distributedLoop(spark, keyed, numSlices, init, params, dim, shortcut))
+        distributedLoop(spark, keyed, numSlices, init, params, dim, shortcut,
+          treeAbove))
   }
 
   /** The Lloyd loop of both paths: from `init`, at most `maxLoop − 1`
@@ -471,9 +462,8 @@ object KMeans {
   private def distributedLoop(
       spark: SparkSession, keyed: RDD[((Int, Int), Array[Float])],
       numSlices: Int, init: Array[Array[Float]], params: KMeansParams,
-      dim: Int, shortcut: Boolean): KMeansModel = {
+      dim: Int, shortcut: Boolean, treeAbove: Int): KMeansModel = {
     val k = params.k
-    val treeGate = treeReducePartitions(spark)
     // Generation 0 pairs each chunk with no picks yet; the rebalancing
     // shuffle sorts each slice by (s, c).
     var gen: RDD[(Array[Float], Array[Int])] = keyed
@@ -501,19 +491,12 @@ object KMeans {
         }.localCheckpoint()
         val prev = gen
         gen = next
-        val partialsRdd =
-          next.mapPartitions(it => Iterator.single(foldSlice(it, k, dim)))
-
-        // Above the partition gate the merge runs as a 2-level
-        // treeReduce (executors pre-merge; the driver receives ONE
-        // table, not P) — bit-identical to the collect fold by the
-        // exactness of the merge, pinned by KMeansSpec. The previous
-        // generation is released once this round's is checkpointed.
-        try {
-          if (numSlices > treeGate)
-            partialsRdd.treeReduce(merge _, depth = 2)
-          else partialsRdd.collect().foldLeft(zeroCells(k, dim))(merge)
-        } finally prev.unpersist(blocking = false)
+        // The previous generation is released once this round's is
+        // checkpointed.
+        try ExactMerge.merge(
+          next.mapPartitions(it => Iterator.single(foldSlice(it, k, dim))),
+          treeAbove)(_.foldLeft(zeroCells(k, dim))(merge))
+        finally prev.unpersist(blocking = false)
       } finally { destroyLastBc(); lastBc = bc }
     } finally { gen.unpersist(); destroyLastBc() }
   }

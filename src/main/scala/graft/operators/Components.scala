@@ -63,7 +63,15 @@ object Components {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      maxRounds: Int = 25): DataFrame = {
+      maxRounds: Int = 25): DataFrame =
+    connectedComponents(edges, srcCol, dstCol, maxRounds,
+      Graph.maxDriverLoopEdges(edges.sparkSession))
+
+  /** [[connectedComponents]] on the driver twin at or below
+    * `maxDriverRows` undirected edge rows (both orientations). */
+  private[operators] def connectedComponents(
+      edges: DataFrame, srcCol: String, dstCol: String, maxRounds: Int,
+      maxDriverRows: Long): DataFrame = {
     require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
     val src = col(srcCol).cast("long").as("_g_src")
     val dst = col(dstCol).cast("long").as("_g_dst")
@@ -75,18 +83,15 @@ object Components {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // materialize the cache and size the gate in one job
-      val spark = edges.sparkSession
       val nRows = und.count()
       // driver-resident twin (the Graph loop-twin device): under the
-      // edge gate the SAME min-label + pointer-jump rounds run over
-      // dense int arrays on the driver — one collect of the cached
-      // primitive pairs, zero per-round shuffles, IDENTICAL round
-      // function and maxRounds throw. Above the gate the distributed
-      // loop below runs (the 100 TB path).
-      val maxDriver = spark.conf
-        .getOption("spark.graft.components.maxDriverEdges")
-        .map(_.toLong).getOrElse(8000000L)
-      if (nRows <= maxDriver)
+      // loop twins' edge gate, which counts the same doubled rows, the
+      // SAME min-label + pointer-jump rounds run over dense int arrays
+      // on the driver — one collect of the cached primitive pairs, zero
+      // per-round shuffles, IDENTICAL round function and maxRounds
+      // throw. Above the gate the distributed loop below runs (the
+      // 100 TB path).
+      if (nRows <= maxDriverRows)
         return driverComponents(und, maxRounds)
 
       Graph.vertexProgram(nRows, und, "_g_src") { vp =>

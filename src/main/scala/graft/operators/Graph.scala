@@ -419,8 +419,7 @@ object Graph {
     * precondition and fails loudly instead of silently producing wrong
     * ranks on the first directed feed. (The check reads
     * [[GraphTable.numDangling]], already counted at build time, so it
-    * is free; `assumeNoSinks` is retained for callers whose
-    * construction proves it but no longer buys anything.)
+    * is free.)
     *
     * With `weightCol` set, a contribution is rank·w/Σw over the
     * source's out-edges instead of rank/outdeg (uniform weights
@@ -488,7 +487,6 @@ object Graph {
       damping: Double = 0.85,
       assumeDistinct: Boolean = false,
       danglingCorrection: Boolean = false,
-      assumeNoSinks: Boolean = false,
       distributedRanks: Option[Boolean] = None,
       epsilon: Option[Double] = None,
       weightCol: Option[String] = None): DataFrame = {
@@ -573,9 +571,8 @@ object Graph {
     *    THIS cache, so no round deserializes a row or hashes a key.
     *  - [[wave]] broadcasts the round state, folds each block into a
     *    dense per-partition partial (the map-side combiner taken to its
-    *    limit), and merges the partials under one policy: a driver
-    *    collect-fold, or a 2-level treeReduce (executor-side
-    *    pre-merges) above `spark.graft.graph.treeReducePartitions` edge
+    *    limit), and merges the partials with [[graft.ExactMerge]]: a
+    *    driver collect-fold, or a 2-level treeReduce above 1024 edge
     *    partitions.
     *
     * Bit-identity with the distributed bodies (and so with the
@@ -643,25 +640,17 @@ object Graph {
     }
     blocks.count() // materialize once; every wave reads the cache
 
-    private val treeGate =
-      spark.conf.getOption("spark.graft.graph.treeReducePartitions")
-        .map(_.toInt).getOrElse(1024)
-
     /** One round: broadcast `state`, fold each block into a partial,
-      * merge the partials exactly. `merge` combines any batch of
-      * partials — all of them in one driver call, or pairs inside
-      * treeReduce — into a fresh or reused partial, and must accept an
-      * empty batch (a frame can have no partitions). */
+      * merge the partials exactly ([[graft.ExactMerge.merge]]: `merge`
+      * combines any batch of partials into a fresh or reused one, and
+      * must accept an empty batch). The broadcast is destroyed after
+      * the merge: `unpersist` would keep the driver's copy (in local
+      * mode the only one), and no later job reads this wave. */
     def wave[S: ClassTag, P: ClassTag](state: S)(
         fold: (S, EdgeBlock) => P)(merge: Seq[P] => P): P = {
       val bc = spark.sparkContext.broadcast(state)
-      val partials = blocks.map(b => fold(bc.value, b))
-      val merged =
-        if (blocks.getNumPartitions > treeGate)
-          partials.treeReduce((a, b) => merge(Seq(a, b)), depth = 2)
-        else merge(partials.collect().toSeq)
-      bc.unpersist(blocking = false)
-      merged
+      try graft.ExactMerge.merge(blocks.map(b => fold(bc.value, b)))(merge)
+      finally bc.destroy()
     }
 
     /** The result frame: `node` plus one (name, type, value-at-index)
@@ -678,7 +667,7 @@ object Graph {
 
     def release(): Unit = {
       blocks.unpersist(blocking = false)
-      bcIdx.unpersist(blocking = false)
+      bcIdx.destroy()
     }
   }
 
@@ -836,10 +825,12 @@ object Graph {
 
   /** Edge-count gate for the driver-resident LOOP twins
     * ([[labelPropagationDriver]], [[kCoreDriver]], [[bfsLevelsDriver]],
-    * [[shortestPathsDriver]]): the lifted primitive edge partitions
-    * stay on the EXECUTORS either way (the [[DriverHarness]] device),
-    * but label propagation's per-round merge is bounded by distinct
-    * (node, label) pairs ≤ E rather than N, so the loop family takes a
+    * [[shortestPathsDriver]], and [[Components.connectedComponents]]'
+    * twin, whose rows are likewise both orientations of each edge):
+    * the lifted primitive edge partitions stay on the EXECUTORS either
+    * way (the [[DriverHarness]] device), but label propagation's
+    * per-round merge is bounded by distinct (node, label) pairs ≤ E
+    * rather than N, so the loop family takes a
     * belt-and-braces edge gate the N-merge rank family does not need
     * (8M edges ≈ 64 MB of primitive columns — the
     * [[csrMaxOrientedRows]] envelope argument). At 100 TB every call
@@ -2225,20 +2216,19 @@ object Graph {
     * sf0.1 (nb = 390k rows, 17.2M wedges): scored-aggregate 5.0-7.4 s
     * shuffle_hash → 2.6-3.0 s broadcast. Above the envelope the
     * shuffle_hash plan runs — its exchanges scale with cluster width,
-    * the 100 TB shape. Override with
-    * `spark.graft.graph.aaBroadcastMaxNbRows`. */
-  private[operators] def aaBroadcastMaxNbRows(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.graph.aaBroadcastMaxNbRows")
-      .map(_.toLong).getOrElse(2000000L)
+    * the 100 TB shape. */
+  private val AaBroadcastMaxNbRows = 2000000L
 
+  /** [[GraphTable.adamicAdar]]; the neighbour self-join broadcasts
+    * at or below `broadcastMaxNbRows` capped neighbour rows. */
   private[operators] def adamicAdarImpl(
-      gt: GraphTable, maxDegree: Int): DataFrame = {
+      gt: GraphTable, maxDegree: Int,
+      broadcastMaxNbRows: Long = AaBroadcastMaxNbRows): DataFrame = {
     require(gt.numNodes > 0, "graph has no nodes")
     require(gt.numDangling == 0,
       "adamicAdar requires a symmetric double-edged feed " +
         s"(found ${gt.numDangling} sink nodes)")
     require(maxDegree >= 2, s"maxDegree must be >= 2, got $maxDegree")
-    val spark = gt.edges.sparkSession
     val e = gt.edges.where(col("src") =!= col("dst")).select("src", "dst")
     val deg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -2310,7 +2300,7 @@ object Graph {
     // aggregate, so only the E-row edge side exchanges.
     val nbRight = nb.select(col("b"), col("n").as("w"))
     val wedges = nb.select(col("b"), col("n").as("u"), col("units"))
-      .join(if (nbRows <= aaBroadcastMaxNbRows(spark)) broadcast(nbRight)
+      .join(if (nbRows <= broadcastMaxNbRows) broadcast(nbRight)
         else nbRight.hint("shuffle_hash"), "b")
       .where(col("u") < col("w"))
     val out = if (packed) {

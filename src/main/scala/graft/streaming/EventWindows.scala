@@ -42,8 +42,7 @@ object EventWindows {
     *
     * The returned local relation holds at most one row per changed key
     * per trigger (the update log); callers collapse it with a batch
-    * aggregation. Set GRAFT_STREAM_DEBUG=1 to dump per-batch progress
-    * (trigger counts, state rows, durationMs) to stderr for tuning. */
+    * aggregation. */
   private def runToMemory(
       spark: SparkSession,
       mode: String,
@@ -52,13 +51,7 @@ object EventWindows {
       frame: SparkSession => DataFrame): DataFrame = {
     val name = s"graft_stream_${counter.incrementAndGet()}"
     val s = spark.newSession()
-    // A/B hook: GRAFT_STREAM_STATE_PARTS overrides every line's state
-    // partition count (deployment knob: state-store count tracks key
-    // cardinality × core count; these synchronous verification runs
-    // carry sf-sized state, a real deployment sizes it up)
-    val parts = sys.env.get("GRAFT_STREAM_STATE_PARTS")
-      .map(_.toInt).getOrElse(statePartitions)
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
     // UPDATE-mode aggregates emit on data batches only: the trailing
     // no-data micro-batch (watermark advance) exists to EVICT state and
     // to let APPEND-mode operators emit finalized results. Callers that
@@ -69,15 +62,6 @@ object EventWindows {
     // nulls, and GWS event-time timers all fire there).
     if (!noDataBatch)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // A/B hook: GRAFT_STATE_PROVIDER=rocksdb swaps the HDFS-backed
-    // in-memory provider for RocksDB. Measured at sf0.1 state volumes
-    // the default wins (RocksDB's native-memory column families cost
-    // more to open than these states cost to keep on-heap); RocksDB is
-    // the right provider when per-store state outgrows executor heap.
-    if (sys.env.get("GRAFT_STATE_PROVIDER").contains("rocksdb"))
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
     // These runs are synchronous verification passes, so the checkpoint
     // (offset log + state-store deltas — rewritten wholesale every
     // trigger by the HDFS-backed provider) is throwaway; keep it on
@@ -90,27 +74,14 @@ object EventWindows {
         Some(java.nio.file.Files
           .createTempDirectory(ckptBase, "graft_ckpt_"))
       else None
-    val debug = sys.env.contains("GRAFT_STREAM_DEBUG")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      System.err.println(
-        f"[stream-phase $name] $phase: ${(now - tMark) / 1e9}%.3fs")
-      tMark = now
-    }
     val writer = frame(s).writeStream
       .outputMode(mode)
       .format("memory")
       .queryName(name)
     ckpt.foreach(p => writer.option("checkpointLocation", p.toString))
-    mark("build")
     val q = writer.start()
-    mark("start")
-    try { q.processAllAvailable(); mark("processAll") }
+    try q.processAllAvailable()
     finally {
-      if (debug)
-        q.recentProgress.foreach(p =>
-          System.err.println(s"[stream $name] ${p.json}"))
       // stop() can throw (e.g. the stream already died) — provider
       // eviction and the tmpfs delete must still run, or state maps
       // and /dev/shm checkpoints (RAM!) accumulate across a long JVM
@@ -129,16 +100,13 @@ object EventWindows {
             .forEach(f => Files.deleteIfExists(f))
           finally walk.close()
         }
-        mark("stop+cleanup")
       }
     }
     val sunk = s.table(name)
     val rows = sunk.collectAsList()
     val schema = sunk.schema
     s.catalog.dropTempView(name)
-    val out = spark.createDataFrame(rows, schema)
-    mark("collect")
-    out
+    spark.createDataFrame(rows, schema)
   }
 
   /** Tumbling-window aggregate per event_type: row count and value sum.
@@ -275,8 +243,7 @@ object EventWindows {
     * EventWindowsMultiBatchSpec device: FileStreamSource ingests in
     * mtime order and future-dated files are not reliably listed. */
   private def writeOrderedFile(
-      spark: SparkSession, base: String,
-      df: DataFrame, name: String, seq: Int): Unit = {
+      base: String, df: DataFrame, name: String, seq: Int): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val target = Paths.get(base)
     Files.createDirectories(target)
@@ -293,10 +260,6 @@ object EventWindows {
     Files.setLastModifiedTime(dest,
       java.nio.file.attribute.FileTime.fromMillis(
         1700000000000L + seq * 60000L))
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      System.err.println(s"[streamfix] $name rows=" +
-        spark.read.parquet(dest.toString).count() + " schema=" +
-        spark.read.parquet(dest.toString).schema.simpleString)
   }
 
   private def sessionStreamDir(
@@ -306,9 +269,7 @@ object EventWindows {
         s"/graft_sessstream_${ProcessHandle.current().pid()}_" +
         Integer.toHexString(s"$dir#$gapMinutes".hashCode))
       val ev = graft.sources.Tables(spark, dir, "events")
-      def writeOne(df: DataFrame, name: String, seq: Int): Unit =
-        writeOrderedFile(spark, base, df, name, seq)
-      writeOne(ev, "a_events.parquet", 0)
+      writeOrderedFile(base, ev, "a_events.parquet", 0)
       val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
       val flushUs = maxUs + (gapMinutes + 120L) * 60L * 1000000L
       // TWO sentinel batches: emission in batch N uses the watermark
@@ -316,11 +277,11 @@ object EventWindows {
       // (past every real close) takes effect in the second sentinel's
       // batch — without relying on a trailing no-data micro-batch
       // racing processAllAvailable
-      writeOne(ev.limit(1)
+      writeOrderedFile(base, ev.limit(1)
         .withColumn("user_id", lit(-1L))
         .withColumn("ts", timestamp_micros(lit(flushUs))),
         "b_flush.parquet", 1)
-      writeOne(ev.limit(1)
+      writeOrderedFile(base, ev.limit(1)
         .withColumn("user_id", lit(-1L))
         .withColumn("ts", timestamp_micros(lit(flushUs + 7200L * 1000000L))),
         "c_flush2.parquet", 2)
@@ -588,10 +549,10 @@ object EventWindows {
         one.withColumn("event_type", lit("click"))
           .union(one.withColumn("event_type", lit("purchase")))
       }
-      writeOrderedFile(spark, base, ev, "a_events.parquet", 0)
-      writeOrderedFile(spark, base, sentinels(flushUs),
+      writeOrderedFile(base, ev, "a_events.parquet", 0)
+      writeOrderedFile(base, sentinels(flushUs),
         "b_flush.parquet", 1)
-      writeOrderedFile(spark, base,
+      writeOrderedFile(base,
         sentinels(flushUs + 7200L * 1000000L), "c_flush2.parquet", 2)
       base
     })
@@ -657,7 +618,7 @@ object EventWindows {
         Integer.toHexString(dir.hashCode))
       val ev = graft.sources.Tables(spark, dir, "events")
       (0 until 3).foreach { i =>
-        writeOrderedFile(spark, base, ev.where(col("event_id") % 3 === i),
+        writeOrderedFile(base, ev.where(col("event_id") % 3 === i),
           s"part$i.parquet", i)
       }
       base

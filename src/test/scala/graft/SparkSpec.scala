@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,6 +20,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
+
+  /** `body`'s value and the names of the stages of every job it
+    * starts, such as "treeReduce at ExactMerge.scala:…". */
+  def jobStageNames[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val names = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        js.stageInfos.foreach(si => names.add(si.name))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val v = body
+      org.apache.spark.graftshim.drainListenerBus(sc)
+      (v, names.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 
   override def afterAll(): Unit = {
     // keep the shared context alive across suites; just clear cache

@@ -1,7 +1,7 @@
 package graft.kmeans
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{ExactMerge, SparkSpec}
 import graft.functions.VectorFunctions._
 
 class KMeansSpec extends SparkSpec {
@@ -130,8 +130,7 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("treeReduce partial merge is bit-identical to the driver collect " +
-    "fold (the extreme-P posture behind spark.graft.kmeans." +
-    "treeReducePartitions)") {
+    "fold (the extreme-P side of ExactMerge)") {
     // Many small partitions so the tree's executor-side pre-merges
     // combine partials in a genuinely different shape/order than the
     // driver's sequential fold — exact-cell merging must erase that.
@@ -140,12 +139,13 @@ class KMeansSpec extends SparkSpec {
       .repartition(13)
     val params = KMeansParams(k = 5, threshold = 1e-6, maxLoop = 8,
       seed = 7L)
-    val viaCollect = KMeans.fit(emb, params) // 13 partitions <= 1024
-    val confKey = "spark.graft.kmeans.treeReducePartitions"
-    spark.conf.set(confKey, "1") // 13 > 1 -> every round treeReduces
-    val viaTree =
-      try KMeans.fit(emb, params)
-      finally spark.conf.unset(confKey)
+    val (viaCollect, collectStages) =
+      jobStageNames(KMeans.fit(emb, params)) // 13 slices <= 1024
+    // 13 slices > 1: every round treeReduces
+    val (viaTree, treeStages) =
+      jobStageNames(KMeans.fit(emb, params, shortcut = true, treeAbove = 1))
+    assert(!collectStages.exists(_.startsWith("treeReduce at")))
+    assert(treeStages.exists(_.startsWith("treeReduce at")))
     assert(viaTree.iterations === viaCollect.iterations)
     assert(viaTree.converged === viaCollect.converged)
     viaTree.centroids.zip(viaCollect.centroids).zipWithIndex.foreach {
@@ -236,24 +236,20 @@ class KMeansSpec extends SparkSpec {
   test("the hinted fit (half-gap shortcut on each row's previous pick) " +
     "is bit-identical to the plain-scan fold on separated and " +
     "overlapping blobs, through the collect merge and through treeReduce") {
-    val key = "spark.graft.kmeans.treeReducePartitions"
-    for (sigma <- Seq(1.0, 30.0); tree <- Seq(None, Some("0"))) {
+    for (sigma <- Seq(1.0, 30.0); tree <- Seq(ExactMerge.TreeAbove, 0)) {
       val df = blobs(20000, 16, 8, sigma, 5)
       val params = KMeansParams(k = 8, threshold = 1e-4, maxLoop = 15,
         seed = 11L)
-      tree.foreach(spark.conf.set(key, _))
-      try {
-        val hinted = KMeans.fit(df, params)
-        val plain = KMeans.fit(df, params, shortcut = false)
-        val what = s"sigma=$sigma treeReducePartitions=$tree"
-        assert(hinted.iterations === plain.iterations, what)
-        assert(hinted.converged === plain.converged, what)
-        hinted.centroids.zip(plain.centroids).zipWithIndex.foreach {
-          case ((a, b), i) =>
-            assert(a.map(java.lang.Float.floatToRawIntBits).toSeq ===
-              b.map(java.lang.Float.floatToRawIntBits).toSeq, s"$what centroid $i")
-        }
-      } finally spark.conf.unset(key)
+      val hinted = KMeans.fit(df, params, shortcut = true, treeAbove = tree)
+      val plain = KMeans.fit(df, params, shortcut = false, treeAbove = tree)
+      val what = s"sigma=$sigma treeAbove=$tree"
+      assert(hinted.iterations === plain.iterations, what)
+      assert(hinted.converged === plain.converged, what)
+      hinted.centroids.zip(plain.centroids).zipWithIndex.foreach {
+        case ((a, b), i) =>
+          assert(a.map(java.lang.Float.floatToRawIntBits).toSeq ===
+            b.map(java.lang.Float.floatToRawIntBits).toSeq, s"$what centroid $i")
+      }
     }
   }
 
@@ -343,18 +339,20 @@ class KMeansSpec extends SparkSpec {
   }
 
   /** Fits `df`, cached in memory, in one task (the default limits),
-    * then on the distributed loop, and with the plain scan on both; all
+    * then on the distributed loop (its partials merged in a treeReduce
+    * above `treeAbove` slices), and with the plain scan on both; all
     * four must be the same bits. Returns the one-task model. */
   private def fitAllWays(df: org.apache.spark.sql.DataFrame,
-      params: KMeansParams, what: String): KMeansModel = {
+      params: KMeansParams, what: String,
+      treeAbove: Int = ExactMerge.TreeAbove): KMeansModel = {
     val ((jobs, _), oneTask) =
       whileCached(df)(jobsAndTasks(KMeans.fit(df, params)))
     // a seeded init adds takeSample's count and sample jobs
     val sampling = if (params.initCentroids.isEmpty) 2 else 0
     assert(jobs <= sampling + 1, s"$what: the one-task fit ran $jobs jobs")
-    val distributed = KMeans.fit(df, params, shortcut = true, 0L, 0L)
+    val distributed = KMeans.fit(df, params, shortcut = true, 0L, 0L, treeAbove)
     val plainOneTask = oneTaskFit(df, params, shortcut = false)
-    val plain = KMeans.fit(df, params, shortcut = false, 0L, 0L)
+    val plain = KMeans.fit(df, params, shortcut = false, 0L, 0L, treeAbove)
     assertSameFit(oneTask, distributed, s"$what: one task vs distributed")
     assertSameFit(oneTask, plainOneTask, s"$what: one task vs plain one task")
     assertSameFit(oneTask, plain, s"$what: one task vs plain scan")
@@ -382,7 +380,6 @@ class KMeansSpec extends SparkSpec {
 
   test("one-task fit ≡ distributed loop ≡ plain scan, bit for bit, " +
     "across input layouts, stops and edges") {
-    val key = "spark.graft.kmeans.treeReducePartitions"
     val sep = blobs(20000, 16, 8, 1.0, 5)        // 3 partitions
     val wide = blobs(6000, 16, 8, 30.0, 6)
     val init8 = Some(sep.limit(8).collect().map(_.getSeq[Float](0).toArray))
@@ -427,10 +424,9 @@ class KMeansSpec extends SparkSpec {
       assert(jobsAndTasks(KMeans.fit(sep, init.copy(maxLoop = 2)))._1 === ((1, 1)))
     }
 
-    spark.conf.set(key, "0") // every distributed round treeReduces
-    try fitAllWays(sep, KMeansParams(k = 8, threshold = -1.0, maxLoop = 5,
-      seed = 3L), "treeReducePartitions=0")
-    finally spark.conf.unset(key)
+    // every distributed round treeReduces
+    fitAllWays(sep, KMeansParams(k = 8, threshold = -1.0, maxLoop = 5,
+      seed = 3L), "treeAbove=0", treeAbove = 0)
   }
 
   test("a cached fit past M runs the distributed loop only, and a " +

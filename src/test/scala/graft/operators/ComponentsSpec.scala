@@ -64,31 +64,28 @@ class ComponentsSpec extends SparkSpec {
       40L -> 40L, 50L -> 40L))
   }
 
-  test("driver twin auto-selects by maxDriverEdges; both sides " +
+  test("driver twin auto-selects by maxDriverLoopEdges; both sides " +
     "bit-identical (incl. the loud maxRounds throw)") {
     import spark.implicits._
-    val confKey = "spark.graft.components.maxDriverEdges"
     val rnd = new Random(7)
     val edges = Seq.fill(150)(
-      (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
-    try {
-      spark.conf.set(confKey, "0") // rows > 0 → the DISTRIBUTED loop
-      val viaDist = run(edges)
-      val distThrow = intercept[IllegalArgumentException] {
-        Components.connectedComponents(
-          (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst"),
-          maxRounds = 1)
-      }
-      spark.conf.unset(confKey) // default gate → the DRIVER twin
-      val viaDriver = run(edges)
-      val driverThrow = intercept[IllegalArgumentException] {
-        Components.connectedComponents(
-          (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst"),
-          maxRounds = 1)
-      }
-      assert(viaDist === viaDriver)
-      assert(distThrow.getMessage === driverThrow.getMessage)
-    } finally spark.conf.unset(confKey)
+      (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong)).toDF("src", "dst")
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // rows > 0 → the DISTRIBUTED loop
+    val viaDist = labels(Components.connectedComponents(edges, "src", "dst",
+      25, maxDriverRows = 0L))
+    val distThrow = intercept[IllegalArgumentException] {
+      Components.connectedComponents(chain, "src", "dst", 1, maxDriverRows = 0L)
+    }
+    // the 8M-row default gate → the DRIVER twin
+    val viaDriver = labels(Components.connectedComponents(edges))
+    val driverThrow = intercept[IllegalArgumentException] {
+      Components.connectedComponents(chain, maxRounds = 1)
+    }
+    assert(viaDist === viaDriver)
+    assert(distThrow.getMessage === driverThrow.getMessage)
   }
 
   test("maxRounds failure is loud") {

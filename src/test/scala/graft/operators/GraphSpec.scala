@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import graft.SparkSpec
+import graft.{ExactMerge, SparkSpec}
 
 class GraphSpec extends SparkSpec {
 
@@ -1379,18 +1379,20 @@ class GraphSpec extends SparkSpec {
     val gt = Graph.buildGraphTable(
       randomSym(40, 150, seed = 31L).toDF("src", "dst").repartition(3),
       "src", "dst", assumeDistinct = true)
-    val key = "spark.graft.graph.aaBroadcastMaxNbRows"
-    def run() = gt.adamicAdar(maxDegree = 10).collect().toSeq
+    def joins(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
     try {
-      val viaBroadcast = run() // default gate: the tiny nb table broadcasts
-      spark.conf.set(key, "0") // every nb table exceeds the gate
-      val viaShuffle = run()
+      // the tiny nb table broadcasts at the 2M default
+      val broadcast = gt.adamicAdar(maxDegree = 10)
+      // every nb table exceeds a 0-row envelope
+      val shuffled = Graph.adamicAdarImpl(gt, 10, broadcastMaxNbRows = 0L)
+      val viaBroadcast = broadcast.collect().toSeq
+      val viaShuffle = shuffled.collect().toSeq
+      assert(joins(broadcast).contains("BroadcastHashJoin"))
+      assert(joins(shuffled).contains("ShuffledHashJoin"))
       assert(viaBroadcast.nonEmpty)
       assert(viaShuffle === viaBroadcast)
-    } finally {
-      spark.conf.unset(key)
-      gt.unpersist()
-    }
+    } finally gt.unpersist()
   }
 
   /** The 200-node seeded random digraph (sinks at multiples of 13). */
@@ -1410,43 +1412,42 @@ class GraphSpec extends SparkSpec {
       case x => x
     })
 
-  test("graph treeReducePartitions: treeReduce merge ≡ collect fold " +
-    "in the driver rank loops") {
+  test("driver twins: ExactMerge's treeReduce merge ≡ collect fold in " +
+    "every driver twin") {
     import spark.implicits._
-    val g = digraph200.toDF("src", "dst").repartition(5)
-    val sym = Graph.buildGraphTable(
-      randomSym(60, 220, seed = 41L).toDF("src", "dst").repartition(5),
-      "src", "dst", assumeDistinct = true)
-    val wt = Graph.buildGraphTable(
-      digraph200.map { case (s, t) => (s, t, ((s * 13 + t * 7) % 4 + 1).toDouble) }
-        .toDF("src", "dst", "w").repartition(5),
-      "src", "dst", weightCol = Some("w"), assumeDistinct = true)
     val seeds = Seq(0L, 1L, 2L, 999L).toDF("node") // 999 absent
-    val key = "spark.graft.graph.treeReducePartitions"
-    // every driver twin, each on a graph it accepts
-    def run() = Seq(
-      "pageRank" -> Graph.pageRank(g, "src", "dst", iters = 6,
-        danglingCorrection = true),
-      "personalizedPageRank" -> Graph.personalizedPageRank(g, "src", "dst",
-        seeds, iters = 6),
-      "hits" -> Graph.hits(g, "src", "dst", iters = 6),
-      "labelPropagation" -> sym.labelPropagation(iters = 4),
-      "kCore" -> sym.kCore(5, maxRounds = 50),
-      "bfsLevels" -> wt.bfsLevels(seeds, maxDepth = 3),
-      "shortestPaths" -> wt.shortestPaths(seeds, maxRounds = 4))
-      .map { case (name, df) => name -> bits(df) }
-    try {
-      val viaCollect = run() // 5 edge partitions <= the 1024 default
-      spark.conf.set(key, "0") // every partition count exceeds 0
-      val viaTree = run()
-      viaCollect.zip(viaTree).foreach { case ((name, c), (_, t)) =>
-        assert(c.nonEmpty, name)
-        assert(t === c, name)
-      }
-    } finally {
-      spark.conf.unset(key)
-      sym.unpersist()
-      wt.unpersist()
+    // every driver twin, each on a graph it accepts, built from edge
+    // frames of `parts` partitions, with the stage names of its jobs
+    def run(parts: Int) = {
+      val sym = Graph.buildGraphTable(
+        randomSym(60, 220, seed = 41L).toDF("src", "dst").repartition(parts),
+        "src", "dst", assumeDistinct = true)
+      val wt = Graph.buildGraphTable(
+        digraph200.map { case (s, t) => (s, t, ((s * 13 + t * 7) % 4 + 1).toDouble) }
+          .toDF("src", "dst", "w").repartition(parts),
+        "src", "dst", weightCol = Some("w"), assumeDistinct = true)
+      try Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "pageRank" -> (() => wt.pageRank(iters = 4, danglingCorrection = true)),
+        "personalizedPageRank" -> (() => wt.personalizedPageRank(seeds,
+          iters = 4)),
+        "hits" -> (() => wt.hits(iters = 4)),
+        "labelPropagation" -> (() => sym.labelPropagation(iters = 4)),
+        "kCore" -> (() => sym.kCore(5, maxRounds = 50)),
+        "bfsLevels" -> (() => wt.bfsLevels(seeds, maxDepth = 3)),
+        "shortestPaths" -> (() => wt.shortestPaths(seeds, maxRounds = 4)))
+        .map { case (name, call) =>
+          val (rows, stages) = jobStageNames(bits(call()))
+          (name, rows, stages.exists(_.startsWith("treeReduce at")))
+        }
+      finally Seq(sym, wt).foreach(_.unpersist())
+    }
+    val viaCollect = run(5) // 5 edge partitions <= 1024
+    val viaTree = run(ExactMerge.TreeAbove + 1)
+    viaCollect.zip(viaTree).foreach { case ((name, c, cTree), (_, t, tTree)) =>
+      assert(c.nonEmpty, name)
+      assert(!cTree && tTree, s"$name ran a treeReduce: at 5 partitions " +
+        s"$cTree, at ${ExactMerge.TreeAbove + 1} $tTree")
+      assert(t === c, name)
     }
   }
 
@@ -1480,15 +1481,28 @@ class GraphSpec extends SparkSpec {
       "kCore" -> (() => sym.kCore(5, maxRounds = 50)),
       "bfsLevels" -> (() => sym.bfsLevels(seeds, maxDepth = 3)),
       "shortestPaths" -> (() => gt.shortestPaths(seeds, maxRounds = 4)))
+    // the driver's copies of the harness's broadcasts: its node index
+    // and each wave's round state
+    def harnessBroadcasts = org.apache.spark.graftshim
+      .driverBroadcastValues(spark.sparkContext).collect {
+        case (id, _: java.util.HashMap[_, _] | _: Array[Double] |
+            _: Array[java.math.BigDecimal] | _: Array[Int] |
+            _: Array[Boolean]) => id
+      }.toSet
     // getPersistentRDDs holds its RDDs weakly: a leaked RDD that the GC
     // has already reclaimed no longer shows, so a leak can slip past one
-    // call, but a clean call can never fail here
+    // call, but a clean call can never fail here (likewise a broadcast
+    // the context cleaner has already dropped)
     try {
       calls.foreach { case (name, call) =>
         val before = spark.sparkContext.getPersistentRDDs.keySet
+        val bcBefore = harnessBroadcasts
         assert(call().collect().nonEmpty, name)
         val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
         assert(leaked.isEmpty, s"$name left RDDs ${leaked.toSeq.sorted} persisted")
+        val bcLeaked = harnessBroadcasts -- bcBefore
+        assert(bcLeaked.isEmpty,
+          s"$name left broadcasts ${bcLeaked.toSeq.sorted} on the driver")
       }
     } finally {
       gt.unpersist()
@@ -1517,12 +1531,11 @@ class GraphSpec extends SparkSpec {
 
   /** Runs `f` with every loop family forced onto its distributed body. */
   private def forcedDistributed[A](f: => A): A = {
-    val keys = Seq("spark.graft.graph.maxDriverLoopEdges",
-      "spark.graft.components.maxDriverEdges")
+    val key = "spark.graft.graph.maxDriverLoopEdges"
     try {
-      keys.foreach(spark.conf.set(_, "0"))
+      spark.conf.set(key, "0")
       f
-    } finally keys.foreach(spark.conf.unset)
+    } finally spark.conf.unset(key)
   }
 
   test("distributed graph loops keep their per-round job and stage " +
