@@ -33,22 +33,19 @@ object SparkEntry {
   private def dsum(c: Column, scale: Int): Column =
     sum(c.cast(DecimalType(18, scale))).cast("double")
 
-  // ---- per-artifact build-cost ledger: every once-per-(JVM, sf dir)
-  // ---- artifact build (they land in Bench's untimed warmup pass by
-  // ---- design) records its wall seconds here, and Bench publishes the
-  // ---- table in its JSON line — so build cost is machine-readable
-  // ---- next to the per-query floors and can never silently vanish
-  // ---- from the round's accounting.
+  // ---- once-per-(JVM, sf dir) artifacts: the PQ/IVF index (q95,
+  // ---- q96), the media fixtures (q109, q110, q188), the graph tables
+  // ---- (the graph tier) and the fitted labels (q164). Each is built
+  // ---- and parquet'd ONCE per (JVM, sf dir) — at 100 TB nobody re-fits
+  // ---- codebooks or re-extracts a graph per query. The build lands in
+  // ---- Bench's untimed warmup pass, so the timed lines measure the
+  // ---- probe, which is what a deployment pays per query; and its wall
+  // ---- seconds land in a ledger Bench publishes in its JSON line, so
+  // ---- build cost is machine-readable next to the per-query floors and
+  // ---- can never silently vanish from the round's accounting.
 
   private val artifactCosts =
     new java.util.concurrent.ConcurrentHashMap[String, Double]()
-
-  private def recordArtifactCost[A](name: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    artifactCosts.put(name, (System.nanoTime() - t0) / 1e9)
-    r
-  }
 
   /** Snapshot of artifact-build wall seconds recorded so far in this
     * JVM (one entry per artifact family per sf dir built). */
@@ -57,22 +54,33 @@ object SparkEntry {
     artifactCosts.asScala.toMap
   }
 
-  // ---- persisted PQ/IVF-PQ index shared by q95 (ADC) and q96 (IVF-PQ):
-  // ---- built and parquet'd ONCE per (JVM, sf dir) — at 100 TB nobody
-  // ---- re-fits codebooks per query; the probes below read the code
-  // ---- tables only (q96 partition-pruned to the probed cells). The
-  // ---- build lands in Bench's untimed warmup pass, so the timed lines
-  // ---- measure the probe, which is what a deployment pays per query.
+  private val artifactDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  private val pqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def pqIndexPath(s: SparkSession, dir: String): String =
-    pqIndexCache.computeIfAbsent(dir, _ =>
-      recordArtifactCost(s"pq_ivf_index:${dirTag(dir)}") {
+  /** The directory of the `kind` artifact for dataset `dir`: on first
+    * use in this JVM, `build` fills a TempCleanup-registered
+    * `graft_<prefix>_<pid>_<dir hash>` directory under the temp dir,
+    * and its wall seconds enter the ledger as `<kind>:<dirTag>`.
+    * `build` must not resolve another artifact: the map's
+    * `computeIfAbsent` allows no nested build. */
+  private def artifactDir(kind: String, prefix: String, dir: String)(
+      build: String => Unit): String =
+    artifactDirs.computeIfAbsent((kind, dir), _ => {
+      val t0 = System.nanoTime()
       val base = TempCleanup.register(sys.props("java.io.tmpdir") +
-        s"/graft_pqidx_${ProcessHandle.current().pid()}_" +
+        s"/graft_${prefix}_${ProcessHandle.current().pid()}_" +
         Integer.toHexString(dir.hashCode))
+      build(base)
+      artifactCosts.put(s"$kind:${dirTag(dir)}",
+        (System.nanoTime() - t0) / 1e9)
+      base
+    })
+
+  /** The PQ/IVF-PQ index shared by q95 (ADC) and q96 (IVF-PQ); the
+    * probes read the code tables only (q96 partition-pruned to the
+    * probed cells). */
+  private def pqIndexPath(s: SparkSession, dir: String): String =
+    artifactDir("pq_ivf_index", "pqidx", dir) { base =>
       val emb = T(s, dir, "embeddings")
       val cb = operators.Quantization.fitPQ(emb, "vec_id", "embedding",
         dim = 64, m = 4, k = 16, iters = 4)
@@ -84,8 +92,7 @@ object SparkEntry {
       operators.Quantization.writePqIndex(emb, "vec_id", "embedding", cb,
         base, coarse = Some(ivf))
       ivf.unpersist()
-      base
-    })
+    }
 
   /** Short sf-dir discriminator for the artifact-cost ledger keys.
     * Basename + full-path hash: two dataset dirs sharing a basename
@@ -96,23 +103,13 @@ object SparkEntry {
     s"$base-${Integer.toHexString(dir.hashCode)}"
   }
 
-  // ---- deterministic media fixtures shared by q109 (PNG decode) and
-  // ---- q110 (WAV decode): encoded ONCE per (JVM, sf dir) and
-  // ---- parquet'd — the fixture ENCODE is corpus preparation, not the
-  // ---- operator under test (a pipeline's blobs arrive already
-  // ---- encoded). The build lands in Bench's untimed warmup pass (the
-  // ---- pqIndexPath precedent), so the timed lines measure the DECODE.
-
-  private val mediaFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Deterministic media fixtures shared by q109 (PNG decode), q110
+    * (WAV decode) and q188 (JPEG decode): the fixture ENCODE is corpus
+    * preparation, not the operator under test (a pipeline's blobs
+    * arrive already encoded), so the timed lines measure the DECODE. */
   private def mediaFixturePath(s: SparkSession, dir: String): String =
-    mediaFixtureCache.computeIfAbsent(dir, _ =>
-      recordArtifactCost(s"media_fixtures:${dirTag(dir)}") {
+    artifactDir("media_fixtures", "media", dir) { base =>
       import s.implicits._
-      val base = TempCleanup.register(sys.props("java.io.tmpdir") +
-        s"/graft_media_${ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode))
       val ids = T(s, dir, "documents").select(col("doc_id").cast("long"))
       ids.as[Long]
         .mapPartitions(_.map(id =>
@@ -132,19 +129,7 @@ object SparkEntry {
           (id, operators.Multimodal.jpegPayload(id, 8))))
         .toDF("media_id", "payload")
         .write.mode("overwrite").parquet(s"$base/jpg")
-      base
-    })
-
-  // ---- persisted graph artifacts shared by the graph tier (q98, q102,
-  // ---- q107, q111, q113-q117): the distinct-edge + out-weight +
-  // ---- node-list scaffolding is built and parquet'd ONCE per
-  // ---- (JVM, sf dir) via Graph.writeGraphTable — the persisted
-  // ---- PQ/IVF-index precedent applied to graphs. At 100 TB a
-  // ---- deployment builds the graph table once and iterates many; the
-  // ---- build lands in Bench's untimed warmup pass, so the timed lines
-  // ---- measure the iterate-from-artifact cost, which is what every
-  // ---- query after the first pays. GraphSpec proves
-  // ---- load-then-iterate == inline-build bit-for-bit.
+    }
 
   /** q34's persisted fingerprint table for `dir`. Deliberately outlives
     * the JVM — the DuckDB oracle pass reads it after Verify exits — and
@@ -175,15 +160,15 @@ object SparkEntry {
     * dumps, so last-write is the right value. */
   @volatile private var lastDatasetDir: String = "unset"
 
-  private val graphTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** The graph artifacts shared by the graph tier (q98, q102, q107,
+    * q111, q113-q117): the distinct-edge + out-weight +
+    * node-list scaffolding written by Graph.writeGraphTable — the
+    * persisted PQ/IVF-index precedent applied to graphs. At 100 TB a
+    * deployment builds the graph table once and iterates many, so the
+    * timed lines measure the iterate-from-artifact cost. GraphSpec
+    * proves load-then-iterate == inline-build bit-for-bit. */
   private def graphTablePath(s: SparkSession, dir: String): String =
-    graphTableCache.computeIfAbsent(dir, _ =>
-      recordArtifactCost(s"graph_tables:${dirTag(dir)}") {
-      val base = TempCleanup.register(sys.props("java.io.tmpdir") +
-        s"/graft_graph_${ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode))
+    artifactDir("graph_tables", "graph", dir) { base =>
       val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
       val l = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       // ONE cached (orderkey, src, dst) join feed — the r12 ledger
@@ -296,37 +281,29 @@ object SparkEntry {
         lp.unpersist(blocking = false)
         pp.unpersist(blocking = false)
       }
-      base
-    })
+    }
 
   private def graphTable(
       s: SparkSession, dir: String, which: String): operators.GraphTable =
     operators.Graph.readGraphTable(s, s"${graphTablePath(s, dir)}/$which")
 
-  // ---- persisted label-propagation result consumed by q164
-  // ---- (modularity OF the fitted labels): community labels are a
-  // ---- fitted artifact a deployment computes once and scores many
-  // ---- times, so q164 must not refit the 5-round propagation inside
-  // ---- its own line. q117 — the propagation itself — computes its 5
-  // ---- rounds in-line (the fit IS that line's workload; r12 reverted
-  // ---- the r11 artifact-read form so the cost can't escape the
-  // ---- min-of-passes bench). Labels are exact longs: the parquet
-  // ---- round trip is bit-lossless, so load-then-modularity ≡ inline
-  // ---- bit-for-bit (GraphSpec pins it).
-
-  private val labelTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def labelTablePath(s: SparkSession, dir: String): String =
-    labelTableCache.computeIfAbsent(dir, _ =>
-      recordArtifactCost(s"label_table:${dirTag(dir)}") {
-      val base = TempCleanup.register(sys.props("java.io.tmpdir") +
-        s"/graft_labels_${ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode))
-      graphTable(s, dir, "undirected").labelPropagation(iters = 5)
+  /** The label-propagation result consumed by q164 (modularity OF the
+    * fitted labels): community labels are a fitted artifact a
+    * deployment computes once and scores many times, so q164 must not
+    * refit the 5-round propagation inside its own line. q117 — the
+    * propagation itself — computes its 5 rounds in-line (the fit IS
+    * that line's workload; r12 reverted the r11 artifact-read form so
+    * the cost can't escape the min-of-passes bench). Labels are exact
+    * longs: the parquet round trip is bit-lossless, so
+    * load-then-modularity ≡ inline bit-for-bit (GraphSpec pins it). */
+  private def labelTablePath(s: SparkSession, dir: String): String = {
+    val graphs = graphTablePath(s, dir) // outside: no nested build
+    artifactDir("label_table", "labels", dir) { base =>
+      operators.Graph.readGraphTable(s, s"$graphs/undirected")
+        .labelPropagation(iters = 5)
         .write.mode("overwrite").parquet(base)
-      base
-    })
+    }
+  }
 
   // ---- near-dup pair graph shared by q17 (pairs) and q66 (components):
   // ---- ONE Scala builder and ONE oracle CTE so the two queries cannot
@@ -1096,7 +1073,7 @@ object SparkEntry {
       val pert = emb.select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"),
           x => (x * lit(1.0001f)).cast("float")).as("embedding"))
-      Dedup.lshNearDupPairs(emb.union(pert), threshold = 0.9,
+      Similarity.lshNearDupPairs(emb.union(pert), threshold = 0.9,
           nBands = 4, planesPerBand = 8, seed = 21L)
         .orderBy("id_a", "id_b")
     }),
@@ -2145,11 +2122,12 @@ object SparkEntry {
     // a hash-partitioned, per-round-checkpointed DataFrame (the 100-TB
     // body — no driver collect anywhere in the loop, GraphSpec-proven);
     // bit-identical to q102 by construction, and this line proves it
-    // against the same recursive-CTE oracle.
+    // against the same recursive-CTE oracle. The graph is far below the
+    // node-count threshold, so the line pins the body.
     "q107_pagerank_dist" -> ((s, dir) =>
-      graphTable(s, dir, "directed")
-        .pageRank(iters = 10, danglingCorrection = true,
-          distributedRanks = Some(true)).limit(20)),
+      operators.Graph.pageRankImpl(graphTable(s, dir, "directed"),
+        iters = 10, damping = 0.85, danglingCorrection = true,
+        epsilon = None, distributed = Some(true)).limit(20)),
 
     // q105's sessions via Spark's native session_window (plain
     // aggregate, no analytic windows; Spark's inclusive session merge

@@ -227,12 +227,7 @@ object Dedup {
       batch: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val vdir =
-      try graft.sources.Artifacts.latestDir(spark, path)
-      catch { case e: IllegalArgumentException =>
-        throw new IllegalArgumentException(
-          s"no Bloom gate at $path (${e.getMessage})")
-      }
+    val vdir = graft.sources.Artifacts.latestDir(spark, path, "Bloom gate")
     val bytes = spark.read.parquet(s"$vdir/bloom")
       .head().getAs[Array[Byte]]("bloom")
     // Native codegen'd probe: BloomFilterMightContain over the sketch
@@ -452,13 +447,6 @@ object Dedup {
     }
   }
 
-  private def latestMinhashDir(spark: SparkSession, path: String): String =
-    try graft.sources.Artifacts.latestDir(spark, path)
-    catch { case e: IllegalArgumentException =>
-      throw new IllegalArgumentException(
-        s"no MinHash index at $path (${e.getMessage})")
-    }
-
   /** Fold an ingest batch into a persisted MinHash band index — the
     * graph/IVF APPEND lifecycle applied to the dedup tier: band ONLY
     * the new docs (banding is per-document, so append ≡ rebuild by
@@ -479,8 +467,8 @@ object Dedup {
       rowsPerBand: Int = 4,
       idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
-    val existing = spark.read
-      .parquet(s"${latestMinhashDir(spark, path)}/bands")
+    val vdir = graft.sources.Artifacts.latestDir(spark, path, "MinHash index")
+    val existing = spark.read.parquet(s"$vdir/bands")
       .select("id", "band", "bh")
     val bandU = (c: Column) => graft.functions.TextKernelFunctions
       .minhashBandsCol(c, n, bands, rowsPerBand)
@@ -513,8 +501,8 @@ object Dedup {
       .minhashBandsCol(c, n, bands, rowsPerBand)
     val probes = delta.select(col(idCol).as("id_new"),
       posexplode(bandU(col(textCol))).as(Seq("band", "bh")))
-    val cand = spark.read
-      .parquet(s"${latestMinhashDir(spark, path)}/bands")
+    val vdir = graft.sources.Artifacts.latestDir(spark, path, "MinHash index")
+    val cand = spark.read.parquet(s"$vdir/bands")
       .join(broadcast(probes), Seq("band", "bh"))
       .select(col("id").as("id_old"), col("id_new"))
       .distinct()
@@ -617,7 +605,7 @@ object Dedup {
 
   /** Near-duplicate pairs by embedding cosine similarity — exact
     * all-pairs, for bounded sets and as the test oracle. The scale path
-    * is [[lshNearDupPairs]]. */
+    * is [[Similarity.lshNearDupPairs]]. */
   def embeddingNearDupPairs(
       df: DataFrame,
       threshold: Double,
@@ -665,17 +653,4 @@ object Dedup {
         when(col("dup").isNull, lit(1)).otherwise(lit(0)).as("keep"))
       .orderBy("cluster", "id")
   }
-
-  /** Sub-quadratic embedding near-dup: banded random-hyperplane LSH
-    * candidates + exact cosine verify ([[Similarity.lshNearDupPairs]]). */
-  def lshNearDupPairs(
-      df: DataFrame,
-      threshold: Double,
-      nBands: Int = 4,
-      planesPerBand: Int = 8,
-      seed: Long = 42L,
-      idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    Similarity.lshNearDupPairs(df, threshold, nBands, planesPerBand, seed,
-      idCol, embCol)
 }

@@ -168,12 +168,8 @@ object Features {
     * column yields null `_minmax` (min = max) and null `_z` (sd = 0)
     * rather than ±Inf/NaN. */
   def applyScaler(df: DataFrame, path: String): DataFrame = {
-    val vdir =
-      try graft.sources.Artifacts.latestDir(df.sparkSession, path)
-      catch { case e: IllegalArgumentException =>
-        throw new IllegalArgumentException(
-          s"no scaler artifact at $path (${e.getMessage})")
-      }
+    val vdir = graft.sources.Artifacts.latestDir(df.sparkSession, path,
+      "scaler artifact")
     val stats = df.sparkSession.read.parquet(s"$vdir/stats")
       .select("column", "mn", "mx", "n", "s", "ssq").collect()
     require(stats.nonEmpty, s"no scaler artifact at $path")

@@ -242,14 +242,6 @@ object Frequency {
     }
   }
 
-  private def latestCountMinDir(
-      spark: org.apache.spark.sql.SparkSession, path: String): String =
-    try graft.sources.Artifacts.latestDir(spark, path)
-    catch { case e: IllegalArgumentException =>
-      throw new IllegalArgumentException(
-        s"no CountMin artifact at $path (${e.getMessage})")
-    }
-
   /** Fold a batch into a persisted sketch: counter-wise sum published
     * as the next version (the old version stays live until the
     * pointer moves, so concurrent probes are safe — no staged-swap
@@ -257,7 +249,8 @@ object Frequency {
   def appendToCountMin(
       spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, keyCol: String): Unit = {
-    val cur = latestCountMinDir(spark, path)
+    val cur = graft.sources.Artifacts.latestDir(spark, path,
+      "CountMin artifact")
     val m = spark.read.parquet(s"$cur/meta").head()
     // by name, not ordinal: batch meta is 2-column and streaming meta
     // is 3-column — a field reorder must not swap depth/width
@@ -280,7 +273,8 @@ object Frequency {
   def countMinEstimatePersisted(
       spark: org.apache.spark.sql.SparkSession,
       path: String, keys: DataFrame, keyCol: String): DataFrame = {
-    val vdir = latestCountMinDir(spark, path)
+    val vdir = graft.sources.Artifacts.latestDir(spark, path,
+      "CountMin artifact")
     val m = spark.read.parquet(s"$vdir/meta").head()
     countMinEstimate(spark.read.parquet(s"$vdir/counters"),
       keys, keyCol, m.getAs[Int]("depth"), m.getAs[Int]("width"))

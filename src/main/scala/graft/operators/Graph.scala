@@ -15,6 +15,8 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType,
   IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.sources.Artifacts
+
 /** Prebuilt graph scaffolding: the distinct (optionally weighted) edge
   * list with per-source out-weight totals attached, the node list with
   * a source flag, and the three counts every algorithm needs. Build it
@@ -51,28 +53,198 @@ final case class GraphTable(
   /** Sinks: nodes with in-edges but no out-edges. */
   def numDangling: Long = numNodes - numSrcNodes
 
+  /** Damped PageRank over the table's directed edges.
+    *
+    * Dangling nodes (nodes with in-edges but no out-edges) leak rank
+    * mass if ignored, so the operator never ignores them: with
+    * `danglingCorrection = true` their mass is redistributed uniformly
+    * each round (the standard correction — rank sums stay ~1 and sinks
+    * participate as first-class nodes); with it false (the cheap path
+    * for graphs that cannot have sinks, e.g. an undirected graph fed
+    * as both edge directions), the operator REQUIRES the no-sink
+    * precondition and fails loudly instead of silently producing wrong
+    * ranks on the first directed feed. (The check reads
+    * [[numDangling]], already counted at build time, so it is free.)
+    *
+    * On a weighted table (built with a `weightCol`), a contribution is
+    * rank·w/Σw over the source's out-edges instead of rank/outdeg
+    * (uniform weights reproduce the unweighted ranks bit-for-bit: w = 1
+    * makes rank·1.0/Σ1.0 the same IEEE expression as rank/outdeg).
+    *
+    * Scale posture — TWO loop bodies behind one set of semantics,
+    * picked by node count: the threshold is
+    * `spark.graft.graph.maxDriverRankNodes` (default 2M — see
+    * [[Graph.maxDriverRankNodes]]):
+    *
+    *  - driver-resident (the small-N fast path, on the
+    *    [[Graph.DriverHarness]]): each round broadcasts the N-entry rank
+    *    array into the lifted edge partitions (the edges never move)
+    *    and folds contributions into per-partition DENSE arrays of
+    *    exact 12-dp decimals — ONE zero-shuffle task wave per round,
+    *    merged exactly. The rank array lives on the driver between rounds:
+    *    broadcasting it already collects all N ranks driver-side every
+    *    round, so driver residency adds no new constraint. Cap: N must
+    *    fit the driver/executor broadcast envelope — which is exactly
+    *    what the auto-switch threshold encodes.
+    *
+    *  - distributed rank table (the 100-TB path, on the
+    *    [[Graph.VertexProgram]]): the rank table NEVER visits the driver.
+    *    Each round gathers the rank table into the cached edges
+    *    (out-weights pre-attached), sums contributions in a
+    *    partial/final DECIMAL aggregate on `dst`, and left-joins them
+    *    back onto the cached node list. The dangling mass is a ONE-ROW
+    *    aggregate cross-joined into the update — a plan, not a
+    *    collect: no loop step moves more than a broadcast-sized
+    *    payload to the driver, so the plan's ceiling is cluster
+    *    memory/disk, not the driver heap. (GraphSpec asserts via a
+    *    QueryExecutionListener that the distributed loop performs zero
+    *    `collect` actions, and that both bodies produce bit-identical
+    *    ranks.)
+    *
+    * Convergence: `iters` is the hard round cap. With
+    * `epsilon = Some(eps)` the loop additionally stops as soon as
+    * max |Δrank| <= eps after a round (inclusive boundary — the same
+    * fixpoint discipline as the K-Means loop's A7 semantics, where the
+    * `<=` edge counts as converged). The fixed-iteration behavior
+    * (`epsilon = None`) is exactly the pre-flag semantics. The epsilon
+    * check is a one-row aggregate per round (a bounded scalar action,
+    * the K-Means-convergence category, never an N-row collect).
+    *
+    * Determinism: per-edge contributions are rounded to 12 dp and
+    * summed as DECIMAL(38,12) (exact and associative, so the result is
+    * independent of partitioning and merge order); the dangling mass
+    * uses the same 12-dp DECIMAL device before one double division by
+    * N; the damped update `(1-d)/N + d·(s + dm/N)` is the same
+    * fixed-association double arithmetic whether evaluated per-row by
+    * codegen or per-node on the driver (the [[Graph.DriverHarness]]
+    * argument: both sides round HALF_UP, losslessly). By induction every
+    * iteration's rank column is bit-identical across the two loop
+    * bodies and any engine that evaluates the same tree. With
+    * `danglingCorrection = false` the `+ dm/N` term is absent
+    * entirely, preserving the pre-flag semantics.
+    */
   def pageRank(
       iters: Int,
       damping: Double = 0.85,
       danglingCorrection: Boolean = false,
-      distributedRanks: Option[Boolean] = None,
       epsilon: Option[Double] = None): DataFrame =
-    Graph.pageRankImpl(this, iters, damping, danglingCorrection,
-      distributedRanks, epsilon)
+    Graph.pageRankImpl(this, iters, damping, danglingCorrection, epsilon)
 
+  /** Personalized (topic-sensitive) PageRank: the reset mass lands on
+    * the `seeds` distribution instead of uniformly — rank measures
+    * proximity to the seed set (the standard seed-biased relevance
+    * device: related-document discovery from a trusted subset,
+    * authority propagation from labeled-good domains in a curation
+    * pipeline). Semantics per Haveliwala 2002 / the standard PPR
+    * formulation:
+    *
+    *   rank'(v) = (1−d)·r(v) + d·(Σ_{u→v} rank(u)·w/Σw + dm·r(v))
+    *
+    * with r(v) = 1/|S| for v ∈ S else 0, and dm = the total dangling
+    * (sink) mass — redistributed over the SEED distribution, so rank
+    * mass is conserved and teleports never leak to unrelated nodes.
+    * Initial ranks are r itself. Contributions are out-weight-
+    * normalized (rank/outdeg on unweighted graphs).
+    *
+    * Scale posture: TWO loop bodies behind one set of semantics, the
+    * [[pageRank]] discipline, picked by node count against
+    * [[Graph.maxDriverRankNodes]]:
+    *
+    *  - distributed (the 100-TB path): [[pageRank]]'s rank loop on the
+    *    [[Graph.VertexProgram]], the rank table carrying the per-node
+    *    reset weight alongside (computed once from a seed semi-join;
+    *    seeds are a DataFrame, not a driver collection, so the seed set
+    *    itself can be large). No driver collect anywhere (GraphSpec's
+    *    listener assertion pins this body).
+    *
+    *  - driver-resident (the small-N fast path): the
+    *    [[Graph.DriverHarness]] — the reset weights join is collected as
+    *    the N-bounded node table (bounded by N whatever the seed
+    *    cardinality), and each round is one zero-shuffle task wave
+    *    with the sink mass summed on the driver.
+    *
+    * Determinism: the same 12-dp DECIMAL contribution sums and 9-dp
+    * HALF_UP damped update as [[pageRank]], with the fixed association
+    * `(1−d)·r + d·(s + dm·r)` — bit-replayable in any IEEE engine
+    * (the q113 oracle), and bit-identical across the two bodies by
+    * the [[Graph.DriverHarness]] argument. Both bodies are
+    * [[pageRank]]'s rank loops with a different node table and update.
+    */
   def personalizedPageRank(
       seeds: DataFrame,
       iters: Int,
       damping: Double = 0.85,
-      epsilon: Option[Double] = None,
-      distributedRanks: Option[Boolean] = None): DataFrame =
-    Graph.personalizedPageRankImpl(this, seeds, iters, damping, epsilon,
-      distributedRanks)
+      epsilon: Option[Double] = None): DataFrame =
+    Graph.personalizedPageRankImpl(this, seeds, iters, damping, epsilon)
 
-  def hits(iters: Int, epsilon: Option[Double] = None,
-      distributedScores: Option[Boolean] = None): DataFrame =
-    Graph.hitsImpl(this, iters, epsilon, distributedScores)
+  /** HITS (hubs & authorities), Kleinberg 1999 — the Jacobi
+    * (simultaneous-update) variant: each round computes BOTH scores
+    * from the previous round's values,
+    *
+    *   auth'(v) = N₁( Σ_{u→v} hub(u) ),   hub'(v) = N₁( Σ_{v→w} auth(w) )
+    *
+    * with N₁ = L1 normalization (divide by the global sum, so each
+    * score vector stays a distribution). The Gauss–Seidel textbook
+    * ordering (hub from the NEW auth) converges to the same principal
+    * singular vectors; the Jacobi form is chosen because every round
+    * is a pure function of the previous one — replayable row-wise in
+    * a recursive-CTE oracle (the q114 device), and the natural shape
+    * for a distributed engine anyway (no intra-round dependency).
+    *
+    * Convergence: `iters` is the hard round cap; with
+    * `epsilon = Some(eps)` the loop additionally stops at the first
+    * round where max over nodes of max(|Δauth|, |Δhub|) <= eps
+    * (inclusive — the same A7 fixpoint discipline as [[pageRank]]'s
+    * epsilon; the check is a one-row aggregate per round).
+    *
+    * Scale posture: the distributed rank-table body again, with the
+    * two gathers FUSED: ONE bidirectional edge cache holds each edge
+    * twice — (src→dst, auth side) and (dst→src, hub side) — so a
+    * round is ONE join of the score table against the cache and ONE
+    * (node, conditional-sum × 2) aggregate, instead of two separately
+    * cached edge tables each shuffling the scores per round (same row
+    * volume through the exchanges, HALF the jobs/stages per round —
+    * HitsSpec asserts the job count). Contributions are 12-dp DECIMAL
+    * sums (exact, associative — the conditional split sums exactly
+    * the same term multisets as the separate gathers, so scores are
+    * bit-identical), the L1 totals are one-row aggregates cross-joined
+    * in (a plan, not a collect), and scores are 9-dp rounded, on the
+    * [[Graph.VertexProgram]]. No driver collect anywhere in the
+    * distributed body. Like [[pageRank]], TWO loop bodies behind
+    * one set of semantics, picked by node count against
+    * [[Graph.maxDriverRankNodes]]: the driver-resident twin folds BOTH
+    * gathers in one zero-shuffle task wave per round on the
+    * [[Graph.DriverHarness]], bit-identical by its argument since the
+    * gathers sum identical 12-dp addend multisets and the L1 divide +
+    * 9-dp round is the same IEEE expression either way.
+    *
+    * Returns (node, auth, hub), authorities first. */
+  def hits(iters: Int, epsilon: Option[Double] = None): DataFrame =
+    Graph.hitsImpl(this, iters, epsilon)
 
+  /** Synchronous (Jacobi) label-propagation community detection,
+    * Raghavan et al. 2007 adapted to a deterministic simultaneous
+    * update: every node starts with its own id as label; each round,
+    * a node with at least one in-edge takes the most frequent label
+    * among its in-neighbors' PREVIOUS-round labels, ties broken to
+    * the smallest label; nodes with no in-edges keep their label. For
+    * community detection feed the graph undirected (both directions —
+    * in-neighbors = neighbors), the [[Components]] convention. Runs a
+    * fixed `iters` rounds: the Jacobi form plus deterministic
+    * tie-break makes every round a pure function of the previous one
+    * — row-replayable in a recursive-CTE oracle (the q117 device) —
+    * at the cost of possible 2-cycles on bipartite structures, which
+    * a fixed round count simply samples.
+    *
+    * Scale posture: the distributed body runs on the
+    * [[Graph.VertexProgram]] — per round one gather of the labels into
+    * the edges, an exact (dst, label) count aggregate, a per-node
+    * argmax via one `min(struct(-cnt, label))` aggregate (no window, no
+    * collect — all counts are exact longs, so no rounding device is
+    * even needed), and a co-partitioned left join back onto the label
+    * table.
+    *
+    * Returns (node, label) ordered by node. */
   def labelPropagation(iters: Int): DataFrame =
     Graph.labelPropagationImpl(this, iters)
 
@@ -110,8 +282,10 @@ final case class GraphTable(
     }
 }
 
-/** Iterative graph analytics over plain edge DataFrames (the
-  * connected-components sibling lives in [[Components]]). */
+/** Graph analytics behind [[GraphTable]]'s methods: build a table
+  * once from an edge DataFrame ([[Graph.buildGraphTable]]) or read a
+  * persisted one ([[Graph.readGraphTable]]), then run every algorithm
+  * on it (the connected-components sibling lives in [[Components]]). */
 object Graph {
 
   private val Dec12 = DecimalType(38, 12)
@@ -180,8 +354,8 @@ object Graph {
     }
   }
 
-  /** Node count above which [[pageRank]] auto-selects the distributed
-    * rank-table loop body (the rank table must fit the driver/broadcast
+  /** Node count above which [[GraphTable.pageRank]] auto-selects the
+    * distributed rank-table loop body (the rank table must fit the driver/broadcast
     * envelope on the driver-resident body — ~16 bytes a row broadcast
     * plus map overhead driver-side, so 2M nodes ≈ tens of MB broadcast
     * and a few hundred MB of driver heap: comfortably inside a default
@@ -315,7 +489,7 @@ object Graph {
     // serializing every consumer's first pass (q130's rank phase
     // 1.6 → 3.2 s, q98/q102 similarly); the commit-overhead saving was
     // ~0.2 s. Ambient-partition writes keep the read side parallel.
-    graft.sources.Artifacts.publishVersion(spark, path) { vdir =>
+    Artifacts.publishVersion(spark, path) { vdir =>
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(pool)
@@ -329,13 +503,6 @@ object Graph {
       finally pool.shutdown()
     }
   }
-
-  private def latestGraphDir(spark: SparkSession, path: String): String =
-    try graft.sources.Artifacts.latestDir(spark, path)
-    catch { case e: IllegalArgumentException =>
-      throw new IllegalArgumentException(
-        s"no graph artifact at $path (${e.getMessage})")
-    }
 
   /** Merge a new edge batch into a persisted graph artifact — the
     * IVF-append lifecycle applied to graphs: a deployment builds the
@@ -366,8 +533,8 @@ object Graph {
       srcCol: String,
       dstCol: String,
       weightCol: Option[String] = None): Unit = {
-    val existing = spark.read
-      .parquet(s"${latestGraphDir(spark, path)}/edges")
+    val vdir = Artifacts.latestDir(spark, path, "graph artifact")
+    val existing = spark.read.parquet(s"$vdir/edges")
       .select("src", "dst", "w")
     val merged = weightCol match {
       case None =>
@@ -396,7 +563,7 @@ object Graph {
     * (one row), so preconditions (sink check, body auto-selection)
     * cost nothing at query time. */
   def readGraphTable(spark: SparkSession, path: String): GraphTable = {
-    val vdir = latestGraphDir(spark, path)
+    val vdir = Artifacts.latestDir(spark, path, "graph artifact")
     val m = spark.read.parquet(s"$vdir/meta")
       .select("n_nodes", "n_src", "n_edges").head()
     GraphTable(
@@ -407,103 +574,18 @@ object Graph {
 
   // -------------------------------------------------------- PageRank
 
-  /** Damped PageRank over a directed edge list.
-    *
-    * Dangling nodes (nodes with in-edges but no out-edges) leak rank
-    * mass if ignored, so the operator never ignores them: with
-    * `danglingCorrection = true` their mass is redistributed uniformly
-    * each round (the standard correction — rank sums stay ~1 and sinks
-    * participate as first-class nodes); with it false (the cheap path
-    * for graphs that cannot have sinks, e.g. an undirected graph fed
-    * as both edge directions), the operator REQUIRES the no-sink
-    * precondition and fails loudly instead of silently producing wrong
-    * ranks on the first directed feed. (The check reads
-    * [[GraphTable.numDangling]], already counted at build time, so it
-    * is free.)
-    *
-    * With `weightCol` set, a contribution is rank·w/Σw over the
-    * source's out-edges instead of rank/outdeg (uniform weights
-    * reproduce the unweighted ranks bit-for-bit: w = 1 makes
-    * rank·1.0/Σ1.0 the same IEEE expression as rank/outdeg).
-    *
-    * Scale posture — TWO loop bodies behind one set of semantics,
-    * auto-selected by node count unless `distributedRanks` pins one
-    * (`Some(false)`/`Some(true)`); the threshold is
-    * `spark.graft.graph.maxDriverRankNodes` (default 2M — see
-    * [[maxDriverRankNodes]]):
-    *
-    *  - driver-resident (the small-N fast path, on the
-    *    [[DriverHarness]]): each round broadcasts the N-entry rank
-    *    array into the lifted edge partitions (the edges never move)
-    *    and folds contributions into per-partition DENSE arrays of
-    *    exact 12-dp decimals — ONE zero-shuffle task wave per round,
-    *    merged exactly. The rank array lives on the driver between rounds:
-    *    broadcasting it already collects all N ranks driver-side every
-    *    round, so driver residency adds no new constraint. Cap: N must
-    *    fit the driver/executor broadcast envelope — which is exactly
-    *    what the auto-switch threshold encodes.
-    *
-    *  - distributed rank table (the 100-TB path, on the
-    *    [[VertexProgram]]): the rank table NEVER visits the driver.
-    *    Each round gathers the rank table into the cached edges
-    *    (out-weights pre-attached), sums contributions in a
-    *    partial/final DECIMAL aggregate on `dst`, and left-joins them
-    *    back onto the cached node list. The dangling mass is a ONE-ROW
-    *    aggregate cross-joined into the update — a plan, not a
-    *    collect: no loop step moves more than a broadcast-sized
-    *    payload to the driver, so the plan's ceiling is cluster
-    *    memory/disk, not the driver heap. (GraphSpec asserts via a
-    *    QueryExecutionListener that the distributed loop performs zero
-    *    `collect` actions, and that both bodies produce bit-identical
-    *    ranks.)
-    *
-    * Convergence: `iters` is the hard round cap. With
-    * `epsilon = Some(eps)` the loop additionally stops as soon as
-    * max |Δrank| <= eps after a round (inclusive boundary — the same
-    * fixpoint discipline as the K-Means loop's A7 semantics, where the
-    * `<=` edge counts as converged). The fixed-iteration behavior
-    * (`epsilon = None`) is exactly the pre-flag semantics. The epsilon
-    * check is a one-row aggregate per round (a bounded scalar action,
-    * the K-Means-convergence category, never an N-row collect).
-    *
-    * Determinism: per-edge contributions are rounded to 12 dp and
-    * summed as DECIMAL(38,12) (exact and associative, so the result is
-    * independent of partitioning and merge order); the dangling mass
-    * uses the same 12-dp DECIMAL device before one double division by
-    * N; the damped update `(1-d)/N + d·(s + dm/N)` is the same
-    * fixed-association double arithmetic whether evaluated per-row by
-    * codegen or per-node on the driver (the [[DriverHarness]]
-    * argument: both sides round HALF_UP, losslessly). By induction every
-    * iteration's rank column is bit-identical across the two loop
-    * bodies and any engine that evaluates the same tree. With
-    * `danglingCorrection = false` the `+ dm/N` term is absent
-    * entirely, preserving the pre-flag semantics.
-    */
-  def pageRank(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iters: Int,
-      damping: Double = 0.85,
-      assumeDistinct: Boolean = false,
-      danglingCorrection: Boolean = false,
-      distributedRanks: Option[Boolean] = None,
-      epsilon: Option[Double] = None,
-      weightCol: Option[String] = None): DataFrame = {
-    val gt = buildGraphTable(edges, srcCol, dstCol, weightCol,
-      assumeDistinct)
-    try pageRankImpl(gt, iters, damping, danglingCorrection,
-      distributedRanks, epsilon)
-    finally gt.unpersist()
-  }
-
-  private[operators] def pageRankImpl(
+  /** [[GraphTable.pageRank]]. `distributed` pins a loop body where
+    * `None` picks it by node count; specs reach both bodies through it,
+    * and q107 runs the distributed one on a graph far below the
+    * threshold. [[personalizedPageRankImpl]] and [[hitsImpl]] take the
+    * same parameter. */
+  private[graft] def pageRankImpl(
       gt: GraphTable,
       iters: Int,
       damping: Double,
       danglingCorrection: Boolean,
-      distributedRanks: Option[Boolean],
-      epsilon: Option[Double]): DataFrame = {
+      epsilon: Option[Double],
+      distributed: Option[Boolean] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0,1), got $damping")
@@ -520,11 +602,9 @@ object Graph {
     // ranks are defined over src nodes on the cheap path (sink-free ⇒
     // src set ⊇ dst set), over src ∪ dst with the correction
     val nL = if (danglingCorrection) gt.numNodes else gt.numSrcNodes
-    val distributed =
-      distributedRanks.getOrElse(
-        nL > maxDriverRankNodes(gt.edges.sparkSession))
     val srcNodes = gt.nodes.where(col("is_src")).select("node")
-    if (distributed) {
+    if (distributed.getOrElse(
+        nL > maxDriverRankNodes(gt.edges.sparkSession))) {
       // with the correction the SINK FLAG rides the node (and so the
       // rank) table; the uniform share of the sink mass is dm/N
       val n = nL.toDouble
@@ -931,13 +1011,14 @@ object Graph {
       a
     }
 
-  /** The driver rank loop of [[pageRank]] and [[personalizedPageRank]]
-    * (see the scale posture there) on the [[DriverHarness]] `h`, whose
-    * node table is the rank domain. Per round: the total sink mass
-    * `dm` as an exact 12-dp sum over the sink nodes (0.0 when `sinks`
-    * is false), ONE wave of 12-dp contribution sums round(rank·w/wout,
-    * 12), then the caller's damped `update(v, s, dm)` for node v with
-    * contribution sum s, rounded to 9 dp. */
+  /** The driver rank loop of [[GraphTable.pageRank]] and
+    * [[GraphTable.personalizedPageRank]] (see the scale posture there)
+    * on the [[DriverHarness]] `h`, whose node table is the rank domain.
+    * Per round: the total sink mass `dm` as an exact 12-dp sum over the
+    * sink nodes (0.0 when `sinks` is false), ONE wave of 12-dp
+    * contribution sums round(rank·w/wout, 12), then the caller's damped
+    * `update(v, s, dm)` for node v with contribution sum s, rounded to
+    * 9 dp. */
   private def rankLoopDriver(
       gt: GraphTable,
       h: DriverHarness,
@@ -983,8 +1064,8 @@ object Graph {
       .orderBy(desc("rank"), col("node"))
   }
 
-  /** The distributed rank loop of [[pageRank]] and
-    * [[personalizedPageRank]] (see the scale posture there) on the
+  /** The distributed rank loop of [[GraphTable.pageRank]] and
+    * [[GraphTable.personalizedPageRank]] (see the scale posture there) on the
     * [[VertexProgram]]. `nodes` is the rank domain: node,
     * then the `sink` flag and the reset weight `rv` when the caller
     * has them. `rank0` is the round-0 rank column over it, `dmScalar`
@@ -1069,71 +1150,13 @@ object Graph {
 
   // --------------------------------------- personalized PageRank
 
-  /** Personalized (topic-sensitive) PageRank: the reset mass lands on
-    * the `seeds` distribution instead of uniformly — rank measures
-    * proximity to the seed set (the standard seed-biased relevance
-    * device: related-document discovery from a trusted subset,
-    * authority propagation from labeled-good domains in a curation
-    * pipeline). Semantics per Haveliwala 2002 / the standard PPR
-    * formulation:
-    *
-    *   rank'(v) = (1−d)·r(v) + d·(Σ_{u→v} rank(u)·w/Σw + dm·r(v))
-    *
-    * with r(v) = 1/|S| for v ∈ S else 0, and dm = the total dangling
-    * (sink) mass — redistributed over the SEED distribution, so rank
-    * mass is conserved and teleports never leak to unrelated nodes.
-    * Initial ranks are r itself. Contributions are out-weight-
-    * normalized (rank/outdeg on unweighted graphs).
-    *
-    * Scale posture: TWO loop bodies behind one set of semantics, the
-    * [[pageRank]] discipline, auto-selected by node count against
-    * [[maxDriverRankNodes]] unless `distributedRanks` pins one:
-    *
-    *  - distributed (the 100-TB path): [[pageRank]]'s rank loop on the
-    *    [[VertexProgram]], the rank table carrying the per-node reset
-    *    weight alongside (computed once from a seed semi-join; seeds
-    *    are a DataFrame, not a driver collection, so the seed set
-    *    itself can be large). No driver collect anywhere (GraphSpec's
-    *    listener assertion pins this body).
-    *
-    *  - driver-resident (the small-N fast path): the
-    *    [[DriverHarness]] — the reset weights join is collected as the
-    *    N-bounded node table (bounded by N whatever the seed
-    *    cardinality), and each round is one zero-shuffle task wave
-    *    with the sink mass summed on the driver.
-    *
-    * Determinism: the same 12-dp DECIMAL contribution sums and 9-dp
-    * HALF_UP damped update as [[pageRank]], with the fixed association
-    * `(1−d)·r + d·(s + dm·r)` — bit-replayable in any IEEE engine
-    * (the q113 oracle), and bit-identical across the two bodies by
-    * the [[DriverHarness]] argument. Both bodies are [[pageRank]]'s
-    * rank loops with a different node table and update.
-    */
-  def personalizedPageRank(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      seeds: DataFrame,
-      iters: Int,
-      damping: Double = 0.85,
-      assumeDistinct: Boolean = false,
-      epsilon: Option[Double] = None,
-      weightCol: Option[String] = None,
-      distributedRanks: Option[Boolean] = None): DataFrame = {
-    val gt = buildGraphTable(edges, srcCol, dstCol, weightCol,
-      assumeDistinct)
-    try personalizedPageRankImpl(gt, seeds, iters, damping, epsilon,
-      distributedRanks)
-    finally gt.unpersist()
-  }
-
   private[operators] def personalizedPageRankImpl(
       gt: GraphTable,
       seeds: DataFrame,
       iters: Int,
       damping: Double,
       epsilon: Option[Double],
-      distributedRanks: Option[Boolean] = None): DataFrame = {
+      distributed: Option[Boolean] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0,1), got $damping")
@@ -1144,8 +1167,6 @@ object Graph {
     // a repeated misconfigured call must not accumulate persists
     val k = gt.nodes.join(seedsDf, Seq("node"), "left_semi").count()
     require(k > 0, "no seed node appears in the graph")
-    val distributed = distributedRanks.getOrElse(
-      gt.numNodes > maxDriverRankNodes(gt.edges.sparkSession))
     val rv0 = 1.0 / k
     // `base` with the per-node reset weight attached ONCE: 1/|S| on
     // seed nodes (seeds outside the graph are ignored), 0 elsewhere
@@ -1156,7 +1177,8 @@ object Graph {
             .as("rv"): _*)
     // the total sink mass rides the reset distribution (NOT divided
     // by N)
-    if (distributed)
+    if (distributed.getOrElse(
+        gt.numNodes > maxDriverRankNodes(gt.edges.sparkSession)))
       rankLoopDistributed(gt,
         withReset(gt.nodes.select(col("node"), (!col("is_src")).as("sink"))),
         col("rv"), iters, epsilon)(
@@ -1178,77 +1200,21 @@ object Graph {
 
   // ------------------------------------------------------------- HITS
 
-  /** HITS (hubs & authorities), Kleinberg 1999 — the Jacobi
-    * (simultaneous-update) variant: each round computes BOTH scores
-    * from the previous round's values,
-    *
-    *   auth'(v) = N₁( Σ_{u→v} hub(u) ),   hub'(v) = N₁( Σ_{v→w} auth(w) )
-    *
-    * with N₁ = L1 normalization (divide by the global sum, so each
-    * score vector stays a distribution). The Gauss–Seidel textbook
-    * ordering (hub from the NEW auth) converges to the same principal
-    * singular vectors; the Jacobi form is chosen because every round
-    * is a pure function of the previous one — replayable row-wise in
-    * a recursive-CTE oracle (the q114 device), and the natural shape
-    * for a distributed engine anyway (no intra-round dependency).
-    *
-    * Convergence: `iters` is the hard round cap; with
-    * `epsilon = Some(eps)` the loop additionally stops at the first
-    * round where max over nodes of max(|Δauth|, |Δhub|) <= eps
-    * (inclusive — the same A7 fixpoint discipline as [[pageRank]]'s
-    * epsilon; the check is a one-row aggregate per round).
-    *
-    * Scale posture: the distributed rank-table body again, with the
-    * two gathers FUSED: ONE bidirectional edge cache holds each edge
-    * twice — (src→dst, auth side) and (dst→src, hub side) — so a
-    * round is ONE join of the score table against the cache and ONE
-    * (node, conditional-sum × 2) aggregate, instead of two separately
-    * cached edge tables each shuffling the scores per round (same row
-    * volume through the exchanges, HALF the jobs/stages per round —
-    * HitsSpec asserts the job count). Contributions are 12-dp DECIMAL
-    * sums (exact, associative — the conditional split sums exactly
-    * the same term multisets as the separate gathers, so scores are
-    * bit-identical), the L1 totals are one-row aggregates cross-joined
-    * in (a plan, not a collect), and scores are 9-dp rounded, on the
-    * [[VertexProgram]]. No driver collect anywhere in the distributed
-    * body. Like [[pageRank]], TWO loop bodies behind
-    * one set of semantics, auto-selected by node count against
-    * [[maxDriverRankNodes]] unless `distributedScores` pins one: the
-    * driver-resident twin folds BOTH gathers in one zero-shuffle task
-    * wave per round on the [[DriverHarness]], bit-identical by its
-    * argument since the gathers sum identical 12-dp addend multisets
-    * and the L1 divide + 9-dp round is the same IEEE expression either
-    * way.
-    *
-    * Returns (node, auth, hub), authorities first. */
-  def hits(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iters: Int,
-      assumeDistinct: Boolean = false,
-      epsilon: Option[Double] = None,
-      distributedScores: Option[Boolean] = None): DataFrame = {
-    val gt = buildGraphTable(edges, srcCol, dstCol, None, assumeDistinct)
-    try hitsImpl(gt, iters, epsilon, distributedScores)
-    finally gt.unpersist()
-  }
-
   private[operators] def hitsImpl(
       gt: GraphTable,
       iters: Int,
       epsilon: Option[Double],
-      distributedScores: Option[Boolean] = None): DataFrame = {
+      distributed: Option[Boolean] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     epsilon.foreach(e => require(e >= 0.0, s"epsilon must be >= 0, got $e"))
     require(gt.numNodes > 0, "graph has no nodes")
-    val distributed = distributedScores.getOrElse(
-      gt.numNodes > maxDriverRankNodes(gt.edges.sparkSession))
-    if (distributed) hitsDistributed(gt, iters, epsilon)
+    if (distributed.getOrElse(
+        gt.numNodes > maxDriverRankNodes(gt.edges.sparkSession)))
+      hitsDistributed(gt, iters, epsilon)
     else hitsDriver(gt, iters, epsilon)
   }
 
-  /** Distributed HITS body (see the scale posture on [[hits]]). */
+  /** Distributed HITS body (see the scale posture on [[GraphTable.hits]]). */
   private def hitsDistributed(
       gt: GraphTable,
       iters: Int,
@@ -1380,39 +1346,6 @@ object Graph {
 
   // ---------------------------------------------- label propagation
 
-  /** Synchronous (Jacobi) label-propagation community detection,
-    * Raghavan et al. 2007 adapted to a deterministic simultaneous
-    * update: every node starts with its own id as label; each round,
-    * a node with at least one in-edge takes the most frequent label
-    * among its in-neighbors' PREVIOUS-round labels, ties broken to
-    * the smallest label; nodes with no in-edges keep their label. For
-    * community detection feed the graph undirected (both directions —
-    * in-neighbors = neighbors), the [[Components]] convention. Runs a
-    * fixed `iters` rounds: the Jacobi form plus deterministic
-    * tie-break makes every round a pure function of the previous one
-    * — row-replayable in a recursive-CTE oracle (the q117 device) —
-    * at the cost of possible 2-cycles on bipartite structures, which
-    * a fixed round count simply samples.
-    *
-    * Scale posture: the distributed body runs on the [[VertexProgram]]
-    * — per round one gather of the labels into the edges, an exact
-    * (dst, label) count aggregate, a per-node argmax via one
-    * `min(struct(-cnt, label))` aggregate (no window, no collect — all
-    * counts are exact longs, so no rounding device is even needed), and
-    * a co-partitioned left join back onto the label table.
-    *
-    * Returns (node, label) ordered by node. */
-  def labelPropagation(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iters: Int,
-      assumeDistinct: Boolean = false): DataFrame = {
-    val gt = buildGraphTable(edges, srcCol, dstCol, None, assumeDistinct)
-    try labelPropagationImpl(gt, iters)
-    finally gt.unpersist()
-  }
-
   private[operators] def labelPropagationImpl(
       gt: GraphTable,
       iters: Int): DataFrame = {
@@ -1484,7 +1417,7 @@ object Graph {
   }
 
   /** Distributed label-propagation body (the 100 TB path — see the
-    * scale posture on [[labelPropagation]]). */
+    * scale posture on [[GraphTable.labelPropagation]]). */
   private def labelPropagationDistributed(
       gt: GraphTable,
       iters: Int): DataFrame =

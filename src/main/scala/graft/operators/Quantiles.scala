@@ -129,14 +129,6 @@ object Quantiles {
     }
   }
 
-  private def latestHistogramDir(
-      spark: org.apache.spark.sql.SparkSession, path: String): String =
-    try graft.sources.Artifacts.latestDir(spark, path)
-    catch { case e: IllegalArgumentException =>
-      throw new IllegalArgumentException(
-        s"no histogram artifact at $path (${e.getMessage})")
-    }
-
   /** Fold a batch into a persisted histogram: counter-wise sum
     * published as the next version (the old version stays live until
     * the pointer moves — [[graft.sources.Artifacts]]), so probes can
@@ -144,7 +136,8 @@ object Quantiles {
   def appendToHistogram(
       spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, valCol: String): Unit = {
-    val cur = latestHistogramDir(spark, path)
+    val cur = graft.sources.Artifacts.latestDir(spark, path,
+      "histogram artifact")
     val bw = spark.read.parquet(s"$cur/meta").head().getDouble(0)
     val merged = spark.read.parquet(s"$cur/bins")
       .unionByName(df.where(col(valCol).isNotNull)
@@ -174,7 +167,8 @@ object Quantiles {
       require(num >= 1 && num <= den,
         s"quantile $qn must have 1 <= num <= den, got $num/$den")
     }
-    val vdir = latestHistogramDir(spark, path)
+    val vdir = graft.sources.Artifacts.latestDir(spark, path,
+      "histogram artifact")
     val bw = spark.read.parquet(s"$vdir/meta").head().getDouble(0)
     val bins = spark.read.parquet(s"$vdir/bins")
     // The cumulative sum below is an unpartitioned window — single-task

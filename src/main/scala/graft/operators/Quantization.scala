@@ -219,12 +219,7 @@ object Quantization {
       spark: org.apache.spark.sql.SparkSession,
       path0: String,
       idCol: String = "vec_id"): PqIndex = {
-    val path =
-      try graft.sources.Artifacts.latestDir(spark, path0)
-      catch { case e: IllegalArgumentException =>
-        throw new IllegalArgumentException(
-          s"no PQ index at $path0 (${e.getMessage})")
-      }
+    val path = graft.sources.Artifacts.latestDir(spark, path0, "PQ index")
     val br = spark.read.parquet(s"$path/books")
       .select("subspace", "code", "centroid").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))

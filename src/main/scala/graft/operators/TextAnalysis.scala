@@ -383,14 +383,6 @@ object TextAnalysis {
     }
   }
 
-  private def latestLangModelDir(
-      spark: org.apache.spark.sql.SparkSession, path: String): String =
-    try graft.sources.Artifacts.latestDir(spark, path)
-    catch { case e: IllegalArgumentException =>
-      throw new IllegalArgumentException(
-        s"no language-model artifact at $path (${e.getMessage})")
-    }
-
   /** Fold a labeled batch into a persisted model: per-(lang, gram)
     * count sums published as the next version (the old version stays
     * live until the pointer moves — concurrent classification is
@@ -398,7 +390,8 @@ object TextAnalysis {
   def appendToLangModel(
       spark: org.apache.spark.sql.SparkSession, path: String,
       train: DataFrame, langCol: String, textCol: String): Unit = {
-    val cur = latestLangModelDir(spark, path)
+    val cur = graft.sources.Artifacts.latestDir(spark, path,
+      "language-model artifact")
     val n = spark.read.parquet(s"$cur/meta").head().getInt(0)
     val merged = spark.read.parquet(s"$cur/model")
       .unionByName(charNgramLangModel(train, langCol, textCol, n))
@@ -418,7 +411,8 @@ object TextAnalysis {
   def charNgramDetectPersisted(
       spark: org.apache.spark.sql.SparkSession, path: String,
       docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val vdir = latestLangModelDir(spark, path)
+    val vdir = graft.sources.Artifacts.latestDir(spark, path,
+      "language-model artifact")
     val n = spark.read.parquet(s"$vdir/meta").head().getInt(0)
     charNgramDetect(spark.read.parquet(s"$vdir/model"),
       docs, idCol, textCol, n)

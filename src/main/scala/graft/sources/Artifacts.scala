@@ -96,12 +96,14 @@ object Artifacts {
   }
 
   /** Directory of the latest published version — the path probes read.
-    * Throws if nothing has been published at `base`. */
-  def latestDir(spark: SparkSession, base: String): String =
+    * Throws if nothing has been published at `base`, naming the missing
+    * artifact as `what` ("no graph artifact at …"). */
+  def latestDir(spark: SparkSession, base: String,
+      what: String = "artifact"): String =
     latestVersion(spark, base) match {
       case Some(v) => s"$base/v$v"
       case None => throw new IllegalArgumentException(
-        s"no published artifact at $base")
+        s"no $what at $base (no published artifact version)")
     }
 
   /** Publish the next version: `write` fills a fresh `v(k+1)`

@@ -140,8 +140,8 @@ class DedupSpec extends SparkSpec {
     val brute = Similarity.bruteForcePairs(union, 0.98)
       .select("id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = lshNearDupPairs(union, 0.98, nBands = 6, planesPerBand = 8,
-        seed = 33L)
+    val lsh = Similarity.lshNearDupPairs(union, 0.98, nBands = 6,
+        planesPerBand = 8, seed = 33L)
       .select("id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(brute.size >= 90, s"planted pairs should survive, got ${brute.size}")

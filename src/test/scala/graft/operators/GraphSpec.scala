@@ -4,6 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import graft.{ExactMerge, SparkSpec}
 
+import GraphSpec.onTable
+
 class GraphSpec extends SparkSpec {
 
   /** Independent in-memory replica of the same fixpoint: 12-dp-rounded
@@ -50,15 +52,15 @@ class GraphSpec extends SparkSpec {
 
   test("pageRank matches an independent in-memory fixpoint") {
     import spark.implicits._
-    val got = Graph.pageRank(
-        edges.toDF("src", "dst").repartition(3), "src", "dst", iters = 8)
+    val got = onTable(edges.toDF("src", "dst").repartition(3))(
+        _.pageRank(iters = 8))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got === brute(edges, 8, 0.85))
   }
 
   test("pageRank ranks the higher-degree nodes of the diagonal first") {
     import spark.implicits._
-    val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", 8)
+    val got = onTable(edges.toDF("src", "dst"))(_.pageRank(8))
       .collect().map(_.getLong(0)).toSeq
     // 1 and 3 have degree 3; 2 and 4 degree 2
     assert(got.take(2).toSet === Set(1L, 3L))
@@ -70,15 +72,15 @@ class GraphSpec extends SparkSpec {
   test("pageRank fails loudly on a sink node without the correction") {
     import spark.implicits._
     val ex = intercept[IllegalArgumentException] {
-      Graph.pageRank(directed.toDF("src", "dst"), "src", "dst", iters = 3)
+      onTable(directed.toDF("src", "dst"))(_.pageRank(iters = 3))
     }
     assert(ex.getMessage.contains("rank mass"), ex.getMessage)
   }
 
   test("danglingCorrection matches the replica and conserves mass") {
     import spark.implicits._
-    val got = Graph.pageRank(directed.toDF("src", "dst").repartition(3),
-        "src", "dst", iters = 6, danglingCorrection = true)
+    val got = onTable(directed.toDF("src", "dst").repartition(3))(
+        _.pageRank(iters = 6, danglingCorrection = true))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got === brute(directed, 6, 0.85, dangling = true))
     // the sink's mass is recycled, not leaked
@@ -89,20 +91,19 @@ class GraphSpec extends SparkSpec {
 
   test("danglingCorrection on a sink-free graph equals the cheap path") {
     import spark.implicits._
-    val plain = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", 4)
+    val plain = onTable(edges.toDF("src", "dst"))(_.pageRank(4))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val corrected = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst",
-        4, danglingCorrection = true)
+    val corrected = onTable(edges.toDF("src", "dst"))(
+        _.pageRank(4, danglingCorrection = true))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(plain === corrected)
   }
 
   test("pageRank mass stays ~1 and is partitioning-invariant") {
     import spark.implicits._
-    val a = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", 5)
+    val a = onTable(edges.toDF("src", "dst"))(_.pageRank(5))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val b = Graph.pageRank(
-        edges.toDF("src", "dst").repartition(7), "src", "dst", 5)
+    val b = onTable(edges.toDF("src", "dst").repartition(7))(_.pageRank(5))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(a === b)
     assert(math.abs(a.map(_._2).sum - 1.0) < 1e-6)
@@ -110,30 +111,33 @@ class GraphSpec extends SparkSpec {
 
   // ------------------------------------------- distributed rank table
 
-  test("distributedRanks is bit-identical to the driver loop (undirected)") {
+  test("distributed rank loop is bit-identical to the driver loop (undirected)") {
     import spark.implicits._
-    val driver = Graph.pageRank(
-        edges.toDF("src", "dst").repartition(3), "src", "dst", iters = 8)
+    val driver = onTable(edges.toDF("src", "dst").repartition(3))(
+        _.pageRank(iters = 8))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val dist = Graph.pageRank(
-        edges.toDF("src", "dst").repartition(3), "src", "dst", iters = 8,
-        distributedRanks = Some(true))
+    val dist = onTable(edges.toDF("src", "dst").repartition(3))(gt =>
+        Graph.pageRankImpl(gt, iters = 8, damping = 0.85,
+          danglingCorrection = false, epsilon = None,
+          distributed = Some(true)))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(dist === driver)
   }
 
-  test("distributedRanks is bit-identical to the driver loop (dangling)") {
+  test("distributed rank loop is bit-identical to the driver loop (dangling)") {
     import spark.implicits._
-    val driver = Graph.pageRank(directed.toDF("src", "dst"), "src", "dst",
-        iters = 6, danglingCorrection = true)
+    val driver = onTable(directed.toDF("src", "dst"))(
+        _.pageRank(iters = 6, danglingCorrection = true))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val dist = Graph.pageRank(directed.toDF("src", "dst"), "src", "dst",
-        iters = 6, danglingCorrection = true, distributedRanks = Some(true))
+    val dist = onTable(directed.toDF("src", "dst"))(gt =>
+        Graph.pageRankImpl(gt, iters = 6, damping = 0.85,
+          danglingCorrection = true, epsilon = None,
+          distributed = Some(true)))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(dist === driver)
   }
 
-  test("distributedRanks parity holds on a 300-node seeded random graph") {
+  test("distributed rank loop parity holds on a 300-node seeded random graph") {
     import spark.implicits._
     // deterministic pseudo-random digraph with sinks: every node gets
     // 1-4 out-edges except multiples of 17 (pure sinks)
@@ -142,12 +146,13 @@ class GraphSpec extends SparkSpec {
       if (s % 17 == 0) Seq.empty
       else (0 until (1 + rnd.nextInt(4))).map(_ => s -> rnd.nextInt(300).toLong)
     }.distinct
-    val driver = Graph.pageRank(g.toDF("src", "dst").repartition(5),
-        "src", "dst", iters = 7, danglingCorrection = true)
+    val driver = onTable(g.toDF("src", "dst").repartition(5))(
+        _.pageRank(iters = 7, danglingCorrection = true))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val dist = Graph.pageRank(g.toDF("src", "dst").repartition(5),
-        "src", "dst", iters = 7, danglingCorrection = true,
-        distributedRanks = Some(true))
+    val dist = onTable(g.toDF("src", "dst").repartition(5))(gt =>
+        Graph.pageRankImpl(gt, iters = 7, damping = 0.85,
+          danglingCorrection = true, epsilon = None,
+          distributed = Some(true)))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(dist === driver)
     assert(math.abs(dist.map(_._2).sum - 1.0) < 1e-6)
@@ -181,8 +186,10 @@ class GraphSpec extends SparkSpec {
       recorded.clear()
       // distributed path: build+loop runs inside; the returned frame is
       // NOT collected here, so any "collect" would come from the loop
-      Graph.pageRank(directed.toDF("src", "dst"), "src", "dst", iters = 4,
-        danglingCorrection = true, distributedRanks = Some(true))
+      onTable(directed.toDF("src", "dst"))(gt =>
+        Graph.pageRankImpl(gt, iters = 4, damping = 0.85,
+          danglingCorrection = true, epsilon = None,
+          distributed = Some(true)))
       // sentinel: the listener bus is FIFO, so once the sentinel's
       // "collect" arrives every loop event has been delivered
       spark.range(1).collect()
@@ -198,8 +205,8 @@ class GraphSpec extends SparkSpec {
       // records driver-body collects, so the distributed loop's zero
       // above is not a false negative
       recorded.clear()
-      Graph.pageRank(directed.toDF("src", "dst"), "src", "dst", iters = 4,
-        danglingCorrection = true)
+      onTable(directed.toDF("src", "dst"))(
+        _.pageRank(iters = 4, danglingCorrection = true))
       val deadline2 = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (recorded.asScala.count(_ == "collect") < 2 &&
           System.nanoTime() < deadline2) Thread.sleep(50)
@@ -235,11 +242,12 @@ class GraphSpec extends SparkSpec {
     assert(rounds(stopRound) !== rounds(stopRound + 1),
       "degenerate fixture: ranks already stationary")
     for (dist <- Seq(false, true)) {
-      val got = Graph.pageRank(directed.toDF("src", "dst"), "src", "dst",
-          iters = 10, danglingCorrection = true, distributedRanks = Some(dist),
-          epsilon = Some(eps))
+      val got = onTable(directed.toDF("src", "dst"))(gt =>
+          Graph.pageRankImpl(gt, iters = 10, damping = 0.85,
+            danglingCorrection = true, epsilon = Some(eps),
+            distributed = Some(dist)))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(got === rounds(stopRound), s"distributedRanks=$dist")
+      assert(got === rounds(stopRound), s"distributed=$dist")
     }
   }
 
@@ -280,9 +288,8 @@ class GraphSpec extends SparkSpec {
 
   test("personalizedPageRank matches the replica and conserves mass") {
     import spark.implicits._
-    val got = Graph.personalizedPageRank(
-        directed.toDF("src", "dst").repartition(3), "src", "dst",
-        Seq(1L).toDF("node"), iters = 6)
+    val got = onTable(directed.toDF("src", "dst").repartition(3))(
+        _.personalizedPageRank(Seq(1L).toDF("node"), iters = 6))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got === brutePpr(directed, Set(1L), 6, 0.85))
     // sink mass recycles to the seed: total mass stays ~1
@@ -299,9 +306,8 @@ class GraphSpec extends SparkSpec {
       else (0 until (1 + rnd.nextInt(4))).map(_ => s -> rnd.nextInt(300).toLong)
     }.distinct
     val seeds = (0L until 300L by 10).toSet
-    val got = Graph.personalizedPageRank(
-        g.toDF("src", "dst").repartition(5), "src", "dst",
-        seeds.toSeq.toDF("node"), iters = 7)
+    val got = onTable(g.toDF("src", "dst").repartition(5))(
+        _.personalizedPageRank(seeds.toSeq.toDF("node"), iters = 7))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got === brutePpr(g, seeds, 7, 0.85))
     assert(math.abs(got.values.sum - 1.0) < 1e-6)
@@ -313,14 +319,12 @@ class GraphSpec extends SparkSpec {
     val confKey = "spark.graft.graph.maxDriverRankNodes"
     try {
       spark.conf.set(confKey, "2") // 7 nodes > 2 → the DISTRIBUTED body
-      val viaDist = Graph.personalizedPageRank(
-          directed.toDF("src", "dst"), "src", "dst",
-          Seq(1L, 3L).toDF("node"), iters = 5)
+      val viaDist = onTable(directed.toDF("src", "dst"))(
+          _.personalizedPageRank(Seq(1L, 3L).toDF("node"), iters = 5))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       spark.conf.set(confKey, "1000") // 7 <= 1000 → the DRIVER body
-      val viaDriver = Graph.personalizedPageRank(
-          directed.toDF("src", "dst"), "src", "dst",
-          Seq(1L, 3L).toDF("node"), iters = 5)
+      val viaDriver = onTable(directed.toDF("src", "dst"))(
+          _.personalizedPageRank(Seq(1L, 3L).toDF("node"), iters = 5))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       // the triangle-envelope discipline: crossing the gate must never
       // change the answer — and both match the in-memory replica
@@ -337,11 +341,11 @@ class GraphSpec extends SparkSpec {
     // the 9-dp round absorbs (deterministically on this fixed
     // fixture). A consistency pin tying the two operators together.
     val allNodes = directed.flatMap(p => Seq(p._1, p._2)).distinct
-    val ppr = Graph.personalizedPageRank(directed.toDF("src", "dst"),
-        "src", "dst", allNodes.toDF("node"), iters = 6)
+    val ppr = onTable(directed.toDF("src", "dst"))(
+        _.personalizedPageRank(allNodes.toDF("node"), iters = 6))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val uniform = Graph.pageRank(directed.toDF("src", "dst"), "src", "dst",
-        iters = 6, danglingCorrection = true)
+    val uniform = onTable(directed.toDF("src", "dst"))(
+        _.pageRank(iters = 6, danglingCorrection = true))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(ppr === uniform)
   }
@@ -349,8 +353,8 @@ class GraphSpec extends SparkSpec {
   test("personalizedPageRank rejects seed sets disjoint from the graph") {
     import spark.implicits._
     val ex = intercept[IllegalArgumentException] {
-      Graph.personalizedPageRank(directed.toDF("src", "dst"),
-        "src", "dst", Seq(99L).toDF("node"), iters = 3)
+      onTable(directed.toDF("src", "dst"))(
+        _.personalizedPageRank(Seq(99L).toDF("node"), iters = 3))
     }
     assert(ex.getMessage.contains("seed"), ex.getMessage)
   }
@@ -380,8 +384,9 @@ class GraphSpec extends SparkSpec {
           System.nanoTime() < drain) Thread.sleep(50)
       Thread.sleep(200)
       recorded.clear()
-      Graph.personalizedPageRank(directed.toDF("src", "dst"), "src", "dst",
-        Seq(1L).toDF("node"), iters = 4, distributedRanks = Some(true))
+      onTable(directed.toDF("src", "dst"))(gt =>
+        Graph.personalizedPageRankImpl(gt, Seq(1L).toDF("node"), iters = 4,
+          damping = 0.85, epsilon = None, distributed = Some(true)))
       spark.range(1).collect() // FIFO sentinel
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (!recorded.asScala.contains("collect") &&
@@ -421,8 +426,8 @@ class GraphSpec extends SparkSpec {
 
   test("hits matches the replica; sink hubs and source auths are zero") {
     import spark.implicits._
-    val got = Graph.hits(directed.toDF("src", "dst").repartition(3),
-        "src", "dst", iters = 5)
+    val got = onTable(directed.toDF("src", "dst").repartition(3))(
+        _.hits(iters = 5))
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)))
       .toMap
     assert(got === bruteHits(directed, 5))
@@ -455,8 +460,9 @@ class GraphSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(jl)
     spark.sparkContext.setJobGroup(group, "hits fused-gather test")
     try {
-      val got = Graph.hits(directed.toDF("src", "dst").repartition(3),
-          "src", "dst", iters = 8, distributedScores = Some(true))
+      val got = onTable(directed.toDF("src", "dst").repartition(3))(gt =>
+          Graph.hitsImpl(gt, iters = 8, epsilon = None,
+            distributed = Some(true)))
         .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)))
         .toMap
       assert(got === bruteHits(directed, 8))
@@ -486,8 +492,8 @@ class GraphSpec extends SparkSpec {
       if (s % 17 == 0) Seq.empty
       else (0 until (1 + rnd.nextInt(4))).map(_ => s -> rnd.nextInt(300).toLong)
     }.distinct
-    val got = Graph.hits(g.toDF("src", "dst").repartition(5),
-        "src", "dst", iters = 6)
+    val got = onTable(g.toDF("src", "dst").repartition(5))(
+        _.hits(iters = 6))
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)))
       .toMap
     assert(got === bruteHits(g, 6))
@@ -499,13 +505,11 @@ class GraphSpec extends SparkSpec {
     val confKey = "spark.graft.graph.maxDriverRankNodes"
     try {
       spark.conf.set(confKey, "2") // 7 nodes > 2 → the DISTRIBUTED body
-      val viaDist = Graph.hits(directed.toDF("src", "dst"), "src",
-          "dst", iters = 5)
+      val viaDist = onTable(directed.toDF("src", "dst"))(_.hits(iters = 5))
         .collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
       spark.conf.set(confKey, "1000") // 7 <= 1000 → the DRIVER body
-      val viaDriver = Graph.hits(directed.toDF("src", "dst"), "src",
-          "dst", iters = 5)
+      val viaDriver = onTable(directed.toDF("src", "dst"))(_.hits(iters = 5))
         .collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
       // the triangle-envelope discipline: crossing the gate must never
@@ -519,12 +523,13 @@ class GraphSpec extends SparkSpec {
   test("epsilon stop: iters cap binds when epsilon is never reached") {
     import spark.implicits._
     for (dist <- Seq(false, true)) {
-      val capped = Graph.pageRank(directed.toDF("src", "dst"), "src", "dst",
-          iters = 3, danglingCorrection = true, distributedRanks = Some(dist),
-          epsilon = Some(1e-18))
+      val capped = onTable(directed.toDF("src", "dst"))(gt =>
+          Graph.pageRankImpl(gt, iters = 3, damping = 0.85,
+            danglingCorrection = true, epsilon = Some(1e-18),
+            distributed = Some(dist)))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(capped === brute(directed, 3, 0.85, dangling = true),
-        s"distributedRanks=$dist")
+        s"distributed=$dist")
     }
   }
 
@@ -555,8 +560,8 @@ class GraphSpec extends SparkSpec {
     val stopRound = (1 to 8).find(r => deltas(r - 1) <= eps).get
     assert(rounds(stopRound) !== rounds(stopRound + 1),
       "degenerate fixture: scores already stationary")
-    val got = Graph.hits(directed.toDF("src", "dst"), "src", "dst",
-        iters = 8, epsilon = Some(eps))
+    val got = onTable(directed.toDF("src", "dst"))(
+        _.hits(iters = 8, epsilon = Some(eps)))
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)))
       .toMap
     assert(got === rounds(stopRound))
@@ -564,8 +569,8 @@ class GraphSpec extends SparkSpec {
 
   test("hits epsilon: iters cap binds when epsilon is never reached") {
     import spark.implicits._
-    val got = Graph.hits(directed.toDF("src", "dst"), "src", "dst",
-        iters = 3, epsilon = Some(1e-18))
+    val got = onTable(directed.toDF("src", "dst"))(
+        _.hits(iters = 3, epsilon = Some(1e-18)))
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)))
       .toMap
     assert(got === bruteHits(directed, 3))
@@ -574,8 +579,7 @@ class GraphSpec extends SparkSpec {
   test("hits rejects an empty graph loudly") {
     import spark.implicits._
     val ex = intercept[IllegalArgumentException] {
-      Graph.hits(Seq.empty[(Long, Long)].toDF("src", "dst"),
-        "src", "dst", iters = 2)
+      onTable(Seq.empty[(Long, Long)].toDF("src", "dst"))(_.hits(iters = 2))
     }
     assert(ex.getMessage.contains("no nodes"), ex.getMessage)
   }
@@ -615,13 +619,14 @@ class GraphSpec extends SparkSpec {
   test("weighted pageRank matches the replica and conserves mass") {
     import spark.implicits._
     for (dist <- Seq(false, true)) {
-      val got = Graph.pageRank(
-          weighted.toDF("src", "dst", "w").repartition(3), "src", "dst",
-          iters = 6, danglingCorrection = true,
-          distributedRanks = Some(dist), weightCol = Some("w"))
+      val got = onTable(weighted.toDF("src", "dst", "w").repartition(3),
+          weightCol = Some("w"))(gt =>
+          Graph.pageRankImpl(gt, iters = 6, damping = 0.85,
+            danglingCorrection = true, epsilon = None,
+            distributed = Some(dist)))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(got === bruteWeighted(weighted, 6, 0.85),
-        s"distributedRanks=$dist")
+        s"distributed=$dist")
       assert(math.abs(got.values.sum - 1.0) < 1e-6)
       // node 2 receives the heavy 3.0 edge: it outranks node 1
       assert(got(2L) > got(1L))
@@ -631,11 +636,11 @@ class GraphSpec extends SparkSpec {
   test("uniform weights reproduce the unweighted ranks bit-for-bit") {
     import spark.implicits._
     val uni = directed.map { case (s, t) => (s, t, 1.0) }
-    val plain = Graph.pageRank(directed.toDF("src", "dst"), "src", "dst",
-        iters = 6, danglingCorrection = true)
+    val plain = onTable(directed.toDF("src", "dst"))(
+        _.pageRank(iters = 6, danglingCorrection = true))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val w = Graph.pageRank(uni.toDF("src", "dst", "w"), "src", "dst",
-        iters = 6, danglingCorrection = true, weightCol = Some("w"))
+    val w = onTable(uni.toDF("src", "dst", "w"), weightCol = Some("w"))(
+        _.pageRank(iters = 6, danglingCorrection = true))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(w === plain)
   }
@@ -646,22 +651,21 @@ class GraphSpec extends SparkSpec {
     // full-weight edge — same fixpoint
     val split = Seq((1L, 2L, 1.5), (1L, 2L, 1.5), (1L, 3L, 1.0),
       (2L, 3L, 2.0), (2L, 1L, 0.5))
-    val got = Graph.pageRank(split.toDF("src", "dst", "w"), "src", "dst",
-        iters = 5, danglingCorrection = true, weightCol = Some("w"))
+    val got = onTable(split.toDF("src", "dst", "w"), weightCol = Some("w"))(
+        _.pageRank(iters = 5, danglingCorrection = true))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val whole = Graph.pageRank(weighted.toDF("src", "dst", "w"),
-        "src", "dst", iters = 5, danglingCorrection = true,
-        weightCol = Some("w"))
+    val whole = onTable(weighted.toDF("src", "dst", "w"),
+        weightCol = Some("w"))(
+        _.pageRank(iters = 5, danglingCorrection = true))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(got === whole)
     // weighted PPR with uniform weights = unweighted PPR
     val uni = directed.map { case (s, t) => (s, t, 1.0) }
-    val pprU = Graph.personalizedPageRank(uni.toDF("src", "dst", "w"),
-        "src", "dst", Seq(1L).toDF("node"), iters = 5,
-        weightCol = Some("w"))
+    val pprU = onTable(uni.toDF("src", "dst", "w"), weightCol = Some("w"))(
+        _.personalizedPageRank(Seq(1L).toDF("node"), iters = 5))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val pprP = Graph.personalizedPageRank(directed.toDF("src", "dst"),
-        "src", "dst", Seq(1L).toDF("node"), iters = 5)
+    val pprP = onTable(directed.toDF("src", "dst"))(
+        _.personalizedPageRank(Seq(1L).toDF("node"), iters = 5))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(pprU === pprP)
   }
@@ -696,8 +700,8 @@ class GraphSpec extends SparkSpec {
     val tri = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 5L, 5L -> 6L,
       6L -> 4L, 3L -> 4L)
     val both = tri ++ tri.map(_.swap)
-    val got = Graph.labelPropagation(both.toDF("src", "dst").repartition(3),
-        "src", "dst", iters = 5)
+    val got = onTable(both.toDF("src", "dst").repartition(3))(
+        _.labelPropagation(iters = 5))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === bruteLpa(both, 5))
   }
@@ -729,8 +733,8 @@ class GraphSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(jl)
     spark.sparkContext.setJobGroup(group, "lpa fixpoint test")
     try {
-      val got = Graph.labelPropagation(both.toDF("src", "dst"),
-          "src", "dst", iters = 100)
+      val got = onTable(both.toDF("src", "dst"))(
+          _.labelPropagation(iters = 100))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === bruteLpa(both, 100))
       assert(got.values.toSet === Set(1L, 7L))
@@ -752,8 +756,8 @@ class GraphSpec extends SparkSpec {
       if (s % 17 == 0) Seq.empty
       else (0 until (1 + rnd.nextInt(4))).map(_ => s -> rnd.nextInt(300).toLong)
     }.distinct
-    val got = Graph.labelPropagation(g.toDF("src", "dst").repartition(5),
-        "src", "dst", iters = 4)
+    val got = onTable(g.toDF("src", "dst").repartition(5))(
+        _.labelPropagation(iters = 4))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === bruteLpa(g, 4))
   }
@@ -772,32 +776,32 @@ class GraphSpec extends SparkSpec {
         gt.numEdges === 3 && gt.numDangling === 1)
       // PageRank (both bodies), PPR, HITS, LPA all answer identically
       // from the artifact and from the inline build
+      def ranks(t: GraphTable, dist: Boolean) =
+        Graph.pageRankImpl(t, iters = 5, damping = 0.85,
+          danglingCorrection = true, epsilon = None, distributed = Some(dist))
       for (dist <- Seq(false, true)) {
-        val art = gt.pageRank(iters = 5, danglingCorrection = true,
-            distributedRanks = Some(dist))
+        val art = ranks(gt, dist)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-        val inl = Graph.pageRank(directed.toDF("src", "dst"), "src",
-            "dst", iters = 5, danglingCorrection = true,
-            distributedRanks = Some(dist))
+        val inl = onTable(directed.toDF("src", "dst"))(ranks(_, dist))
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-        assert(art === inl, s"distributedRanks=$dist")
+        assert(art === inl, s"distributed=$dist")
       }
       val pprA = gt.personalizedPageRank(Seq(1L).toDF("node"), iters = 4)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-      val pprI = Graph.personalizedPageRank(directed.toDF("src", "dst"),
-          "src", "dst", Seq(1L).toDF("node"), iters = 4)
+      val pprI = onTable(directed.toDF("src", "dst"))(
+          _.personalizedPageRank(Seq(1L).toDF("node"), iters = 4))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
       assert(pprA === pprI)
       val hA = gt.hits(iters = 4).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
-      val hI = Graph.hits(directed.toDF("src", "dst"), "src", "dst",
-          iters = 4).collect()
+      val hI = onTable(directed.toDF("src", "dst"))(_.hits(iters = 4))
+        .collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
       assert(hA === hI)
       val lA = gt.labelPropagation(iters = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
-      val lI = Graph.labelPropagation(directed.toDF("src", "dst"),
-          "src", "dst", iters = 3)
+      val lI = onTable(directed.toDF("src", "dst"))(
+          _.labelPropagation(iters = 3))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
       assert(lA === lI)
       // the artifact carries the sink count: the cheap path fails fast
@@ -854,8 +858,8 @@ class GraphSpec extends SparkSpec {
       // 3 nodes > threshold 2 → the DISTRIBUTED body (zero collects)
       spark.conf.set(confKey, "2")
       recorded.clear()
-      val viaDist = Graph.pageRank(directed.toDF("src", "dst"), "src",
-          "dst", iters = 4, danglingCorrection = true)
+      val viaDist = onTable(directed.toDF("src", "dst"))(
+          _.pageRank(iters = 4, danglingCorrection = true))
         .orderBy("node").collect().map(r => (r.getLong(0), r.getDouble(1)))
       spark.range(1).collect() // FIFO sentinel
       val d1 = System.nanoTime() + 30L * 1000 * 1000 * 1000
@@ -873,8 +877,8 @@ class GraphSpec extends SparkSpec {
       // listener-discriminable
       spark.conf.set(confKey, "1000")
       recorded.clear()
-      val viaDriver = Graph.pageRank(directed.toDF("src", "dst"), "src",
-          "dst", iters = 4, danglingCorrection = true)
+      val viaDriver = onTable(directed.toDF("src", "dst"))(
+          _.pageRank(iters = 4, danglingCorrection = true))
         .orderBy("node").collect().map(r => (r.getLong(0), r.getDouble(1)))
       val d2 = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (recorded.asScala.count(_ == "collect") < 3 &&
@@ -1469,14 +1473,14 @@ class GraphSpec extends SparkSpec {
     val seeds = Seq(0L, 1L, 2L).toDF("node")
     val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "pageRank" -> (() => gt.pageRank(iters = 4,
-        danglingCorrection = true, distributedRanks = Some(false))),
+        danglingCorrection = true)),
       "pageRank (artifact)" -> (() => art.pageRank(iters = 4,
-        danglingCorrection = true, distributedRanks = Some(false))),
+        danglingCorrection = true)),
       "personalizedPageRank" -> (() => gt.personalizedPageRank(seeds,
-        iters = 4, distributedRanks = Some(false))),
+        iters = 4)),
       "personalizedPageRank (artifact)" -> (() => art.personalizedPageRank(
-        seeds, iters = 4, distributedRanks = Some(false))),
-      "hits" -> (() => gt.hits(iters = 4, distributedScores = Some(false))),
+        seeds, iters = 4)),
+      "hits" -> (() => gt.hits(iters = 4)),
       "labelPropagation" -> (() => sym.labelPropagation(iters = 4)),
       "kCore" -> (() => sym.kCore(5, maxRounds = 50)),
       "bfsLevels" -> (() => sym.bfsLevels(seeds, maxDepth = 3)),
@@ -1593,13 +1597,14 @@ class GraphSpec extends SparkSpec {
     try forcedDistributed {
       spark.conf.set(aqe, "false")
       val got = Seq(
-        "pageRank, sink correction" -> perRound(it => gt.pageRank(it,
-          danglingCorrection = true, distributedRanks = Some(true))),
-        "pageRank, no correction" -> perRound(it => gtSym.pageRank(it,
-          distributedRanks = Some(true))),
-        "personalizedPageRank" -> perRound(it => gt.personalizedPageRank(
-          seeds, it, distributedRanks = Some(true))),
-        "hits" -> perRound(it => gt.hits(it, distributedScores = Some(true))),
+        "pageRank, sink correction" -> perRound(it => Graph.pageRankImpl(gt,
+          it, 0.85, danglingCorrection = true, None, Some(true))),
+        "pageRank, no correction" -> perRound(it => Graph.pageRankImpl(gtSym,
+          it, 0.85, danglingCorrection = false, None, Some(true))),
+        "personalizedPageRank" -> perRound(it =>
+          Graph.personalizedPageRankImpl(gt, seeds, it, 0.85, None,
+            Some(true))),
+        "hits" -> perRound(it => Graph.hitsImpl(gt, it, None, Some(true))),
         "labelPropagation" -> perRound(it => pathW.labelPropagation(it)),
         "kCore" -> perRound(it => pathW.kCore(2, maxRounds = it)),
         "bfsLevels" -> perRound(it => pathW.bfsLevels(seed0, maxDepth = it)),
@@ -1652,15 +1657,15 @@ class GraphSpec extends SparkSpec {
     val (pathW, long) = paths()
     val seeds = Seq(0L, 1L, 2L).toDF("node")
     val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "pageRank" -> (() => gt.pageRank(iters = 4,
-        danglingCorrection = true, distributedRanks = Some(true))),
-      "pageRank, epsilon" -> (() => gt.pageRank(iters = 40,
-        danglingCorrection = true, distributedRanks = Some(true),
-        epsilon = Some(1e-4))),
-      "personalizedPageRank" -> (() => gt.personalizedPageRank(seeds,
-        iters = 4, distributedRanks = Some(true))),
-      "hits" -> (() => gt.hits(iters = 4, epsilon = Some(1e-4),
-        distributedScores = Some(true))),
+      "pageRank" -> (() => Graph.pageRankImpl(gt, iters = 4, 0.85,
+        danglingCorrection = true, None, distributed = Some(true))),
+      "pageRank, epsilon" -> (() => Graph.pageRankImpl(gt, iters = 40, 0.85,
+        danglingCorrection = true, epsilon = Some(1e-4),
+        distributed = Some(true))),
+      "personalizedPageRank" -> (() => Graph.personalizedPageRankImpl(gt,
+        seeds, iters = 4, 0.85, None, distributed = Some(true))),
+      "hits" -> (() => Graph.hitsImpl(gt, iters = 4, epsilon = Some(1e-4),
+        distributed = Some(true))),
       "labelPropagation" -> (() => sym.labelPropagation(iters = 4)),
       "kCore" -> (() => sym.kCore(5, maxRounds = 50)),
       "bfsLevels" -> (() => sym.bfsLevels(seeds, maxDepth = 3)),
@@ -1892,5 +1897,17 @@ class GraphSpec extends SparkSpec {
       sym.toDF("src", "dst"), "src", "dst", assumeDistinct = true)
     try assert(gt.kCore(1000, maxRounds = 10).count() === 0L)
     finally gt.unpersist()
+  }
+}
+
+object GraphSpec {
+
+  /** Builds a graph table from `edges` (columns src and dst, and the
+    * weight column `weightCol` names), applies `f` to it and releases
+    * the table: what a caller holding raw edges does. */
+  def onTable[A](edges: org.apache.spark.sql.DataFrame,
+      weightCol: Option[String] = None)(f: GraphTable => A): A = {
+    val gt = Graph.buildGraphTable(edges, "src", "dst", weightCol)
+    try f(gt) finally gt.unpersist()
   }
 }

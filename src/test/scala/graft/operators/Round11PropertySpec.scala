@@ -83,14 +83,15 @@ class Round11PropertySpec extends SparkSpec {
     def runAll(): Seq[Seq[Any]] = {
       val e = edges.toDF("src", "dst")
       Seq(
-        Graph.pageRank(e, "src", "dst", iters = 5,
-            danglingCorrection = true, distributedRanks = Some(true))
+        GraphSpec.onTable(e)(gt => Graph.pageRankImpl(gt, iters = 5,
+            damping = 0.85, danglingCorrection = true, epsilon = None,
+            distributed = Some(true)))
           .collect().toSeq.map(_.toSeq),
-        Graph.personalizedPageRank(e, "src", "dst", seeds, iters = 5)
+        GraphSpec.onTable(e)(_.personalizedPageRank(seeds, iters = 5))
           .collect().toSeq.map(_.toSeq),
-        Graph.hits(e, "src", "dst", iters = 5)
+        GraphSpec.onTable(e)(_.hits(iters = 5))
           .collect().toSeq.map(_.toSeq),
-        Graph.labelPropagation(e, "src", "dst", iters = 4)
+        GraphSpec.onTable(e)(_.labelPropagation(iters = 4))
           .collect().toSeq.map(_.toSeq),
         Components.connectedComponents(e, "src", "dst")
           .orderBy("id").collect().toSeq.map(_.toSeq)).flatten
