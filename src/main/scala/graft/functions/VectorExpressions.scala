@@ -131,11 +131,11 @@ case class VecSqDist(left: Expression, right: Expression) extends VecBinaryFold 
   * Each row is read ONCE into the `double[]` scratch of a per-task
   * [[graft.functions.GuessArgmin]] (a codegen mutable state — one
   * `isNullAt`/`get` per element instead of one per element per
-  * centroid). Its nearest centroid over the first two coordinates is
-  * the guess; when the half-gap test
-  * ([[graft.functions.VectorFunctions.halfGapHit]], radii computed once
-  * per codebook on the driver and shipped as a second reference)
-  * proves it, it is the pick, and otherwise the row runs the static
+  * centroid; an unsafe array without nulls is read at fixed offsets).
+  * The codebook's cell table ([[graft.functions.CellTable]]) gives the
+  * guess in O(1); when the half-gap test
+  * ([[graft.functions.VectorFunctions.halfGapHit]]) proves it, it is
+  * the pick, and otherwise the row runs the static
   * blocked scan [[graft.functions.VectorFunctions.argminSqDist]] that
   * `KMeans.fit`'s Lloyd fold also runs, over the codebook flattened
   * once into a k×dim `double[]`. Either way the pick is the scan's. A
@@ -146,8 +146,9 @@ case class VecSqDist(left: Expression, right: Expression) extends VecBinaryFold 
   * a chain inlines each distance's generated code O(k²) times into
   * ONE whole-stage method (expressions over codegen locals cannot be
   * split into sub-methods), which overran janino's 64 KB limit when
-  * the PQ encoder put m+1 chains in one projection. Here the codebook
-  * and its radii ride along as two `references[]` objects and the
+  * the PQ encoder put m+1 chains in one projection. Here the codebook,
+  * its radii and its cell table, each computed once per codebook on
+  * the driver, ride along as three `references[]` objects and the
   * generated code is a dimension check plus one call regardless of
   * k·dim. */
 case class VecArgminSqDist(
@@ -178,6 +179,11 @@ case class VecArgminSqDist(
   @transient private lazy val radii: Array[Double] =
     graft.functions.VectorFunctions.halfGapRadii(cents, k)
 
+  /** The codebook's first-guess cell table, once per codebook (null:
+    * the shortcut off, or dim 1). */
+  @transient private lazy val cells: CellTable =
+    graft.functions.VectorFunctions.cellTable(cents, k, radii)
+
   @transient private lazy val isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
@@ -191,7 +197,7 @@ case class VecArgminSqDist(
     // index, instead of -1 leaking into PQ codes or cluster labels.
     // (A NULL input array still yields NULL via nullSafeEval.)
     graft.functions.VectorFunctions.argminRow(
-      vv, isFloat, new GuessArgmin(cents, k, radii))
+      vv, isFloat, new GuessArgmin(cents, k, radii, cells))
   }
 
   override protected def doGenCode(
@@ -199,8 +205,11 @@ case class VecArgminSqDist(
     nullSafeCodeGen(ctx, ev, v => {
       val centsRef = ctx.addReferenceObj("graftCodebook", cents, "double[]")
       val radiiRef = ctx.addReferenceObj("graftRadii", radii, "double[]")
+      val cellsRef = ctx.addReferenceObj("graftCells", cells,
+        classOf[CellTable].getName)
       val am = ctx.addMutableState(classOf[GuessArgmin].getName, "graftArgmin",
-        r => s"$r = new ${classOf[GuessArgmin].getName}($centsRef, $k, $radiiRef);")
+        r => s"$r = new ${classOf[GuessArgmin].getName}(" +
+          s"$centsRef, $k, $radiiRef, $cellsRef);")
       s"""
          |if ($v.numElements() != $dim) {
          |  throw new IllegalArgumentException(

@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.sql.functions._
 
 /** Vector math used across the engine: clustering (assignment distance),
@@ -184,28 +186,57 @@ object VectorFunctions {
     minD.map(d => 0.25 * d * shrink)
   }
 
-  /** A cheap guess for the shortcut when no earlier pick is at hand:
-    * the nearest centroid over the first two coordinates only (the
-    * scan's pick at dim 1). Any index is a valid guess — the half-gap
-    * test decides. */
-  def probeGuess(x: Array[Double], cents: Array[Double], k: Int): Int = {
-    val dim = x.length
-    if (dim == 1) return argminSqDist(x, cents, k)
-    val x0 = x(0)
-    val x1 = x(1)
-    var best = 0
-    var bestD = Double.PositiveInfinity
+  /** The first-guess table of the flat k×dim codebook `cents` for rows
+    * with no earlier pick — built once per codebook, O(64²·k), beside
+    * its [[halfGapRadii]]: a [[CellTable]] over the two coordinates in
+    * which the centroids spread widest. Null when `radii` is null (the
+    * shortcut off) or at dim 1, where the scan is the first guess. */
+  def cellTable(cents: Array[Double], k: Int, radii: Array[Double]): CellTable = {
+    val dim = cents.length / k
+    if (radii == null || dim < 2) return null
+    val lo = Array.fill(dim)(Double.PositiveInfinity)
+    val hi = Array.fill(dim)(Double.NegativeInfinity)
     var c = 0
-    var b = 0
     while (c < k) {
-      val d0 = x0 - cents(b)
-      val d1 = x1 - cents(b + 1)
-      val s = d0 * d0 + d1 * d1
-      if (s < bestD) { bestD = s; best = c }
+      var i = 0
+      while (i < dim) {
+        val v = cents(c * dim + i)
+        if (v < lo(i)) lo(i) = v
+        if (v > hi(i)) hi(i) = v
+        i += 1
+      }
       c += 1
-      b += dim
     }
-    best
+    // the widest axis first, then the widest other one; ties to the lower
+    val byWidth = (0 until dim).sortBy(i => -(hi(i) - lo(i)))
+    val a = byWidth(0)
+    val b = byWidth(1)
+    val side = CellTable.Side
+    def centre(i: Int, j: Int) = lo(i) + (j + 0.5) * (hi(i) - lo(i)) / side
+    val cells = new Array[Int](side * side)
+    var ja = 0
+    while (ja < side) {
+      val ua = centre(a, ja)
+      var jb = 0
+      while (jb < side) {
+        val ub = centre(b, jb)
+        var best = 0
+        var bestD = Double.PositiveInfinity
+        var g = 0
+        while (g < k) {
+          val da = ua - cents(g * dim + a)
+          val db = ub - cents(g * dim + b)
+          val s = da * da + db * db
+          if (s < bestD) { bestD = s; best = g }
+          g += 1
+        }
+        cells(ja * side + jb) = best
+        jb += 1
+      }
+      ja += 1
+    }
+    def scale(i: Int) = if (hi(i) > lo(i)) side / (hi(i) - lo(i)) else 0.0
+    new CellTable(a, lo(a), scale(a), b, lo(b), scale(b), cells)
   }
 
   /** Squared distance from the row `x` to centroid `c` of the flat
@@ -217,27 +248,6 @@ object VectorFunctions {
     var i = 0
     while (i < dim) { val d = x(i) - cents(b + i); s += d * d; i += 1 }
     s
-  }
-
-  /** The picks of one packed chunk (row-major n×dim floats): each row
-    * widened once into the argmin's scratch and picked by
-    * [[GuessArgmin.pick]], guessing `prev(r)` — the row's pick from the
-    * round before — or, when `prev` is null, the [[probeGuess]]. */
-  def assignChunk(
-      rows: Array[Float], dim: Int, am: GuessArgmin,
-      prev: Array[Int]): Array[Int] = {
-    val n = rows.length / dim
-    val picks = new Array[Int](n)
-    val x = am.x
-    var r = 0
-    while (r < n) {
-      val o = r * dim
-      var i = 0
-      while (i < dim) { x(i) = rows(o + i); i += 1 }
-      picks(r) = am.pick(if (prev != null) prev(r) else -1)
-      r += 1
-    }
-    picks
   }
 
   /** Adds each row of one packed chunk into its pick's cells of the
@@ -259,21 +269,44 @@ object VectorFunctions {
 
   /** Reads the `x.length` elements of an `array<float|double>` value
     * into `x`, widening floats exactly; false (with `x` partly
-    * written) when an element is null. */
+    * written) when an element is null. An unsafe array without nulls
+    * is read at fixed offsets, with no per-element null test. */
   def readRow(v: ArrayData, isFloat: Boolean, x: Array[Double]): Boolean = {
     val n = x.length
     var i = 0
-    if (isFloat) while (i < n) {
-      if (v.isNullAt(i)) return false
-      x(i) = v.getFloat(i)
-      i += 1
-    }
-    else while (i < n) {
-      if (v.isNullAt(i)) return false
-      x(i) = v.getDouble(i)
-      i += 1
+    v match {
+      case u: UnsafeArrayData if nullFreeValues(u) >= 0 =>
+        val base = u.getBaseObject
+        val at = nullFreeValues(u)
+        if (isFloat) while (i < n) { x(i) = Platform.getFloat(base, at + 4L * i); i += 1 }
+        else while (i < n) { x(i) = Platform.getDouble(base, at + 8L * i); i += 1 }
+      case _ =>
+        if (isFloat) while (i < n) {
+          if (v.isNullAt(i)) return false
+          x(i) = v.getFloat(i)
+          i += 1
+        }
+        else while (i < n) {
+          if (v.isNullAt(i)) return false
+          x(i) = v.getDouble(i)
+          i += 1
+        }
     }
     true
+  }
+
+  /** The offset in `u`'s base object of its first value when no element
+    * is null (every null-bit word zero), else -1. */
+  def nullFreeValues(u: UnsafeArrayData): Long = {
+    val n = u.numElements()
+    val base = u.getBaseObject
+    val off = u.getBaseOffset
+    var w = 0
+    while (w < (n + 63) / 64) {
+      if (Platform.getLong(base, off + 8L + 8L * w) != 0L) return -1L
+      w += 1
+    }
+    off + UnsafeArrayData.calculateHeaderPortionInBytes(n)
   }
 
   /** Squared distance from `v` to centroid `c` of the flat codebook
@@ -298,7 +331,7 @@ object VectorFunctions {
 
   /** [[VecArgminSqDist]]'s per-row step (codegen and eval): the row is
     * read once into the argmin's scratch and picked by
-    * [[GuessArgmin.pick]] on the [[probeGuess]]; a row with a null
+    * [[GuessArgmin.pick]] on its cell-table guess; a row with a null
     * element keeps the per-element "null contributes 0" loop. The
     * caller checks the dimension. */
   def argminRow(v: ArrayData, isFloat: Boolean, am: GuessArgmin): Int =
@@ -362,15 +395,15 @@ object VectorFunctions {
   /** J1 argmin-over-centroids: index of the nearest centroid, ties to
     * the LOWEST index (strict `<` running min seeded from centroid 0,
     * KMapper.java:34-43) — the native [[VecArgminSqDist]] expression,
-    * which reads each row once into a per-task scratch, keeps a
-    * two-coordinate probe guess when [[halfGapHit]] proves it, and
+    * which reads each row once into a per-task scratch, keeps the guess
+    * of the codebook's [[cellTable]] when [[halfGapHit]] proves it, and
     * otherwise calls the blocked [[argminSqDist]] scan the Lloyd fold
     * uses, so picks are bit-identical to [[argminCentroid]] and to
-    * `fit`'s. The half-gap radii are computed once per codebook. The
-    * codebook rides in the plan as ONE flat `double[]` reference, so the
-    * generated code is a dimension check plus one call at any k·dim: a
-    * narrow map, no shuffle, no UDF, and several argmins can share one
-    * projection (the PQ encoder). */
+    * `fit`'s. The half-gap radii and the cell table are computed once
+    * per codebook. The codebook rides in the plan as ONE flat
+    * `double[]` reference, so the generated code is a dimension check
+    * plus one call at any k·dim: a narrow map, no shuffle, no UDF, and
+    * several argmins can share one projection (the PQ encoder). */
   def assignCol(features: Column, centroids: Array[Array[Float]]): Column =
     toCol(VecArgminSqDist(expr(features), centroids.map(_.toSeq).toSeq))
 }
@@ -379,38 +412,108 @@ object VectorFunctions {
   * shortcut in front, for one caller at a time (a fit task, a labelling
   * task): [[pick]] always returns `VectorFunctions.argminSqDist(x,
   * cents, k)`, and skips that k-centroid scan whenever
-  * [[VectorFunctions.halfGapHit]] proves the guess.
+  * [[VectorFunctions.halfGapHit]] proves the guess; so does each pick
+  * of [[assignChunk]].
   *
-  * A miss costs the guess's distance (and the probe) on top of the
-  * scan, so after [[GuessArgmin.MissRun]] consecutive misses the next
+  * A miss costs the guess's distance on top of the scan, so after
+  * [[GuessArgmin.MissRun]] consecutive misses the next
   * [[GuessArgmin.MissRest]] rows scan without trying; then it tries
   * again. On an input where the test never passes that bounds the
   * extra cost to a few per cent; it never changes a pick.
   *
   * @param radii the codebook's [[VectorFunctions.halfGapRadii]]; null
-  *              runs the plain scan for every row */
+  *              runs the plain scan for every row
+  * @param cells the codebook's [[VectorFunctions.cellTable]], the guess
+  *              of a row with no earlier pick; null scans such rows */
 final class GuessArgmin(
-    val cents: Array[Double], val k: Int, radii: Array[Double]) {
+    val cents: Array[Double], val k: Int, radii: Array[Double],
+    cells: CellTable) {
 
   /** The row scratch: the caller widens the row into it, then picks. */
   val x = new Array[Double](cents.length / k)
 
+  private val slack = 1.0 + VectorFunctions.halfGapEps(x.length)
+
   private var misses = 0
 
-  /** The pick of the row in [[x]], trying `hint` first — or the
-    * [[VectorFunctions.probeGuess]] when `hint` is negative. */
+  /** The pick of the row in [[x]], trying `hint` first — or the cell
+    * table's guess when `hint` is negative. */
   def pick(hint: Int): Int =
-    if (radii == null) VectorFunctions.argminSqDist(x, cents, k)
+    if (radii == null || (hint < 0 && cells == null)) scan()
     else if (misses < GuessArgmin.MissRun) {
-      val g = if (hint >= 0) hint else VectorFunctions.probeGuess(x, cents, k)
+      val g = if (hint >= 0) hint else cells.guess(x)
       if (VectorFunctions.halfGapHit(x, cents, radii, g)) { misses = 0; g }
-      else { misses += 1; VectorFunctions.argminSqDist(x, cents, k) }
+      else { misses += 1; scan() }
     } else {
       misses =
         if (misses < GuessArgmin.MissRun + GuessArgmin.MissRest) misses + 1
         else 0
-      VectorFunctions.argminSqDist(x, cents, k)
+      scan()
     }
+
+  /** The picks of one packed chunk (row-major n×dim floats), each row's
+    * [[pick]]: guessing `prev(r)`, the row's pick from the round
+    * before, or the cell table's guess when `prev` is null. Previous
+    * picks are tested four rows at a time straight off the floats,
+    * each distance its own left-to-right double fold, bit-equal to
+    * [[VectorFunctions.sqdistTo]]'s; only the rows the half-gap test
+    * does not prove are widened and scanned. */
+  def assignChunk(rows: Array[Float], prev: Array[Int]): Array[Int] = {
+    val dim = x.length
+    val n = rows.length / dim
+    val picks = new Array[Int](n)
+    val cents = this.cents
+    val radii = this.radii
+    val slack = this.slack
+    var r = 0
+    while (r < n) {
+      if (prev != null && radii != null && r + 4 <= n &&
+          misses < GuessArgmin.MissRun) {
+        val o0 = r * dim; val o1 = o0 + dim; val o2 = o1 + dim; val o3 = o2 + dim
+        val g0 = prev(r); val g1 = prev(r + 1)
+        val g2 = prev(r + 2); val g3 = prev(r + 3)
+        val b0 = g0 * dim; val b1 = g1 * dim; val b2 = g2 * dim; val b3 = g3 * dim
+        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+        var i = 0
+        while (i < dim) {
+          val d0 = rows(o0 + i) - cents(b0 + i); s0 += d0 * d0
+          val d1 = rows(o1 + i) - cents(b1 + i); s1 += d1 * d1
+          val d2 = rows(o2 + i) - cents(b2 + i); s2 += d2 * d2
+          val d3 = rows(o3 + i) - cents(b3 + i); s3 += d3 * d3
+          i += 1
+        }
+        if (s0 * slack < radii(g0) && s1 * slack < radii(g1) &&
+            s2 * slack < radii(g2) && s3 * slack < radii(g3)) {
+          picks(r) = g0; picks(r + 1) = g1; picks(r + 2) = g2; picks(r + 3) = g3
+          misses = 0
+        } else {
+          picks(r) = settle(rows, o0, g0, s0)
+          picks(r + 1) = settle(rows, o1, g1, s1)
+          picks(r + 2) = settle(rows, o2, g2, s2)
+          picks(r + 3) = settle(rows, o3, g3, s3)
+        }
+        r += 4
+      } else {
+        widen(rows, r * dim)
+        picks(r) = pick(if (prev != null) prev(r) else -1)
+        r += 1
+      }
+    }
+    picks
+  }
+
+  /** The pick of the row at `o` whose guess `g` lies `s` (squared) away:
+    * `g` when the half-gap test proves it, else the scan's. */
+  private def settle(rows: Array[Float], o: Int, g: Int, s: Double): Int =
+    if (s * slack < radii(g)) { misses = 0; g }
+    else { misses += 1; widen(rows, o); scan() }
+
+  private def widen(rows: Array[Float], o: Int): Unit = {
+    var i = 0
+    while (i < x.length) { x(i) = rows(o + i); i += 1 }
+  }
+
+  private def scan(): Int = VectorFunctions.argminSqDist(x, cents, k)
 }
 
 object GuessArgmin {
@@ -419,4 +522,32 @@ object GuessArgmin {
 
   /** Rows it then scans without trying. */
   val MissRest = 1024
+}
+
+/** The first guess of [[GuessArgmin]] for a row with no earlier pick
+  * ([[VectorFunctions.cellTable]]): a [[CellTable.Side]]² grid over the
+  * codebook's bounding box in coordinates `a` and `b`, each cell
+  * holding the centroid nearest to the cell's centre in those two
+  * coordinates. A row's guess is its cell's entry, looked up in O(1); a
+  * row outside the box takes the nearest edge cell, a NaN coordinate
+  * the first. Any index is a valid guess: the half-gap test decides. */
+final class CellTable private[functions] (
+    a: Int, loA: Double, scaleA: Double,
+    b: Int, loB: Double, scaleB: Double,
+    cells: Array[Int]) extends Serializable {
+
+  /** The guess for the row `x`. */
+  def guess(x: Array[Double]): Int =
+    cells(CellTable.index(x(a), loA, scaleA) * CellTable.Side +
+      CellTable.index(x(b), loB, scaleB))
+}
+
+object CellTable {
+  /** Cells per axis. */
+  val Side = 64
+
+  /** The clamped cell index of coordinate `v` on an axis from `lo`, at
+    * `scale` cells per unit (0 for an axis of no spread); NaN maps to 0. */
+  private def index(v: Double, lo: Double, scale: Double): Int =
+    math.min(Side - 1, math.max(0, ((v - lo) * scale).toInt))
 }

@@ -4,12 +4,14 @@ import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim
+import org.apache.spark.unsafe.Platform
 
 import graft.ExactMerge
-import graft.functions.GuessArgmin
+import graft.functions.{CellTable, GuessArgmin}
 import graft.functions.VectorFunctions._
 
 /** Parameters mirroring the reference CLI
@@ -43,8 +45,8 @@ final case class KMeansModel(
     * Main.java:345-355; we stay distributed). The argmin is the native
     * `VecArgminSqDist` expression
     * ([[graft.functions.VectorFunctions.assignCol]]): each row is read
-    * once into a per-task scratch, a guess from its first two
-    * coordinates is kept when the half-gap test proves it, and
+    * once into a per-task scratch, the guess of the codebook's cell
+    * table is kept when the half-gap test proves it, and
     * otherwise the row runs the same blocked scan as [[KMeans.fit]] —
     * so labels are the fit's picks, bit for bit, inside whole-stage
     * codegen, no UDF, lowest-index ties. It keeps the caller's
@@ -123,8 +125,10 @@ final case class KMeansModel(
   * locally checkpointed generation per round. The next round tries each
   * row's previous pick first and keeps it when Elkan's half-gap test
   * proves it ([[graft.functions.VectorFunctions.halfGapHit]]: one
-  * distance instead of k; a loop's first round guesses from the first
-  * two coordinates); a miss runs the plain blocked scan
+  * distance instead of k, four rows at a time; a loop's first round
+  * guesses from the codebook's cell table,
+  * [[graft.functions.VectorFunctions.cellTable]]); a miss runs the
+  * plain blocked scan
   * ([[graft.functions.VectorFunctions.argminSqDist]]). Every pick is
   * the scan's, and rows are added in the same order, so centroids are
   * bit-identical to a fit that always scans (KMeansSpec pins it). The
@@ -194,7 +198,8 @@ object KMeans {
 
   /** Packs the feature arrays of `rows` into row-major n×dim float
     * chunks of [[chunkRows]] rows, copied straight off the internal
-    * rows; a row of any other length fails loudly here. */
+    * rows (one memory copy per unsafe array without nulls); a row of
+    * any other length fails loudly here. */
   private def packChunks(
       rows: Iterator[InternalRow], dim: Int,
       featuresCol: String): Iterator[Array[Float]] = {
@@ -203,10 +208,17 @@ object KMeans {
       val out = new Array[Float](n * dim)
       var o = 0
       while (o < out.length && rows.hasNext) {
-        val v = featureArray(rows.next(), featuresCol)
-        require(v.numElements() == dim, s"dim mismatch: ${v.numElements()} vs $dim")
-        var i = 0
-        while (i < dim) { out(o + i) = v.getFloat(i); i += 1 }
+        val r = rows.next()
+        (if (r.isNullAt(0)) null else r.getArray(0)) match {
+          case u: UnsafeArrayData if u.numElements() == dim && nullFreeValues(u) >= 0 =>
+            Platform.copyMemory(u.getBaseObject, nullFreeValues(u),
+              out, Platform.FLOAT_ARRAY_OFFSET + 4L * o, 4L * dim)
+          case _ =>
+            val v = featureArray(r, featuresCol)
+            require(v.numElements() == dim, s"dim mismatch: ${v.numElements()} vs $dim")
+            var i = 0
+            while (i < dim) { out(o + i) = v.getFloat(i); i += 1 }
+        }
         o += dim
       }
       if (o == out.length) out else java.util.Arrays.copyOf(out, o)
@@ -226,7 +238,7 @@ object KMeans {
   private[kmeans] val OneTaskProducts = 3L << 23
 
   /** How many times [[OneTaskProducts]] the one-task fit's first round
-    * may scan before it hands back: its probe guesses miss more than
+    * may scan before it hands back: its cell-table guesses miss more than
     * later rounds' previous picks do, so there only the scans its own
     * picks would cost the next round are held to the plain bound. */
   private val FirstRoundSlack = 4
@@ -307,11 +319,13 @@ object KMeans {
   }
 
   /** The flat k×dim double codebook of `centroids` and, with the
-    * shortcut on, its half-gap radii. */
+    * shortcut on, its half-gap radii and its first-guess cell table. */
   private def codebook(centroids: Array[Array[Float]], shortcut: Boolean)
-      : (Array[Double], Array[Double]) = {
+      : (Array[Double], Array[Double], CellTable) = {
+    val k = centroids.length
     val flat = centroids.flatMap(_.map(_.toDouble))
-    (flat, if (shortcut) halfGapRadii(flat, centroids.length) else null)
+    val radii = if (shortcut) halfGapRadii(flat, k) else null
+    (flat, radii, cellTable(flat, k, radii))
   }
 
   /** The one-task fit: the whole Lloyd loop inside one task over the
@@ -325,7 +339,7 @@ object KMeans {
     * Round 1 decides, None to hand back. A pick depends on its row and
     * the centroids only, so it picks the first 16th of the rows as they
     * are read and tests them: projected over all rows, the rows whose
-    * probe guess the half-gap test does not prove (its own scans) may
+    * cell-table guess the half-gap test does not prove (its own scans) may
     * pass `maxProducts` centroid-coordinate products [[FirstRoundSlack]]
     * times, and the rows its picks leave unproven (the next round's
     * scans) may not pass it. Later rounds run with no test. */
@@ -335,8 +349,8 @@ object KMeans {
       numSlices: Int, shortcut: Boolean,
       maxProducts: Long): Option[KMeansModel] = {
     val k = params.k
-    val (flat, radii) = codebook(init, shortcut)
-    val am = new GuessArgmin(flat, k, radii)
+    val (flat, radii, cells) = codebook(init, shortcut)
+    val am = new GuessArgmin(flat, k, radii, cells)
     val x = new Array[Double](dim)
     var tested = 0L
     var scans = 0L
@@ -345,11 +359,12 @@ object KMeans {
       .empty[((Int, Int), Array[Float], Array[Int])]
     while (chunks.hasNext) {
       val (key, ch) = chunks.next()
-      // a tested chunk's picks are its round-1 guesses; the rest probe
+      // a tested chunk's picks are its round-1 guesses; the rest use
+      // the cell table's
       val p = if (tested * 16 >= rowCount) null else {
-        val p = assignChunk(ch, dim, am, null)
-        scans += unprovenRows(ch, dim, flat, radii, null, x)
-        ahead += unprovenRows(ch, dim, flat, radii, p, x)
+        val p = am.assignChunk(ch, null)
+        scans += unprovenRows(ch, dim, flat, radii, cells, null, x)
+        ahead += unprovenRows(ch, dim, flat, radii, cells, p, x)
         tested += p.length
         val perRow = rowCount.toDouble / tested * (k * dim)
         if (tested * 16 >= rowCount && (ahead * perRow > maxProducts ||
@@ -364,22 +379,27 @@ object KMeans {
       .groupBy { case ((s, c), _, _) => (s + c) % numSlices }.values
       .map(sl => (sl.map(_._2).toArray, sl.map(_._3).toArray)).toArray
     Some(lloyd(init, params) { centroids =>
-      val (flat, radii) = codebook(centroids, shortcut)
-      val am = new GuessArgmin(flat, k, radii)
+      val (flat, radii, cells) = codebook(centroids, shortcut)
+      val am = new GuessArgmin(flat, k, radii, cells)
       slices.foldLeft(zeroCells(k, dim)) { case (total, (data, picks)) =>
-        for (j <- data.indices) picks(j) = assignChunk(data(j), dim, am, picks(j))
-        merge(total, foldSlice(data.iterator.zip(picks.iterator), k, dim))
+        // each chunk picked and added back to back, in (s, c) order
+        merge(total, foldSlice(data.indices.iterator.map { j =>
+          picks(j) = am.assignChunk(data(j), picks(j))
+          (data(j), picks(j))
+        }, k, dim))
       }
     })
   }
 
   /** Rows of one packed chunk whose guess — `guesses(r)`, or the
-    * [[probeGuess]] when `guesses` is null — the half-gap test does not
-    * prove: the rows a [[GuessArgmin]] trying those guesses scans.
-    * Every row when `radii` is null. `x` is a dim-long scratch. */
+    * `cells` guess when `guesses` is null (the scan's pick when `cells`
+    * is null too, at dim 1) — the half-gap test does not prove: the
+    * rows a [[GuessArgmin]] trying those guesses scans. Every row when
+    * `radii` is null. `x` is a dim-long scratch. */
   private def unprovenRows(
       rows: Array[Float], dim: Int, cents: Array[Double],
-      radii: Array[Double], guesses: Array[Int], x: Array[Double]): Int = {
+      radii: Array[Double], cells: CellTable, guesses: Array[Int],
+      x: Array[Double]): Int = {
     val n = rows.length / dim
     if (radii == null) return n
     val k = cents.length / dim
@@ -389,7 +409,10 @@ object KMeans {
       val o = r * dim
       var i = 0
       while (i < dim) { x(i) = rows(o + i); i += 1 }
-      val g = if (guesses != null) guesses(r) else probeGuess(x, cents, k)
+      val g =
+        if (guesses != null) guesses(r)
+        else if (cells != null) cells.guess(x)
+        else argminSqDist(x, cents, k)
       if (!halfGapHit(x, cents, radii, g)) u += 1
       r += 1
     }
@@ -475,19 +498,19 @@ object KMeans {
     // serialize this round's generation, whose closure holds it (a
     // checkpoint drops an RDD's parent, not its closure).
     var lastBc: org.apache.spark.broadcast.Broadcast[_] = null
-    def destroyLastBc(): Unit = if (lastBc != null) lastBc.destroy()
+    def destroyLastBc(): Unit = if (lastBc != null) graftshim.destroyBlocking(lastBc)
     try lloyd(init, params) { centroids =>
       val bc = spark.sparkContext.broadcast(codebook(centroids, shortcut))
       try {
         // This round's generation: each chunk with its rows' picks,
-        // guessed from the previous round's picks (the probe in the
+        // guessed from the previous round's picks (the cell table in the
         // loop's first round) and verified by the half-gap test. Cached
         // and locally checkpointed, so the next round reads it without
         // lineage.
         val next = gen.mapPartitions { it =>
-          val (cents, radii) = bc.value
-          val am = new GuessArgmin(cents, k, radii)
-          it.map { case (ch, prev) => (ch, assignChunk(ch, dim, am, prev)) }
+          val (cents, radii, cells) = bc.value
+          val am = new GuessArgmin(cents, k, radii, cells)
+          it.map { case (ch, prev) => (ch, am.assignChunk(ch, prev)) }
         }.localCheckpoint()
         val prev = gen
         gen = next

@@ -22,7 +22,7 @@ final case class VecBuf(sums: Array[Double], n: Long)
   * The declarative `groupBy().agg(sum(element_at(...)))` form (the
   * engine's single-step operator, q07) is the codegen-friendly twin;
   * tests assert both agree. [[KMeans.fit]] uses neither: it picks and adds
-  * packed chunks with `VectorFunctions.assignChunk` / `addChunk`.
+  * packed chunks with `GuessArgmin.assignChunk` / `VectorFunctions.addChunk`.
   */
 final class VectorMeanAggregator(dim: Int)
     extends Aggregator[Array[Float], VecBuf, Array[Float]] {

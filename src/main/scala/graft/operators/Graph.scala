@@ -725,12 +725,13 @@ object Graph {
       * combines any batch of partials into a fresh or reused one, and
       * must accept an empty batch). The broadcast is destroyed after
       * the merge: `unpersist` would keep the driver's copy (in local
-      * mode the only one), and no later job reads this wave. */
+      * mode the only one), and no later job reads this wave. It returns
+      * once the removal is done. */
     def wave[S: ClassTag, P: ClassTag](state: S)(
         fold: (S, EdgeBlock) => P)(merge: Seq[P] => P): P = {
       val bc = spark.sparkContext.broadcast(state)
       try graft.ExactMerge.merge(blocks.map(b => fold(bc.value, b)))(merge)
-      finally bc.destroy()
+      finally org.apache.spark.sql.graftshim.destroyBlocking(bc)
     }
 
     /** The result frame: `node` plus one (name, type, value-at-index)
@@ -747,7 +748,7 @@ object Graph {
 
     def release(): Unit = {
       blocks.unpersist(blocking = false)
-      bcIdx.destroy()
+      org.apache.spark.sql.graftshim.destroyBlocking(bcIdx)
     }
   }
 

@@ -79,6 +79,12 @@ package object graftshim {
     }
   }
 
+  /** Destroys `bc` and returns once its blocks are removed everywhere:
+    * the public `destroy()` only asks for the removal, so a look at the
+    * block manager right after can still find them. */
+  def destroyBlocking(bc: org.apache.spark.broadcast.Broadcast[_]): Unit =
+    bc.destroy(blocking = true)
+
   /** The row count of `df`'s own plan when it is cached in memory with
     * every cached batch built — reading it then decodes those batches
     * and computes nothing of the plan — by the cache's own statistic;

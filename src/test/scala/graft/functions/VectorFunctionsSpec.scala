@@ -76,8 +76,9 @@ class VectorFunctionsScalaSpec extends AnyFunSuite {
       def fold(chunk: Seq[Array[Float]], prev: Array[Int],
           sums: Array[Double], cnts: Array[Long]): Unit = {
         val p = chunk.flatten.toArray
-        addChunk(p, dim, assignChunk(p, dim,
-          new GuessArgmin(flat, k, halfGapRadii(flat, k)), prev), sums, cnts)
+        val radii = halfGapRadii(flat, k)
+        addChunk(p, dim, new GuessArgmin(flat, k, radii,
+          cellTable(flat, k, radii)).assignChunk(p, prev), sums, cnts)
       }
       val wrong = want.map(c => (c + 1) % k).toArray
       for ((hints, how) <- Seq((null, "no hint"), (wrong, "wrong hint"))) {
@@ -119,6 +120,7 @@ class VectorFunctionsScalaSpec extends AnyFunSuite {
     val k = cents.length
     val flat = cents.flatten
     val radii = halfGapRadii(flat, k)
+    val cells = cellTable(flat, k, radii)
     val rnd = new scala.util.Random(k * 31 + rows.size)
     var hits = 0
     rows.foreach { x =>
@@ -141,15 +143,117 @@ class VectorFunctionsScalaSpec extends AnyFunSuite {
           assert(g === want, s"$what: guess $g passed, scan picks $want, " +
             s"row ${x.toSeq}")
         }
-        val am = new GuessArgmin(flat, k, radii)
+        val am = new GuessArgmin(flat, k, radii, cells)
         System.arraycopy(x, 0, am.x, 0, x.length)
         assert(am.pick(g) === want, s"$what: pick($g), row ${x.toSeq}")
       }
-      val am = new GuessArgmin(flat, k, radii)
+      val am = new GuessArgmin(flat, k, radii, cells)
       System.arraycopy(x, 0, am.x, 0, x.length)
-      assert(am.pick(-1) === want, s"$what: probe pick, row ${x.toSeq}")
+      assert(am.pick(-1) === want, s"$what: cell-table pick, row ${x.toSeq}")
+      // a float row: the four-row verify, the row four times over
+      val xf = x.map(_.toFloat)
+      if (java.util.Arrays.equals(xf.map(_.toDouble), x)) {
+        val chunk = Array.fill(4)(xf).flatten
+        guesses.foreach { g =>
+          assert(new GuessArgmin(flat, k, radii, cells)
+            .assignChunk(chunk, Array.fill(4)(g)).toSeq === Seq.fill(4)(want),
+            s"$what: four-row verify of $g, row ${x.toSeq}")
+        }
+      }
     }
     hits
+  }
+
+  test("the cell-table guess and the four-row verify pick argminSqDist's " +
+    "index (seeded codebooks; NaN and ±Inf rows; duplicate centroids; " +
+    "k = 1; dim 1, 2, 16; zero spread on an axis; rows far outside the " +
+    "centroid box; chunks of 1-7 rows)") {
+    val rnd = new scala.util.Random(31)
+    def gauss(s: Double) = (rnd.nextGaussian() * s).toFloat
+    val specials = Array(Float.NaN, Float.PositiveInfinity,
+      Float.NegativeInfinity)
+    var hits = 0
+    for (dim <- Seq(1, 2, 16); k <- Seq(1, 2, 5, 16, 64);
+         flatAxis <- Seq(false, true)) {
+      val what = s"k=$k dim=$dim flatAxis=$flatAxis"
+      val cents = Array.fill(k)(Array.fill(dim)(gauss(10)))
+      if (k > 2) cents(2) = cents(1).clone() // a duplicate: radius 0
+      if (flatAxis) cents.foreach(_(dim - 1) = 3f) // no spread on one axis
+      val flat = cents.flatMap(_.map(_.toDouble))
+      val radii = halfGapRadii(flat, k)
+      val cells = cellTable(flat, k, radii)
+      assert((cells == null) === (dim == 1), what)
+      val rows = rnd.shuffle(
+        Seq.fill(200)(cents(rnd.nextInt(k)).map(_ + gauss(0.5))) ++
+          Seq.fill(40)(Array.fill(dim)(gauss(1e4))) ++ // far outside the box
+          Seq.fill(30)(Array.fill(dim)(gauss(10))
+            .updated(rnd.nextInt(dim), specials(rnd.nextInt(3)))) ++
+          cents.map(_.clone())).toArray
+      val wide = rows.map(_.map(_.toDouble))
+      val want = wide.map(argminSqDist(_, flat, k))
+      if (cells != null) wide.zip(want).foreach { case (x, w) =>
+        val g = cells.guess(x)
+        assert(g >= 0 && g < k, s"$what: guess $g")
+        if (halfGapHit(x, flat, radii, g)) {
+          hits += 1
+          assert(g === w, s"$what: row ${x.toSeq}")
+        }
+      }
+      // per row, from no pick
+      val am = new GuessArgmin(flat, k, radii, cells)
+      wide.zip(want).foreach { case (x, w) =>
+        System.arraycopy(x, 0, am.x, 0, dim)
+        assert(am.pick(-1) === w, s"$what: pick(-1), row ${x.toSeq}")
+      }
+      // per chunk of 1-7 rows: no pick, right, wrong and random picks
+      val hints = Seq(null, want, want.map(c => (c + 1) % k),
+        Array.fill(want.length)(rnd.nextInt(k)))
+      for (size <- 1 to 7; (h, how) <- hints.zip(Seq("none", "right",
+          "wrong", "random"))) {
+        val am = new GuessArgmin(flat, k, radii, cells)
+        rows.indices.grouped(size).foreach { g =>
+          val got = am.assignChunk(g.flatMap(rows(_)).toArray,
+            if (h == null) null else g.map(h).toArray)
+          assert(got.toSeq === g.map(want), s"$what: chunk of $size, $how")
+        }
+      }
+    }
+    assert(hits > 2000, s"the cell-table guess passed only $hits times")
+  }
+
+  test("readRow reads a null-free unsafe array at fixed offsets as the " +
+    "per-element path reads it; a null element in any null word fails") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+    val rnd = new scala.util.Random(37)
+    def unsafe(et: DataType, v: Seq[Any]): UnsafeArrayData =
+      UnsafeProjection.create(Array[DataType](ArrayType(et, containsNull = true)))
+        .apply(InternalRow(new GenericArrayData(v.toArray))).getArray(0)
+        .asInstanceOf[UnsafeArrayData]
+    def bits(a: Array[Double]) = a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    for (n <- Seq(1, 2, 16, 63, 64, 65, 130); isFloat <- Seq(true, false)) {
+      val et = if (isFloat) FloatType else DoubleType
+      val v: Seq[Any] = Seq.fill(n)(rnd.nextInt(5) match {
+        case 0 => if (isFloat) Float.NaN else Double.NaN
+        case 1 => if (isFloat) Float.NegativeInfinity else Double.PositiveInfinity
+        case _ => if (isFloat) rnd.nextGaussian().toFloat else rnd.nextGaussian()
+      })
+      val u = unsafe(et, v)
+      assert(nullFreeValues(u) >= 0, s"n=$n")
+      val fast = new Array[Double](n)
+      val slow = new Array[Double](n)
+      assert(readRow(u, isFloat, fast))
+      assert(readRow(new GenericArrayData(v.toArray), isFloat, slow))
+      assert(bits(fast) === bits(slow), s"n=$n $et")
+      for (at <- Seq(0, n / 2, n - 1).distinct) {
+        val withNull = unsafe(et, v.updated(at, null))
+        assert(nullFreeValues(withNull) === -1L, s"n=$n null at $at")
+        assert(!readRow(withNull, isFloat, new Array[Double](n)),
+          s"n=$n null at $at")
+      }
+    }
   }
 
   test("half-gap shortcut: a guess that passes is always the scan's " +
@@ -306,6 +410,45 @@ class VectorFunctionsColumnSpec extends SparkSpec {
         assert(got(1).getInt(1) === 1, codegen)
         assert(got(2).isNullAt(1), codegen)
       } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
+  test("VecArgminSqDist on well-separated blobs: codegen and eval give " +
+    "argminCentroid's labels through the cell-table guess (k 16, 64; " +
+    "dim 2, 16; NaN and ±Inf rows, rows far outside the box, null " +
+    "elements)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(41)
+    val modes = Seq(
+      Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "true"),
+      Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false"))
+    for (dim <- Seq(2, 16); k <- Seq(16, 64)) {
+      val cents = Array.fill(k)(Array.fill(dim)((rnd.nextGaussian() * 10).toFloat))
+      val rows: Seq[Array[Float]] =
+        Seq.fill(400)(cents(rnd.nextInt(k)).map(v => (v + rnd.nextGaussian() * 0.5).toFloat)) ++
+          Seq.fill(20)(Array.fill(dim)((rnd.nextGaussian() * 1e4).toFloat)) ++
+          Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity).map(s =>
+            Array.fill(dim)(1f).updated(rnd.nextInt(dim), s))
+      val schema = StructType(Seq(StructField("id", IntegerType),
+        StructField("v", ArrayType(FloatType, containsNull = true))))
+      // one row with a null element: the per-element path
+      val data = rows.zipWithIndex.map { case (r, i) => Row(i, r.toSeq) } :+
+        Row(rows.size, Seq.tabulate(dim)(i => if (i == 0) null else 1f))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 3), schema)
+      val want = rows.map(argminCentroid(_, cents)) :+
+        argminCentroid(Array.fill(dim)(1f).updated(0, 0f),
+          cents.map(_.updated(0, 0f)))
+      val got = modes.map { conf =>
+        conf.foreach { case (key, v) => spark.conf.set(key, v) }
+        try df.select(col("id"), assignCol(col("v"), cents)).collect()
+          .map(r => r.getInt(0) -> r.getInt(1)).toMap
+        finally conf.keys.foreach(spark.conf.unset)
+      }
+      for ((g, conf) <- got.zip(modes); i <- want.indices)
+        assert(g(i) === want(i), s"k=$k dim=$dim $conf row $i")
     }
   }
 

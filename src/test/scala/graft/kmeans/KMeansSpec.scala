@@ -274,9 +274,10 @@ class KMeansSpec extends SparkSpec {
   test("a distributed fit leaves none of its rounds' codebook " +
     "broadcasts in the driver's block manager") {
     val sc = spark.sparkContext
-    // a round's codebook: (flat k×dim centroids, half-gap radii)
+    // a round's codebook: (flat k×dim centroids, half-gap radii, cell
+    // table)
     def codebooks = org.apache.spark.graftshim.driverBroadcastValues(sc)
-      .collect { case (id, (_: Array[Double], _)) => id }.toSet
+      .collect { case (id, (_: Array[Double], _, _)) => id }.toSet
     val before = codebooks
     val model = KMeans.fit(blobs(3000, 4, 3, 1.0, 9), KMeansParams(k = 3,
       threshold = -1.0, maxLoop = 6, seed = 2L), shortcut = true, 0L, 0L)
@@ -469,16 +470,19 @@ class KMeansSpec extends SparkSpec {
       assertSameFit(KMeans.fit(overlap, p1), dist, "no hand-back")
     }
 
-    // Two blobs apart only in their third coordinate: the first round's
-    // probe (first two coordinates) misses about every other row, and
-    // every pick it ends with is proven. Its scans, about 3,000 rows of
-    // 6 products, pass 4 × 1,000 but not 4 × 10,000.
+    // Two blobs apart only in their third coordinate, and a third
+    // centroid far off in the first two, so the first round's cell table
+    // (over the two coordinates the centroids spread widest in, here the
+    // first two) guesses centroid 0 for every row: it misses about every
+    // other row, and every pick it ends with is proven. Its scans, about
+    // 3,000 rows of 9 products, pass 4 × 1,000 but not 4 × 10,000.
     val far = spark.sparkContext.parallelize(Seq.tabulate(6000) { i =>
       Tuple1(Array(rnd.nextGaussian().toFloat, rnd.nextGaussian().toFloat,
         (if (i % 2 == 0) -50 else 50) + rnd.nextGaussian().toFloat))
     }, 3).toDF("features")
-    val p2 = KMeansParams(k = 2, threshold = -1.0, maxLoop = 6,
-      initCentroids = Some(Array(Array(0f, 0f, -40f), Array(0f, 0f, 40f))))
+    val p2 = KMeansParams(k = 3, threshold = -1.0, maxLoop = 6,
+      initCentroids = Some(Array(Array(0f, 0f, -40f), Array(0f, 0f, 40f),
+        Array(200f, 200f, 0f))))
     val farDist = KMeans.fit(far, p2, shortcut = true, 0L, 0L)
     whileCached(far) {
       val ((r1Jobs, _), r1) = jobsAndTasks(

@@ -2,7 +2,7 @@
 """Alternating A/B runs of the benchmark: a parent revision against the
 working tree.
 
-    python3 tools/ab.py --parent REV --workload W --pairs N [--seconds 6]
+    python3 tools/ab.py --parent REV --workload W --pairs N [--seconds 6] [--trace]
 
 Run from the root of a checkout. REV's committed files are unpacked
 (`git archive`) into a temporary directory under $TMPDIR, and
@@ -27,6 +27,12 @@ against the metric's BENCHMARK.json `bound`:
 
 Exits 1, naming the runs, when any run fails or reports failed
 operations; the summary then covers the pairs whose runs completed.
+
+With --trace the pairs run `run.py --trace 1`, which reports the
+per-layer metrics instead of the end-to-end ones; the summary then
+covers every per-layer metric of BENCHMARK.json, with the same medians,
+quartiles, ratios and wins and no verdict (those metrics have no
+bound). It names the layer that moved, from the same pairs.
 
     python3 tools/ab.py --parent REV --lines q119_triangles,q160_bipartite_project \
         --sf /path/to/sf0.1 --reps 5
@@ -114,12 +120,37 @@ def run_failure(seed, side, metrics, failed):
     return None
 
 
-def run_once(tree, build_dir, workload, seed, seconds):
+def run_command(workload, seed, seconds, trace):
+    """The run.py command line of one run, traced or not."""
+    return ([sys.executable, "perfbench/run.py", "--workload", workload,
+             "--seed", str(seed), "--seconds", str(seconds)]
+            + (["--trace", "1"] if trace else []))
+
+
+def metric_lines(summary, bounds):
+    """One line per metric of `summary` (see `summarize`): each side's
+    median and quartiles, the change in per cent, the pairs the change
+    wins, the per-pair ratios and, for a metric of `bounds`, the
+    verdict."""
+    out = []
+    for name, s in summary.items():
+        p, c = s["parent"], s["change"]
+        line = (f"{name}: parent {p[1]:.4g} ({p[0]:.4g}/{p[2]:.4g}) -> change "
+                f"{c[1]:.4g} ({c[0]:.4g}/{c[2]:.4g}), "
+                f"{(c[1] / p[1] - 1) * 100 if p[1] else float('nan'):+.1f} %; "
+                f"change better in {s['wins']}/{s['pairs']}; ratios "
+                + " ".join(f"{r:.3f}" for r in s["ratios"]))
+        if "verdict" in s:
+            line += f"; {s['verdict']} (bound {bounds[name] * 100:g} %)"
+        out.append(line)
+    return out
+
+
+def run_once(tree, build_dir, workload, seed, seconds, trace=False):
     """One run.py run: (metrics, failed, steal %, stderr tail)."""
     env = dict(os.environ, CARGO_TARGET_DIR=build_dir)
     proc = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds)],
+        run_command(workload, seed, seconds, trace),
         cwd=tree, env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
         text=True, stdin=subprocess.DEVNULL)
     m = STEAL.search(proc.stderr)
@@ -225,6 +256,8 @@ def main():
     ap.add_argument("--lines", help="comma-separated catalogue lines")
     ap.add_argument("--sf", help="scale-factor data directory (--lines)")
     ap.add_argument("--reps", type=int, default=5)
+    ap.add_argument("--trace", action="store_true",
+                    help="run the pairs traced and summarise the per-layer metrics")
     a = ap.parse_args()
     if a.lines and not a.sf:
         ap.error("--lines needs --sf")
@@ -243,9 +276,10 @@ def main():
             sys.exit(1)
         return
     with open(os.path.join(root, "BENCHMARK.json")) as f:
-        end_to_end = json.load(f)["end_to_end"]
-    better = {m["name"]: m["better"] for m in end_to_end}
-    bounds = {m["name"]: m["bound"] for m in end_to_end}
+        spec = json.load(f)
+    metrics_spec = spec["per_layer" if a.trace else "end_to_end"]
+    better = {m["name"]: m["better"] for m in metrics_spec}
+    bounds = {m["name"]: m["bound"] for m in metrics_spec if "bound" in m}
     try:
         parent = unpack_parent(root, a.parent, tmp)
         trees = {"parent": (parent, os.path.join(tmp, "build-parent")),
@@ -258,7 +292,7 @@ def main():
             for side in order:
                 tree, build = trees[side]
                 metrics, failed, steal, err = run_once(
-                    tree, build, a.workload, seed, a.seconds)
+                    tree, build, a.workload, seed, a.seconds, a.trace)
                 print(f"pair {seed} {side}: steal {steal:.1f} %, failed {failed}"
                       + (f", run failed: {err}" if metrics is None else ""),
                       flush=True)
@@ -268,14 +302,8 @@ def main():
                     failures.append(why)
             if got["parent"] is not None and got["change"] is not None:
                 pairs.append((got["parent"], got["change"]))
-        for name, s in summarize(pairs, better, bounds).items():
-            p, c = s["parent"], s["change"]
-            print(f"{name}: parent {p[1]:.4g} ({p[0]:.4g}/{p[2]:.4g}) -> change "
-                  f"{c[1]:.4g} ({c[0]:.4g}/{c[2]:.4g}), "
-                  f"{(c[1] / p[1] - 1) * 100 if p[1] else float('nan'):+.1f} %; "
-                  f"change better in {s['wins']}/{s['pairs']}; ratios "
-                  + " ".join(f"{r:.3f}" for r in s["ratios"])
-                  + f"; {s['verdict']} (bound {bounds[name] * 100:g} %)")
+        for line in metric_lines(summarize(pairs, better, bounds), bounds):
+            print(line)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     if failures:

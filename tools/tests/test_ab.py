@@ -74,6 +74,34 @@ class RunFailureTest(unittest.TestCase):
                          "pair 3 parent: 4 failed operations")
 
 
+class TraceTest(unittest.TestCase):
+    def test_trace_adds_the_flag_and_nothing_else(self):
+        plain = ab.run_command("lloyd_blobs", 3, 6, False)
+        self.assertEqual(plain[1:], ["perfbench/run.py", "--workload", "lloyd_blobs",
+                                     "--seed", "3", "--seconds", "6"])
+        self.assertEqual(ab.run_command("lloyd_blobs", 3, 6, True),
+                         plain + ["--trace", "1"])
+
+    def test_per_layer_lines_have_medians_and_no_verdict(self):
+        pairs = [({"kmeans.fit_s": p, "sched.jobs": 3.0},
+                  {"kmeans.fit_s": c, "sched.jobs": 3.0})
+                 for p, c in [(0.30, 0.20), (0.24, 0.18), (0.26, 0.19)]]
+        lines = ab.metric_lines(
+            ab.summarize(pairs, {"kmeans.fit_s": "lower", "sched.jobs": "lower"}), {})
+        self.assertEqual(lines[0], "kmeans.fit_s: parent 0.26 (0.25/0.28) -> change "
+                         "0.19 (0.185/0.195), -26.9 %; change better in 3/3; "
+                         "ratios 0.667 0.750 0.731")
+        self.assertTrue(lines[1].startswith("sched.jobs: parent 3 (3/3) -> change 3 (3/3), +0.0 %; "
+                                            "change better in 0/3"))
+        self.assertNotIn("bound", " ".join(lines))
+
+    def test_end_to_end_lines_keep_the_verdict(self):
+        pairs = [({"wall_s": 1.0}, {"wall_s": 1.5})] * 3
+        bounds = {"wall_s": 0.25}
+        line, = ab.metric_lines(ab.summarize(pairs, {"wall_s": "lower"}, bounds), bounds)
+        self.assertTrue(line.endswith("; worse (bound 25 %)"), line)
+
+
 class ParseTest(unittest.TestCase):
     def test_prof_lines(self):
         out = "\n".join([
